@@ -1918,7 +1918,7 @@ def q_array_struct_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from clinvar_ingest_spark.lakelet.manifest import ColumnSpec
     from clinvar_ingest_spark.lakelet.table import LakeletTable
-    from clinvar_ingest_spark.operators.merge import merge_apply
+    from clinvar_ingest_spark.operators.merge_cogroup import merge_apply_cogrouped
 
     cl = spark.read.parquet(_ensure_cdc_fixture())
     host = F.regexp_extract("url", "https://([^/]+)", 1)
@@ -1946,7 +1946,7 @@ def q_array_struct_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(tmp, "ent"), cols, n_buckets=8, key_col="url"
     )
     for lo in (0, 500):
-        merge_apply(
+        merge_apply_cogrouped(
             spark, t,
             ev.filter((F.col("seq") >= lo) & (F.col("seq") < lo + 500)),
             f"b{lo}",
@@ -1954,7 +1954,7 @@ def q_array_struct_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.rename_column("xrefs.xid", "ref_id")
     t.add_column("extra_tags", "array<string>")
     for lo in (1000, 1500):
-        merge_apply(
+        merge_apply_cogrouped(
             spark, t,
             ev.filter((F.col("seq") >= lo) & (F.col("seq") < lo + 500)),
             f"b{lo}",

@@ -298,36 +298,6 @@ def bench_patch_apply(spark, sf: float, workdir: str) -> dict:
     }
 
 
-def bench_extract_ab(spark, clp: str) -> dict:
-    """Round-3 A/B: the HTML→text kernel as an Arrow-batched pandas
-    UDF (determinism reference) vs the codegen'd regexp-chain variant,
-    over the full bench changelog — the delta the `extract_kernel`
-    engine flag buys."""
-    from pyspark.sql import functions as F
-
-    from clinvar_ingest_spark.functions.extract import (
-        extract_text_expr,
-        extract_text_udf,
-    )
-
-    html = spark.read.parquet(clp).select("html")
-    t0 = time.time()
-    html.select(extract_text_udf(F.col("html")).alias("t")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    py = time.time() - t0
-    t0 = time.time()
-    html.select(extract_text_expr(F.col("html")).alias("t")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    jvm = time.time() - t0
-    return {
-        "python_secs": round(py, 3),
-        "jvm_secs": round(jvm, 3),
-        "jvm_speedup": round(py / jvm, 3) if jvm > 0 else None,
-    }
-
-
 def main() -> None:
     from clinvar_ingest_spark.session import get_spark
 
@@ -365,9 +335,6 @@ def main() -> None:
     workdir = tempfile.mkdtemp(prefix="bench_cdc_")
     try:
         cdc = bench_cdc_replay(spark, sf, workdir)
-        extract_ab = bench_extract_ab(
-            spark, os.path.join(workdir, "changelog.parquet")
-        )
         mor_ab = bench_mor_apply(spark, workdir)
         patch = bench_patch_apply(spark, sf, workdir)
         feed = bench_fanout_feed(spark, workdir)
@@ -390,14 +357,14 @@ def main() -> None:
 
     out = {
         "metric": "merge_apply_events_per_sec",
-        "value": round(sum(times.values()), 3),
-        "unit": "sec",
+        "value": cdc["events_per_sec"],
+        "unit": "events/s",
+        "queries_total_s": round(sum(times.values()), 3),
         "queries": times,
         "anchor": {"query": ANCHOR, "sec": anchor_sec},
         "queries_norm": queries_norm,
         "sf": sf,
         "cdc": cdc,
-        "extract_ab": extract_ab,
         "cow_vs_mor": mor_ab,
         "patch_apply": patch,
         "fanout_feed": feed,

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from clinvar_ingest_spark.lakelet.table import LakeletTable, PAGES_COLUMNS
 from clinvar_ingest_spark.operators import diff as diff_ops
-from clinvar_ingest_spark.operators.merge import MergeStats, merge_apply
+from clinvar_ingest_spark.operators.merge import MergeStats
 from clinvar_ingest_spark.streaming.ledger import (
     Ledger,
     LineageRecord,
@@ -102,8 +102,8 @@ def _pinned_shuffle(spark: SparkSession, n_partitions: int):
                 base = int(st["saved"]["spark.sql.shuffle.partitions"])
             except (TypeError, ValueError):
                 base = 0
-            # never pin BELOW the session's own setting: the join
-            # strategy's LWW shuffle hashes on url (not bucket) and can
+            # never pin BELOW the session's own setting: the MOR apply's
+            # LWW shuffle (lww_latest) hashes on url, not bucket, and can
             # use more partitions than buckets; bucket shuffles leave
             # the excess empty. Concurrent pins take the max of their
             # requests.
@@ -162,8 +162,6 @@ class CdcEngine:
         spark: SparkSession,
         root: str,
         n_buckets: int = 16,
-        strategy: str = "cogroup",
-        extract_kernel: str = "python",
         write_mode: str = "cow",
         branch: str | None = None,
         validate: bool | list = False,
@@ -172,19 +170,10 @@ class CdcEngine:
         retry_policy=None,
         pin_apply_parallelism: bool = True,
     ):
-        """``strategy``: 'cogroup' (default; per-bucket applyInPandas,
-        2 shuffles/batch) or 'join' (full-outer-join formulation,
-        3 shuffles/batch, kept for A/B parity — both produce identical
-        table states and identical lineage).
-
-        ``extract_kernel``: 'python' (Arrow-batched pandas UDF — the
-        byte-determinism reference) or 'jvm' (chained regexp_replace
-        column expressions, whole-stage codegen, A/B-verified
-        byte-identical on the fixture corpus; join strategy only — the
-        cogroup kernel extracts inside its Arrow function).
-
-        ``write_mode``: 'cow' (default; every apply rewrites touched
-        buckets, reads stay resolve-free) or 'mor' (merge-on-read:
+        """``write_mode``: 'cow' (default; every apply rewrites touched
+        buckets through the per-bucket Arrow merge kernel,
+        :mod:`~clinvar_ingest_spark.operators.merge_cogroup`, and reads
+        stay resolve-free) or 'mor' (merge-on-read:
         applies APPEND delta files — cost ∝ batch size, never bucket
         size — and reads LWW-resolve until :meth:`compact` folds the
         stack; identical logical state, A/B'd by state hash). MOR
@@ -223,15 +212,6 @@ class CdcEngine:
         ValidationRule`. Violating events are quarantined (idempotently,
         inside the exactly-once envelope) instead of poisoning the
         merge; read them back with :meth:`quarantined`."""
-        if strategy not in ("cogroup", "join"):
-            raise ValueError(f"unknown merge strategy {strategy!r}")
-        if extract_kernel not in ("python", "jvm"):
-            raise ValueError(f"unknown extract kernel {extract_kernel!r}")
-        if extract_kernel == "jvm" and strategy != "join":
-            raise ValueError(
-                "extract_kernel='jvm' requires strategy='join' (the "
-                "cogroup merge extracts inside its Arrow kernel)"
-            )
         if write_mode not in ("cow", "mor"):
             raise ValueError(f"unknown write mode {write_mode!r}")
         if patch_ops and write_mode == "mor":
@@ -249,8 +229,6 @@ class CdcEngine:
         #: transient commit errors retried so far (observable alongside
         #: the per-batch lineage; each is also logged at WARNING)
         self.retries_total = 0
-        self.strategy = strategy
-        self.extract_kernel = extract_kernel
         self.write_mode = write_mode
         self.pin_apply_parallelism = pin_apply_parallelism
         self.patch_ops = patch_ops
@@ -497,29 +475,21 @@ class CdcEngine:
             try:
                 stats = merge_apply_mor(
                     self.spark, self.table, batch, batch_id,
-                    extract_kernel=self.extract_kernel,
                     assume_all_buckets=assume_all_buckets,
                     partial_to=partial_to,
                 )
             except MorCarryoverRequired:
                 stats = None  # fall through to a COW apply of this batch
         if stats is None:
-            if self.strategy == "cogroup":
-                from clinvar_ingest_spark.operators.merge_cogroup import (
-                    merge_apply_cogrouped,
-                )
+            from clinvar_ingest_spark.operators.merge_cogroup import (
+                merge_apply_cogrouped,
+            )
 
-                stats = merge_apply_cogrouped(
-                    self.spark, self.table, batch, batch_id,
-                    assume_all_buckets=assume_all_buckets,
-                    partial_to=partial_to,
-                )
-            else:
-                stats = merge_apply(
-                    self.spark, self.table, batch, batch_id,
-                    extract_kernel=self.extract_kernel,
-                    partial_to=partial_to,
-                )
+            stats = merge_apply_cogrouped(
+                self.spark, self.table, batch, batch_id,
+                assume_all_buckets=assume_all_buckets,
+                partial_to=partial_to,
+            )
         wall = time.time() - t0
 
         self.ledger.record(

@@ -98,52 +98,3 @@ def extract_text_series(html: pd.Series) -> pd.Series:
 @F.pandas_udf(StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:  # pragma: no cover - exercised via Spark
     return extract_text_series(html)
-
-
-def extract_text_expr(html_col):
-    """JVM-side extraction variant (round 3 A/B): the SAME pinned
-    pipeline as :func:`extract_text_str`, expressed as chained
-    ``regexp_replace``/``replace`` column expressions — whole-stage
-    codegen, no Python worker pool in the hot path.
-
-    Byte-identity with the Python kernel is asserted by pytest on the
-    fixture corpus (A/B state-hash equality); the Python kernel stays
-    the determinism REFERENCE because Java and Python regex engines
-    differ at the edges (Java's ``\\v``/``\\s`` classes, unicode word
-    boundaries), and the patterns below are spelled to avoid exactly
-    those divergences (explicit ``\\x0B`` instead of ``\\v``; no bare
-    ``\\s`` except the final ASCII trim).
-    """
-    c = html_col
-    if not isinstance(c, F.Column):
-        c = F.col(c)
-    s = F.decode(c, "UTF-8")
-    for pat, rep in (
-        (r"(?is)<head\b.*?</head\s*>", " "),
-        (r"(?is)<script\b.*?</script\s*>", " "),
-        (r"(?is)<style\b.*?</style\s*>", " "),
-        (r"(?s)<!--.*?-->", " "),
-        (
-            r"(?i)</?(?:p|div|br|li|ul|ol|tr|td|th|table|h[1-6]|section|article|header|footer|blockquote|pre)\b[^>]*>",
-            "\n",
-        ),
-        (r"(?s)<[^>]*>", " "),
-    ):
-        s = F.regexp_replace(s, pat, rep)
-    for ent, rep in _ENTITIES:
-        s = F.replace(s, F.lit(ent), F.lit(rep))
-    s = F.regexp_replace(s, "[ \t\r\f\x0B]+", " ")
-    s = F.regexp_replace(s, " ?\n ?", "\n")
-    s = F.regexp_replace(s, "\n{2,}", "\n")
-    s = F.regexp_replace(s, r"^[ \t\r\n\f\x0B]+|[ \t\r\n\f\x0B]+$", "")
-    # NULL html (delete events) stays NULL — decode/regexp preserve NULL
-    return s
-
-
-def with_extracted_text(df, html_col: str = "html", out_col: str = "text", kernel: str = "python"):
-    """Append ``out_col`` = extracted text of ``html_col``.
-    ``kernel='python'`` (Arrow-batched pandas UDF, the determinism
-    reference) or ``'jvm'`` (codegen'd regexp chain, A/B-verified)."""
-    if kernel == "jvm":
-        return df.withColumn(out_col, extract_text_expr(F.col(html_col)))
-    return df.withColumn(out_col, extract_text_udf(F.col(html_col)))

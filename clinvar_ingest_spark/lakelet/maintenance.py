@@ -633,7 +633,6 @@ def auto_maintain(
     """
     pol = policy or MaintenancePolicy()
     did: dict = {}
-    m = table.manifest()
 
     if (
         pol.compact_delta_buckets is not None

@@ -1,30 +1,17 @@
-"""Key-partitioned MERGE apply (copy-on-write) — the engine's flagship operator.
+"""Merge-on-read apply and the shared apply vocabulary.
 
-Semantics (north rule + reference parity):
+The copy-on-write apply lives in :mod:`merge_cogroup`; this module
+holds what every apply path shares — :class:`MergeStats` lineage and
+the batch schema-drift mapping (:func:`batch_alias_map`,
+:func:`_batch_payload_expr`) — and the merge-on-read apply
+(:func:`merge_apply_mor`), which LWW-reduces and extracts the batch in
+Spark and appends it as delta files without reading current state.
 
-1. **LWW-reduce the batch**: one surviving event per ``url`` by
-   ``(warc_ts, seq)`` — reference ``dedupByDate``
-   (ArchiveBranches.scala:140-156) with the deterministic ``seq``
-   tie-break (SURVEY.md §7(b)).
-2. **Extract text** once per surviving upsert (Arrow-vectorized pandas
-   UDF; the reference's heavy decode step, process-xml-release.yaml:70-90).
-3. **Classify vs the current snapshot** restricted to *touched buckets*
-   (manifest-level partition pruning): insert / update / delete — the
-   reference's three-way diff (docker/diff/diff.py:117-182) folded into
-   ONE full-outer join instead of three.
-4. **Late-event guard**: a batch row only wins if
-   ``struct(warc_ts, seq) > struct(cur.warc_ts, cur._seq)`` — replays
-   and out-of-order deliveries reconverge instead of regressing state.
-5. **Copy-on-write**: rewrite only touched buckets' files — the
-   reference's soft-delete+append upsert
-   (process-and-reingest-release.yaml:226-280) at file granularity.
-
-Scale shape: the only wide exchanges are (a) the LWW partial-agg
-shuffle on ``url`` and (b) the merge join on ``url`` — both on the same
-key. The snapshot side is pre-bucketed by the same hash, and the batch
-side is typically ≪ snapshot, so AQE broadcasts it; skewed batch keys
-collapse to one row per key *before* the join (the groupBy's map-side
-partial aggregation is the skew absorber).
+Semantics shared with the COW kernel (north rule + reference parity):
+one surviving event per ``url`` by ``(warc_ts, seq)`` — reference
+``dedupByDate`` (ArchiveBranches.scala:140-156) with the deterministic
+``seq`` tie-break (SURVEY.md §7(b)); delete winners become tombstones,
+so a late event never resurrects a deleted key.
 """
 
 from __future__ import annotations
@@ -76,7 +63,7 @@ class MorCarryoverRequired(RuntimeError):
         self.missing = missing
 
 
-def reduce_batch(batch: DataFrame, extract_kernel: str = "python") -> DataFrame:
+def reduce_batch(batch: DataFrame) -> DataFrame:
     """LWW-reduce a raw changelog micro-batch to one row per url,
     then extract text (and canonicalize the `extra` residue into
     `props`) for surviving upserts only. Batches without an ``html``
@@ -88,12 +75,7 @@ def reduce_batch(batch: DataFrame, extract_kernel: str = "python") -> DataFrame:
     latest = lww_latest(batch, keys=("url",), order_by=("warc_ts", "seq"))
     out = latest
     if "html" in out.columns:
-        if extract_kernel == "jvm":
-            from clinvar_ingest_spark.functions.extract import extract_text_expr
-
-            text = extract_text_expr(F.col("html"))
-        else:
-            text = extract_text_udf(F.col("html"))
+        text = extract_text_udf(F.col("html"))
         out = out.withColumn("text", F.when(F.col("op") != "delete", text))
     if "props" not in out.columns and "extra" in out.columns:
         from clinvar_ingest_spark.functions.canonical_json import canonical_json_udf
@@ -105,9 +87,33 @@ def reduce_batch(batch: DataFrame, extract_kernel: str = "python") -> DataFrame:
     return out
 
 
+def batch_alias_map(manifest, batch_cols: list[str]) -> dict[str, str]:
+    """table-column → batch-column mapping across RENAMES: a changelog
+    produced against an older schema version still carries the old
+    upstream name (e.g. batch `lang` after the table renamed it to
+    `language`). The manifest's col-id history recovers the link —
+    without it a rename silently freezes the column (updates would
+    carry the stale current value). Key columns (url/warc_ts/seq) are
+    structural and not renameable through this path."""
+    current = {c.name for c in manifest.columns}
+    alias: dict[str, str] = {}
+    for tc in manifest.columns:
+        if tc.name in batch_cols:
+            continue  # batch speaks the current name already
+        for ver in sorted(manifest.schemas, reverse=True):
+            old = next(
+                (c.name for c in manifest.schemas[ver] if c.col_id == tc.col_id),
+                None,
+            )
+            if old and old != tc.name and old in batch_cols and old not in current:
+                alias[tc.name] = old
+                break
+    return alias
+
+
 def _batch_payload_expr(manifest, name: str, src_col: str, batch_dtype):
     """Column expression presenting a batch payload column as the
-    table's CURRENT column ``name``.
+    table's CURRENT column ``name``, typed exactly as that column.
 
     Handles schema drift between producer and table: if the batch's
     dtype doesn't match the current column type, search the manifest's
@@ -116,202 +122,25 @@ def _batch_payload_expr(manifest, name: str, src_col: str, batch_dtype):
     carrying ``xrefs: array<struct<db,xid>>`` lands correctly in a
     table that renamed the field to ``ref_id`` and added ``note``
     (positional casts would fail on the arity change). Falls back to a
-    plain cast for scalar widens.
+    plain cast for scalar widens. The final cast also clears nested
+    NOT NULL flags (e.g. a struct field built from a literal), so the
+    value's Arrow type equals the stored column's.
     """
     from clinvar_ingest_spark.lakelet.table import _remap_expr
 
     tgt_spec = next(cs for cs in manifest.columns if cs.name == name)
     tgt_t = spark_type(tgt_spec)
-    if batch_dtype.simpleString() == tgt_t.simpleString():
+    if batch_dtype == tgt_t:
         return F.col(src_col)
-    for ver in sorted(manifest.schemas, reverse=True):
-        old = next(
-            (c for c in manifest.schemas[ver] if c.col_id == tgt_spec.col_id),
-            None,
-        )
-        if old is not None and spark_type(old).simpleString() == batch_dtype.simpleString():
-            return _remap_expr(F.col(src_col), old, tgt_spec)
+    if batch_dtype.simpleString() != tgt_t.simpleString():
+        for ver in sorted(manifest.schemas, reverse=True):
+            old = next(
+                (c for c in manifest.schemas[ver] if c.col_id == tgt_spec.col_id),
+                None,
+            )
+            if old is not None and spark_type(old).simpleString() == batch_dtype.simpleString():
+                return _remap_expr(F.col(src_col), old, tgt_spec).cast(tgt_t)
     return F.col(src_col).cast(tgt_t)
-
-
-def merge_apply(
-    spark: SparkSession,
-    table: LakeletTable,
-    batch: DataFrame,
-    batch_id: str,
-    extract_kernel: str = "python",
-    partial_to: int | None = None,
-) -> MergeStats:
-    """Apply one micro-batch to the table; returns lineage stats.
-
-    ``batch`` columns: seq, op, url, warc_ts, html, lang[, schema_ver].
-
-    Job shape (exactly TWO Spark jobs per micro-batch):
-
-    1. a tiny column-pruned distinct over the batch's bucket ids (plans
-       which snapshot files to read — manifest-level partition pruning);
-    2. the merge write itself, with every lineage metric (event count,
-       watermark, per-action counts) riding along as ``observe()``
-       CollectMetrics — no separate count/agg jobs, no persist of
-       intermediate state, and the extraction UDF runs exactly once.
-    """
-    m = table.manifest()
-
-    # job 1: touched buckets from batch keys only (no UDF, url col only)
-    touched = [
-        r["_b"]
-        for r in batch.select(bucket_expr("url", m.n_buckets).alias("_b"))
-        .distinct()
-        .collect()
-    ]
-    # partition-spec evolution: expand to whole legacy-spec files so the
-    # COW replacement carries their untouched rows (identity pre-grow)
-    touched = table.rewrite_closure(touched)
-
-    batch_obs = Observation()
-    observed = batch.observe(
-        batch_obs,
-        F.count(F.lit(1)).alias("n_events"),
-        F.max("warc_ts").alias("watermark"),
-    )
-
-    reduced = reduce_batch(observed, extract_kernel)
-    current = table.read(spark, buckets=touched)
-
-    # payload columns of the table schema; those also present in the
-    # batch come from the batch on insert/update, the rest carry over
-    # from the current row (post-evolution columns backfill as NULL
-    # on insert).
-    from clinvar_ingest_spark.operators.merge_cogroup import batch_alias_map
-
-    table_cols = [cs.name for cs in m.columns]
-    batch_payload = set(reduced.columns)
-    # renamed-table-column → batch-column map (changelogs produced
-    # against an older schema version keep the old upstream name)
-    alias = batch_alias_map(m, list(reduced.columns))
-
-    b = reduced.select(*[F.col(cn).alias(f"_b_{cn}") for cn in reduced.columns])
-    c = current.select(
-        *[F.col(cname).alias(f"_c_{cname}") for cname in current.columns]
-    )
-    j = b.join(c, b["_b_url"] == c["_c_url"], "full_outer")
-
-    batch_wins = F.col("_c_url").isNull() | (
-        F.struct(F.col("_b_warc_ts"), F.col("_b_seq"))
-        > F.struct(F.col("_c_warc_ts"), F.col("_c__seq"))
-    )
-    is_batch = F.col("_b_url").isNotNull()
-    is_delete = F.col("_b_op") == "delete"
-    cur_live = F.col("_c_url").isNotNull() & ~F.coalesce(
-        F.col("_c__deleted"), F.lit(False)
-    )
-
-    # delete winners become TOMBSTONE rows (soft delete): retained with
-    # (warc_ts, _seq, _deleted=True) so late events can never resurrect
-    # a deleted key — mirrors merge_cogroup's classification exactly
-    action = (
-        F.when(~is_batch, F.lit("keep"))  # untouched key in touched bucket
-        .when(~batch_wins, F.lit("keep_late"))  # late event loses
-        .when(is_delete & cur_live, F.lit("delete"))
-        .when(is_delete, F.lit("noop_delete"))  # delete of absent/dead key
-        .when(~cur_live, F.lit("insert"))
-        .otherwise(F.lit("update"))
-    )
-    j = j.withColumn("_action", action)
-
-    merge_obs = Observation()
-
-    def n_act(a: str):
-        return F.sum(F.when(F.col("_action") == a, 1).otherwise(0)).alias(a)
-
-    j = j.observe(
-        merge_obs,
-        n_act("insert"),
-        n_act("update"),
-        n_act("delete"),
-        n_act("noop_delete"),
-        n_act("keep_late"),
-    )
-
-    # every classified row is written — tombstones included
-    take_batch = F.col("_action").isin("insert", "update")
-    tomb = F.col("_action").isin("delete", "noop_delete")
-    wins = take_batch | tomb
-
-    def out_col(name: str):
-        cur = F.col(f"_c_{name}")
-        if name in ("url", "warc_ts", "_seq"):
-            src = {"url": "_b_url", "warc_ts": "_b_warc_ts", "_seq": "_b_seq"}[name]
-            return F.when(wins, F.col(src)).otherwise(cur).alias(name)
-        if name == "_deleted":
-            return (
-                F.when(wins, tomb)
-                .otherwise(F.coalesce(cur, F.lit(False)))
-                .alias(name)
-            )
-        src = alias.get(name, name)
-        if src in batch_payload:
-            bval = _batch_payload_expr(m, name, f"_b_{src}", reduced.schema[src].dataType)
-            return (
-                F.when(take_batch, bval)
-                .when(tomb, F.lit(None))
-                .otherwise(cur)
-                .alias(name)
-            )
-        # evolved column unknown to this batch: NULL on tombstone
-        return F.when(tomb, F.lit(None)).otherwise(cur).alias(name)
-
-    new_rows = j.select(*[out_col(cn) for cn in table_cols]).withColumn(
-        "_bucket", bucket_expr("url", m.n_buckets)
-    )
-
-    # job 2: the copy-on-write rewrite — observations fire with it.
-    # expected_parent_id pins the commit to the snapshot this merge was
-    # planned against: a concurrent writer landing in between raises
-    # CommitConflictError instead of losing its updates silently.
-    commit_stats: dict = {}
-    sid = table.commit_rewrite(
-        spark,
-        new_rows,
-        touched_buckets=touched,
-        batch_id=batch_id,
-        stats_out=commit_stats,
-        expected_parent_id=m.snapshot_id,
-        # stamp the apply's delivered frontier ATOMICALLY with the
-        # commit: a crash between this commit and the ledger append is
-        # repaired by reading it back (engine._apply_batch_once) — the
-        # ledger caller's own partial_to at repair time may be a LATER
-        # delivery and must not be trusted (skip-and-lose)
-        summary={"apply_partial_to": partial_to},
-    )
-
-    if commit_stats.get("skipped"):
-        # crash-recovery path: manifest existed, no action ran — the
-        # observations never fired, so report a zero-stats no-op.
-        return MergeStats(
-            batch_id=batch_id, snapshot_id=sid, n_events=0, n_keys=0,
-            n_inserts=0, n_updates=0, n_deletes=0,
-            touched_buckets=len(touched),
-        )
-    bm = batch_obs.get
-    mm = merge_obs.get
-    counts = {k: int(mm.get(k) or 0) for k in
-              ("insert", "update", "delete", "noop_delete", "keep_late")}
-    wm = bm.get("watermark")
-    return MergeStats(
-        batch_id=batch_id,
-        snapshot_id=sid,
-        n_events=int(bm.get("n_events") or 0),
-        n_keys=sum(counts.values()),
-        n_inserts=counts["insert"],
-        n_updates=counts["update"],
-        n_deletes=counts["delete"],
-        touched_buckets=len(touched),
-        watermark=wm.isoformat() if wm is not None else None,
-        bucket_rows=commit_stats.get("bucket_rows", {}),
-        write_secs=commit_stats.get("write_secs", 0.0),
-        commit_secs=commit_stats.get("commit_secs", 0.0),
-    )
 
 
 def merge_apply_mor(
@@ -319,7 +148,6 @@ def merge_apply_mor(
     table: LakeletTable,
     batch: DataFrame,
     batch_id: str,
-    extract_kernel: str = "python",
     assume_all_buckets: bool = False,
     partial_to: int | None = None,
 ) -> MergeStats:
@@ -343,10 +171,8 @@ def merge_apply_mor(
 
     Job shape: the same TWO jobs as the COW path (touched-buckets
     distinct + the delta write with observe() metrics riding along),
-    minus the snapshot read and the merge join inside job 2.
+    minus the snapshot read and the per-bucket merge inside job 2.
     """
-    from clinvar_ingest_spark.operators.merge_cogroup import batch_alias_map
-
     m = table.manifest()
 
     if assume_all_buckets:
@@ -376,7 +202,7 @@ def merge_apply_mor(
         F.count(F.lit(1)).alias("n_events"),
         F.max("warc_ts").alias("watermark"),
     )
-    reduced = reduce_batch(observed, extract_kernel)
+    reduced = reduce_batch(observed)
 
     table_cols = [cs.name for cs in m.columns]
     batch_payload = set(reduced.columns)
@@ -423,7 +249,10 @@ def merge_apply_mor(
         batch_id=batch_id,
         stats_out=commit_stats,
         expected_parent_id=m.snapshot_id,
-        summary={"apply_partial_to": partial_to},  # see merge_apply
+        # frontier stamped atomically with the commit: a crash between
+        # this commit and the ledger append is repaired by reading it
+        # back (engine._apply_batch_once)
+        summary={"apply_partial_to": partial_to},
     )
 
     if commit_stats.get("skipped"):

@@ -431,7 +431,7 @@ def merge_apply_cells(
             T.StructField("_action", T.StringType()),
         ]
     )
-    from clinvar_ingest_spark.operators.merge_cogroup import batch_alias_map
+    from clinvar_ingest_spark.operators.merge import batch_alias_map
 
     alias = batch_alias_map(m, list(b.columns))
     fn = _merge_bucket_cells_fn(m.columns, b.columns, alias)
@@ -459,7 +459,7 @@ def merge_apply_cells(
         pre_partitioned=True,
         expected_parent_id=m.snapshot_id,
         # frontier stamped atomically with the commit — read back by
-        # the crash-repair path (see merge.py merge_apply)
+        # the crash-repair path (engine._apply_batch_once)
         summary={"apply_partial_to": partial_to},
     )
     if commit_stats.get("skipped"):

@@ -1,38 +1,55 @@
-"""Cogrouped per-bucket MERGE apply — the north-rule architecture:
-"per-partition last-writer-wins apply loop via applyInPandas".
+"""Copy-on-write MERGE apply: one cogrouped per-bucket Arrow kernel —
+the north-rule "per-partition last-writer-wins apply loop via
+applyInPandas", vectorized over Arrow.
 
-Plan shape (compare merge.py, the join-based formulation):
+Plan shape::
 
-    join-based:  batch --shuffle(url)--> LWW --\
-                 state --shuffle(url)----------join--shuffle(bucket)--write
-    cogrouped:   batch --shuffle(bucket)--\
-                 state --shuffle(bucket)---cogroup.applyInPandas--write
+    batch --project(table schema)--shuffle(bucket)--\
+    state --------------------------shuffle(bucket)---cogroup.applyInArrow--write
 
-One wide stage instead of three: LWW-reduce, snapshot diff/classify
-(reference docker/diff/diff.py:117-182 semantics), late-event guard,
-and Arrow-vectorized HTML→text extraction all happen in a single
-pandas function per bucket, and the output is already bucket-pure so
-the copy-on-write write needs NO further shuffle (files are laid out
-by ``partitionBy`` straight from the cogroup partitions).
+Semantics (reference parity):
+
+1. **LWW-reduce the batch**: one surviving event per ``url`` by
+   ``(warc_ts, seq)`` — reference ``dedupByDate``
+   (ArchiveBranches.scala:140-156) with the deterministic ``seq``
+   tie-break (SURVEY.md §7(b)).
+2. **Classify vs the current snapshot** restricted to touched buckets:
+   insert / update / delete — the reference's three-way diff
+   (docker/diff/diff.py:117-182) as one keyed full-outer join.
+3. **Late-event guard**: a batch row only wins if its
+   ``(warc_ts, seq)`` is greater than the current ``(warc_ts, _seq)``
+   — replays and out-of-order deliveries reconverge.
+4. **Extract text** once per surviving upsert (the reference's heavy
+   decode step, process-xml-release.yaml:70-90), when the table has a
+   ``text`` column and the batch carries ``html``.
+5. **Copy-on-write**: rewrite only touched buckets' files — the
+   reference's soft-delete+append upsert
+   (process-and-reingest-release.yaml:226-280) at file granularity.
+
+Everything after the bucket shuffle happens in one Arrow function per
+bucket, and its output is already bucket-pure, so the write needs no
+further shuffle. Schema drift (renamed, widened and nested-remapped
+columns) is resolved in Spark before the shuffle, so the kernel only
+ever sees batch columns under the table's current names and types.
 
 Scale notes: parallelism is bounded by n_buckets — size n_buckets ≫
-max executor cores (e.g. 4096 at 10^10 scale) so each shuffle
-partition holds a few whole buckets and stragglers average out. A hot
-URL concentrates in one bucket, but LWW collapses it to one row inside
-pandas (sort+tail, no quadratic work); a hot HOST spreads across
-buckets by url hash. Per-group memory = one bucket of state — bound it
-by choosing n_buckets ≥ |table| / target_partition_rows.
+max executor cores so each shuffle partition holds a few whole buckets
+and stragglers average out. A hot URL concentrates in one bucket, but
+LWW collapses it to one row inside Arrow (sort + last per key, no
+quadratic work); a hot HOST spreads across buckets by url hash.
+Per-group memory = one bucket of state — bound it by choosing
+n_buckets ≥ |table| / target_partition_rows.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from clinvar_ingest_spark.functions.extract import extract_text_series
 from clinvar_ingest_spark.lakelet.table import (
@@ -40,48 +57,40 @@ from clinvar_ingest_spark.lakelet.table import (
     bucket_expr,
     spark_schema,
 )
-from clinvar_ingest_spark.operators.merge import MergeStats
+from clinvar_ingest_spark.operators.merge import (
+    MergeStats,
+    _batch_payload_expr,
+    batch_alias_map,
+)
 
 _ACTIONS = ("insert", "update", "delete", "noop_delete", "keep_late")
-
-
-def batch_alias_map(manifest, batch_cols: list[str]) -> dict[str, str]:
-    """table-column → batch-column mapping across RENAMES: a changelog
-    produced against an older schema version still carries the old
-    upstream name (e.g. batch `lang` after the table renamed it to
-    `language`). The manifest's col-id history recovers the link —
-    without it a rename silently freezes the column (updates would
-    carry the stale current value). Key columns (url/warc_ts/seq) are
-    structural and not renameable through this path."""
-    current = {c.name for c in manifest.columns}
-    alias: dict[str, str] = {}
-    for tc in manifest.columns:
-        if tc.name in batch_cols:
-            continue  # batch speaks the current name already
-        for ver in sorted(manifest.schemas, reverse=True):
-            old = next(
-                (c.name for c in manifest.schemas[ver] if c.col_id == tc.col_id),
-                None,
-            )
-            if old and old != tc.name and old in batch_cols and old not in current:
-                alias[tc.name] = old
-                break
-    return alias
+_LINEAGE = ("url", "warc_ts", "_seq", "_deleted")
 
 
 def _merge_bucket_arrow_fn(
-    table_cols: list[str], batch_cols: list[str], alias: dict[str, str] | None = None
+    table_cols: list[str], batch_cols: list[str], out_schema: pa.Schema
 ):
-    """Arrow-native per-bucket merge (`applyInArrow`): payloads stay in
-    Arrow buffers end-to-end — 13 KB html/text cells never materialize
-    as Python bytes except for the rows actually being extracted.
+    """Per-bucket merge kernel (`applyInArrow`): LWW by (warc_ts, seq),
+    snapshot classify, late-event guard, extraction once per surviving
+    upsert. Payloads stay in Arrow buffers end-to-end — 13 KB html/text
+    cells never materialize as Python bytes except for the rows
+    actually being extracted.
 
-    Same semantics as :func:`_merge_bucket_fn` (the pandas formulation,
-    kept for A/B): LWW by (warc_ts, seq), snapshot classify, late-event
-    guard, extraction once per surviving upsert.
+    ``batch_cols`` are the projected batch's columns: ``seq``, ``op``,
+    ``url``, ``warc_ts`` and payload columns already under the table's
+    current names and types. ``out_schema`` is the Arrow schema Spark
+    verifies the result against (table columns + ``_bucket`` +
+    ``_action``); every classified row is emitted, tombstones included.
     """
     batch_set = set(batch_cols)
-    alias = alias or {}
+    # text is derived from html only when both sides allow it; otherwise
+    # it is an ordinary payload column
+    extract = "text" in table_cols and "html" in batch_set
+    # props: canonical-JSON residue of unmodeled batch fields (reference
+    # `content` spill, Content.scala:16-22). An already-canonical batch
+    # `props` column (diff-slice replay) takes the generic payload path;
+    # raw `extra` JSON is canonicalized here for upsert winners only.
+    canon_props = "props" in table_cols and "props" not in batch_set and "extra" in batch_set
 
     def merge_bucket(b: pa.Table, c: pa.Table) -> pa.Table:
         # --- LWW: sort (url, warc_ts, seq); keep last row per url -----
@@ -90,7 +99,7 @@ def _merge_bucket_arrow_fn(
             ix = pc.sort_indices(
                 b,
                 sort_keys=[("url", "ascending"), ("warc_ts", "ascending"), ("seq", "ascending")],
-                # NULL warc_ts must rank LOWEST (parity with merge.py's
+                # NULL warc_ts must rank LOWEST (parity with MOR's
                 # max_by struct order and merge_cells' _ts_us(_NEG)):
                 # the default at_end placement would crown an
                 # unparseable-timestamp event the per-url winner and
@@ -105,28 +114,35 @@ def _merge_bucket_arrow_fn(
             ).to_numpy(zero_copy_only=False)
             b = b.filter(pa.array(mask))
 
-        # --- full-outer hash join on url (arrow C++) -------------------
-        bj = b.rename_columns([f"b_{cn}" for cn in b.column_names])
-        cj = c.rename_columns([f"c_{cn}" for cn in c.column_names])
-        m = bj.join(
-            cj,
-            keys=["b_url"],
-            right_keys=["c_url"],
-            join_type="full outer",
-            coalesce_keys=False,
-        )
+        # --- full-outer join on url, keys and row indices only ---------
+        # Acero rejects nested and null-typed non-key fields, so payloads
+        # never enter the join: each side's columns are gathered by row
+        # index afterwards (a null index gathers a null, exactly what a
+        # payload-carrying outer join yields)
+        def keyed(t: pa.Table, ix_name: str) -> pa.Table:
+            return pa.table({
+                "url": t["url"],
+                ix_name: pa.array(np.arange(t.num_rows, dtype=np.int64)),
+            })
+
+        m = keyed(b, "b_ix").join(keyed(c, "c_ix"), keys="url", join_type="full outer")
         n = m.num_rows
+        b_ix = m["b_ix"].combine_chunks()
+        c_ix = m["c_ix"].combine_chunks()
 
-        def col(name):
-            return m[name].combine_chunks()
+        def bcol(name: str) -> pa.Array:
+            return b[name].take(b_ix).combine_chunks()
 
-        in_batch = pc.is_valid(col("b_url"))
-        in_cur = pc.is_valid(col("c_url"))
-        c_del = pc.fill_null(col("c__deleted"), False)
+        def ccol(name: str) -> pa.Array:
+            return c[name].take(c_ix).combine_chunks()
+
+        in_batch = pc.is_valid(b_ix)
+        in_cur = pc.is_valid(c_ix)
+        c_del = pc.fill_null(ccol("_deleted"), False)
         cur_live = pc.and_(in_cur, pc.invert(c_del))
 
-        b_ts, c_ts = col("b_warc_ts"), col("c_warc_ts")
-        b_seq, c_seq = col("b_seq"), col("c__seq")
+        b_ts, c_ts = bcol("warc_ts"), ccol("warc_ts")
+        b_seq, c_seq = bcol("seq"), ccol("_seq")
         newer = pc.or_(
             pc.greater(b_ts, c_ts),
             pc.and_(pc.equal(b_ts, c_ts), pc.greater(b_seq, c_seq)),
@@ -134,7 +150,7 @@ def _merge_bucket_arrow_fn(
         newer = pc.fill_null(newer, False)
         batch_wins = pc.and_(in_batch, pc.or_(pc.invert(in_cur), newer))
 
-        is_del = pc.and_(in_batch, pc.fill_null(pc.equal(col("b_op"), "delete"), False))
+        is_del = pc.and_(in_batch, pc.fill_null(pc.equal(bcol("op"), "delete"), False))
 
         ib = in_batch.to_numpy(zero_copy_only=False)
         bw = batch_wins.to_numpy(zero_copy_only=False)
@@ -154,229 +170,54 @@ def _merge_bucket_arrow_fn(
         tomb = bw & dl
         take_arr = pa.array(take)
         tomb_arr = pa.array(tomb)
-        wins_arr = pa.array(bw)
+        take_idx = np.nonzero(take)[0]
 
-        # --- extraction: only upsert winners leave Arrow ---------------
-        c_text = col("c_text")
-        if take.any() or tomb.any():
-            text_np = c_text.to_numpy(zero_copy_only=False).astype(object)
+        def upsert_only(cn: str, src: str, fn) -> pa.Array:
+            """Current value, replaced by ``fn`` of the batch's ``src``
+            on upsert winners and NULL on tombstones — only the winners'
+            payloads leave Arrow."""
+            out = ccol(cn).to_numpy(zero_copy_only=False).astype(object)
             if take.any():
-                take_idx = np.nonzero(take)[0]
-                html_up = col("b_html").take(pa.array(take_idx))
-                extracted = extract_text_series(html_up.to_pandas())
-                text_np[take_idx] = extracted.to_numpy()
-            text_np[tomb] = None
-            text = pa.array(text_np, type=pa.string())
-        else:
-            text = c_text
+                raw = bcol(src).take(pa.array(take_idx)).to_pandas()
+                out[take_idx] = fn(raw).to_numpy()
+            out[tomb] = None
+            return pa.array(out, type=pa.string())
 
         def payload(cn: str) -> pa.Array:
-            """Batch value on upsert, NULL on tombstone, else current.
-            ``alias`` maps renamed table columns to their batch name."""
-            cur = col(f"c_{cn}")
+            """Batch value on upsert, NULL on tombstone, else current."""
+            cur = ccol(cn)
             base = pc.if_else(tomb_arr, pa.nulls(n, cur.type), cur)
-            src = alias.get(cn, cn)
-            if src in batch_set:
-                return pc.if_else(take_arr, col(f"b_{src}").cast(cur.type), base)
+            if cn in batch_set:
+                return pc.if_else(take_arr, bcol(cn), base)
             return base
-
-        # props: canonical-JSON residue of unmodeled batch fields
-        # (reference `content` spill, Content.scala:16-22). Sources, in
-        # precedence order: an already-canonical batch `props` column
-        # (diff-slice replay) via the generic payload path; else raw
-        # `extra` JSON canonicalized here for upsert winners only.
-        props = None
-        if "props" in table_cols and "props" not in batch_set and "extra" in batch_set:
-            from clinvar_ingest_spark.functions.canonical_json import (
-                canonical_json_series,
-            )
-
-            c_props = col("c_props")
-            props_np = c_props.to_numpy(zero_copy_only=False).astype(object)
-            if take.any():
-                take_idx = np.nonzero(take)[0]
-                raw = col("b_extra").take(pa.array(take_idx)).to_pandas()
-                props_np[take_idx] = canonical_json_series(raw).to_numpy()
-            props_np[tomb] = None
-            props = pa.array(props_np, type=pa.string())
 
         cols_out: dict[str, pa.Array] = {}
         for cn in table_cols:
-            if cn == "props" and props is not None:
-                cols_out[cn] = props
-            elif cn == "text":
-                cols_out[cn] = text
+            if cn == "text" and extract:
+                cols_out[cn] = upsert_only(cn, "html", extract_text_series)
+            elif cn == "props" and canon_props:
+                from clinvar_ingest_spark.functions.canonical_json import (
+                    canonical_json_series,
+                )
+
+                cols_out[cn] = upsert_only(cn, "extra", canonical_json_series)
             elif cn == "url":
-                cols_out[cn] = pc.if_else(wins_arr, col("b_url"), col("c_url"))
+                cols_out[cn] = m["url"].combine_chunks()
             elif cn == "warc_ts":
-                cols_out[cn] = pc.if_else(wins_arr, b_ts, c_ts)
+                cols_out[cn] = pc.if_else(batch_wins, b_ts, c_ts)
             elif cn == "_seq":
-                cols_out[cn] = pc.fill_null(
-                    pc.if_else(wins_arr, b_seq, c_seq), -1
-                ).cast(pa.int64())
+                cols_out[cn] = pc.fill_null(pc.if_else(batch_wins, b_seq, c_seq), -1)
             elif cn == "_deleted":
-                cols_out[cn] = pc.if_else(wins_arr, is_del, c_del)
+                cols_out[cn] = pc.if_else(batch_wins, is_del, c_del)
             else:
                 cols_out[cn] = payload(cn)
-        cols_out["_bucket"] = pc.if_else(
-            in_batch, col("b__bucket"), col("c__bucket")
-        ).cast(pa.int64())
+        cols_out["_bucket"] = pc.coalesce(bcol("_bucket"), ccol("_bucket"))
         cols_out["_action"] = pa.array(action, type=pa.string())
-        return _normalize_ts_tz(pa.table(cols_out))
-
-    return merge_bucket
-
-
-def _normalize_ts_tz(tbl: pa.Table) -> pa.Table:
-    """Force tz-aware timestamp columns to the literal zone id "UTC".
-
-    PySpark's applyInArrow result verifier compares against
-    ``to_arrow_type(TimestampType) == timestamp[us, tz=UTC]`` — the
-    string "UTC", hardcoded — while the INPUT batches Spark hands this
-    UDF carry the session timezone id verbatim (``Etc/UTC`` on a stock
-    JVM with no ``spark.sql.session.timeZone`` pin, or any user zone).
-    Echoing input columns therefore fails the verify under every
-    session config except a literal-"UTC" pin (found by
-    tests/test_default_session.py — 13 replay queries red under a
-    default session). The cast is between two tz-aware types, so it is
-    instant-preserving metadata-only: no values move.
-    """
-    fields = []
-    changed = False
-    for f in tbl.schema:
-        if pa.types.is_timestamp(f.type) and f.type.tz is not None and f.type.tz != "UTC":
-            fields.append(pa.field(f.name, pa.timestamp(f.type.unit, "UTC")))
-            changed = True
-        else:
-            fields.append(f)
-    return tbl.cast(pa.schema(fields)) if changed else tbl
-
-
-def _merge_bucket_fn(
-    table_cols: list[str], batch_cols: list[str], alias: dict[str, str] | None = None
-):
-    """Build the per-bucket pandas merge function.
-
-    ``table_cols`` — current table schema (includes ``_seq``);
-    ``batch_cols`` — changelog columns present in the batch;
-    ``alias`` — renamed-table-column → batch-column map (see
-    :func:`batch_alias_map`). Output: table_cols + ``_bucket`` +
-    ``_action``; every classified row is emitted (tombstones included).
-    """
-    batch_set = set(batch_cols)
-    alias = alias or {}
-
-    def merge_bucket(bdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
-        out_cols = table_cols + ["_bucket", "_action"]
-        if len(bdf) == 0 and len(cdf) == 0:
-            return pd.DataFrame({c: [] for c in out_cols})
-
-        # --- LWW reduce: one winner per url by (warc_ts, seq) ---------
-        if len(bdf):
-            # na_position='first': NULL warc_ts ranks lowest — see the
-            # arrow kernel's null_placement note (strategy parity)
-            bdf = bdf.sort_values(
-                ["warc_ts", "seq"], kind="stable", na_position="first"
-            )
-            win = bdf.groupby("url", sort=False).tail(1)
-        else:
-            win = bdf
-        win = win.reset_index(drop=True)
-        cur = cdf.reset_index(drop=True)
-
-        m = pd.merge(
-            win.add_prefix("b_"),
-            cur.add_prefix("c_"),
-            left_on="b_url",
-            right_on="c_url",
-            how="outer",
-        )
-        in_batch = m["b_url"].notna()
-        in_cur = m["c_url"].notna()
-        # explicit nullable-bool route: fillna on object dtype relies on
-        # deprecated silent downcasting (pandas 3 removes it)
-        c_del = m["c__deleted"].astype("boolean").fillna(False).astype(bool)
-        cur_live = in_cur & ~c_del
-
-        # late-event guard: batch wins iff no current row or
-        # (warc_ts, seq) lexicographically greater. NaN comparisons from
-        # the outer merge are semantically False (fillna below); errstate
-        # just silences numpy's per-batch warning about them.
-        b_ts = m["b_warc_ts"]
-        c_ts = m["c_warc_ts"]
-        with np.errstate(invalid="ignore"):
-            newer = (b_ts > c_ts) | ((b_ts == c_ts) & (m["b_seq"] > m["c__seq"]))
-        batch_wins = in_batch & (~in_cur | newer.fillna(False))
-
-        # delete winners become TOMBSTONE rows (soft delete) — see the
-        # arrow formulation above for rationale
-        is_del = in_batch & (m["b_op"] == "delete")
-        action = np.full(len(m), "keep", dtype=object)
-        action[(in_batch & ~batch_wins).to_numpy()] = "keep_late"
-        action[(batch_wins & is_del & cur_live).to_numpy()] = "delete"
-        action[(batch_wins & is_del & ~cur_live).to_numpy()] = "noop_delete"
-        action[(batch_wins & ~is_del & ~cur_live).to_numpy()] = "insert"
-        action[(batch_wins & ~is_del & cur_live).to_numpy()] = "update"
-        take = np.isin(action, ("insert", "update"))
-        tomb = (batch_wins & is_del).to_numpy()
-        wins = batch_wins.to_numpy()
-
-        # --- extraction: once per surviving upsert only ----------------
-        text = m["c_text"].astype(object).copy()
-        if take.any():
-            text.iloc[take] = extract_text_series(m.loc[take, "b_html"]).to_numpy()
-        text.iloc[tomb] = None
-
-        # props residue (see arrow formulation for precedence rules)
-        props = None
-        if "props" in table_cols and "props" not in batch_set and "extra" in batch_set:
-            from clinvar_ingest_spark.functions.canonical_json import (
-                canonical_json_series,
-            )
-
-            props = m["c_props"].astype(object).copy()
-            if take.any():
-                props.iloc[take] = canonical_json_series(
-                    m.loc[take, "b_extra"]
-                ).to_numpy()
-            props.iloc[tomb] = None
-
-        out = {}
-        for c in table_cols:
-            if c == "props" and props is not None:
-                out[c] = props
-                continue
-            if c == "text":
-                out[c] = text
-                continue
-            # object dtype through the where-chain: pandas' silent
-            # downcasting inside `where` is deprecated, and the Arrow
-            # boundary re-casts to the declared schema anyway
-            cur_v = m[f"c_{c}"]
-            if c in ("url", "warc_ts", "_seq"):
-                src = {"url": "b_url", "warc_ts": "b_warc_ts", "_seq": "b_seq"}[c]
-                out[c] = cur_v.astype(object).where(~wins, m[src])
-            elif c == "_deleted":
-                out[c] = c_del.where(~wins, is_del)
-            elif alias.get(c, c) in batch_set:
-                src = alias.get(c, c)
-                out[c] = (
-                    cur_v.astype(object).where(~tomb, None).where(~take, m[f"b_{src}"])
-                )
-            else:  # evolved column unknown to this batch
-                out[c] = cur_v.astype(object).where(~tomb, None)
-        res = pd.DataFrame(out)
-        # arrow-boundary hygiene: NaN → None in object columns (binary/
-        # string types reject float NaN), integral lineage cols re-cast
-        res["_seq"] = pd.to_numeric(res["_seq"], errors="coerce").fillna(-1).astype("int64")
-        for c in res.columns:
-            if res[c].dtype == object:
-                res[c] = res[c].where(pd.notna(res[c]), None)
-        res["_bucket"] = (
-            m["b__bucket"].where(in_batch, m["c__bucket"]).astype("int64")
-        )
-        res["_action"] = action
-        return res
+        # cast to the exact schema Spark verifies: its timestamps carry
+        # the literal zone id "UTC" while input batches carry the session
+        # zone (e.g. "Etc/UTC" under a default session) — an
+        # instant-preserving, metadata-only cast
+        return pa.table(cols_out).cast(out_schema)
 
     return merge_bucket
 
@@ -387,13 +228,18 @@ def merge_apply_cogrouped(
     batch: DataFrame,
     batch_id: str,
     assume_all_buckets: bool = False,
-    use_arrow: bool = True,
     partial_to: int | None = None,
 ) -> MergeStats:
     """Apply one micro-batch via the cogrouped per-bucket plan.
 
-    Two Spark jobs, like merge.py: (1) tiny touched-buckets distinct,
-    (2) the cogroup+write with all lineage metrics observed in-flight.
+    ``batch`` columns: ``seq``, ``op``, ``url``, ``warc_ts`` plus any
+    payload columns — the table's columns under their current or a
+    former name and type, ``html`` (extracted into ``text``) and
+    ``extra`` (canonicalized into ``props``). Table columns the batch
+    lacks carry over from the current row (NULL on insert).
+
+    Two Spark jobs: (1) a tiny touched-buckets distinct, (2) the
+    cogroup+write with all lineage metrics observed in-flight.
 
     ``assume_all_buckets=True`` skips job (1): correct for any batch
     (untouched buckets just carry their state through the keep path),
@@ -403,30 +249,6 @@ def merge_apply_cogrouped(
     quiet buckets for one fewer job per batch).
     """
     m = table.manifest()
-
-    from clinvar_ingest_spark.lakelet.table import _SPARK_TYPES
-
-    complex_cols = [c.name for c in m.columns if c.type not in _SPARK_TYPES]
-    if complex_cols:
-        raise ValueError(
-            f"cogroup merge does not support complex-typed columns "
-            f"{complex_cols} (the Arrow kernel's hash join cannot carry "
-            "list/struct payloads) — use strategy='join' "
-            "(merge_apply), which handles them incl. nested-schema "
-            "version matching"
-        )
-    table_names = {c.name for c in m.columns}
-    if "text" not in table_names or "html" not in batch.columns:
-        # both kernels extract text from html unconditionally — a table
-        # or batch without those columns would die with a per-executor
-        # KeyError('c_text') deep inside applyInArrow; refuse clearly
-        # and point at the schema-flexible formulation instead
-        raise ValueError(
-            "cogroup merge requires a 'text' table column and an 'html' "
-            "batch column (the kernels run HTML->text extraction "
-            "inline) — for entity tables with other payload schemas "
-            "use strategy='join' (merge_apply)"
-        )
 
     if assume_all_buckets:
         touched = list(range(m.n_buckets))  # already spec-closed
@@ -447,14 +269,36 @@ def merge_apply_cogrouped(
         F.count(F.lit(1)).alias("n_events"),
         F.max("warc_ts").alias("watermark"),
     )
-    b = observed.withColumn("warc_ts", F.col("warc_ts").cast("timestamp")).withColumn(
-        "_bucket", bucket_expr("url", m.n_buckets)
-    )
+
+    # present the batch under the table's CURRENT schema (renames,
+    # widens, nested col-id remaps) before the shuffle; html and extra
+    # ride along as extraction / props sources when the table lacks them
+    table_cols = [cs.name for cs in m.columns]
+    alias = batch_alias_map(m, batch.columns)
+    extract = "text" in table_cols and "html" in batch.columns
+    payload = []
+    for cn in table_cols:
+        src = alias.get(cn, cn)
+        if cn in _LINEAGE or src not in batch.columns or (cn == "text" and extract):
+            continue
+        payload.append(
+            _batch_payload_expr(m, cn, src, batch.schema[src].dataType).alias(cn)
+        )
+    sources = [
+        F.col(c) for c in ("html", "extra") if c in batch.columns and c not in table_cols
+    ]
+    b = observed.select(
+        F.col("seq").cast("long").alias("seq"),
+        "op",
+        "url",
+        F.col("warc_ts").cast("timestamp").alias("warc_ts"),
+        *payload,
+        *sources,
+    ).withColumn("_bucket", bucket_expr("url", m.n_buckets))
     current = table.read(spark, buckets=touched).withColumn(
         "_bucket", bucket_expr("url", m.n_buckets)
     )
 
-    table_cols = [cs.name for cs in m.columns]
     out_schema = T.StructType(
         spark_schema(m.columns).fields
         + [
@@ -462,14 +306,14 @@ def merge_apply_cogrouped(
             T.StructField("_action", T.StringType()),
         ]
     )
-    alias = batch_alias_map(m, list(b.columns))
-    cg = b.groupBy("_bucket").cogroup(current.groupBy("_bucket"))
-    if use_arrow:
-        afn = _merge_bucket_arrow_fn(table_cols, b.columns, alias)
-        merged = cg.applyInArrow(lambda left, right: afn(left, right), schema=out_schema)
-    else:
-        fn = _merge_bucket_fn(table_cols, b.columns, alias)
-        merged = cg.applyInPandas(lambda left, right: fn(left, right), schema=out_schema)
+    fn = _merge_bucket_arrow_fn(
+        table_cols, b.columns, to_arrow_schema(out_schema)
+    )
+    merged = (
+        b.groupBy("_bucket")
+        .cogroup(current.groupBy("_bucket"))
+        .applyInArrow(lambda left, right: fn(left, right), schema=out_schema)
+    )
 
     merge_obs = Observation()
 
@@ -491,7 +335,7 @@ def merge_apply_cogrouped(
         pre_partitioned=True,
         expected_parent_id=m.snapshot_id,
         # frontier stamped atomically with the commit — read back by
-        # the crash-repair path (see merge.py merge_apply)
+        # the crash-repair path (engine._apply_batch_once)
         summary={"apply_partial_to": partial_to},
     )
 

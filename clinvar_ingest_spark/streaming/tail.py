@@ -19,7 +19,7 @@ loop has. Spark's checkpoint only provides source progress tracking
 
 Scale notes: the file source lists new segments incrementally
 (``maxFilesPerTrigger`` bounds batch size); each micro-batch inherits
-the 2-job apply shape from ``merge_apply``. For a real Kafka/binlog
+the 2-job apply shape of ``CdcEngine.apply_batch``. For a real Kafka/binlog
 source, swap ``readStream.parquet`` for ``readStream.format("kafka")``
 + a deserializer projection — the sink side is unchanged.
 """
@@ -101,14 +101,17 @@ def tail_until_drained(
     checkpoint_dir: str,
     max_files_per_trigger: int = 8,
     timeout_secs: float = 600.0,
+    source=None,
 ) -> None:
-    """Convenience: run an availableNow tail to completion."""
+    """Convenience: run an availableNow tail to completion
+    (``source`` as in :func:`tail_changelog`)."""
     q = tail_changelog(
         engine,
         changelog_dir,
         checkpoint_dir,
         max_files_per_trigger=max_files_per_trigger,
         available_now=True,
+        source=source,
     )
     try:
         if not q.awaitTermination(timeout_secs):

@@ -22,15 +22,39 @@ Local smoke run (no spark-submit):
         --changelog /tmp/changelog.parquet
 
 Emits one JSON lineage line per applied micro-batch (the engine also
-persists them in the table's ledger).
+persists them in the table's ledger). Exits 1 when a non-empty Debezium
+input has every record rejected.
 """
 
 from __future__ import annotations
 
 import argparse
+import glob
 import json
+import os
 import sys
 from dataclasses import asdict
+
+
+def _is_parquet(path: str) -> bool:
+    """Sniff an input by content: True when its first data file — the
+    path itself, or the first file under a directory such as Spark's
+    part-file output, or under a glob — starts with parquet's ``PAR1``
+    magic. Paths on other filesystems (``s3a://`` …) fall back to the
+    ``.parquet`` suffix convention."""
+    local = path[len("file://"):] if path.startswith("file://") else path
+    if "://" in local:
+        return path.endswith(".parquet")
+    for hit in sorted(glob.glob(local)):
+        files = [hit] if os.path.isfile(hit) else sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(hit) for f in fs
+        )
+        for f in files:
+            if os.path.basename(f).startswith(("_", ".")):
+                continue  # _SUCCESS markers, .crc sidecars
+            with open(f, "rb") as fh:
+                return fh.read(4) == b"PAR1"
+    return False
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -46,7 +70,8 @@ def main(argv: list[str] | None = None) -> int:
                    default="native",
                    help="changelog encoding: 'native' = FIXTURES.md §2 "
                         "parquet; 'debezium' = Debezium JSON envelopes "
-                        "(a parquet 'value' column, or JSON-lines text) "
+                        "(a parquet 'value' column, or JSON-lines text; "
+                        "with --tail, JSON-lines segments) "
                         "— tombstones dropped, malformed records written "
                         "to <table>_rejects instead of applied")
     p.add_argument("--buckets", type=int, default=256,
@@ -99,7 +124,7 @@ def main(argv: list[str] | None = None) -> int:
 
             raw = (
                 spark.read.parquet(args.changelog)
-                if args.changelog.endswith(".parquet")
+                if _is_parquet(args.changelog)
                 else spark.read.text(args.changelog)
             )
             changelog, rejects = parse_debezium(raw, with_rejects=True)
@@ -120,6 +145,15 @@ def main(argv: list[str] | None = None) -> int:
                     f"{args.table}_rejects/src={src_key}"
                 )
             print(json.dumps({"format": "debezium", "rejects": n_rejects}))
+            if n_rejects and changelog.isEmpty():
+                # every record rejected: a wrong input encoding or a
+                # broken producer, never a successful no-op apply
+                print(
+                    f"cdc_apply: all {n_rejects} records of "
+                    f"{args.changelog} were rejected; nothing applied",
+                    file=sys.stderr,
+                )
+                return 1
         else:
             changelog = spark.read.parquet(args.changelog)
         if args.bench_json:
@@ -167,17 +201,26 @@ def main(argv: list[str] | None = None) -> int:
             tail_until_drained,
         )
 
+        source = None  # the native parquet segment source
+        if args.format == "debezium":
+            from clinvar_ingest_spark.bus import DebeziumFileSource
+
+            source = DebeziumFileSource(
+                args.tail, max_files_per_trigger=args.max_files_per_trigger
+            )
         if args.follow:
             q = tail_changelog(
                 engine, args.tail, args.checkpoint,
                 max_files_per_trigger=args.max_files_per_trigger,
                 available_now=False,
+                source=source,
             )
             q.awaitTermination()
         else:
             tail_until_drained(
                 engine, args.tail, args.checkpoint,
                 max_files_per_trigger=args.max_files_per_trigger,
+                source=source,
             )
             print(json.dumps({
                 "table": args.table,

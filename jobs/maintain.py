@@ -51,7 +51,9 @@ def main(argv: list[str] | None = None) -> int:
                         "auto_maintain defaults: fold deltas, bin-pack "
                         ">=4-file buckets, keep 8 snapshots older than "
                         "1h); combinable with --purge-tombstones-before "
-                        "to also purge aged tombstones inside the pass")
+                        "to also purge aged tombstones inside the pass, "
+                        "and with --expire-keep to keep that many "
+                        "snapshots instead of 8 (expiry runs once)")
     p.add_argument("--master", default="submit")
     args = p.parse_args(argv)
     if not (
@@ -86,15 +88,16 @@ def main(argv: list[str] | None = None) -> int:
             auto_maintain,
         )
 
-        out["auto"] = auto_maintain(
-            spark, eng.table,
-            MaintenancePolicy(
-                purge_tombstones_before=args.purge_tombstones_before,
-                in_flight_grace_secs=args.expire_grace,
-            ),
-            engine=eng,
+        pol = MaintenancePolicy(
+            purge_tombstones_before=args.purge_tombstones_before,
+            in_flight_grace_secs=args.expire_grace,
         )
-        args.purge_tombstones_before = None  # consumed by the policy
+        if args.expire_keep is not None:
+            pol.expire_keep_last = args.expire_keep
+        out["auto"] = auto_maintain(spark, eng.table, pol, engine=eng)
+        # consumed by the policy: each action runs once per invocation
+        args.purge_tombstones_before = None
+        args.expire_keep = None
     if args.rebucket:
         out["rebucket_snapshot"] = rebucket(spark, eng.table, args.rebucket)
     if args.grow_buckets:

@@ -14,7 +14,7 @@ from pyspark.sql import types as T
 
 from clinvar_ingest_spark.lakelet.manifest import ColumnSpec
 from clinvar_ingest_spark.lakelet.table import LakeletTable, bucket_expr, spark_schema
-from clinvar_ingest_spark.operators.merge import merge_apply
+from clinvar_ingest_spark.operators.merge_cogroup import merge_apply_cogrouped
 
 ENTITY_COLS = [
     ColumnSpec(1, "url", "string"),
@@ -84,7 +84,7 @@ def test_schema_roundtrip_and_commit(spark, table):
             (2, "insert", "u2", _ts(1), [], None, None),
         ],
     )
-    merge_apply(spark, table, b, "b0")
+    merge_apply_cogrouped(spark, table, b, "b0")
     rows = {r["url"]: r for r in table.read(spark).collect()}
     assert rows["u1"]["tags"] == ["a", "b"]
     assert [x.asDict() for x in rows["u1"]["xrefs"]] == [{"db": "db1", "xid": "x1"}]
@@ -92,7 +92,7 @@ def test_schema_roundtrip_and_commit(spark, table):
 
 
 def test_merge_lww_and_delete_with_arrays(spark, table):
-    merge_apply(
+    merge_apply_cogrouped(
         spark, table,
         _batch(spark, [
             (1, "insert", "u1", _ts(1), ["a"], [("d", "1")], 1),
@@ -100,7 +100,7 @@ def test_merge_lww_and_delete_with_arrays(spark, table):
         ]),
         "b0",
     )
-    merge_apply(
+    merge_apply_cogrouped(
         spark, table,
         _batch(spark, [
             (3, "update", "u1", _ts(2), ["a", "a2"], [("d", "1"), ("e", "9")], 5),
@@ -120,7 +120,7 @@ def test_merge_lww_and_delete_with_arrays(spark, table):
 
 
 def test_nested_evolution_rename_add_widen(spark, table):
-    merge_apply(
+    merge_apply_cogrouped(
         spark, table,
         _batch(spark, [(1, "insert", "u1", _ts(1), ["a"], [("d", "1")], 7)]),
         "b0",
@@ -143,7 +143,7 @@ def test_nested_evolution_rename_add_widen(spark, table):
     assert r["extra_tags"] is None
 
     # a batch still speaking the OLD nested shape (xid) lands correctly
-    merge_apply(
+    merge_apply_cogrouped(
         spark, table,
         _batch(spark, [
             (2, "update", "u1", _ts(2), ["z"], [("d", "2"), ("e", "3")], 9),
@@ -168,7 +168,7 @@ def test_diff_across_nested_rename_reports_no_phantom_updates(spark, table):
     from clinvar_ingest_spark.operators.diff import diff_all
     from clinvar_ingest_spark.lakelet.table import align_select
 
-    merge_apply(
+    merge_apply_cogrouped(
         spark, table,
         _batch(spark, [
             (1, "insert", "u1", _ts(1), ["a"], [("d", "1")], 1),
@@ -179,7 +179,7 @@ def test_diff_across_nested_rename_reports_no_phantom_updates(spark, table):
     old_sid = table.current_snapshot_id()
     old_m = table.manifest(old_sid)
     table.rename_column("xrefs.xid", "ref_id")
-    merge_apply(
+    merge_apply_cogrouped(
         spark, table,
         _batch(spark, [(3, "update", "u2", _ts(2), ["b2"], [("d", "2")], 2)]),
         "b1",
@@ -203,7 +203,7 @@ def test_array_diff_and_export_json(spark, table, tmp_path):
     round trip (complex values serialize natively)."""
     from clinvar_ingest_spark.operators.diff import diff_all
 
-    merge_apply(
+    merge_apply_cogrouped(
         spark, table,
         _batch(spark, [
             (1, "insert", "u1", _ts(1), ["a"], [("d", "1")], 1),
@@ -212,7 +212,7 @@ def test_array_diff_and_export_json(spark, table, tmp_path):
         "b0",
     )
     old = table.read(spark).filter("NOT _deleted").drop("_seq", "_deleted")
-    merge_apply(
+    merge_apply_cogrouped(
         spark, table,
         _batch(spark, [
             (3, "update", "u1", _ts(2), ["a", "x"], [("d", "1")], 1),
@@ -241,7 +241,7 @@ def test_replay_convergence_with_arrays(spark, tmp_path):
 
     def run(root):
         t = LakeletTable.create(root, ENTITY_COLS, n_buckets=4, key_col="url")
-        merge_apply(
+        merge_apply_cogrouped(
             spark, t,
             _batch(spark, [
                 (1, "insert", "u1", _ts(1), ["a"], [("d", "1")], 1),
@@ -249,7 +249,7 @@ def test_replay_convergence_with_arrays(spark, tmp_path):
             ]),
             "b0",
         )
-        merge_apply(
+        merge_apply_cogrouped(
             spark, t,
             _batch(spark, [
                 (3, "update", "u1", _ts(2), ["a2"], [("d", "9")], 4),
@@ -275,7 +275,7 @@ def test_replay_convergence_with_arrays(spark, tmp_path):
     # event guard makes it a logical no-op — content is unchanged (the
     # engine's ledger/deterministic-sid layer additionally skips the
     # commit itself; tested in test_exactly_once.py)
-    merge_apply(
+    merge_apply_cogrouped(
         spark, t1,
         _batch(spark, [
             (3, "update", "u1", _ts(2), ["a2"], [("d", "9")], 4),
@@ -284,19 +284,6 @@ def test_replay_convergence_with_arrays(spark, tmp_path):
         "b1",
     )
     assert content(t1) == content(t2)
-
-
-def test_cogroup_strategy_rejects_complex_types(spark, table):
-    """The default cogroup merge cannot carry list/struct payloads
-    through its Arrow hash join — it must fail with guidance, not die
-    inside a worker."""
-    from clinvar_ingest_spark.operators.merge_cogroup import (
-        merge_apply_cogrouped,
-    )
-
-    b = _batch(spark, [(1, "insert", "u1", _ts(1), ["a"], [("d", "1")], 1)])
-    with pytest.raises(ValueError, match="strategy='join'"):
-        merge_apply_cogrouped(spark, table, b, "b0")
 
 
 def test_array_element_widen(spark, tmp_path):
@@ -316,7 +303,7 @@ def test_array_element_widen(spark, tmp_path):
         "seq long, op string, url string, warc_ts timestamp, nums array<int>"
     )
     b = spark.createDataFrame([(1, "insert", "u1", _ts(1), [1, 2])], schema)
-    merge_apply(spark, t, b, "b0")
+    merge_apply_cogrouped(spark, t, b, "b0")
     t.widen_column("nums", "array<long>")
     r = t.read(spark).collect()[0]
     assert r["nums"] == [1, 2]

@@ -261,3 +261,91 @@ def test_engine_replay_from_envelopes_matches_native(spark, tmp_path):
         )
         outs.append(sorted(map(tuple, state.collect())))
     assert outs[0] == outs[1]
+
+
+_COLS = ["seq", "op", "url", "warc_ts", "html", "lang", "schema_ver", "extra"]
+
+
+def _cdc_apply(spark, monkeypatch, capsys, argv):
+    """Run jobs/cdc_apply.py in-process on the test session; returns
+    (exit code, the JSON lines it printed)."""
+    from jobs.cdc_apply import main
+
+    monkeypatch.setattr(
+        "clinvar_ingest_spark.session.get_spark", lambda **kw: spark
+    )
+    rc = main(argv + ["--buckets", "4"])
+    lines = capsys.readouterr().out.strip().splitlines()
+    return rc, [json.loads(x) for x in lines if x.startswith("{")]
+
+
+def _native_state(spark, tmp_path, native):
+    from clinvar_ingest_spark.engine import CdcEngine
+
+    ref = CdcEngine(spark, str(tmp_path / "ref"), n_buckets=4)
+    ref.replay(native.select(*_COLS), batch_size=200)
+    return ref.state_hash()
+
+
+def test_cdc_apply_reads_parquet_directory_of_envelopes(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """A parquet DIRECTORY of envelopes (Spark's part-file output, no
+    .parquet suffix) is recognized by content and applied — not read
+    as text, quarantined whole, and reported as a successful no-op."""
+    from clinvar_ingest_spark.engine import CdcEngine
+
+    native = _native_changelog(spark, tmp_path, 400, 80, name="cl4")
+    env_dir = str(tmp_path / "envelopes")
+    to_debezium(native.select(*_COLS)).select("value").write.parquet(env_dir)
+
+    table = str(tmp_path / "t")
+    rc, out = _cdc_apply(spark, monkeypatch, capsys, [
+        "--table", table, "--changelog", env_dir, "--format", "debezium",
+    ])
+    assert rc == 0
+    assert out[0] == {"format": "debezium", "rejects": 0}
+    assert CdcEngine(spark, table, n_buckets=4).state_hash() == _native_state(
+        spark, tmp_path, native
+    )
+
+
+def test_cdc_apply_fails_when_every_record_is_rejected(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """A non-empty input whose every record is rejected exits non-zero
+    (rejects still quarantined for triage) instead of exiting 0."""
+    src = tmp_path / "garbage.jsonl"
+    src.write_text('{"payload": not json\n{"payload": {"op": "z"}}\n')
+    table = str(tmp_path / "t")
+    rc, out = _cdc_apply(spark, monkeypatch, capsys, [
+        "--table", table, "--changelog", str(src), "--format", "debezium",
+    ])
+    assert rc != 0
+    assert out == [{"format": "debezium", "rejects": 2}]
+    assert spark.read.parquet(f"{table}_rejects").count() == 2
+
+
+def test_cdc_apply_tails_debezium_segments(spark, tmp_path, monkeypatch, capsys):
+    """`--tail --format debezium` drains JSON-lines envelope segments
+    through DebeziumFileSource to the native replay's state."""
+    import os
+
+    native = _native_changelog(spark, tmp_path, 400, 80, name="cl5")
+    vals = [r.value for r in to_debezium(native.select(*_COLS)).select("value").collect()]
+    seg_dir = str(tmp_path / "segs")
+    os.makedirs(seg_dir)
+    for i, chunk in enumerate([vals[:200], vals[200:]]):
+        with open(os.path.join(seg_dir, f"seg-{i:04d}.jsonl"), "w") as f:
+            f.write("\n".join(chunk))
+
+    rc, out = _cdc_apply(spark, monkeypatch, capsys, [
+        "--table", str(tmp_path / "t"), "--tail", seg_dir,
+        "--checkpoint", str(tmp_path / "ckpt"), "--format", "debezium",
+        "--max-files-per-trigger", "1",
+    ])
+    assert rc == 0 and out[-1]["ledger_records"] == 2
+    from clinvar_ingest_spark.engine import CdcEngine
+
+    got = CdcEngine(spark, str(tmp_path / "t"), n_buckets=4).state_hash()
+    assert got == _native_state(spark, tmp_path, native)

@@ -46,82 +46,3 @@ def test_deterministic_repeat():
     a = extract_text_series(s)
     b = extract_text_series(s)
     assert (a == b).all()
-
-
-def test_jvm_expr_matches_python_kernel_edge_cases(spark):
-    """Round-3 A/B: the codegen'd regexp-chain variant is
-    byte-identical to the Python determinism-reference kernel on
-    entity ordering, block tags, comments, and NULLs."""
-    from pyspark.sql import functions as F
-
-    from clinvar_ingest_spark.functions.extract import (
-        extract_text_expr,
-        extract_text_str,
-        extract_text_udf,
-    )
-
-    cases = [
-        b"<html><head><title>x</title></head><body><p>a</p><p>b</p></body></html>",
-        b"a &amp;lt; b &nbsp;&quot;c&quot; &apos;d&apos; &amp; e",
-        b"<div>x<!-- comment <p>hidden</p> -->y</div>",
-        b"<SCRIPT>var x=1;</script>text<style>.a{}</STYLE>",
-        b"line1<br><br><br>line2\n\n\nline3",
-        b"  \t leading and trailing \n ",
-        b"",
-        None,
-        b"plain text no tags",
-        b"<p>unicode \xc3\xa9\xc3\xa0</p>",
-    ]
-    df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cases)], "i long, html binary"
-    )
-    rows = df.select(
-        "i",
-        extract_text_udf(F.col("html")).alias("py"),
-        extract_text_expr(F.col("html")).alias("jvm"),
-    ).collect()
-    for r in rows:
-        assert r["py"] == r["jvm"], f"case {r['i']}: {r['py']!r} != {r['jvm']!r}"
-    # and both agree with the single-string reference
-    for r in rows:
-        want = (
-            None
-            if cases[r["i"]] is None
-            else extract_text_str(cases[r["i"]].decode("utf-8", "replace"))
-        )
-        assert r["py"] == want
-
-
-def test_jvm_kernel_engine_state_hash_identical(spark, tmp_path):
-    """Same changelog through strategy='join' with both extraction
-    kernels: bit-identical table state (the A/B acceptance gate)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from clinvar_ingest_spark.engine import CdcEngine
-    from clinvar_ingest_spark.sources.changelog import (
-        ChangelogSpec,
-        changelog_arrow_schema,
-        generate_changelog,
-    )
-
-    pdf = generate_changelog(ChangelogSpec(n_events=800, n_urls=150, seed=19))
-    p = str(tmp_path / "cl.parquet")
-    pq.write_table(
-        pa.Table.from_pandas(
-            pdf, schema=changelog_arrow_schema(), preserve_index=False
-        ),
-        p,
-    )
-    cl = spark.read.parquet(p)
-    a = CdcEngine(spark, str(tmp_path / "py"), n_buckets=8, strategy="join")
-    b = CdcEngine(
-        spark, str(tmp_path / "jvm"), n_buckets=8, strategy="join",
-        extract_kernel="jvm",
-    )
-    a.replay(cl, batch_size=400)
-    b.replay(cl, batch_size=400)
-    assert a.state_hash() == b.state_hash()
-    assert a.state_hash(include_tombstones=True) == b.state_hash(
-        include_tombstones=True
-    )

@@ -71,7 +71,7 @@ def test_cow_keeps_untouched_bucket_files(spark, table):
     assert untouched_s1 == untouched_s2  # COW: untouched files carried forward
     assert all(b == b0 for p, b in files_s2.items() if p not in untouched_s2)
     # note: rewriting a bucket with only u0 drops other rows of that bucket —
-    # that's merge_apply's job to prevent; here we assert file mechanics only
+    # that's the merge kernel's job to prevent; here we assert file mechanics only
 
 
 def test_bucket_pruned_read(spark, table):

@@ -355,3 +355,36 @@ def test_auto_maintain_without_engine_skips_compact(spark, tmp_path):
     )
     assert "compact" not in did
     assert eng.table.delta_buckets()  # untouched without the engine
+
+
+def test_maintain_cli_auto_with_expire_keep_expires_once(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """`jobs/maintain.py --auto --expire-keep K` hands K to the policy:
+    snapshot expiry runs once, with the caller's K — not once inside the
+    pass with the default keep and again with K and no age guard."""
+    import json
+
+    from clinvar_ingest_spark.lakelet import maintenance
+    from jobs.maintain import main
+
+    eng = _replayed_engine(spark, tmp_path)
+    calls = []
+    real = maintenance.expire_snapshots
+
+    def counting(*a, **kw):
+        calls.append(kw.get("keep_last"))
+        return real(*a, **kw)
+
+    monkeypatch.setattr(maintenance, "expire_snapshots", counting)
+    monkeypatch.setattr(
+        "clinvar_ingest_spark.session.get_spark", lambda **kw: spark
+    )
+    rc = main([
+        "--table", eng.table.root, "--auto", "--expire-keep", "2",
+        "--expire-grace", "0",
+    ])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0 and out["state_hash_unchanged"]
+    assert calls == [2]
+    assert "expire" not in out

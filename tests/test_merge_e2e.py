@@ -185,21 +185,6 @@ def test_export_diff_ndjson(spark, changelog_df, tmp_table_root, tmp_path):
     assert msg["files"]
 
 
-def test_join_and_cogroup_strategies_agree(spark, changelog_df, tmp_path):
-    """Permanent A/B: both merge formulations produce identical snapshot
-    lineage, stats, and state hash."""
-    a = CdcEngine(spark, str(tmp_path / "tj"), n_buckets=8, strategy="join")
-    sa = a.replay(changelog_df, batch_size=1000)
-    b = CdcEngine(spark, str(tmp_path / "tc"), n_buckets=8, strategy="cogroup")
-    sb = b.replay(changelog_df, batch_size=1000)
-    assert a.state_hash() == b.state_hash()
-    assert a.table.history() == b.table.history()
-    for x, y in zip(sa, sb):
-        assert (x.n_events, x.n_inserts, x.n_updates, x.n_deletes, x.n_keys) == (
-            y.n_events, y.n_inserts, y.n_updates, y.n_deletes, y.n_keys
-        )
-
-
 def test_late_event_after_delete_does_not_resurrect(spark, tmp_path):
     """A late (older-warc_ts) event delivered in a batch AFTER the key
     was deleted must lose the LWW compare against the delete tombstone —
@@ -233,14 +218,12 @@ def test_late_event_after_delete_does_not_resurrect(spark, tmp_path):
         pa.Table.from_pandas(rows, schema=changelog_arrow_schema(), preserve_index=False), p
     )
     df = spark.read.parquet(p)
-    for strategy in ("cogroup", "join"):
-        eng = CdcEngine(spark, str(tmp_path / f"t_{strategy}"), n_buckets=4,
-                        strategy=strategy)
-        eng.replay(df, batch_size=2)  # delete lands in batch 1, late update in batch 2
-        assert eng.pages().count() == 0, strategy
-        # the tombstone still holds the delete's LWW position
-        tomb = eng.read().filter("_deleted").collect()
-        assert len(tomb) == 1 and tomb[0]["_seq"] == 1, strategy
+    eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=4)
+    eng.replay(df, batch_size=2)  # delete lands in batch 1, late update in batch 2
+    assert eng.pages().count() == 0
+    # the tombstone still holds the delete's LWW position
+    tomb = eng.read().filter("_deleted").collect()
+    assert len(tomb) == 1 and tomb[0]["_seq"] == 1
 
 
 def test_hot_url_skew_replay(spark, tmp_path):
@@ -278,11 +261,11 @@ def test_hot_url_skew_replay(spark, tmp_path):
 
 
 def test_null_warc_ts_event_never_beats_a_real_timestamp(spark, tmp_path):
-    """All three merge formulations must rank a NULL warc_ts LOWEST in
-    the within-batch LWW reduce (parity with max_by's struct order and
-    the cells kernel's _ts_us(_NEG)). The cogroup kernels' default
-    nulls-last sort would crown an unparseable-timestamp event the
-    per-url winner and silently drop the real latest event."""
+    """The COW and MOR applies must rank a NULL warc_ts LOWEST in the
+    within-batch LWW reduce (parity with max_by's struct order and the
+    cells kernel's _ts_us(_NEG)). The Arrow kernel's default nulls-last
+    sort would crown an unparseable-timestamp event the per-url winner
+    and silently drop the real latest event."""
     from datetime import datetime
 
     schema = (
@@ -297,29 +280,12 @@ def test_null_warc_ts_event_never_beats_a_real_timestamp(spark, tmp_path):
         (5, "update", u, None, b"<p>junk</p>", "en", None),
     ]
     hashes = set()
-    for name, kw in (
-        ("join", dict(strategy="join")),
-        ("cogroup_arrow", dict(strategy="cogroup")),
-    ):
-        e = CdcEngine(spark, str(tmp_path / name), n_buckets=4, **kw)
+    for mode in ("cow", "mor"):
+        e = CdcEngine(spark, str(tmp_path / mode), n_buckets=4, write_mode=mode)
         e.apply_batch(spark.createDataFrame(rows, schema=schema), 0, 9)
         live = e.pages().collect()
-        assert len(live) == 1, name
-        assert bytes(live[0]["html"]) == b"<p>real</p>", name
-        assert live[0]["warc_ts"] is not None, name
+        assert len(live) == 1, mode
+        assert bytes(live[0]["html"]) == b"<p>real</p>", mode
+        assert live[0]["warc_ts"] is not None, mode
         hashes.add(e.state_hash(include_tombstones=True))
-    assert len(hashes) == 1  # byte-identical across strategies
-
-    # pandas cogroup kernel (use_arrow=False) agrees too
-    from clinvar_ingest_spark.lakelet.table import LakeletTable
-    from clinvar_ingest_spark.operators.merge_cogroup import (
-        merge_apply_cogrouped,
-    )
-
-    e2 = CdcEngine(spark, str(tmp_path / "pd"), n_buckets=4)
-    merge_apply_cogrouped(
-        spark, e2.table, spark.createDataFrame(rows, schema=schema),
-        "000000000000-000000000009", use_arrow=False,
-    )
-    live = e2.table.read(spark).filter("NOT _deleted").collect()
-    assert len(live) == 1 and bytes(live[0]["html"]) == b"<p>real</p>"
+    assert len(hashes) == 1  # byte-identical across write modes

@@ -2,9 +2,10 @@
 
 The reference ships no property tests (SURVEY.md §5); the LWW + tombstone
 + late-event semantics are exactly the kind of fold where randomized
-inputs catch edge cases example tests miss. This drives the *pure pandas*
-kernel (`_merge_bucket_fn`) — no Spark session, so hundreds of examples
-run in seconds — against an independent brute-force fold.
+inputs catch edge cases example tests miss. This drives the Arrow kernel
+production runs (`_merge_bucket_arrow_fn`) directly on pyarrow tables —
+no Spark session, so hundreds of examples run in seconds — against an
+independent brute-force fold.
 
 Invariant: for every url, the kernel's output row equals the fold
     state = None
@@ -18,19 +19,34 @@ equals global LWW with soft deletes.
 import datetime as dt
 
 import numpy as np
-import pandas as pd
-import pytest
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
-from clinvar_ingest_spark.operators.merge_cogroup import _merge_bucket_fn
+from clinvar_ingest_spark.functions.canonical_json import canonical_json_of_string
+from clinvar_ingest_spark.functions.extract import extract_text_str
+from clinvar_ingest_spark.operators.merge_cogroup import _merge_bucket_arrow_fn
 
 URLS = [f"u{i}" for i in range(4)]
-T0 = dt.datetime(2024, 1, 1)
+T0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+TS = pa.timestamp("us", tz="UTC")
+TAIL = [("_bucket", pa.int64())]
 
-TABLE_COLS = ["url", "warc_ts", "html", "text", "lang", "_seq", "_deleted", "props"]
-BATCH_COLS = [
-    "seq", "op", "url", "warc_ts", "html", "lang", "schema_ver", "extra", "_bucket",
-]
+KEYS = [("url", pa.string()), ("warc_ts", TS)]
+LINEAGE = [("_seq", pa.int64()), ("_deleted", pa.bool_())]
+EVENT = [("seq", pa.int64()), ("op", pa.string()), ("url", pa.string()), ("warc_ts", TS)]
+
+# pages: html extracted into text, raw extra canonicalized into props
+PAGE_PAYLOAD = [("html", pa.binary()), ("text", pa.string()), ("lang", pa.string())]
+PAGE_TABLE = pa.schema(KEYS + PAGE_PAYLOAD + LINEAGE + [("props", pa.string())])
+PAGE_BATCH = pa.schema(
+    EVENT + [("html", pa.binary()), ("lang", pa.string()), ("extra", pa.string())] + TAIL
+)
+
+# entity rows: nested payloads, no html/text
+XREF = pa.struct([("db", pa.string()), ("xid", pa.string())])
+ENT_PAYLOAD = [("tags", pa.list_(pa.string())), ("xrefs", pa.list_(XREF))]
+ENT_TABLE = pa.schema(KEYS + ENT_PAYLOAD + LINEAGE)
+ENT_BATCH = pa.schema(EVENT + ENT_PAYLOAD + TAIL)
 
 event = st.tuples(
     st.sampled_from(URLS),
@@ -42,13 +58,48 @@ cur_row = st.tuples(
     st.integers(min_value=0, max_value=6),
     st.booleans(),  # _deleted tombstone?
 )
+tags = st.one_of(st.none(), st.lists(st.sampled_from(["a", "b", "c"]), max_size=3))
+xrefs = st.one_of(
+    st.none(),
+    st.lists(
+        st.fixed_dictionaries(
+            {"db": st.sampled_from(["d", "e"]), "xid": st.one_of(st.none(), st.text("xy", max_size=2))}
+        ),
+        max_size=3,
+    ),
+)
+entity_event = st.tuples(event, tags, xrefs)
 
 
 def _ts(off: int) -> dt.datetime:
     return T0 + dt.timedelta(hours=off)
 
 
-def _mk_batch(events):
+def _out_schema(table_schema: pa.Schema) -> pa.Schema:
+    return pa.schema(list(table_schema) + TAIL + [("_action", pa.string())])
+
+
+def _kernel(table_schema: pa.Schema, batch_schema: pa.Schema):
+    return _merge_bucket_arrow_fn(
+        table_schema.names, batch_schema.names, _out_schema(table_schema)
+    )
+
+
+def _rows(tbl: pa.Table) -> dict:
+    """url -> output row (one row per key is the table invariant)."""
+    out = {}
+    for r in tbl.to_pylist():
+        assert r["url"] not in out
+        out[r["url"]] = r
+    return out
+
+
+def _as_current(out: pa.Table, table_schema: pa.Schema) -> pa.Table:
+    """A kernel output fed back as the next batch's current state."""
+    return out.select(table_schema.names + ["_bucket"])
+
+
+def _mk_page_batch(events) -> pa.Table:
     rows = []
     for seq, (url, off, op) in enumerate(events):
         is_del = op == "delete"
@@ -60,15 +111,14 @@ def _mk_batch(events):
                 "warc_ts": _ts(off),
                 "html": None if is_del else f"<p>{url} v{seq}</p>".encode(),
                 "lang": None if is_del else "en",
-                "schema_ver": 1,
                 "extra": None if is_del else '{"status": 200, "fetch_ms": %d}' % seq,
                 "_bucket": 0,
             }
         )
-    return pd.DataFrame(rows, columns=BATCH_COLS)
+    return pa.Table.from_pylist(rows, schema=PAGE_BATCH)
 
 
-def _mk_current(rows):
+def _mk_page_current(rows) -> pa.Table:
     seen = set()
     out = []
     for i, (url, off, deleted) in enumerate(rows):
@@ -88,27 +138,30 @@ def _mk_current(rows):
                 "_bucket": 0,
             }
         )
-    return pd.DataFrame(out, columns=TABLE_COLS + ["_bucket"])
+    return pa.Table.from_pylist(out, schema=pa.schema(list(PAGE_TABLE) + TAIL))
 
 
-def _state_key(df: pd.DataFrame) -> dict:
-    """url -> (ts, seq, deleted); dict-based (itertuples mangles _cols)."""
-    return {
-        r["url"]: (r["warc_ts"], int(r["_seq"]), bool(r["_deleted"]))
-        for r in df.to_dict("records")
+def _fold(batch: pa.Table, current: pa.Table, seq_col: str = "seq") -> dict:
+    """Independent fold: expected url -> winning row (its own dict, with
+    ``_seq`` and ``_deleted`` normalized across batch and current rows)."""
+    state = {
+        r["url"]: dict(r, _seq=int(r["_seq"]), _deleted=bool(r["_deleted"]))
+        for r in current.to_pylist()
     }
-
-
-def _oracle(batch: pd.DataFrame, current: pd.DataFrame):
-    """Independent fold: expected final (url -> (ts, seq, deleted))."""
-    state = _state_key(current)
-    if len(batch):
-        w = batch.sort_values(["warc_ts", "seq"]).groupby("url").tail(1)
-        for r in w.to_dict("records"):
-            cur = state.get(r["url"])
-            if cur is None or (r["warc_ts"], r["seq"]) > (cur[0], cur[1]):
-                state[r["url"]] = (r["warc_ts"], int(r["seq"]), r["op"] == "delete")
+    winners: dict = {}
+    for r in batch.to_pylist():  # per-url batch LWW: max (warc_ts, seq)
+        w = winners.get(r["url"])
+        if w is None or (r["warc_ts"], r[seq_col]) > (w["warc_ts"], w[seq_col]):
+            winners[r["url"]] = r
+    for url, w in winners.items():
+        cur = state.get(url)
+        if cur is None or (w["warc_ts"], w[seq_col]) > (cur["warc_ts"], cur["_seq"]):
+            state[url] = dict(w, _seq=int(w[seq_col]), _deleted=w["op"] == "delete")
     return state
+
+
+def _lineage(rows: dict) -> dict:
+    return {u: (r["warc_ts"], r["_seq"], r["_deleted"]) for u, r in rows.items()}
 
 
 @settings(max_examples=200, deadline=None)
@@ -117,67 +170,27 @@ def _oracle(batch: pd.DataFrame, current: pd.DataFrame):
     st.lists(cur_row, max_size=4),
 )
 def test_merge_kernel_equals_global_lww_fold(events, current_rows):
-    batch = _mk_batch(events)
-    current = _mk_current(current_rows)
-    fn = _merge_bucket_fn(TABLE_COLS, list(BATCH_COLS))
-    out = fn(batch, current)
+    batch = _mk_page_batch(events)
+    current = _mk_page_current(current_rows)
+    out = _kernel(PAGE_TABLE, PAGE_BATCH)(batch, current)
+    assert out.schema == _out_schema(PAGE_TABLE)
 
-    want = _oracle(batch, current)
-    got = _state_key(out)
-    assert got == want
+    want = _fold(batch, current)
+    got = _rows(out)
+    assert _lineage(got) == _lineage(want)
 
-    # live rows must carry payload; tombstones must not
-    for r in out.to_dict("records"):
+    # payloads come from the winner: extracted html, canonical extra;
+    # a tombstone carries none of them
+    for url, r in got.items():
+        w = want[url]
         if r["_deleted"]:
-            assert r["html"] is None and r["text"] is None and r["props"] is None
-        else:
-            assert r["html"] is not None and r["text"] is not None
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(event, max_size=12),
-    st.lists(cur_row, max_size=4),
-)
-def test_arrow_and_pandas_kernels_agree(events, current_rows):
-    """A/B at property granularity: the applyInArrow and applyInPandas
-    merge formulations produce identical states on random inputs."""
-    import pyarrow as pa
-
-    from clinvar_ingest_spark.operators.merge_cogroup import _merge_bucket_arrow_fn
-
-    batch = _mk_batch(events)
-    current = _mk_current(current_rows)
-    pfn = _merge_bucket_fn(TABLE_COLS, list(BATCH_COLS))
-    afn = _merge_bucket_arrow_fn(TABLE_COLS, list(BATCH_COLS))
-
-    b_schema = pa.schema(
-        [
-            ("seq", pa.int64()), ("op", pa.string()), ("url", pa.string()),
-            ("warc_ts", pa.timestamp("us")), ("html", pa.binary()),
-            ("lang", pa.string()), ("schema_ver", pa.int32()),
-            ("extra", pa.string()), ("_bucket", pa.int64()),
-        ]
-    )
-    c_schema = pa.schema(
-        [
-            ("url", pa.string()), ("warc_ts", pa.timestamp("us")),
-            ("html", pa.binary()), ("text", pa.string()),
-            ("lang", pa.string()), ("_seq", pa.int64()),
-            ("_deleted", pa.bool_()), ("props", pa.string()),
-            ("_bucket", pa.int64()),
-        ]
-    )
-    a_out = afn(
-        pa.Table.from_pandas(batch, schema=b_schema, preserve_index=False),
-        pa.Table.from_pandas(current, schema=c_schema, preserve_index=False),
-    ).to_pandas()
-    p_out = pfn(batch, current)
-    assert _state_key(a_out) == _state_key(p_out)
-    # payload parity too (text/props byte-identical)
-    ak = {r["url"]: (r["text"], r["props"]) for r in a_out.to_dict("records")}
-    pk = {r["url"]: (r["text"], r["props"]) for r in p_out.to_dict("records")}
-    assert ak == pk
+            assert r["html"] is None and r["text"] is None
+            assert r["lang"] is None and r["props"] is None
+            continue
+        assert r["html"] == w["html"] and r["lang"] == w["lang"]
+        assert r["text"] == extract_text_str(w["html"].decode())
+        raw = w["extra"] if "extra" in w else w["props"]
+        assert r["props"] == canonical_json_of_string(raw)
 
 
 @settings(max_examples=100, deadline=None)
@@ -186,19 +199,64 @@ def test_batch_split_invariance(events, n_splits):
     """Applying the stream as ONE batch equals applying it as K
     sequential batches (the engine's replay-convergence property, at
     kernel granularity)."""
-    batch = _mk_batch(events)
-    empty = _mk_current([])
-    fn = _merge_bucket_fn(TABLE_COLS, list(BATCH_COLS))
+    batch = _mk_page_batch(events)
+    empty = _mk_page_current([])
+    fn = _kernel(PAGE_TABLE, PAGE_BATCH)
 
     one = fn(batch, empty)
 
     state = empty
-    bounds = np.array_split(np.arange(len(batch)), n_splits)
-    for ix in bounds:
+    for ix in np.array_split(np.arange(batch.num_rows), n_splits):
         if len(ix) == 0:
             continue
-        state = fn(batch.iloc[ix].reset_index(drop=True), state.drop(columns=["_action"]) if "_action" in state else state)
-        state = state.drop(columns=["_action"])
-        state["_bucket"] = 0
+        state = _as_current(fn(batch.take(pa.array(ix)), state), PAGE_TABLE)
 
-    assert _state_key(one) == _state_key(state)
+    drop = ["_action", "_bucket"]
+    assert _rows(one.drop(drop)) == _rows(state.drop(["_bucket"]))
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(entity_event, max_size=12),
+    st.lists(st.tuples(cur_row, tags, xrefs), max_size=4),
+)
+def test_nested_payload_kernel_equals_global_lww_fold(events, current_rows):
+    """Entity tables: list<string> and list<struct> payloads, no html or
+    text — nested values ride through the merge by row index and land
+    exactly as the winning event carried them."""
+    batch = pa.Table.from_pylist(
+        [
+            {
+                "seq": seq, "op": op, "url": url, "warc_ts": _ts(off),
+                "tags": None if op == "delete" else tg,
+                "xrefs": None if op == "delete" else xr,
+                "_bucket": 0,
+            }
+            for seq, ((url, off, op), tg, xr) in enumerate(events)
+        ],
+        schema=ENT_BATCH,
+    )
+    seen: set = set()
+    cur = []
+    for i, ((url, off, deleted), tg, xr) in enumerate(current_rows):
+        if url not in seen:
+            seen.add(url)
+            cur.append({
+                "url": url, "warc_ts": _ts(off),
+                "tags": None if deleted else tg,
+                "xrefs": None if deleted else xr,
+                "_seq": -100 + i, "_deleted": deleted, "_bucket": 0,
+            })
+    current = pa.Table.from_pylist(cur, schema=pa.schema(list(ENT_TABLE) + TAIL))
+
+    out = _kernel(ENT_TABLE, ENT_BATCH)(batch, current)
+    assert out.schema == _out_schema(ENT_TABLE)
+
+    want = _fold(batch, current)
+    got = _rows(out)
+    assert _lineage(got) == _lineage(want)
+    for url, r in got.items():
+        if r["_deleted"]:
+            assert r["tags"] is None and r["xrefs"] is None
+        else:
+            assert (r["tags"], r["xrefs"]) == (want[url]["tags"], want[url]["xrefs"])

@@ -29,8 +29,8 @@ def changelog(spark, tmp_path_factory):
 
 def test_props_survive_merge_canonically(spark, changelog, tmp_path):
     pdf, df = changelog
-    for strategy in ("cogroup", "join"):
-        eng = CdcEngine(spark, str(tmp_path / strategy), n_buckets=4, strategy=strategy)
+    for mode in ("cow", "mor"):
+        eng = CdcEngine(spark, str(tmp_path / mode), n_buckets=4, write_mode=mode)
         eng.replay(df, batch_size=300)
         live = eng.live().toPandas()
         assert live["props"].notna().all()

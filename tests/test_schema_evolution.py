@@ -77,8 +77,8 @@ def test_rename_then_ingest_maps_old_batch_name(spark, tmp_path):
         pa.Table.from_pandas(pdf, schema=changelog_arrow_schema(), preserve_index=False), p
     )
     cl = spark.read.parquet(p)
-    for strategy in ("cogroup", "join"):
-        eng = CdcEngine(spark, str(tmp_path / strategy), n_buckets=4, strategy=strategy)
+    for mode in ("cow", "mor"):
+        eng = CdcEngine(spark, str(tmp_path / mode), n_buckets=4, write_mode=mode)
         eng.replay(cl.filter("seq < 300"), batch_size=300)
         eng.table.rename_column("lang", "language")
         eng.replay(cl, batch_size=300, from_seq=300)
@@ -89,7 +89,7 @@ def test_rename_then_ingest_maps_old_batch_name(spark, tmp_path):
         winners = winners[winners["op"] != "delete"].set_index("url")
         got = {r["url"]: r["language"] for r in eng.live().collect()}
         want = dict(winners["lang"])
-        assert got == want, strategy
+        assert got == want, mode
 
 
 def test_widen_without_rewrite(spark, tmp_path):

@@ -30,8 +30,6 @@ from clinvar_ingest_spark.engine import CdcEngine
 cores = int(sys.argv[1]); changelog = sys.argv[2]; workdir = sys.argv[3]
 batches = int(sys.argv[4]); n_buckets = int(sys.argv[5])
 pin = int(sys.argv[6]); slots = int(sys.argv[7]) if len(sys.argv) > 7 else 1
-strategy = sys.argv[8] if len(sys.argv) > 8 else "cogroup"
-kernel = sys.argv[9] if len(sys.argv) > 9 else "python"
 if pin:
     # Pin the WHOLE process tree (JVM + python UDF workers inherit the
     # affinity mask) to exactly `cores` physical cores: local[N] alone
@@ -48,8 +46,7 @@ bounds = cl.selectExpr("min(seq) lo", "max(seq) hi").collect()[0]
 n = int(bounds["hi"]) - int(bounds["lo"]) + 1
 # JVM/codegen/python-worker warmup outside the timed region, through the
 # same code path (small table thrown away afterwards)
-warm = CdcEngine(spark, os.path.join(workdir, f"warm{{cores}}_{{os.getpid()}}"), n_buckets=n_buckets,
-                 strategy=strategy, extract_kernel=kernel)
+warm = CdcEngine(spark, os.path.join(workdir, f"warm{{cores}}_{{os.getpid()}}"), n_buckets=n_buckets)
 warm.replay(cl.limit(2000), batch_size=2000)
 shutil.rmtree(os.path.join(workdir, f"warm{{cores}}_{{os.getpid()}}"), ignore_errors=True)
 
@@ -61,8 +58,7 @@ def cpu_busy_jiffies():
     return sum(vals) - idle, sum(vals)
 
 tdir = os.path.join(workdir, f"pages{{cores}}_{{os.getpid()}}")
-eng = CdcEngine(spark, tdir, n_buckets=n_buckets,
-                strategy=strategy, extract_kernel=kernel)
+eng = CdcEngine(spark, tdir, n_buckets=n_buckets)
 busy0, all0 = cpu_busy_jiffies()
 t0 = time.time()
 stats = eng.replay(cl, batch_size=max(n // batches, 1))
@@ -89,7 +85,7 @@ shutil.rmtree(tdir, ignore_errors=True)
 def run_level(
     cores: int, changelog: str, workdir: str, batches: int,
     driver_mem: str = "8g", n_buckets: int = 128, pin: bool = False,
-    slots: int = 1, strategy: str = "cogroup", kernel: str = "python",
+    slots: int = 1,
 ) -> dict:
     script = RUNNER.format(repo=REPO)
     env = dict(
@@ -104,8 +100,7 @@ def run_level(
     )
     out = subprocess.run(
         [sys.executable, "-c", script, str(cores), changelog, workdir,
-         str(batches), str(n_buckets), str(int(pin)), str(slots),
-         strategy, kernel],
+         str(batches), str(n_buckets), str(int(pin)), str(slots)],
         capture_output=True, text=True, timeout=3600, env=env,
     )
     if out.returncode != 0:
@@ -204,14 +199,6 @@ def main() -> None:
                          "identically at both levels (local[cores*slots] "
                          "pinned to `cores` cores) — >1 overlaps the "
                          "python-Arrow / JVM handoff bubbles")
-    ap.add_argument("--strategy", default="cogroup",
-                    choices=("cogroup", "join"),
-                    help="engine merge strategy at BOTH levels")
-    ap.add_argument("--kernel", default="python",
-                    choices=("python", "jvm"),
-                    help="extraction kernel at BOTH levels; jvm = "
-                         "whole-stage-codegen regexp chain, no python "
-                         "workers in the hot path (requires --strategy join)")
     ap.add_argument("--tmpfs", action="store_true",
                     help="put workdir + spark.local.dir on /dev/shm — isolates "
                          "CPU scaling from the sandbox's single virtio disk "
@@ -246,19 +233,13 @@ def main() -> None:
         )
 
     n_buckets = args.n_buckets or max(32, 4 * max(args.n, args.xn))
-    if args.via_submit and (
-        args.strategy != "cogroup"
-        or args.kernel != "python"
-        or args.slots_per_core != 1
-    ):
+    if args.via_submit and args.slots_per_core != 1:
         # run_level_submit launches jobs/cdc_apply.py with the default
-        # engine config; silently dropping these flags would stamp a
-        # strategy/kernel column into the result JSON that was never
-        # actually measured
+        # engine config; silently dropping the flag would stamp a slots
+        # setting into the result JSON that was never actually measured
         ap.error(
-            "--via-submit supports only the default engine config "
-            "(--strategy cogroup --kernel python --slots-per-core 1); "
-            "use the in-process runner for strategy/kernel A/Bs"
+            "--via-submit supports only --slots-per-core 1; use the "
+            "in-process runner for slot A/Bs"
         )
     if args.via_submit:
         subprocess.run(
@@ -270,10 +251,7 @@ def main() -> None:
     for rep in range(args.repeats):
         for cores, sink in ((args.n, runs_n), (args.xn, runs_xn)):
             try:
-                kw = {} if args.via_submit else {
-                    "slots": args.slots_per_core,
-                    "strategy": args.strategy, "kernel": args.kernel,
-                }
+                kw = {} if args.via_submit else {"slots": args.slots_per_core}
                 sink.append(level_fn(cores, clp, workdir, args.batches,
                                      args.driver_mem, n_buckets, args.pin, **kw))
                 print(f"rep {rep} local[{cores}]: {sink[-1]['events_per_sec']} ev/s",
@@ -289,8 +267,6 @@ def main() -> None:
     result = {
         "metric": "merge_apply_scaling_efficiency",
         "input_events": args.events,
-        "strategy": args.strategy,
-        "kernel": args.kernel,
         "levels": {f"local[{args.n}]": r_n, f"local[{args.xn}]": r_xn},
         "all_runs": {f"local[{args.n}]": [r["events_per_sec"] for r in runs_n],
                      f"local[{args.xn}]": [r["events_per_sec"] for r in runs_xn]},
