@@ -102,11 +102,11 @@ def _pinned_shuffle(spark: SparkSession, n_partitions: int):
                 base = int(st["saved"]["spark.sql.shuffle.partitions"])
             except (TypeError, ValueError):
                 base = 0
-            # never pin BELOW the session's own setting: the MOR apply's
-            # LWW shuffle (lww_latest) hashes on url, not bucket, and can
-            # use more partitions than buckets; bucket shuffles leave
-            # the excess empty. Concurrent pins take the max of their
-            # requests.
+            # never pin BELOW the session's own setting: compaction's
+            # delta resolution (LakeletTable._resolve_lww window)
+            # hashes on url, not bucket, and can use more partitions
+            # than buckets; bucket shuffles leave the excess empty.
+            # Concurrent pins take the max of their requests.
             want = max(n_partitions, base, st["pinned_parts"])
             if want != st["pinned_parts"]:
                 st["pinned_parts"] = want
@@ -475,7 +475,6 @@ class CdcEngine:
             try:
                 stats = merge_apply_mor(
                     self.spark, self.table, batch, batch_id,
-                    assume_all_buckets=assume_all_buckets,
                     partial_to=partial_to,
                 )
             except MorCarryoverRequired:

@@ -9,9 +9,10 @@ part at 4 GiB / 1.5 CPU). Here the payload is Common-Crawl-style HTML
 pandas/pyarrow versions — so the kernel is a pinned, pure-regex pipeline
 with an explicit entity table, no library-dependent parsing.
 
-Exposed two ways:
-- :func:`extract_text_series` — pandas Series → Series, the kernel.
-- :func:`extract_text_udf` — a pandas UDF usable in any DataFrame plan.
+:func:`extract_text_series` is the vectorized kernel the merge apply
+runs on each bucket's surviving upserts
+(:mod:`~clinvar_ingest_spark.operators.merge_cogroup`, both write
+modes); :func:`extract_text_str` is its one-string reference.
 """
 
 from __future__ import annotations
@@ -19,8 +20,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # Pinned, ordered entity table (subset is deliberate: determinism beats
 # coverage; unknown entities pass through verbatim).
@@ -93,8 +92,3 @@ def extract_text_series(html: pd.Series) -> pd.Series:
     out = pd.Series([None] * len(html), index=html.index, dtype="object")
     out[notna] = s.astype("object")
     return out
-
-
-@F.pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:  # pragma: no cover - exercised via Spark
-    return extract_text_series(html)

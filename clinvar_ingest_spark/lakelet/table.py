@@ -1378,20 +1378,19 @@ class LakeletTable:
         self,
         spark: SparkSession,
         delta_rows: DataFrame,
-        touched_buckets: Sequence[int],
         batch_id: str,
         summary: dict | None = None,
         stats_out: dict | None = None,
-        pre_partitioned: bool = False,
         expected_parent_id: str | None = None,
-        mor_order: Sequence[str] = ("warc_ts", "_seq"),
     ) -> str:
         """Merge-on-read commit: APPEND ``delta_rows`` (full new row
         versions / tombstones, with a ``_bucket`` column and the current
-        schema's columns) as ``kind='delta'`` files — every existing
+        schema's columns, already partitioned by bucket — the merge
+        kernel's output) as ``kind='delta'`` files — every existing
         file carries forward untouched. Reads LWW-resolve the stack
-        (:meth:`read`); :func:`compact` / any COW rewrite of the bucket
-        folds it back to base.
+        (:meth:`read`) by ``(warc_ts, _seq)``, the order pinned in the
+        summary's ``mor_order``; :func:`compact` / any COW rewrite of
+        the bucket folds it back to base.
 
         This is the write path that keeps apply cost ∝ batch size
         instead of ∝ touched-bucket size: a 10^4-event micro-batch over
@@ -1424,18 +1423,7 @@ class LakeletTable:
         cols = [c.name for c in m.columns]
         token = _uuid.uuid4().hex[:8]
         staging = os.path.join(self.root, f"_staging-{sid}-{token}")
-        if "_deleted" in cols and "_deleted" not in delta_rows.columns:
-            delta_rows = delta_rows.withColumn("_deleted", F.lit(False))
         to_write = delta_rows.select("_bucket", *cols)
-        if not pre_partitioned:
-            # width = touched buckets, deliberately NOT narrower: the
-            # write stage usually carries the upstream Python/Arrow
-            # eval (ExtractPythonUDFs places it above this exchange),
-            # so narrowing would serialize compute, not just parquet
-            # encode — measured 1.7x slower per hot batch at width=1
-            # (PLANS.md "MOR hot-batch apply").
-            width = max(len(touched_buckets), 1)
-            to_write = to_write.repartition(width, "_bucket")
         self._writer(to_write).partitionBy("_bucket").parquet(staging)
 
         t_write_done = _time.time()
@@ -1459,7 +1447,7 @@ class LakeletTable:
             stats_out["commit_secs"] = round(_time.time() - t_write_done, 4)
 
         segments, seg_width = self._advance_segments(
-            m, set(int(b) for b in touched_buckets), new_entries, mode="delta"
+            m, set(), new_entries, mode="delta"
         )
         new_summary = dict(m.summary)
         new_summary.update(summary or {})
@@ -1467,7 +1455,7 @@ class LakeletTable:
         # resolution order must be pinned for every future reader of
         # this snapshot chain
         new_summary.pop("sort_order", None)
-        new_summary["mor_order"] = list(mor_order)
+        new_summary["mor_order"] = ["warc_ts", "_seq"]
         # physical row count (base + unresolved delta versions) — the
         # logical count needs resolution, which a metadata commit
         # cannot afford; compaction snaps it back to logical

@@ -1,4 +1,6 @@
-"""Last-writer-wins (LWW) dedup — the core of the MERGE apply.
+"""Last-writer-wins (LWW) dedup of DataFrames by key — the fan-out
+and query-side form of the rule the MERGE apply's Arrow kernel
+(:mod:`~clinvar_ingest_spark.operators.merge_cogroup`) runs per bucket.
 
 Reference semantics: ``dedupByDate`` keeps, per key, the item with the
 maximum associated date (reference:

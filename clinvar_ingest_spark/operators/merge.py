@@ -1,13 +1,14 @@
 """Merge-on-read apply and the shared apply vocabulary.
 
-The copy-on-write apply lives in :mod:`merge_cogroup`; this module
-holds what every apply path shares — :class:`MergeStats` lineage and
-the batch schema-drift mapping (:func:`batch_alias_map`,
-:func:`_batch_payload_expr`) — and the merge-on-read apply
-(:func:`merge_apply_mor`), which LWW-reduces and extracts the batch in
-Spark and appends it as delta files without reading current state.
+The per-bucket merge kernel and the copy-on-write apply live in
+:mod:`merge_cogroup`; this module holds what every apply path shares —
+:class:`MergeStats` lineage and the batch schema-drift mapping
+(:func:`batch_alias_map`, :func:`_batch_payload_expr`) — and the
+merge-on-read apply (:func:`merge_apply_mor`), which runs the same
+kernel against an empty current side and appends its rows as delta
+files without reading current state.
 
-Semantics shared with the COW kernel (north rule + reference parity):
+Semantics of the kernel (north rule + reference parity):
 one surviving event per ``url`` by ``(warc_ts, seq)`` — reference
 ``dedupByDate`` (ArchiveBranches.scala:140-156) with the deterministic
 ``seq`` tie-break (SURVEY.md §7(b)); delete winners become tombstones,
@@ -18,12 +19,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clinvar_ingest_spark.functions.extract import extract_text_udf
-from clinvar_ingest_spark.lakelet.table import LakeletTable, bucket_expr, spark_type
-from clinvar_ingest_spark.operators.lww import lww_latest
+from clinvar_ingest_spark.lakelet.table import LakeletTable, spark_schema, spark_type
 
 
 @dataclass
@@ -61,30 +60,6 @@ class MorCarryoverRequired(RuntimeError):
             "requires a COW merge"
         )
         self.missing = missing
-
-
-def reduce_batch(batch: DataFrame) -> DataFrame:
-    """LWW-reduce a raw changelog micro-batch to one row per url,
-    then extract text (and canonicalize the `extra` residue into
-    `props`) for surviving upserts only. Batches without an ``html``
-    column (entity tables with arbitrary payload schemas, e.g. array /
-    struct columns) skip the extraction step — everything else is
-    schema-driven.
-    """
-    batch = batch.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-    latest = lww_latest(batch, keys=("url",), order_by=("warc_ts", "seq"))
-    out = latest
-    if "html" in out.columns:
-        text = extract_text_udf(F.col("html"))
-        out = out.withColumn("text", F.when(F.col("op") != "delete", text))
-    if "props" not in out.columns and "extra" in out.columns:
-        from clinvar_ingest_spark.functions.canonical_json import canonical_json_udf
-
-        out = out.withColumn(
-            "props",
-            F.when(F.col("op") != "delete", canonical_json_udf(F.col("extra"))),
-        )
-    return out
 
 
 def batch_alias_map(manifest, batch_cols: list[str]) -> dict[str, str]:
@@ -148,12 +123,13 @@ def merge_apply_mor(
     table: LakeletTable,
     batch: DataFrame,
     batch_id: str,
-    assume_all_buckets: bool = False,
     partial_to: int | None = None,
 ) -> MergeStats:
-    """Merge-on-read apply: LWW-reduce + extract the batch, then APPEND
-    the surviving row versions (tombstones included) as delta files —
-    the current table state is never read and no bucket is rewritten.
+    """Merge-on-read apply: run the COW plan's per-bucket Arrow kernel
+    against an EMPTY current side, then APPEND its rows as delta files
+    — the current table state is never read and no bucket is rewritten.
+    With nothing to classify against, every batch winner comes out as
+    an ``insert`` (full row version) or a ``noop_delete`` (tombstone).
 
     Write cost is ∝ batch size: at 10^10 events over a 100 TB table a
     micro-batch touching every bucket still writes only its own rows,
@@ -165,87 +141,45 @@ def merge_apply_mor(
     resolved state is bit-identical to a COW apply of the same stream
     (A/B'd by state hash in tests/test_mor.py).
 
-    Raises :class:`MorCarryoverRequired` when the table schema has
-    payload columns the batch doesn't carry (post-evolution drift) —
-    those need COW carry-over; ``CdcEngine.apply_batch`` falls back.
+    Raises :class:`MorCarryoverRequired`, before any Spark job, when
+    the table schema has payload columns the batch doesn't carry
+    (post-evolution drift) — those need COW carry-over;
+    ``CdcEngine.apply_batch`` falls back.
 
-    Job shape: the same TWO jobs as the COW path (touched-buckets
-    distinct + the delta write with observe() metrics riding along),
-    minus the snapshot read and the per-bucket merge inside job 2.
+    Same plan as COW minus the touched-bucket job and the state scan:
+    one bucket shuffle, the kernel and the delta write, with the
+    lineage metrics observed in flight.
     """
-    m = table.manifest()
-
-    if assume_all_buckets:
-        # events ≫ buckets: the distinct would return every bucket —
-        # skip the job (MOR only uses the list for repartition sizing
-        # and lineage; no snapshot files are read either way)
-        touched = list(range(m.n_buckets))
-    else:
-        touched = [
-            r["_b"]
-            for r in batch.select(bucket_expr("url", m.n_buckets).alias("_b"))
-            .distinct()
-            .collect()
-        ]
-    # Delta write width stays = touched buckets (commit_delta default),
-    # NOT delta-row-proportional: the write stage carries the batch's
-    # Arrow extract work (ExtractPythonUDFs places the Python eval above
-    # the bucket exchange), so narrowing the width serializes compute,
-    # not just parquet encode — measured 1.7x slower per hot batch at
-    # width=1 vs width=64 in an interleaved same-session A/B (PLANS.md
-    # "MOR hot-batch apply"). Schedulers handle near-empty tasks in ~ms;
-    # serialized extract costs real seconds.
-
-    batch_obs = Observation()
-    observed = batch.observe(
-        batch_obs,
-        F.count(F.lit(1)).alias("n_events"),
-        F.max("warc_ts").alias("watermark"),
+    from clinvar_ingest_spark.operators.merge_cogroup import (
+        _LINEAGE,
+        _merge_plan,
+        _observed,
+        _project_batch,
     )
-    reduced = reduce_batch(observed)
 
-    table_cols = [cs.name for cs in m.columns]
-    batch_payload = set(reduced.columns)
-    alias = batch_alias_map(m, list(reduced.columns))
-    lineage = {"url", "warc_ts", "_seq", "_deleted"}
+    m = table.manifest()
+    b, batch_obs = _project_batch(m, batch)
+    provided = set(b.columns)
+    if "html" in provided:
+        provided.add("text")
+    if "extra" in provided:
+        provided.add("props")
     missing = [
-        c for c in table_cols
-        if c not in lineage and alias.get(c, c) not in batch_payload
+        cs.name for cs in m.columns
+        if cs.name not in _LINEAGE and cs.name not in provided
     ]
     if missing:
         raise MorCarryoverRequired(missing)
 
-    is_delete = F.col("op") == "delete"
-
-    def out_col(name: str):
-        if name == "url":
-            return F.col("url")
-        if name == "warc_ts":
-            return F.col("warc_ts")
-        if name == "_seq":
-            return F.col("seq").cast("long").alias("_seq")
-        if name == "_deleted":
-            return is_delete.alias("_deleted")
-        src = alias.get(name, name)
-        bval = _batch_payload_expr(m, name, src, reduced.schema[src].dataType)
-        return F.when(~is_delete, bval).alias(name)
-
-    merge_obs = Observation()
-    new_rows = (
-        reduced.observe(
-            merge_obs,
-            F.sum(F.when(is_delete, 1).otherwise(0)).alias("deletes"),
-            F.sum(F.when(~is_delete, 1).otherwise(0)).alias("upserts"),
-        )
-        .select(*[out_col(cn) for cn in table_cols])
-        .withColumn("_bucket", bucket_expr("url", m.n_buckets))
-    )
+    # typed by Spark like the batch side, so both reach the kernel with
+    # the session's timestamp zone
+    empty = spark.createDataFrame([], spark_schema(m.columns))
+    rows, merge_obs = _merge_plan(m, b, empty)
 
     commit_stats: dict = {}
     sid = table.commit_delta(
         spark,
-        new_rows,
-        touched_buckets=touched,
+        rows,
         batch_id=batch_id,
         stats_out=commit_stats,
         expected_parent_id=m.snapshot_id,
@@ -259,24 +193,23 @@ def merge_apply_mor(
         return MergeStats(
             batch_id=batch_id, snapshot_id=sid, n_events=0, n_keys=0,
             n_inserts=0, n_updates=0, n_deletes=0,
-            touched_buckets=len(touched), mode="mor",
+            touched_buckets=0, mode="mor",
         )
-    bm = batch_obs.get
-    mm = merge_obs.get
-    n_up = int(mm.get("upserts") or 0)
-    n_del = int(mm.get("deletes") or 0)
-    wm = bm.get("watermark")
+    n_events, watermark, counts = _observed(batch_obs, merge_obs)
+    n_up, n_del = counts["insert"], counts["noop_delete"]
+    bucket_rows = commit_stats.get("bucket_rows", {})
     return MergeStats(
         batch_id=batch_id,
         snapshot_id=sid,
-        n_events=int(bm.get("n_events") or 0),
+        n_events=n_events,
         n_keys=n_up + n_del,
         n_inserts=0,
         n_updates=0,
         n_deletes=n_del,
-        touched_buckets=len(touched),
-        watermark=wm.isoformat() if wm is not None else None,
-        bucket_rows=commit_stats.get("bucket_rows", {}),
+        # the buckets that received delta files
+        touched_buckets=len(bucket_rows),
+        watermark=watermark,
+        bucket_rows=bucket_rows,
         write_secs=commit_stats.get("write_secs", 0.0),
         commit_secs=commit_stats.get("commit_secs", 0.0),
         mode="mor",

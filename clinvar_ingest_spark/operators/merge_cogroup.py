@@ -1,11 +1,18 @@
-"""Copy-on-write MERGE apply: one cogrouped per-bucket Arrow kernel —
-the north-rule "per-partition last-writer-wins apply loop via
+"""The MERGE apply of both write modes: one cogrouped per-bucket Arrow
+kernel — the north-rule "per-partition last-writer-wins apply loop via
 applyInPandas", vectorized over Arrow.
 
-Plan shape::
+Plan shape, copy-on-write (:func:`merge_apply_cogrouped`)::
 
     batch --project(table schema)--shuffle(bucket)--\
-    state --------------------------shuffle(bucket)---cogroup.applyInArrow--write
+    state --------------------------shuffle(bucket)---cogroup.applyInArrow--rewrite
+
+and merge-on-read (:func:`~clinvar_ingest_spark.operators.merge.merge_apply_mor`),
+the same plan against an empty current side, so every batch winner
+comes out as an insert or a tombstone::
+
+    batch --project(table schema)--shuffle(bucket)--\
+    (empty) --------------------------------------------cogroup.applyInArrow--append delta
 
 Semantics (reference parity):
 
@@ -25,6 +32,7 @@ Semantics (reference parity):
 5. **Copy-on-write**: rewrite only touched buckets' files — the
    reference's soft-delete+append upsert
    (process-and-reingest-release.yaml:226-280) at file granularity.
+   Merge-on-read appends the winners instead; readers resolve them.
 
 Everything after the bucket shuffle happens in one Arrow function per
 bucket, and its output is already bucket-pure, so the write needs no
@@ -99,11 +107,12 @@ def _merge_bucket_arrow_fn(
             ix = pc.sort_indices(
                 b,
                 sort_keys=[("url", "ascending"), ("warc_ts", "ascending"), ("seq", "ascending")],
-                # NULL warc_ts must rank LOWEST (parity with MOR's
-                # max_by struct order and merge_cells' _ts_us(_NEG)):
-                # the default at_end placement would crown an
-                # unparseable-timestamp event the per-url winner and
-                # silently drop the real latest event
+                # NULL warc_ts must rank LOWEST (parity with the
+                # readers' delta resolution, desc nulls last, and
+                # merge_cells' _ts_us(_NEG)): the default at_end
+                # placement would crown an unparseable-timestamp event
+                # the per-url winner and silently drop the real latest
+                # event
                 null_placement="at_start",
             )
             b = b.take(ix)
@@ -222,6 +231,87 @@ def _merge_bucket_arrow_fn(
     return merge_bucket
 
 
+def _project_batch(m, batch: DataFrame) -> tuple[DataFrame, Observation]:
+    """The batch under the table's CURRENT schema (renames, widens,
+    nested col-id remaps) plus ``_bucket``: ``seq``, ``op``, ``url``,
+    ``warc_ts``, the payload columns it provides, and ``html``/``extra``
+    riding along as extraction / props sources when the table lacks
+    them. The observation counts events and the watermark in flight."""
+    batch_obs = Observation()
+    observed = batch.observe(
+        batch_obs,
+        F.count(F.lit(1)).alias("n_events"),
+        F.max("warc_ts").alias("watermark"),
+    )
+    table_cols = [cs.name for cs in m.columns]
+    alias = batch_alias_map(m, batch.columns)
+    extract = "text" in table_cols and "html" in batch.columns
+    payload = []
+    for cn in table_cols:
+        src = alias.get(cn, cn)
+        if cn in _LINEAGE or src not in batch.columns or (cn == "text" and extract):
+            continue
+        payload.append(
+            _batch_payload_expr(m, cn, src, batch.schema[src].dataType).alias(cn)
+        )
+    sources = [
+        F.col(c) for c in ("html", "extra") if c in batch.columns and c not in table_cols
+    ]
+    b = observed.select(
+        F.col("seq").cast("long").alias("seq"),
+        "op",
+        "url",
+        F.col("warc_ts").cast("timestamp").alias("warc_ts"),
+        *payload,
+        *sources,
+    ).withColumn("_bucket", bucket_expr("url", m.n_buckets))
+    return b, batch_obs
+
+
+def _merge_plan(m, b: DataFrame, current: DataFrame) -> tuple[DataFrame, Observation]:
+    """Shuffle the projected batch ``b`` and ``current`` (table rows)
+    on ``_bucket`` and run the kernel per bucket. Returns the
+    bucket-pure rows to write (tombstones included) and the observation
+    counting each ``_action``."""
+    current = current.withColumn("_bucket", bucket_expr("url", m.n_buckets))
+    out_schema = T.StructType(
+        spark_schema(m.columns).fields
+        + [
+            T.StructField("_bucket", T.LongType()),
+            T.StructField("_action", T.StringType()),
+        ]
+    )
+    fn = _merge_bucket_arrow_fn(
+        [cs.name for cs in m.columns], b.columns, to_arrow_schema(out_schema)
+    )
+    merged = (
+        b.groupBy("_bucket")
+        .cogroup(current.groupBy("_bucket"))
+        .applyInArrow(lambda left, right: fn(left, right), schema=out_schema)
+    )
+
+    merge_obs = Observation()
+
+    def n_act(a: str):
+        return F.sum(F.when(F.col("_action") == a, 1).otherwise(0)).alias(a)
+
+    # tombstones (delete/noop_delete) are WRITTEN, not dropped — soft
+    # delete keeps the LWW frontier queryable for late events
+    merged = merged.observe(merge_obs, *[n_act(a) for a in _ACTIONS])
+    return merged.drop("_action"), merge_obs
+
+
+def _observed(batch_obs: Observation, merge_obs: Observation) -> tuple[int, str | None, dict]:
+    """(events, ISO watermark, rows per ``_action``) of a finished plan."""
+    bm, mm = batch_obs.get, merge_obs.get
+    wm = bm.get("watermark")
+    return (
+        int(bm.get("n_events") or 0),
+        wm.isoformat() if wm is not None else None,
+        {k: int(mm.get(k) or 0) for k in _ACTIONS},
+    )
+
+
 def merge_apply_cogrouped(
     spark: SparkSession,
     table: LakeletTable,
@@ -263,67 +353,10 @@ def merge_apply_cogrouped(
         # the COW replacement carries their untouched rows
         touched = table.rewrite_closure(touched)
 
-    batch_obs = Observation()
-    observed = batch.observe(
-        batch_obs,
-        F.count(F.lit(1)).alias("n_events"),
-        F.max("warc_ts").alias("watermark"),
+    b, batch_obs = _project_batch(m, batch)
+    survivors, merge_obs = _merge_plan(
+        m, b, table.read(spark, buckets=touched)
     )
-
-    # present the batch under the table's CURRENT schema (renames,
-    # widens, nested col-id remaps) before the shuffle; html and extra
-    # ride along as extraction / props sources when the table lacks them
-    table_cols = [cs.name for cs in m.columns]
-    alias = batch_alias_map(m, batch.columns)
-    extract = "text" in table_cols and "html" in batch.columns
-    payload = []
-    for cn in table_cols:
-        src = alias.get(cn, cn)
-        if cn in _LINEAGE or src not in batch.columns or (cn == "text" and extract):
-            continue
-        payload.append(
-            _batch_payload_expr(m, cn, src, batch.schema[src].dataType).alias(cn)
-        )
-    sources = [
-        F.col(c) for c in ("html", "extra") if c in batch.columns and c not in table_cols
-    ]
-    b = observed.select(
-        F.col("seq").cast("long").alias("seq"),
-        "op",
-        "url",
-        F.col("warc_ts").cast("timestamp").alias("warc_ts"),
-        *payload,
-        *sources,
-    ).withColumn("_bucket", bucket_expr("url", m.n_buckets))
-    current = table.read(spark, buckets=touched).withColumn(
-        "_bucket", bucket_expr("url", m.n_buckets)
-    )
-
-    out_schema = T.StructType(
-        spark_schema(m.columns).fields
-        + [
-            T.StructField("_bucket", T.LongType()),
-            T.StructField("_action", T.StringType()),
-        ]
-    )
-    fn = _merge_bucket_arrow_fn(
-        table_cols, b.columns, to_arrow_schema(out_schema)
-    )
-    merged = (
-        b.groupBy("_bucket")
-        .cogroup(current.groupBy("_bucket"))
-        .applyInArrow(lambda left, right: fn(left, right), schema=out_schema)
-    )
-
-    merge_obs = Observation()
-
-    def n_act(a: str):
-        return F.sum(F.when(F.col("_action") == a, 1).otherwise(0)).alias(a)
-
-    # tombstones (delete/noop_delete) are WRITTEN, not dropped — soft
-    # delete keeps the LWW frontier queryable for late events
-    merged = merged.observe(merge_obs, *[n_act(a) for a in _ACTIONS])
-    survivors = merged.drop("_action")
 
     commit_stats: dict = {}
     sid = table.commit_rewrite(
@@ -345,20 +378,17 @@ def merge_apply_cogrouped(
             n_inserts=0, n_updates=0, n_deletes=0,
             touched_buckets=len(touched),
         )
-    bm = batch_obs.get
-    mm = merge_obs.get
-    counts = {k: int(mm.get(k) or 0) for k in _ACTIONS}
-    wm = bm.get("watermark")
+    n_events, watermark, counts = _observed(batch_obs, merge_obs)
     return MergeStats(
         batch_id=batch_id,
         snapshot_id=sid,
-        n_events=int(bm.get("n_events") or 0),
+        n_events=n_events,
         n_keys=sum(counts.values()),
         n_inserts=counts["insert"],
         n_updates=counts["update"],
         n_deletes=counts["delete"],
         touched_buckets=len(touched),
-        watermark=wm.isoformat() if wm is not None else None,
+        watermark=watermark,
         bucket_rows=commit_stats.get("bucket_rows", {}),
         write_secs=commit_stats.get("write_secs", 0.0),
         commit_secs=commit_stats.get("commit_secs", 0.0),

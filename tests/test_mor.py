@@ -142,6 +142,54 @@ def test_mor_no_resurrection_after_delete(spark, tmp_path):
     assert len(raw) == 1 and raw[0]["_deleted"] is True
 
 
+def test_mor_lineage_counts_touched_buckets_and_winners(spark, tmp_path):
+    """A MOR batch's lineage names the buckets it wrote deltas into —
+    not the whole table, even with the all-buckets hint on — and counts
+    its live and deleted LWW winners."""
+    from pyspark.sql import functions as F
+
+    from clinvar_ingest_spark.lakelet.table import bucket_expr
+
+    t = datetime.fromisoformat
+    rows = [
+        (0, "insert", "https://a.ex/1", t("2026-01-01 10:00:00"), b"<p>a</p>", "en", None),
+        (1, "update", "https://a.ex/1", t("2026-01-02 10:00:00"), b"<p>a2</p>", "en", None),
+        (2, "insert", "https://b.ex/2", t("2026-01-01 10:00:00"), b"<p>b</p>", "en", None),
+        (3, "delete", "https://b.ex/2", t("2026-01-03 10:00:00"), None, None, None),
+        (4, "delete", "https://c.ex/3", t("2026-01-01 10:00:00"), None, None, None),
+        # older warc_ts than the delete above: the delete still wins
+        (5, "insert", "https://c.ex/3", t("2025-12-31 10:00:00"), b"<p>c</p>", "en", None),
+    ]
+    batch = spark.createDataFrame(
+        rows,
+        schema="seq long, op string, url string, warc_ts timestamp, "
+        "html binary, lang string, extra string",
+    )
+    winners: dict = {}
+    for seq, op, url, ts, *_ in rows:
+        if url not in winners or (ts, seq) > winners[url][:2]:
+            winners[url] = (ts, seq, op)
+    n_deleted = sum(op == "delete" for _, _, op in winners.values())
+
+    mor = CdcEngine(spark, str(tmp_path / "mor"), n_buckets=16, write_mode="mor")
+    st = mor.apply_batch(batch, 0, 5, assume_all_buckets=True)
+    assert st is not None and st.mode == "mor"
+
+    batch_buckets = {
+        r["_b"]
+        for r in batch.select(bucket_expr("url", 16).alias("_b")).distinct().collect()
+    }
+    delta_buckets = {f.bucket for f in mor.table.manifest().files if f.kind == "delta"}
+    assert delta_buckets == batch_buckets
+    (rec,) = mor.ledger.all_records()
+    assert rec["mode"] == "mor"
+    assert rec["touched_buckets"] == len(batch_buckets) < 16
+    assert rec["n_upserts"] == len(winners) - n_deleted == 1
+    assert rec["n_deletes"] == n_deleted == 2
+    assert (rec["n_inserts"], rec["n_updates"]) == (0, 0)
+    assert mor.read().filter(F.col("_deleted")).count() == n_deleted
+
+
 def test_mor_ts_window_read_never_resurrects(spark, tmp_path):
     """File-stat ts pruning is disabled for delta-bearing buckets: a
     window that would skip the delta file holding the LWW winner must

@@ -179,6 +179,16 @@ def test_merge_kernel_equals_global_lww_fold(events, current_rows):
     got = _rows(out)
     assert _lineage(got) == _lineage(want)
 
+    if current.num_rows == 0:
+        # the merge-on-read plan: against an empty current side every
+        # winner is a delta row — a live version or a tombstone — and
+        # the action counts are the lineage's n_upserts / n_deletes
+        actions = out["_action"].to_pylist()
+        assert set(actions) <= {"insert", "noop_delete"}
+        n_tomb = sum(r["_deleted"] for r in want.values())
+        assert actions.count("insert") == len(want) - n_tomb
+        assert actions.count("noop_delete") == n_tomb
+
     # payloads come from the winner: extracted html, canonical extra;
     # a tombstone carries none of them
     for url, r in got.items():
