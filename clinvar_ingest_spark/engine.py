@@ -22,10 +22,8 @@ re-deliveries and the commit is idempotent by deterministic snapshot id.
 
 from __future__ import annotations
 
-import contextlib
 import logging
 import os
-import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,119 +41,6 @@ from clinvar_ingest_spark.streaming.ledger import (
 logger = logging.getLogger(__name__)
 
 
-#: per-SparkSession pin refcounts — concurrent writers (multi-writer
-#: commit tests, streaming foreachBatch + background compaction) pin
-#: the SAME session; without refcounting the second pin would save the
-#: first pin's values and "restore" them last, leaving the session
-#: conf permanently pinned. First pin in saves + sets; last pin out
-#: restores.
-_PIN_LOCK = threading.Lock()
-_PIN_STATE: dict[int, dict] = {}
-
-
-@contextlib.contextmanager
-def _pinned_shuffle(spark: SparkSession, n_partitions: int):
-    """Pin shuffle parallelism for a compute-dense bucket shuffle.
-
-    Spark's AQE sizes post-shuffle partitions by BYTES
-    (``advisoryPartitionSizeInBytes``) and, with the default
-    ``coalescePartitions.parallelismFirst=true``, coalesces down to
-    ~``spark.default.parallelism`` — one task wave per core. For the
-    engine's apply stage both are wrong: partitions are byte-small but
-    compute-heavy (decompress + extract), so a single wave makes the
-    stage wall the MAX bucket-group cost instead of the mean. Pinning
-    ``shuffle.partitions`` to the table's bucket count (the true unit
-    of balance, sized ``>> cores``) and disabling coalescing restores
-    many waves per core. Measured: +19% throughput at local[8] and
-    raw 2→8-core scaling efficiency 0.73 → 0.90 (BASELINE.md
-    "Round-5 CORRECTION", BENCH_SCALING_R5_ENGINEPIN.json).
-
-    Runtime-conf scoped and reentrancy-safe: pins on one session
-    refcount, the first pin in saves the session values, the last pin
-    out restores them (including on error). Conf is still
-    session-global while held, so concurrent NON-engine queries on the
-    same session plan under the pinned values — callers who care
-    should pass ``pin_apply_parallelism=False`` to the engine.
-    """
-    conf = spark.conf
-    key = id(spark)
-    with _PIN_LOCK:
-        st = _PIN_STATE.get(key)
-        if st is None:
-            saved: dict[str, str | None] = {}
-            for k in (
-                "spark.sql.shuffle.partitions",
-                "spark.sql.adaptive.coalescePartitions.enabled",
-            ):
-                try:
-                    saved[k] = conf.get(k)
-                except Exception:
-                    saved[k] = None
-            st = _PIN_STATE[key] = {
-                "count": 0,
-                "saved": saved,
-                "pinned_parts": 0,
-            }
-        st["count"] += 1
-        try:
-            try:
-                base = int(st["saved"]["spark.sql.shuffle.partitions"])
-            except (TypeError, ValueError):
-                base = 0
-            # never pin BELOW the session's own setting: compaction's
-            # delta resolution (LakeletTable._resolve_lww window)
-            # hashes on url, not bucket, and can use more partitions
-            # than buckets; bucket shuffles leave the excess empty.
-            # Concurrent pins take the max of their requests.
-            want = max(n_partitions, base, st["pinned_parts"])
-            if want != st["pinned_parts"]:
-                st["pinned_parts"] = want
-                conf.set("spark.sql.shuffle.partitions", str(want))
-            conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        except BaseException:
-            # a failed conf round-trip (stopped session, py4j hiccup)
-            # raises BEFORE the yield, so the finally-side decrement
-            # below never runs — roll the refcount back here or the
-            # entry is stranded >0 and the session stays pinned forever
-            st["count"] -= 1
-            if st["count"] == 0:
-                _PIN_STATE.pop(key, None)
-                for k, v in st["saved"].items():
-                    try:
-                        if v is None:
-                            conf.unset(k)
-                        else:
-                            conf.set(k, v)
-                    except Exception:
-                        pass
-            raise
-    try:
-        yield
-    finally:
-        with _PIN_LOCK:
-            st = _PIN_STATE[key]
-            st["count"] -= 1
-            if st["count"] == 0:
-                # best-effort restore: a conf round-trip failing here
-                # (session stopped mid-batch) must neither mask the
-                # body's result/exception nor strand a count=0 entry
-                # whose stale 'saved' values a later pin (or a reused
-                # id() after GC) would inherit
-                try:
-                    for k, v in st["saved"].items():
-                        try:
-                            if v is None:
-                                conf.unset(k)
-                            else:
-                                conf.set(k, v)
-                        except Exception as e:
-                            logger.warning(
-                                "could not restore %s after unpin: %s", k, e
-                            )
-                finally:
-                    del _PIN_STATE[key]
-
-
 class CdcEngine:
     def __init__(
         self,
@@ -168,7 +53,6 @@ class CdcEngine:
         max_records_per_file: int | None = None,
         patch_ops: bool = False,
         retry_policy=None,
-        pin_apply_parallelism: bool = True,
     ):
         """``write_mode``: 'cow' (default; every apply rewrites touched
         buckets through the per-bucket Arrow merge kernel,
@@ -187,24 +71,6 @@ class CdcEngine:
         :meth:`publish`; the branch has its own exactly-once ledger, so
         replaying the same changelog on a fresh branch re-applies from
         the fork point rather than no-opping against main's history.
-
-        ``pin_apply_parallelism``: during each batch apply, pin
-        ``spark.sql.shuffle.partitions`` to ``n_buckets`` and disable
-        AQE partition coalescing, restoring the session conf after.
-        The apply shuffle hashes on ``_bucket`` (≤ ``n_buckets``
-        distinct values) and its partitions are compute-dense per byte
-        (zstd'd HTML expands ~20×, then extraction), so AQE's
-        bytes-based coalescing — and especially
-        ``coalescePartitions.parallelismFirst`` — collapses the stage
-        to ~one task wave per core; the wall then equals the most
-        skewed bucket group. Measured on the 1M-event scaling bench
-        (BENCH_SCALING_R5 family): coalescing on = 27.2k ev/s at
-        local[8], raw 2→8-core efficiency 0.73; pinned = 31.2k ev/s,
-        efficiency 0.87. Buckets, not bytes, are this stage's unit of
-        balance — ``n_buckets >> cores`` (the engine's sizing rule)
-        gives many waves per core and amortizes bucket skew. The pin is
-        scoped (set → apply → restore) and session-global while held;
-        disable it if other queries share the session concurrently.
 
         ``validate``: True enables dead-letter routing with the default
         rules (null key / null warc_ts / unknown op), or pass an ordered
@@ -230,7 +96,6 @@ class CdcEngine:
         #: the per-batch lineage; each is also logged at WARNING)
         self.retries_total = 0
         self.write_mode = write_mode
-        self.pin_apply_parallelism = pin_apply_parallelism
         self.patch_ops = patch_ops
         cols = PAGES_COLUMNS
         if patch_ops:
@@ -334,8 +199,8 @@ class CdcEngine:
         if self.ledger.is_committed(bid):
             # fast path for resume-from-zero replays over a long
             # committed prefix: one os.path.exists per skipped batch,
-            # no manifest read and no conf pinning. _apply_batch_once
-            # re-checks under the pin for the racing-writer window.
+            # no manifest read. _apply_batch_once re-checks for the
+            # racing-writer window.
             return None
 
         def _log_retry(attempt: int, err: BaseException, delay: float) -> None:
@@ -350,28 +215,20 @@ class CdcEngine:
                 bid, attempt, err, delay,
             )
 
-        pin = (
-            _pinned_shuffle(
-                self.spark, self.table.manifest().n_buckets
-            )
-            if self.pin_apply_parallelism
-            else contextlib.nullcontext()
-        )
         last_err: CommitConflictError | None = None
-        with pin:
-            for _attempt in range(max_commit_retries):
-                try:
-                    return with_retries(
-                        lambda: self._apply_batch_once(
-                            batch, first_seq, last_seq, assume_all_buckets,
-                            partial_to=partial_to,
-                        ),
-                        self.retry_policy,
-                        on_retry=_log_retry,
-                    )
-                except CommitConflictError as e:
-                    last_err = e
-                    continue
+        for _attempt in range(max_commit_retries):
+            try:
+                return with_retries(
+                    lambda: self._apply_batch_once(
+                        batch, first_seq, last_seq, assume_all_buckets,
+                        partial_to=partial_to,
+                    ),
+                    self.retry_policy,
+                    on_retry=_log_retry,
+                )
+            except CommitConflictError as e:
+                last_err = e
+                continue
         raise RuntimeError(
             f"batch {batch_id_for(first_seq, last_seq)} lost the commit "
             f"race {max_commit_retries} times"
@@ -553,21 +410,16 @@ class CdcEngine:
         rows = self.table.read(self.spark, buckets=todo).withColumn(
             "_bucket", bucket_expr(self.table.key_col, m.n_buckets)
         )
-        # same compute-dense bucket-shuffle shape as the apply path —
-        # resolution windows + COW rewrite balance by bucket, not bytes
-        pin = (
-            _pinned_shuffle(self.spark, m.n_buckets)
-            if self.pin_apply_parallelism
-            else contextlib.nullcontext()
+        # the delta-resolution window (url-hashed) runs at the session's
+        # shuffle setting; commit_rewrite's repartition(len(todo),
+        # "_bucket") gives the write one task per bucket
+        return self.table.commit_rewrite(
+            self.spark,
+            rows,
+            touched_buckets=todo,
+            batch_id=f"compact:{m.snapshot_id[:16]}",
+            expected_parent_id=m.snapshot_id,
         )
-        with pin:
-            return self.table.commit_rewrite(
-                self.spark,
-                rows,
-                touched_buckets=todo,
-                batch_id=f"compact:{m.snapshot_id[:16]}",
-                expected_parent_id=m.snapshot_id,
-            )
 
     def publish(self, expected_parent_id: str | None = None) -> str:
         """Write-audit-publish, final step for a ``branch=`` engine:

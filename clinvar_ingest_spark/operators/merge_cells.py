@@ -33,10 +33,11 @@ case: zero overhead). ``text`` rides with ``html`` (derived by
 extraction); ``props`` rides with ``extra`` (canonicalized residue).
 
 Plan shape: identical to the cogrouped COW apply — batch and state
-shuffle once on the bucket, one applyInPandas fold per bucket, output
-is bucket-pure so the write needs no further shuffle. The per-cell
-bookkeeping is vectorized (sorted masks + groupby-tail per cell), never
-a per-event Python loop.
+each shuffle once into ``n_buckets`` partitions on the bucket
+(``merge_cogroup._cogroup_buckets``: one task per bucket), one
+applyInPandas fold per bucket, output is bucket-pure so the write needs
+no further shuffle. The per-cell bookkeeping is vectorized (sorted
+masks + groupby-tail per cell), never a per-event Python loop.
 """
 
 from __future__ import annotations
@@ -57,6 +58,7 @@ from clinvar_ingest_spark.lakelet.table import (
     spark_schema,
 )
 from clinvar_ingest_spark.operators.merge import MergeStats
+from clinvar_ingest_spark.operators.merge_cogroup import _cogroup_buckets
 
 _ACTIONS = ("insert", "update", "delete", "noop_delete", "keep_late")
 
@@ -435,10 +437,8 @@ def merge_apply_cells(
 
     alias = batch_alias_map(m, list(b.columns))
     fn = _merge_bucket_cells_fn(m.columns, b.columns, alias)
-    merged = (
-        b.groupBy("_bucket")
-        .cogroup(current.groupBy("_bucket"))
-        .applyInPandas(lambda left, right: fn(left, right), schema=out_schema)
+    merged = _cogroup_buckets(m.n_buckets, b, current).applyInPandas(
+        lambda left, right: fn(left, right), schema=out_schema
     )
 
     merge_obs = Observation()

@@ -40,10 +40,18 @@ further shuffle. Schema drift (renamed, widened and nested-remapped
 columns) is resolved in Spark before the shuffle, so the kernel only
 ever sees batch columns under the table's current names and types.
 
-Scale notes: parallelism is bounded by n_buckets — size n_buckets ≫
-max executor cores so each shuffle partition holds a few whole buckets
-and stragglers average out. A hot URL concentrates in one bucket, but
-LWW collapses it to one row inside Arrow (sort + last per key, no
+Scale notes: both cogroup sides are repartitioned to exactly
+``n_buckets`` partitions on ``_bucket`` (:func:`_cogroup_buckets`, also
+used by the cells apply), so the kernel stage runs one task per bucket
+whatever the session's ``spark.sql.shuffle.partitions``. The count
+holds under AQE because an exchange with an explicit partition count is
+a ``REPARTITION_BY_NUM`` shuffle, which AQE's partition coalescing
+never shrinks; and the cogroup takes the two identically
+hash-partitioned sides without a further exchange. Buckets, not bytes,
+are the unit of balance: the partitions are byte-small but
+compute-dense (decompress + extract), so size n_buckets ≫ max executor
+cores and stragglers average out. A hot URL concentrates in one bucket,
+but LWW collapses it to one row inside Arrow (sort + last per key, no
 quadratic work); a hot HOST spreads across buckets by url hash.
 Per-group memory = one bucket of state — bound it by choosing
 n_buckets ≥ |table| / target_partition_rows.
@@ -268,6 +276,17 @@ def _project_batch(m, batch: DataFrame) -> tuple[DataFrame, Observation]:
     return b, batch_obs
 
 
+def _cogroup_buckets(n_buckets: int, b: DataFrame, current: DataFrame):
+    """Cogroup ``b`` and ``current`` on ``_bucket``, each side
+    repartitioned into exactly ``n_buckets`` partitions — the one place
+    that makes an apply run one task per bucket (module scale notes)."""
+    return (
+        b.repartition(n_buckets, "_bucket")
+        .groupBy("_bucket")
+        .cogroup(current.repartition(n_buckets, "_bucket").groupBy("_bucket"))
+    )
+
+
 def _merge_plan(m, b: DataFrame, current: DataFrame) -> tuple[DataFrame, Observation]:
     """Shuffle the projected batch ``b`` and ``current`` (table rows)
     on ``_bucket`` and run the kernel per bucket. Returns the
@@ -284,10 +303,8 @@ def _merge_plan(m, b: DataFrame, current: DataFrame) -> tuple[DataFrame, Observa
     fn = _merge_bucket_arrow_fn(
         [cs.name for cs in m.columns], b.columns, to_arrow_schema(out_schema)
     )
-    merged = (
-        b.groupBy("_bucket")
-        .cogroup(current.groupBy("_bucket"))
-        .applyInArrow(lambda left, right: fn(left, right), schema=out_schema)
+    merged = _cogroup_buckets(m.n_buckets, b, current).applyInArrow(
+        lambda left, right: fn(left, right), schema=out_schema
     )
 
     merge_obs = Observation()

@@ -1,12 +1,11 @@
-"""Engine-owned apply-stage parallelism pin (round 5).
+"""The apply's bucket partitioning lives in the plan, not the session.
 
-The apply shuffle hashes on ``_bucket`` and is compute-dense per byte;
-AQE's bytes-based partition coalescing (and ``parallelismFirst``)
-collapses it to ~one task wave per core, making the stage wall the max
-bucket-group cost. ``CdcEngine`` therefore pins
-``spark.sql.shuffle.partitions`` to the bucket count and disables
-coalescing FOR THE APPLY ONLY, restoring the session conf after
-(measured effect: BENCH_SCALING_R5 raw 2→8-core efficiency 0.73→0.87).
+Both cogroup sides are repartitioned to exactly ``n_buckets``
+partitions on ``_bucket`` (``merge_cogroup._cogroup_buckets``), so the
+kernel stage runs one task per bucket under any
+``spark.sql.shuffle.partitions`` and with AQE partition coalescing on,
+and an apply never changes the session conf — also when several
+engines apply on one session at once.
 """
 
 from __future__ import annotations
@@ -14,7 +13,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from clinvar_ingest_spark.engine import CdcEngine, _pinned_shuffle
+from clinvar_ingest_spark.engine import CdcEngine
+from clinvar_ingest_spark.lakelet.table import LakeletTable
+from clinvar_ingest_spark.operators.merge_cogroup import merge_apply_cogrouped
 from clinvar_ingest_spark.sources.changelog import (
     ChangelogSpec,
     changelog_arrow_schema,
@@ -40,38 +41,6 @@ def changelog_df(spark, tmp_path):
     return spark.read.parquet(p)
 
 
-def test_pinned_shuffle_sets_and_restores(spark):
-    conf = spark.conf
-    before_parts = conf.get("spark.sql.shuffle.partitions")
-    before_coal = conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    with _pinned_shuffle(spark, 999):
-        assert conf.get("spark.sql.shuffle.partitions") == "999"
-        assert (
-            conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-            == "false"
-        )
-    assert conf.get("spark.sql.shuffle.partitions") == before_parts
-    assert (
-        conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-        == before_coal
-    )
-
-
-def test_pinned_shuffle_never_lowers(spark):
-    before = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert before > 2
-    with _pinned_shuffle(spark, 2):
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == before
-
-
-def test_pinned_shuffle_restores_on_error(spark):
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with pytest.raises(RuntimeError):
-        with _pinned_shuffle(spark, 777):
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
 def test_engine_apply_restores_session_conf(spark, tmp_path, changelog_df):
     # restore means "put back whatever was set BEFORE the apply", not a
     # fixed value — another test sharing the session may legitimately
@@ -89,29 +58,6 @@ def test_engine_apply_restores_session_conf(spark, tmp_path, changelog_df):
         == before_coal
     )
     assert eng.pages().count() > 0
-
-
-def test_pinned_shuffle_nested_and_overlapping(spark):
-    """Overlapping pins on one session must restore the ORIGINAL conf —
-    the exact leak test_concurrent_commit exposed: pin B saving pin A's
-    values and restoring them last left the session pinned forever."""
-    conf = spark.conf
-    before_parts = conf.get("spark.sql.shuffle.partitions")
-    before_coal = conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    with _pinned_shuffle(spark, 50):
-        with _pinned_shuffle(spark, 200):
-            # concurrent pins take the max of their requests
-            assert conf.get("spark.sql.shuffle.partitions") == "200"
-        # still pinned (refcount 1) — inner exit must NOT restore yet
-        assert (
-            conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-            == "false"
-        )
-    assert conf.get("spark.sql.shuffle.partitions") == before_parts
-    assert (
-        conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-        == before_coal
-    )
 
 
 def test_concurrent_engine_applies_restore_conf(spark, tmp_path, changelog_df):
@@ -144,10 +90,52 @@ def test_concurrent_engine_applies_restore_conf(spark, tmp_path, changelog_df):
     )
 
 
-def test_engine_pin_opt_out(spark, tmp_path, changelog_df):
-    eng = CdcEngine(
-        spark, str(tmp_path / "t"), n_buckets=4, pin_apply_parallelism=False
+def test_apply_runs_one_task_per_bucket_at_session_conf(
+    spark, tmp_path, changelog_df, monkeypatch
+):
+    """With the session at 2 shuffle partitions and AQE coalescing on,
+    the kernel stage still runs ``n_buckets`` tasks (AQE never coalesces
+    an exchange with an explicit partition count), and the commit runs
+    under the session's own shuffle setting."""
+    conf = spark.conf
+    sc = spark.sparkContext
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled",
     )
-    cl = changelog_df.filter(F.col("seq") < 100)
-    stats = eng.replay(cl, batch_size=100)
-    assert sum(s.n_events for s in stats) > 0
+    saved = {k: conf.get(k) for k in keys}
+    n_buckets = 16
+    try:
+        conf.set(keys[0], "2")
+        conf.set(keys[1], "true")
+
+        # called directly, outside the engine: the plan alone must
+        # decide the task count
+        table = LakeletTable.create(str(tmp_path / "t"), n_buckets=n_buckets)
+        group = f"apply-tasks-{tmp_path.name}"
+        sc.setJobGroup(group, "apply kernel stage")
+        try:
+            merge_apply_cogrouped(spark, table, changelog_df, "b0")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        # the write job runs last; its result stage is the cogroup
+        # kernel (the write is fused into it, pre-partitioned)
+        write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+        kernel_stage = tracker.getStageInfo(max(write_job.stageIds))
+        assert kernel_stage.numTasks == n_buckets
+
+        seen = []
+        commit_rewrite = LakeletTable.commit_rewrite
+
+        def probe(self, *a, **kw):
+            seen.append(conf.get(keys[0]))
+            return commit_rewrite(self, *a, **kw)
+
+        monkeypatch.setattr(LakeletTable, "commit_rewrite", probe)
+        eng = CdcEngine(spark, str(tmp_path / "e"), n_buckets=n_buckets)
+        assert eng.apply_batch(changelog_df.filter(F.col("seq") < 100), 0, 99)
+        assert seen == ["2"]
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
