@@ -627,11 +627,12 @@ class CdcEngine:
         snapshot_id: str | None = None,
         stats_out: dict | None = None,
     ) -> DataFrame:
-        """Point lookup: planned from manifest metadata alone — the
-        key's hash bucket only, merge-on-read delta files skipped via
-        per-file key bloom filters, key predicate pushed into the scan
-        (see LakeletTable.read_key). The key-partitioned layout's
-        answer to the reference's per-id API reads."""
+        """Point lookup: planned from manifest metadata alone, with no
+        Spark job before the scan — the key's hash bucket (computed on
+        the driver) only, merge-on-read delta files skipped via per-file
+        key bloom filters, key predicate pushed into the scan (see
+        LakeletTable.read_key). The key-partitioned layout's answer to
+        the reference's per-id API reads."""
         return self.table.read_key(
             self.spark, url, snapshot_id, stats_out=stats_out
         ).filter(~F.coalesce(F.col("_deleted"), F.lit(False)))

@@ -32,13 +32,16 @@ as an optional ``props`` column *and* add real evolution.
 from __future__ import annotations
 
 import glob
+import json
 import os
 from typing import Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from clinvar_ingest_spark.functions.xhash import xxhash64
 from clinvar_ingest_spark.lakelet.manifest import (
     ColumnSpec,
     FileEntry,
@@ -183,6 +186,25 @@ def align_select(
 
 def bucket_expr(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+def key_bucket(key: str, n_buckets: int) -> int:
+    """Driver-side :func:`bucket_expr` for one string key: the same
+    ``pmod(xxhash64(key), n_buckets)``, computed without a Spark job."""
+    return xxhash64(key.encode("utf-8")) % n_buckets
+
+
+#: footer key-value entry where Spark's parquet writer stores the row schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> T.StructType:
+    """The Spark row schema stored in one data file's footer, read on
+    the driver — what Spark's own inference reads (with ``mergeSchema``
+    off) without the one-task job it launches to read it. Every table
+    file is written by Spark, which always stores this entry."""
+    raw = pq.read_metadata(path).metadata[_SPARK_ROW_METADATA]
+    return T.StructType.fromJson(json.loads(raw))
 
 
 def _check_ref_name(name: str, kind: str) -> str:
@@ -778,6 +800,10 @@ class LakeletTable:
         buckets — skipping a file there could drop the LWW winner and
         resurrect a superseded row version, which is worse than the
         advisory extra-rows contract.
+
+        Planning launches no Spark job: file pruning uses the manifest,
+        and the scan's schema and file stats come from the driver
+        (:meth:`_read_entries`). The first action is the first job.
         """
         m = self.manifest(snapshot_id)
         target_cols = m.columns
@@ -860,7 +886,10 @@ class LakeletTable:
     ) -> DataFrame:
         """Raw (unresolved) union of the given file entries, presented in
         ``m``'s current schema (col-id name-mapping + widen casts per
-        schema-version group)."""
+        schema-version group). Planned without a Spark job: each group's
+        schema comes from the first file's footer, read on the driver,
+        and the manifest's exact paths are statted on the driver (the
+        listing threshold in ``session.get_spark``)."""
         target_cols = m.columns
         by_ver: dict[int, list[FileEntry]] = {}
         for f in files:
@@ -869,7 +898,10 @@ class LakeletTable:
         parts = []
         for ver, group in sorted(by_ver.items()):
             paths = [os.path.join(self.root, f.path) for f in group]
-            df = spark.read.parquet(*paths)
+            # not the manifest spec: a file written through a loose-typed
+            # commit_rewrite may store a wider physical type than its
+            # spec (INT64 under "int"), and the scan must see the truth
+            df = spark.read.schema(_footer_schema(paths[0])).parquet(*paths)
             parts.append(df.select(*align_select(m.schemas[ver], target_cols)))
         out = parts[0]
         for p in parts[1:]:
@@ -881,11 +913,12 @@ class LakeletTable:
         spark: SparkSession,
         key: str,
         snapshot_id: str | None = None,
-        bucket: int | None = None,
         stats_out: dict | None = None,
     ) -> DataFrame:
         """Point read: all row versions for one key, planned from
-        metadata alone — the manifest prunes to the key's hash bucket,
+        metadata alone, with no Spark job before the scan — the key's
+        hash bucket is computed on the driver (:func:`key_bucket`), the
+        manifest prunes to that bucket,
         then per-file key BLOOM filters skip the merge-on-read delta
         files that cannot contain the key (lakelet/bloom.py; base files
         are always read — they hold the key's current row if any). The
@@ -898,26 +931,14 @@ class LakeletTable:
         Under MOR it opens 1 + (deltas that saw the key) + fpp·deltas
         files instead of every delta in the bucket.
 
-        ``bucket``: pass the precomputed hash bucket to skip the one-row
-        Spark job that computes ``xxhash64(key) % n_buckets`` (callers
-        looping over many keys compute buckets in one job).
         ``stats_out``: observability — files considered/read/skipped.
         """
         from clinvar_ingest_spark.lakelet.bloom import bloom_maybe_contains
 
         m = self.manifest(snapshot_id)
         key_col = m.summary.get("key_col", "url")
-        if bucket is None:
-            bucket = (
-                spark.range(1)
-                .select(
-                    F.pmod(F.xxhash64(F.lit(key)), F.lit(m.n_buckets))
-                    .cast("int")
-                    .alias("b")
-                )
-                .collect()[0]["b"]
-            )
-        in_bucket = m.files_for_buckets({int(bucket)})
+        bucket = key_bucket(key, m.n_buckets)
+        in_bucket = m.files_for_buckets({bucket})
         files = [
             f
             for f in in_bucket
@@ -926,7 +947,7 @@ class LakeletTable:
             or bloom_maybe_contains(f.key_bloom, key)
         ]
         if stats_out is not None:
-            stats_out["bucket"] = int(bucket)
+            stats_out["bucket"] = bucket
             stats_out["files_in_bucket"] = len(in_bucket)
             stats_out["files_read"] = len(files)
             stats_out["files_skipped"] = len(in_bucket) - len(files)

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clinvar_ingest_spark.lakelet.manifest import ColumnSpec
-from clinvar_ingest_spark.lakelet.table import LakeletTable, bucket_expr
+from clinvar_ingest_spark.lakelet.table import LakeletTable, bucket_expr, key_bucket
 
 INDEX_COLUMNS = [
     ColumnSpec(1, "token", "string"),
@@ -102,13 +102,7 @@ class InvertedIndex:
 
     def postings(self, token: str) -> DataFrame:
         """Point lookup: bucket-pruned scan of one token's posting."""
-        m = self.table.manifest()
-        b = (
-            self.engine.spark.range(1)
-            .select(F.lit(token).alias("token"))
-            .select(bucket_expr("token", m.n_buckets).alias("b"))
-            .collect()[0]["b"]
-        )
+        b = key_bucket(token, self.table.manifest().n_buckets)
         return self.table.read(self.engine.spark, buckets=[b]).filter(
             F.col("token") == token
         )

@@ -67,6 +67,12 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "2m"),
         )
+        # table reads hand Spark exact, manifest-known file paths, so
+        # listing has nothing to discover: stat them on the driver
+        # instead of launching a one-task-per-path listing job whenever
+        # a read names more than 32 files. Trade-off: on an object store
+        # the driver's stats run serially (no such deployment here).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -79,3 +79,18 @@ def test_explicit_extra_conf_wins_over_env(monkeypatch):
 def test_no_env_no_crash(monkeypatch):
     confs = _captured_confs(monkeypatch)
     assert confs["__master__"] == "local[1]"
+
+
+LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def test_table_reads_list_on_the_driver(monkeypatch):
+    """Table reads name manifest-known files; statting them must not
+    launch a parallel listing job, however many a read names."""
+    confs = _captured_confs(monkeypatch)
+    assert confs[LISTING_THRESHOLD] == "100000"
+
+
+def test_env_conf_overrides_listing_threshold(monkeypatch):
+    confs = _captured_confs(monkeypatch, env_conf={LISTING_THRESHOLD: 32})
+    assert confs[LISTING_THRESHOLD] == "32"
