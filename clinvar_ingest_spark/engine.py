@@ -707,16 +707,24 @@ class CdcEngine:
         widened columns cast) before classification — so a pure rename
         never reports every row as updated.
         """
-        from clinvar_ingest_spark.lakelet.table import align_select
-
         if old_snapshot is None:
-            live = ~F.coalesce(F.col("_deleted"), F.lit(False))
             return (
-                self.table.read(self.spark, new_snapshot)
-                .filter(live)
+                self.live(new_snapshot)
                 .drop("_seq", "_deleted", "_cells")
                 .withColumn("_change", F.lit("created"))
             )
+        new, old = self._live_pair(old_snapshot, new_snapshot)
+        return diff_ops.diff_all(new, old, keys=[self.table.key_col], null_safe=null_safe)
+
+    def _live_pair(
+        self, old_snapshot: str, new_snapshot: str
+    ) -> tuple[DataFrame, DataFrame]:
+        """The live rows of the changed buckets (:meth:`changed_buckets`)
+        of ``new_snapshot`` and ``old_snapshot``, both under the NEW
+        snapshot's schema and without lineage columns — the input pair
+        of :meth:`diff_snapshots` and :meth:`changelog_view`."""
+        from clinvar_ingest_spark.lakelet.table import align_select
+
         new_m = self.table.manifest(new_snapshot)
         old_m = self.table.manifest(old_snapshot)
         buckets = self.changed_buckets(old_snapshot, new_snapshot)
@@ -727,9 +735,9 @@ class CdcEngine:
         # NULL, widened columns cast), so a pure rename never reports
         # every row as updated
         sel = align_select(old_m.columns, new_m.columns)
-        # diff classifies LIVE rows only: a key whose winner became a
-        # tombstone between the snapshots shows up as 'deleted', exactly
-        # like the reference's soft-delete slice (diff.py:138-141)
+        # LIVE rows only: a key whose winner became a tombstone between
+        # the snapshots shows up as 'deleted', exactly like the
+        # reference's soft-delete slice (diff.py:138-141)
         live = ~F.coalesce(F.col("_deleted"), F.lit(False))
         old = old.select(*sel).filter(live).drop("_seq", "_deleted", "_cells")
         new = (
@@ -737,7 +745,7 @@ class CdcEngine:
             .filter(live)
             .drop("_seq", "_deleted", "_cells")
         )
-        return diff_ops.diff_all(new, old, keys=[self.table.key_col], null_safe=null_safe)
+        return new, old
 
     def changelog_view(
         self, old_snapshot: str, new_snapshot: str, null_safe: bool = True
@@ -750,21 +758,9 @@ class CdcEngine:
         (:func:`operators.diff.diff_changelog`). Consumers that
         understand retractions can keep downstream aggregates exactly
         correct under updates without rereading the table."""
-        from clinvar_ingest_spark.lakelet.table import align_select
         from clinvar_ingest_spark.operators.diff import diff_changelog
 
-        new_m = self.table.manifest(new_snapshot)
-        old_m = self.table.manifest(old_snapshot)
-        buckets = self.changed_buckets(old_snapshot, new_snapshot)
-        old = self.table.read(self.spark, old_snapshot, buckets=buckets)
-        sel = align_select(old_m.columns, new_m.columns)
-        live = ~F.coalesce(F.col("_deleted"), F.lit(False))
-        old = old.select(*sel).filter(live).drop("_seq", "_deleted", "_cells")
-        new = (
-            self.table.read(self.spark, new_snapshot, buckets=buckets)
-            .filter(live)
-            .drop("_seq", "_deleted", "_cells")
-        )
+        new, old = self._live_pair(old_snapshot, new_snapshot)
         return diff_changelog(
             new, old, keys=[self.table.key_col], null_safe=null_safe
         )

@@ -51,65 +51,28 @@ def rebucket(
     new_n_buckets: int,
 ) -> str:
     """Rewrite the full table under ``new_n_buckets`` hash buckets as a
-    logically-empty commit (state hash unchanged). Returns the new
-    snapshot id; idempotent by deterministic id."""
+    logically-empty commit (state hash unchanged), under the table's
+    file-size policy like every data commit. Returns the new snapshot
+    id; idempotent by deterministic id."""
     m = table.manifest()
     if new_n_buckets == m.n_buckets:
         return m.snapshot_id
-    batch_id = f"rebucket:{m.n_buckets}->{new_n_buckets}:{m.snapshot_id}"
-    sid = snapshot_id_for(m.snapshot_id, batch_id, m.schema_version)
-    if table._is_committed(sid):
-        return sid
-
-    cols = [c.name for c in m.columns]
-    df = table.read(spark).withColumn(
-        "_bucket", bucket_expr(table.key_col, new_n_buckets)
-    )
-    # per-writer token, exactly like commit_rewrite: manifests are
-    # create-if-absent, so a crash-retry (or concurrent rebucket) must
-    # never overwrite a prior attempt's promoted files — a stale orphan
-    # manifest must keep referencing its OWN complete file set
-    import uuid as _uuid
-
-    token = _uuid.uuid4().hex[:8]
-    staging = os.path.join(table.root, f"_staging-{sid}-{token}")
-    (
-        df.select("_bucket", *cols)
+    rows = (
+        table.read(spark)
+        .withColumn("_bucket", bucket_expr(table.key_col, new_n_buckets))
         .repartition(new_n_buckets, "_bucket")
-        .write.mode("overwrite")
-        .partitionBy("_bucket")
-        .parquet(staging)
     )
-
-    # shared promotion protocol (tokened names, footer stats) — see
-    # table.promote_staged_files; a second copy of this sequence is how
-    # rebucket's crash-retry overwrite bug happened
-    from clinvar_ingest_spark.lakelet.table import promote_staged_files
-
-    new_entries = promote_staged_files(
-        table.root, staging, sid, token, m.schema_version,
-        spec_n=new_n_buckets,
-        stat_cols=m.summary.get("stats_cols") or (),
-    )
-    import shutil
-
-    shutil.rmtree(staging, ignore_errors=True)
-
-    summary = dict(m.summary)
-    summary.pop("sort_order", None)  # bucket reshuffle loses clustering
-    summary["total_rows"] = sum(f.rows for f in new_entries)
-    nm = Manifest(
-        snapshot_id=sid,
-        parent_id=m.snapshot_id,
-        batch_id=batch_id,
-        schema_version=m.schema_version,
+    # the table's one data commit (staging, promotion, CAS) with the
+    # file list re-segmented under the new bucket count
+    return table._commit_files(
+        spark,
+        rows,
+        f"rebucket:{m.n_buckets}->{new_n_buckets}:{m.snapshot_id}",
+        kind="base",
+        replace=None,
+        expected_parent_id=m.snapshot_id,
         n_buckets=new_n_buckets,
-        schemas=m.schemas,
-        files=new_entries,
-        summary=summary,
     )
-    table._commit_manifest(nm, m, cleanup_paths=[f.path for f in new_entries])
-    return sid
 
 
 def sort_rewrite(
@@ -144,10 +107,11 @@ def sort_rewrite(
         f":bits={bits}" if zorder and len(by) > 1 else ""
     )
     # the manifest summary carries the layout claim (Iceberg's "table
-    # sort order"); data commits CLEAR it (commit_rewrite/rebucket), so
-    # a matching claim means the current files are already in this
-    # order and the rewrite is a no-op — this is what makes repeated
-    # maintenance runs idempotent
+    # sort order"); every data commit CLEARS it unless it re-asserts
+    # it, as this one does (LakeletTable._commit_files), so a matching
+    # claim means the current files are already in this order and the
+    # rewrite is a no-op — this is what makes repeated maintenance runs
+    # idempotent
     if m.summary.get("sort_order") == spec:
         return m.snapshot_id
     batch_id = f"sort_rewrite:{spec}:{m.snapshot_id}"

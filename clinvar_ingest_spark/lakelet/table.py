@@ -185,7 +185,15 @@ def align_select(
 
 
 def bucket_expr(key_col: str, n_buckets: int):
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+    """``pmod(xxhash64(key), n_buckets)``, NULL for a NULL key. Spark's
+    ``xxhash64(NULL)`` is the seed (42), not NULL, so without the guard
+    a NULL key would land in bucket ``42 % n`` and commit as a row; a
+    NULL bucket instead reaches the writer as the default partition,
+    which :func:`promote_staged_files` refuses."""
+    col = F.col(key_col)
+    return F.when(
+        col.isNotNull(), F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+    )
 
 
 def key_bucket(key: str, n_buckets: int) -> int:
@@ -1223,8 +1231,9 @@ class LakeletTable:
 
         seq = int(parent.summary.get("commit_seq", 0)) + 1
         if nm.segments is None:
-            # caller built an inline file list (rebucket, tests) —
-            # segment it here so every committed manifest is format v2
+            # caller built an inline file list (a metadata commit over a
+            # legacy v1 parent, tests) — segment it here so every
+            # committed manifest is format v2
             segs, width = self._segment_all(nm.files, nm.n_buckets)
             nm.segment_width = width
             nm.segments = segs
@@ -1272,35 +1281,28 @@ class LakeletTable:
             self._prune_unreferenced(nm.snapshot_id, cleanup_paths)
         self._set_current(nm.snapshot_id)
 
-    def commit_rewrite(
+    def _commit_files(
         self,
         spark: SparkSession,
-        new_bucket_data: DataFrame,
-        touched_buckets: Sequence[int],
+        rows: DataFrame,
         batch_id: str,
+        kind: str,
+        replace: Sequence[int] | None,
         summary: dict | None = None,
         stats_out: dict | None = None,
-        pre_partitioned: bool = False,
         expected_parent_id: str | None = None,
+        n_buckets: int | None = None,
     ) -> str:
-        """Copy-on-write commit: replace the files of ``touched_buckets``
-        with ``new_bucket_data`` (must contain a ``_bucket`` column and
-        exactly the current schema's columns), carry all other files
-        forward, write + CAS-commit a new manifest.
+        """THE data commit, so the protocol exists once: deterministic
+        snapshot id (idempotent skip) → tokened staging write →
+        :func:`promote_staged_files` → segments → head-chain CAS.
 
-        Idempotent: if the deterministic snapshot is already on the
-        committed chain, nothing is rewritten — the reference's
-        "already ingested" short-circuit (ingest-xml-archive.yaml:97-110).
-
-        Optimistic concurrency: ``expected_parent_id`` is the snapshot
-        the caller PLANNED the rewrite against (the state it read).
-        If the table has moved past it — or another writer wins the
-        head CAS during the commit — CommitConflictError is raised and
-        no state is changed; the caller re-plans against the new
-        current snapshot and retries (``CdcEngine.apply_batch`` does).
-        Without it a concurrent commit landing between plan and commit
-        would be silently overwritten in overlapping buckets.
-        """
+        ``rows``: a ``_bucket`` column and the current schema's columns
+        (a missing ``_deleted`` is filled False), partitioned the way the
+        files should come out. ``kind='base'`` replaces every parent file
+        of the ``replace`` buckets (COW); ``kind='delta'`` appends and
+        carries every parent file (MOR); ``replace=None`` makes the rows
+        the whole table under ``n_buckets`` (a resize)."""
         m = self.manifest()
         if expected_parent_id is not None and m.snapshot_id != expected_parent_id:
             raise CommitConflictError(
@@ -1314,7 +1316,9 @@ class LakeletTable:
             return sid
 
         import time as _time
+        import uuid as _uuid
 
+        n_buckets = n_buckets or m.n_buckets
         t0 = _time.time()
         cols = [c.name for c in m.columns]
         # per-writer token: two writers racing on the same batch compute
@@ -1323,30 +1327,21 @@ class LakeletTable:
         # would corrupt both writes, and shared final names would let
         # the loser's os.replace overwrite the winner's already-
         # committed files after the CAS was decided
-        import uuid as _uuid
-
         token = _uuid.uuid4().hex[:8]
         staging = os.path.join(self.root, f"_staging-{sid}-{token}")
         # writers of live rows may omit the tombstone lineage column
-        if "_deleted" in cols and "_deleted" not in new_bucket_data.columns:
-            new_bucket_data = new_bucket_data.withColumn("_deleted", F.lit(False))
-        to_write = new_bucket_data.select("_bucket", *cols)
-        if not pre_partitioned:
-            # co-locate each bucket into one task so partitionBy emits
-            # one file per bucket; cogrouped callers are already
-            # bucket-grouped and skip this shuffle entirely
-            to_write = to_write.repartition(max(len(touched_buckets), 1), "_bucket")
-        (
-            self._writer(to_write)
-            .partitionBy("_bucket")
-            .parquet(staging)
-        )
+        if "_deleted" in cols and "_deleted" not in rows.columns:
+            rows = rows.withColumn("_deleted", F.lit(False))
+        to_write = rows.select("_bucket", *cols)
+        self._writer(to_write).partitionBy("_bucket").parquet(staging)
 
         t_write_done = _time.time()
+        bloom_key = m.summary.get("key_col", "url") if kind == "delta" else None
         try:
             new_entries = promote_staged_files(
-                self.root, staging, sid, token, m.schema_version,
-                spec_n=m.n_buckets,
+                self.root, staging, sid, token, m.schema_version, kind=kind,
+                bloom_key=bloom_key,
+                spec_n=n_buckets,
                 stat_cols=m.summary.get("stats_cols") or (),
             )
         finally:
@@ -1367,23 +1362,33 @@ class LakeletTable:
             stats_out["write_secs"] = round(t_write_done - t0, 4)
             stats_out["commit_secs"] = round(_time.time() - t_write_done, 4)
 
-        touched = set(int(b) for b in touched_buckets)
-        segments, seg_width = self._advance_segments(
-            m, touched, new_entries, mode="rewrite"
-        )
+        if replace is None:
+            segments, seg_width = self._segment_all(new_entries, n_buckets)
+        else:
+            segments, seg_width = self._advance_segments(
+                m, {int(b) for b in replace}, new_entries,
+                mode="delta" if kind == "delta" else "rewrite",
+            )
         new_summary = dict(m.summary)
         new_summary.update(summary or {})
-        # a data rewrite invalidates any clustered-layout claim unless
+        # a data change invalidates any clustered-layout claim unless
         # the caller re-asserts it (sort_rewrite does; merges don't)
         if "sort_order" not in (summary or {}):
             new_summary.pop("sort_order", None)
+        if kind == "delta":
+            # the resolution order must be pinned for every future
+            # reader of this snapshot chain
+            new_summary["mor_order"] = ["warc_ts", "_seq"]
+        # physical row count: for MOR, base + unresolved delta versions
+        # (the logical count needs resolution, which a metadata commit
+        # cannot afford; compaction snaps it back to logical)
         new_summary["total_rows"] = sum(s.rows for s in segments)
         nm = Manifest(
             snapshot_id=sid,
             parent_id=m.snapshot_id,
             batch_id=batch_id,
             schema_version=m.schema_version,
-            n_buckets=m.n_buckets,
+            n_buckets=n_buckets,
             schemas=m.schemas,
             segments=segments,
             segment_width=seg_width,
@@ -1391,9 +1396,51 @@ class LakeletTable:
             summary=new_summary,
         )
         # losing the CAS deletes this writer's freshly-promoted data
-        # files (uniquely named by sid — no clash with the winner's)
+        # files (uniquely named by sid+token — no clash with the winner's)
         self._commit_manifest(nm, m, cleanup_paths=[f.path for f in new_entries])
         return sid
+
+    def commit_rewrite(
+        self,
+        spark: SparkSession,
+        new_bucket_data: DataFrame,
+        touched_buckets: Sequence[int],
+        batch_id: str,
+        summary: dict | None = None,
+        stats_out: dict | None = None,
+        pre_partitioned: bool = False,
+        expected_parent_id: str | None = None,
+    ) -> str:
+        """Copy-on-write commit: replace the files of ``touched_buckets``
+        with ``new_bucket_data`` (must contain a ``_bucket`` column and
+        the current schema's columns), carry all other files forward,
+        write + CAS-commit a new manifest through :meth:`_commit_files`.
+
+        Idempotent: if the deterministic snapshot is already on the
+        committed chain, nothing is rewritten — the reference's
+        "already ingested" short-circuit (ingest-xml-archive.yaml:97-110).
+
+        Optimistic concurrency: ``expected_parent_id`` is the snapshot
+        the caller PLANNED the rewrite against (the state it read).
+        If the table has moved past it — or another writer wins the
+        head CAS during the commit — CommitConflictError is raised and
+        no state is changed; the caller re-plans against the new
+        current snapshot and retries (``CdcEngine.apply_batch`` does).
+        Without it a concurrent commit landing between plan and commit
+        would be silently overwritten in overlapping buckets.
+        """
+        if not pre_partitioned:
+            # co-locate each bucket into one task so partitionBy emits
+            # one file per bucket; cogrouped callers are already
+            # bucket-grouped and skip this shuffle entirely
+            new_bucket_data = new_bucket_data.repartition(
+                max(len(touched_buckets), 1), "_bucket"
+            )
+        return self._commit_files(
+            spark, new_bucket_data, batch_id, "base", touched_buckets,
+            summary=summary, stats_out=stats_out,
+            expected_parent_id=expected_parent_id,
+        )
 
     def commit_delta(
         self,
@@ -1422,79 +1469,14 @@ class LakeletTable:
         separate equality/position delete files are needed; a tombstone
         row IS the delete).
 
-        Same idempotency (deterministic sid), same head-chain CAS, same
-        conflict/cleanup behavior as :meth:`commit_rewrite`.
+        Same idempotency, CAS and conflict/cleanup behavior as
+        :meth:`commit_rewrite` — both are :meth:`_commit_files`.
         """
-        m = self.manifest()
-        if expected_parent_id is not None and m.snapshot_id != expected_parent_id:
-            raise CommitConflictError(
-                f"planned against {expected_parent_id}, table moved to "
-                f"{m.snapshot_id} — re-plan the merge"
-            )
-        sid = snapshot_id_for(m.snapshot_id, batch_id, m.schema_version)
-        if self._is_committed_child(sid, m):
-            if stats_out is not None:
-                stats_out["skipped"] = True
-            return sid
-
-        import time as _time
-        import uuid as _uuid
-
-        t0 = _time.time()
-        cols = [c.name for c in m.columns]
-        token = _uuid.uuid4().hex[:8]
-        staging = os.path.join(self.root, f"_staging-{sid}-{token}")
-        to_write = delta_rows.select("_bucket", *cols)
-        self._writer(to_write).partitionBy("_bucket").parquet(staging)
-
-        t_write_done = _time.time()
-        try:
-            new_entries = promote_staged_files(
-                self.root, staging, sid, token, m.schema_version, kind="delta",
-                bloom_key=m.summary.get("key_col", "url"),
-                spec_n=m.n_buckets,
-                stat_cols=m.summary.get("stats_cols") or (),
-            )
-        finally:
-            _rmtree(staging)  # see commit_rewrite: never orphan staging
-
-        if stats_out is not None:
-            stats_out["skipped"] = False
-            per_bucket: dict[int, int] = {}
-            for fe in new_entries:
-                per_bucket[fe.bucket] = per_bucket.get(fe.bucket, 0) + fe.rows
-            stats_out["bucket_rows"] = per_bucket
-            stats_out["write_secs"] = round(t_write_done - t0, 4)
-            stats_out["commit_secs"] = round(_time.time() - t_write_done, 4)
-
-        segments, seg_width = self._advance_segments(
-            m, set(), new_entries, mode="delta"
+        return self._commit_files(
+            spark, delta_rows, batch_id, "delta", (),
+            summary=summary, stats_out=stats_out,
+            expected_parent_id=expected_parent_id,
         )
-        new_summary = dict(m.summary)
-        new_summary.update(summary or {})
-        # a data change invalidates any clustered-layout claim, and the
-        # resolution order must be pinned for every future reader of
-        # this snapshot chain
-        new_summary.pop("sort_order", None)
-        new_summary["mor_order"] = ["warc_ts", "_seq"]
-        # physical row count (base + unresolved delta versions) — the
-        # logical count needs resolution, which a metadata commit
-        # cannot afford; compaction snaps it back to logical
-        new_summary["total_rows"] = sum(s.rows for s in segments)
-        nm = Manifest(
-            snapshot_id=sid,
-            parent_id=m.snapshot_id,
-            batch_id=batch_id,
-            schema_version=m.schema_version,
-            n_buckets=m.n_buckets,
-            schemas=m.schemas,
-            segments=segments,
-            segment_width=seg_width,
-            seg_dir=self._seg_dir(),
-            summary=new_summary,
-        )
-        self._commit_manifest(nm, m, cleanup_paths=[f.path for f in new_entries])
-        return sid
 
     def set_stats_cols(self, cols: Sequence[str], batch_id: str | None = None) -> str:
         """Declare the columns whose per-file [min,max] footer bounds
@@ -1736,9 +1718,9 @@ def promote_staged_files(
     spec_n: int | None = None,
     stat_cols=(),
 ) -> list[FileEntry]:
-    """THE promotion protocol (shared by commit_rewrite and rebucket —
-    a second copy is how the missing-token crash-retry bug happened):
-    move every staged ``_bucket=*`` part into ``data/`` under a
+    """THE promotion protocol, called only by
+    :meth:`LakeletTable._commit_files` (the one data commit — a second
+    copy is how the missing-token crash-retry bug happened): move every staged ``_bucket=*`` part into ``data/`` under a
     sid+per-writer-token name (so no retry or racer can ever overwrite
     a previously promoted file), read footer stats, and return the
     FileEntry list for the manifest. Parallelized past 8 files.
@@ -1752,10 +1734,10 @@ def promote_staged_files(
     for bdir in sorted(glob.glob(os.path.join(staging, "_bucket=*"))):
         raw = os.path.basename(bdir).split("=", 1)[1]
         if raw == "__HIVE_DEFAULT_PARTITION__":
-            # a NULL bucket = NULL key rows reached the writer (xxhash64
-            # of NULL is NULL). The engine's validate rules catch these
-            # upstream; a direct commit_* caller gets a clear refusal
-            # instead of int("__HIVE_DEFAULT_PARTITION__")
+            # a NULL bucket = NULL key rows reached the writer
+            # (bucket_expr is NULL for a NULL key). The engine's validate
+            # rules quarantine these upstream; any other caller gets a
+            # clear refusal before a single file is promoted
             raise ValueError(
                 "staged write contains rows with a NULL partition key "
                 "(_bucket=__HIVE_DEFAULT_PARTITION__); filter or "

@@ -46,21 +46,22 @@ import json
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from clinvar_ingest_spark.functions.canonical_json import canonical_json_series
 from clinvar_ingest_spark.functions.extract import extract_text_series
-from clinvar_ingest_spark.lakelet.table import (
-    LakeletTable,
-    bucket_expr,
-    spark_schema,
-)
+from clinvar_ingest_spark.lakelet.table import LakeletTable, bucket_expr
 from clinvar_ingest_spark.operators.merge import MergeStats
-from clinvar_ingest_spark.operators.merge_cogroup import _cogroup_buckets
+from clinvar_ingest_spark.operators.merge_cogroup import (
+    _cogroup_buckets,
+    _commit_cow,
+    _count_actions,
+    _observe_batch,
+    _out_schema,
+    _touched,
+)
 
-_ACTIONS = ("insert", "update", "delete", "noop_delete", "keep_late")
 
 #: bottom position — below every real (warc_ts, seq)
 _NEG = -(2**62)
@@ -371,7 +372,9 @@ def _merge_bucket_cells_fn(
         if in_batch.any():
             bmap = bdf.drop_duplicates("url").set_index("url")["_bucket"]
             bucket = bucket.where(bucket.notna(), m["url"].map(bmap))
-        res["_bucket"] = pd.to_numeric(bucket).astype("int64")
+        # nullable: a NULL-key group keeps its NULL bucket so the commit
+        # refuses it (a plain int64 cast would fail the task instead)
+        res["_bucket"] = pd.to_numeric(bucket).astype("Int64")
         res["_action"] = action
         return res
 
@@ -401,89 +404,25 @@ def merge_apply_cells(
             "(reserved by the cells kernel's internal prefixes); rename "
             "the column or use row-level mode"
         )
-    if assume_all_buckets:
-        touched = list(range(m.n_buckets))
-    else:
-        touched = [
-            r["_b"]
-            for r in batch.select(bucket_expr("url", m.n_buckets).alias("_b"))
-            .distinct()
-            .collect()
-        ]
-        touched = table.rewrite_closure(touched)
+    touched = _touched(table, m, batch, assume_all_buckets)
 
-    batch_obs = Observation()
-    observed = batch.observe(
-        batch_obs,
-        F.count(F.lit(1)).alias("n_events"),
-        F.max("warc_ts").alias("watermark"),
-    )
+    observed, batch_obs = _observe_batch(batch)
     b = observed.withColumn(
         "warc_ts", F.col("warc_ts").cast("timestamp")
     ).withColumn("_bucket", bucket_expr("url", m.n_buckets))
     current = table.read(spark, buckets=touched).withColumn(
         "_bucket", bucket_expr("url", m.n_buckets)
     )
-
-    table_cols = [cs.name for cs in m.columns]
-    out_schema = T.StructType(
-        spark_schema(m.columns).fields
-        + [
-            T.StructField("_bucket", T.LongType()),
-            T.StructField("_action", T.StringType()),
-        ]
-    )
     from clinvar_ingest_spark.operators.merge import batch_alias_map
 
     alias = batch_alias_map(m, list(b.columns))
     fn = _merge_bucket_cells_fn(m.columns, b.columns, alias)
-    merged = _cogroup_buckets(m.n_buckets, b, current).applyInPandas(
-        lambda left, right: fn(left, right), schema=out_schema
-    )
-
-    merge_obs = Observation()
-
-    def n_act(a: str):
-        return F.sum(F.when(F.col("_action") == a, 1).otherwise(0)).alias(a)
-
-    merged = merged.observe(merge_obs, *[n_act(a) for a in _ACTIONS])
-    survivors = merged.drop("_action")
-
-    commit_stats: dict = {}
-    sid = table.commit_rewrite(
-        spark,
-        survivors,
-        touched_buckets=touched,
-        batch_id=batch_id,
-        stats_out=commit_stats,
-        pre_partitioned=True,
-        expected_parent_id=m.snapshot_id,
-        # frontier stamped atomically with the commit — read back by
-        # the crash-repair path (engine._apply_batch_once)
-        summary={"apply_partial_to": partial_to},
-    )
-    if commit_stats.get("skipped"):
-        return MergeStats(
-            batch_id=batch_id, snapshot_id=sid, n_events=0, n_keys=0,
-            n_inserts=0, n_updates=0, n_deletes=0,
-            touched_buckets=len(touched),
+    survivors, merge_obs = _count_actions(
+        _cogroup_buckets(m.n_buckets, b, current).applyInPandas(
+            lambda left, right: fn(left, right), schema=_out_schema(m)
         )
-    bm = batch_obs.get
-    mm = merge_obs.get
-    counts = {k: int(mm.get(k) or 0) for k in _ACTIONS}
-    wm = bm.get("watermark")
-    return MergeStats(
-        batch_id=batch_id,
-        snapshot_id=sid,
-        n_events=int(bm.get("n_events") or 0),
-        n_keys=sum(counts.values()),
-        n_inserts=counts["insert"],
-        n_updates=counts["update"],
-        n_deletes=counts["delete"],
-        touched_buckets=len(touched),
-        watermark=wm.isoformat() if wm is not None else None,
-        bucket_rows=commit_stats.get("bucket_rows", {}),
-        write_secs=commit_stats.get("write_secs", 0.0),
-        commit_secs=commit_stats.get("commit_secs", 0.0),
-        mode="cells",
+    )
+    return _commit_cow(
+        spark, table, m, survivors, touched, batch_id, partial_to,
+        batch_obs, merge_obs, mode="cells",
     )

@@ -239,18 +239,25 @@ def _merge_bucket_arrow_fn(
     return merge_bucket
 
 
-def _project_batch(m, batch: DataFrame) -> tuple[DataFrame, Observation]:
-    """The batch under the table's CURRENT schema (renames, widens,
-    nested col-id remaps) plus ``_bucket``: ``seq``, ``op``, ``url``,
-    ``warc_ts``, the payload columns it provides, and ``html``/``extra``
-    riding along as extraction / props sources when the table lacks
-    them. The observation counts events and the watermark in flight."""
+def _observe_batch(batch: DataFrame) -> tuple[DataFrame, Observation]:
+    """``batch`` observed in flight: event count and watermark, the
+    batch half of :func:`_observed`."""
     batch_obs = Observation()
     observed = batch.observe(
         batch_obs,
         F.count(F.lit(1)).alias("n_events"),
         F.max("warc_ts").alias("watermark"),
     )
+    return observed, batch_obs
+
+
+def _project_batch(m, batch: DataFrame) -> tuple[DataFrame, Observation]:
+    """The batch under the table's CURRENT schema (renames, widens,
+    nested col-id remaps) plus ``_bucket``: ``seq``, ``op``, ``url``,
+    ``warc_ts``, the payload columns it provides, and ``html``/``extra``
+    riding along as extraction / props sources when the table lacks
+    them. The observation counts events and the watermark in flight."""
+    observed, batch_obs = _observe_batch(batch)
     table_cols = [cs.name for cs in m.columns]
     alias = batch_alias_map(m, batch.columns)
     extract = "text" in table_cols and "html" in batch.columns
@@ -287,35 +294,61 @@ def _cogroup_buckets(n_buckets: int, b: DataFrame, current: DataFrame):
     )
 
 
-def _merge_plan(m, b: DataFrame, current: DataFrame) -> tuple[DataFrame, Observation]:
-    """Shuffle the projected batch ``b`` and ``current`` (table rows)
-    on ``_bucket`` and run the kernel per bucket. Returns the
-    bucket-pure rows to write (tombstones included) and the observation
-    counting each ``_action``."""
-    current = current.withColumn("_bucket", bucket_expr("url", m.n_buckets))
-    out_schema = T.StructType(
+def _out_schema(m) -> T.StructType:
+    """A per-bucket kernel's result: table columns, ``_bucket``, ``_action``."""
+    return T.StructType(
         spark_schema(m.columns).fields
         + [
             T.StructField("_bucket", T.LongType()),
             T.StructField("_action", T.StringType()),
         ]
     )
+
+
+def _merge_plan(m, b: DataFrame, current: DataFrame) -> tuple[DataFrame, Observation]:
+    """Shuffle the projected batch ``b`` and ``current`` (table rows)
+    on ``_bucket`` and run the kernel per bucket. Returns the
+    bucket-pure rows to write (tombstones included) and the observation
+    counting each ``_action``."""
+    current = current.withColumn("_bucket", bucket_expr("url", m.n_buckets))
+    out_schema = _out_schema(m)
     fn = _merge_bucket_arrow_fn(
         [cs.name for cs in m.columns], b.columns, to_arrow_schema(out_schema)
     )
     merged = _cogroup_buckets(m.n_buckets, b, current).applyInArrow(
         lambda left, right: fn(left, right), schema=out_schema
     )
+    return _count_actions(merged)
 
+
+def _count_actions(merged: DataFrame) -> tuple[DataFrame, Observation]:
+    """Drop a kernel result's ``_action`` column, counting each action
+    in flight. Tombstones (delete/noop_delete) are WRITTEN, not dropped
+    — soft delete keeps the LWW frontier queryable for late events."""
     merge_obs = Observation()
 
     def n_act(a: str):
         return F.sum(F.when(F.col("_action") == a, 1).otherwise(0)).alias(a)
 
-    # tombstones (delete/noop_delete) are WRITTEN, not dropped — soft
-    # delete keeps the LWW frontier queryable for late events
     merged = merged.observe(merge_obs, *[n_act(a) for a in _ACTIONS])
     return merged.drop("_action"), merge_obs
+
+
+def _touched(
+    table: LakeletTable, m, batch: DataFrame, assume_all_buckets: bool
+) -> list[int]:
+    """The buckets a COW apply rewrites: all of them under the
+    ``assume_all_buckets`` hint (already spec-closed, no job), else the
+    batch's distinct key buckets (one tiny job) expanded to whole
+    legacy-spec files, so the replacement carries their untouched rows
+    (partition-spec evolution). A NULL key has no bucket; its rows still
+    reach the commit, which refuses them."""
+    if assume_all_buckets:
+        return list(range(m.n_buckets))
+    rows = batch.select(bucket_expr("url", m.n_buckets).alias("_b")).distinct()
+    return table.rewrite_closure(
+        [r["_b"] for r in rows.collect() if r["_b"] is not None]
+    )
 
 
 def _observed(batch_obs: Observation, merge_obs: Observation) -> tuple[int, str | None, dict]:
@@ -356,29 +389,35 @@ def merge_apply_cogrouped(
     quiet buckets for one fewer job per batch).
     """
     m = table.manifest()
-
-    if assume_all_buckets:
-        touched = list(range(m.n_buckets))  # already spec-closed
-    else:
-        touched = [
-            r["_b"]
-            for r in batch.select(bucket_expr("url", m.n_buckets).alias("_b"))
-            .distinct()
-            .collect()
-        ]
-        # partition-spec evolution: expand to whole legacy-spec files so
-        # the COW replacement carries their untouched rows
-        touched = table.rewrite_closure(touched)
-
+    touched = _touched(table, m, batch, assume_all_buckets)
     b, batch_obs = _project_batch(m, batch)
     survivors, merge_obs = _merge_plan(
         m, b, table.read(spark, buckets=touched)
     )
+    return _commit_cow(
+        spark, table, m, survivors, touched, batch_id, partial_to,
+        batch_obs, merge_obs,
+    )
 
+
+def _commit_cow(
+    spark: SparkSession,
+    table: LakeletTable,
+    m,
+    rows: DataFrame,
+    touched: list[int],
+    batch_id: str,
+    partial_to: int | None,
+    batch_obs: Observation,
+    merge_obs: Observation,
+    mode: str = "cow",
+) -> MergeStats:
+    """COW-commit a planned apply's bucket-pure ``rows`` over the
+    ``touched`` buckets and unpack its lineage (both COW applies)."""
     commit_stats: dict = {}
     sid = table.commit_rewrite(
         spark,
-        survivors,
+        rows,
         touched_buckets=touched,
         batch_id=batch_id,
         stats_out=commit_stats,
@@ -388,12 +427,11 @@ def merge_apply_cogrouped(
         # the crash-repair path (engine._apply_batch_once)
         summary={"apply_partial_to": partial_to},
     )
-
     if commit_stats.get("skipped"):
         return MergeStats(
             batch_id=batch_id, snapshot_id=sid, n_events=0, n_keys=0,
             n_inserts=0, n_updates=0, n_deletes=0,
-            touched_buckets=len(touched),
+            touched_buckets=len(touched), mode=mode,
         )
     n_events, watermark, counts = _observed(batch_obs, merge_obs)
     return MergeStats(
@@ -409,4 +447,5 @@ def merge_apply_cogrouped(
         bucket_rows=commit_stats.get("bucket_rows", {}),
         write_secs=commit_stats.get("write_secs", 0.0),
         commit_secs=commit_stats.get("commit_secs", 0.0),
+        mode=mode,
     )

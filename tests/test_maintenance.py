@@ -57,6 +57,21 @@ def test_rebucket_preserves_state_and_scales_buckets(spark, setup):
     assert eng.state_hash() == ref.state_hash()
 
 
+def test_rebucket_honours_file_size_policy(spark, setup):
+    """rebucket is a data commit like any other, so it writes under the
+    table's max_records_per_file policy instead of one file per bucket."""
+    eng, _cl = setup
+    h = eng.state_hash()
+    eng.table.max_records_per_file = 10
+    rebucket(spark, eng.table, 8)
+    m = eng.table.manifest()
+    assert m.n_buckets == 8
+    assert {f.bucket for f in m.files} == set(range(8))
+    assert max(f.rows for f in m.files) <= 10
+    assert len(m.files) > 8
+    assert eng.state_hash() == h
+
+
 def test_purge_tombstones_compacts_delete_frontier(spark, setup):
     from clinvar_ingest_spark.lakelet.maintenance import purge_tombstones
 

@@ -11,6 +11,9 @@ quarantine is inside the exactly-once envelope.
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -133,3 +136,27 @@ def test_custom_rules_and_clean_stream(spark, clean_path, tmp_path):
     off = CdcEngine(spark, str(tmp_path / "o"), n_buckets=4)
     off.replay(cl, batch_size=1200)
     assert off.quarantined() is None
+
+
+@pytest.mark.parametrize(
+    "kw", [{}, {"write_mode": "mor"}, {"patch_ops": True}], ids=["cow", "mor", "cells"]
+)
+def test_null_key_refused_without_validation(spark, clean_path, tmp_path, kw):
+    """Without validation a NULL-key event must not commit: its bucket
+    is NULL (Spark's xxhash64(NULL) is the seed, so an unguarded hash
+    would file it under bucket 42 % n), and the commit refuses the
+    NULL partition before promoting a file."""
+    cl = spark.read.parquet(clean_path)
+    root = str(tmp_path / "t")
+    eng = CdcEngine(spark, root, n_buckets=4, **kw)
+    eng.apply_batch(cl.filter("seq < 400"), 0, 399)
+    before = eng.table.current_snapshot_id()
+    poisoned = cl.filter("seq >= 400 AND seq < 800").withColumn(
+        "url",
+        F.when(F.col("seq").isin(450, 451), F.lit(None)).otherwise(F.col("url")),
+    )
+    with pytest.raises(ValueError, match="NULL partition key"):
+        eng.apply_batch(poisoned, 400, 799)
+    assert eng.table.current_snapshot_id() == before
+    assert glob.glob(os.path.join(root, "_staging-*")) == []
+    assert eng.read().filter("url IS NULL").count() == 0
