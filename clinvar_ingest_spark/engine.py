@@ -8,8 +8,8 @@ phases README.md:48-78):
     ---------                       -----------
     weekly XML release              changelog offset range (micro-batch)
     xml_archive existence gate      ledger.is_committed(batch_id)
-    Dataflow parse+dedup            LWW reduce + vectorized extraction
-    BigQuery 3-way diff             one full-outer-join MERGE classify
+    Dataflow parse+dedup            per-bucket Arrow kernel: LWW + extraction
+    BigQuery 3-way diff             the same kernel classifies vs current state
     TDR soft-delete + append        copy-on-write bucket rewrite
     TDR snapshot cut                atomic manifest commit (deterministic id)
     processing_history row          ledger + lineage record
@@ -29,6 +29,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clinvar_ingest_spark.lakelet import maintenance
 from clinvar_ingest_spark.lakelet.table import LakeletTable, PAGES_COLUMNS
 from clinvar_ingest_spark.operators import diff as diff_ops
 from clinvar_ingest_spark.operators.merge import MergeStats
@@ -375,51 +376,11 @@ class CdcEngine:
         return stats
 
     def compact(self, buckets: list[int] | None = None) -> str | None:
-        """Fold merge-on-read delta files back into base files: read the
-        RESOLVED state of every delta-bearing bucket (optionally
-        restricted to ``buckets``) and COW-rewrite exactly those
-        buckets. Logical state is unchanged (state-hash invariant,
-        tests/test_mor.py); subsequent reads of the compacted buckets
-        plan with zero resolution overhead again.
-
-        Idempotent (deterministic batch id per source snapshot) and
-        OCC-safe (pinned to the snapshot it planned against — a
-        concurrent apply landing mid-compaction raises
-        CommitConflictError rather than losing its delta, and the
-        caller simply re-runs compaction later). Returns the new
-        snapshot id, or None if nothing to compact.
-
-        At 100 TB this is the background half of the MOR trade: applies
-        stay ∝ batch size at any cadence, and compaction amortizes the
-        read-side resolution across however many batches landed since
-        the last fold — exactly Iceberg's rewrite_data_files loop.
-        """
-        from clinvar_ingest_spark.lakelet.table import bucket_expr
-
-        m = self.table.manifest()
-        todo = self.table.delta_buckets()
-        if buckets is not None:
-            want = set(int(b) for b in buckets)
-            todo = [b for b in todo if b in want]
-        if not todo:
-            return None
-        # partition-spec evolution: folding a delta bucket that overlaps
-        # a legacy-spec base file must rewrite that whole file — expand
-        # (identity pre-grow); compaction doubles as lazy spec migration
-        todo = self.table.rewrite_closure(todo)
-        rows = self.table.read(self.spark, buckets=todo).withColumn(
-            "_bucket", bucket_expr(self.table.key_col, m.n_buckets)
-        )
-        # the delta-resolution window (url-hashed) runs at the session's
-        # shuffle setting; commit_rewrite's repartition(len(todo),
-        # "_bucket") gives the write one task per bucket
-        return self.table.commit_rewrite(
-            self.spark,
-            rows,
-            touched_buckets=todo,
-            batch_id=f"compact:{m.snapshot_id[:16]}",
-            expected_parent_id=m.snapshot_id,
-        )
+        """Fold this engine's merge-on-read deltas (optionally only
+        ``buckets``) back into base files; see
+        :func:`~clinvar_ingest_spark.lakelet.maintenance.compact`.
+        Returns the new snapshot id, or None if nothing to compact."""
+        return maintenance.compact(self.spark, self.table, buckets)
 
     def publish(self, expected_parent_id: str | None = None) -> str:
         """Write-audit-publish, final step for a ``branch=`` engine:
@@ -509,76 +470,50 @@ class CdcEngine:
         for first in range(start, hi + 1, batch_size):
             last = first + batch_size - 1
             partial = hi if last > hi else None
-            prior = self.ledger.get(batch_id_for(first, last))
-            if prior is None:
-                b = changelog.filter(
-                    (F.col("seq") >= first) & (F.col("seq") <= last)
-                )
-                stats = self.apply_batch(
-                    b, first, last,
-                    assume_all_buckets=_all_buckets(min(last, hi) - first + 1),
-                    partial_to=partial,
-                )
-                if stats is not None:
-                    _account(stats)
-                else:
-                    # skip inside the apply: a crash-repair or a
-                    # competing writer just materialized the record —
-                    # re-read it so a frontier short of our delivered hi
-                    # is healed NOW (below), not silently deferred to
-                    # some future replay while later batches land
-                    prior = self.ledger.get(batch_id_for(first, last))
-            if (
-                prior is not None
-                and prior.get("partial_to") is not None
-                and hi > int(prior["partial_to"])
-            ):
-                # heal a partially-committed range: apply ONLY the
-                # uncommitted remainder under its own deterministic id,
-                # then advance (or clear) the original record's frontier.
-                # The frontier walks the chain of COMMITTED remainder
-                # records instead of trusting this replay's hi: a
-                # crashed (or racing) healer may have committed a
-                # remainder that covers LESS than the now-delivered
-                # stream, and stamping our own hi over it would mark its
-                # tail complete without ever applying it (skip-and-lose).
-                frontier: int | None = int(prior["partial_to"])
-                while frontier is not None and frontier < min(last, hi):
-                    cont_first = frontier + 1
-                    rem = self.ledger.get(batch_id_for(cont_first, last))
-                    if rem is None:
-                        b = changelog.filter(
-                            (F.col("seq") >= cont_first)
-                            & (F.col("seq") <= last)
-                        )
-                        stats = self.apply_batch(
-                            b, cont_first, last,
-                            assume_all_buckets=_all_buckets(
-                                min(last, hi) - cont_first + 1
-                            ),
-                            partial_to=partial,
-                        )
-                        if stats is not None:
-                            _account(stats)
-                            frontier = partial
-                        else:
-                            # skip inside the apply (crash-repair or a
-                            # lost commit race): the committed record —
-                            # possibly another writer's, covering less
-                            # than our hi — holds the true frontier
-                            rem = self.ledger.get(
-                                batch_id_for(cont_first, last)
-                            )
-                            frontier = (
-                                rem.get("partial_to")
-                                if rem is not None
-                                else partial
-                            )
+            # apply the grid range, or heal a partially-committed one:
+            # each lap applies ONLY the uncommitted remainder under its
+            # own deterministic id (first lap: the whole range), then
+            # advances (or clears) the grid record's frontier. The
+            # frontier walks the chain of COMMITTED records instead of
+            # trusting this replay's hi: a crashed (or racing) healer
+            # may have committed a remainder that covers LESS than the
+            # now-delivered stream, and stamping our own hi over it
+            # would mark its tail complete without ever applying it
+            # (skip-and-lose).
+            frontier: int | None = first - 1
+            while frontier is not None and frontier < min(last, hi):
+                lap_first = frontier + 1
+                rec = self.ledger.get(batch_id_for(lap_first, last))
+                if rec is None:
+                    b = changelog.filter(
+                        (F.col("seq") >= lap_first) & (F.col("seq") <= last)
+                    )
+                    stats = self.apply_batch(
+                        b, lap_first, last,
+                        assume_all_buckets=_all_buckets(
+                            min(last, hi) - lap_first + 1
+                        ),
+                        partial_to=partial,
+                    )
+                    if stats is not None:
+                        _account(stats)
+                        frontier = partial
                     else:
-                        # already committed by an earlier heal: adopt ITS
-                        # frontier (None = covered through last) and keep
-                        # walking — the next lap applies whatever is left
-                        frontier = rem.get("partial_to")
+                        # skip inside the apply (crash-repair or a lost
+                        # commit race): the committed record — possibly
+                        # another writer's, covering less than our hi —
+                        # holds the true frontier, healed NOW rather
+                        # than deferred to some future replay
+                        rec = self.ledger.get(batch_id_for(lap_first, last))
+                        frontier = (
+                            rec.get("partial_to") if rec is not None else partial
+                        )
+                else:
+                    # already committed: adopt ITS frontier (None =
+                    # covered through last) and keep walking — the next
+                    # lap applies whatever is left
+                    frontier = rec.get("partial_to")
+                if lap_first > first:
                     self.ledger.update(
                         batch_id_for(first, last), partial_to=frontier
                     )

@@ -1,34 +1,33 @@
-"""Table maintenance: re-bucketing and snapshot expiry.
+"""Table maintenance: the rewrite passes, re-bucketing and snapshot expiry.
 
 Iceberg-parity lifecycle ops the reference delegates to TDR/BigQuery
 (staging-table TTL, docker/diff/diff.py:47-48; dataset lifetime mgmt,
-diff.py:41-56):
+diff.py:41-56). The rewrite passes — :func:`compact` (fold MOR deltas),
+:func:`purge_tombstones`, :func:`rewrite_small_files` (bin-pack) and
+:func:`sort_rewrite` (lexicographic / Z-order clustering) — each decide
+only which buckets to rewrite and how; all four run one plan,
+:func:`_rewrite_buckets` (Iceberg ``rewrite_data_files``). Beside them:
 
-- :func:`rebucket` — rewrite the table under a new bucket count. The
-  COW design keeps exactly one file per bucket (each touched bucket is
-  fully replaced per commit), so classic small-file compaction never
-  applies; what *does* degrade over time is bucket SIZE as the keyspace
-  grows — parallelism and rewrite amplification are both bounded by
-  n_buckets, so a 10^10-row table periodically doubles it. Time travel
-  across the boundary works because every manifest pins its own
-  n_buckets (readers and pruners consult the snapshot's value, never a
-  global).
-- :func:`sort_rewrite` — physically re-order rows inside each bucket
-  (lexicographic or Z-order) so parquet row-group/page stats become
-  tight on the sort columns: the periodic clustering pass
-  (Iceberg rewrite_data_files sort/zorder; BigQuery clustered tables,
-  which the reference's schema/*.table.json rely on).
+- :func:`rebucket` — rewrite the table under a new bucket count. What
+  degrades as the keyspace grows is bucket SIZE: parallelism and
+  rewrite amplification are both bounded by n_buckets, so a 10^10-row
+  table periodically doubles it. Time travel across the boundary works
+  because every manifest pins its own n_buckets (readers and pruners
+  consult the snapshot's value, never a global).
 - :func:`expire_snapshots` — drop manifests beyond the retention cut,
   then delete data files referenced only by expired snapshots.
   Two-phase and crash-safe: manifests go first (atomic per-file), then
   unreferenced data — a crash in between leaves harmless orphans the
   next sweep removes.
+- :func:`auto_maintain` — the passes above in the one safe order,
+  under a :class:`MaintenancePolicy`.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -43,6 +42,81 @@ from clinvar_ingest_spark.lakelet.table import (
     LakeletTable,
     bucket_expr,
 )
+
+
+def _rewrite_buckets(
+    spark: SparkSession,
+    table: LakeletTable,
+    m: Manifest,
+    buckets,
+    batch_id: str,
+    keep=None,
+    order=None,
+    summary: dict | None = None,
+) -> str:
+    """The one plan under every rewrite pass: COW-rewrite ``buckets``
+    of the planned snapshot ``m`` from their resolved rows, one task per
+    bucket, pinned to ``m``. ``keep`` filters the rows; ``order(df)``
+    returns sort columns, computed on the read before the shuffle (a
+    Z-order bounds job scans the read, not a shuffled copy); the commit
+    asserts the ``summary`` keys. Idempotent by ``batch_id``; returns
+    the new snapshot id."""
+    # partition-spec evolution: a touched legacy-spec file is rewritten
+    # whole (identity pre-grow), so every pass doubles as lazy spec
+    # migration
+    touched = table.rewrite_closure(buckets)
+    rows = table.read(spark, buckets=touched)
+    if keep is not None:
+        rows = rows.filter(keep)
+    rows = rows.withColumn(
+        "_bucket", bucket_expr(m.summary.get("key_col", "url"), m.n_buckets)
+    )
+    sort_cols = order(rows) if order is not None else None
+    # the MOR resolution window (key-hashed) runs at the session's
+    # shuffle setting; this repartition gives the write one task per
+    # bucket, so partitionBy emits one file per bucket
+    rows = rows.repartition(max(len(touched), 1), "_bucket")
+    if sort_cols is not None:
+        rows = rows.sortWithinPartitions(F.col("_bucket"), *sort_cols)
+    return table.commit_rewrite(
+        spark, rows, touched, batch_id=batch_id, summary=summary,
+        pre_partitioned=True, expected_parent_id=m.snapshot_id,
+    )
+
+
+def compact(
+    spark: SparkSession,
+    table: LakeletTable,
+    buckets: list[int] | None = None,
+) -> str | None:
+    """Fold merge-on-read delta files back into base files: read the
+    RESOLVED state of every delta-bearing bucket (optionally
+    restricted to ``buckets``) and COW-rewrite exactly those
+    buckets. Logical state is unchanged (state-hash invariant,
+    tests/test_mor.py); subsequent reads of the compacted buckets
+    plan with zero resolution overhead again.
+
+    Idempotent (deterministic batch id per source snapshot) and
+    OCC-safe (pinned to the snapshot it planned against — a
+    concurrent apply landing mid-compaction raises
+    CommitConflictError rather than losing its delta, and the
+    caller simply re-runs compaction later). Returns the new
+    snapshot id, or None if nothing to compact.
+
+    At 100 TB this is the background half of the MOR trade: applies
+    stay ∝ batch size at any cadence, and compaction amortizes the
+    read-side resolution across however many batches landed since
+    the last fold — exactly Iceberg's rewrite_data_files loop.
+    """
+    m = table.manifest()
+    todo = m.delta_bucket_set()
+    if buckets is not None:
+        todo &= {int(b) for b in buckets}
+    if not todo:
+        return None
+    return _rewrite_buckets(
+        spark, table, m, todo, f"compact:{m.snapshot_id[:16]}"
+    )
 
 
 def rebucket(
@@ -114,38 +188,20 @@ def sort_rewrite(
     # idempotent
     if m.summary.get("sort_order") == spec:
         return m.snapshot_id
-    batch_id = f"sort_rewrite:{spec}:{m.snapshot_id}"
-    sid = snapshot_id_for(m.snapshot_id, batch_id, m.schema_version)
-    if table._is_committed_child(sid, m):
-        return sid
 
-    df = table.read(spark).withColumn(
-        "_bucket", bucket_expr(table.key_col, m.n_buckets)
-    )
-    if zorder and len(by) > 1:
-        from clinvar_ingest_spark.functions.zorder import zorder_key
+    def order(df):
+        if zorder and len(by) > 1:
+            from clinvar_ingest_spark.functions.zorder import zorder_key
 
-        sort_cols = [zorder_key(df, by, bits=bits)]
-    else:
-        sort_cols = [F.col(c) for c in by]
+            return [zorder_key(df, by, bits=bits)]
+        return [F.col(c) for c in by]
 
-    ordered = (
-        df.repartition(m.n_buckets, "_bucket")
-        .sortWithinPartitions(F.col("_bucket"), *sort_cols)
-    )
-    return table.commit_rewrite(
-        spark,
-        ordered,
-        # closure maps legacy-spec file buckets to every current bucket
-        # they span (identity pre-grow) — a sorted rewrite also migrates
-        # any remaining legacy-spec files to the current spec
-        touched_buckets=table.rewrite_closure(
-            {f.bucket for f in m.files}
-        ),
-        batch_id=batch_id,
-        summary={"sort_order": spec},
-        pre_partitioned=True,
-        expected_parent_id=m.snapshot_id,
+    # every bucket: a sorted rewrite also migrates any remaining
+    # legacy-spec files to the current spec
+    return _rewrite_buckets(
+        spark, table, m, {f.bucket for f in m.files},
+        f"sort_rewrite:{spec}:{m.snapshot_id}",
+        order=order, summary={"sort_order": spec},
     )
 
 
@@ -164,52 +220,35 @@ def rewrite_small_files(
     A logically-empty commit: live state, schema, and bucket layout are
     unchanged (state-hash invariant); only file granularity changes.
     Buckets already at a single base file — and any bucket carrying MOR
-    deltas (fold those with ``CdcEngine.compact`` first; folding is a
+    deltas (fold those with :func:`compact` first; folding is a
     semantic rewrite, bin-packing is layout-only) — are left alone.
     Legacy-spec files are migrated by the same closure rule as every
     rewrite. Idempotent by deterministic snapshot id; returns the new
     id (current id when nothing is fragmented).
     """
-    from pyspark.sql import functions as F  # noqa: F401  (parity w/ peers)
-
     m = table.manifest()
-    per_bucket: dict[int, int] = {}
-    # delta coverage in CURRENT-spec space: a pre-grow delta at legacy
-    # bucket b covers every current bucket ≡ b (mod spec_n); raw-id
-    # matching would let this layout-only pass rewrite (= semantically
-    # FOLD) delta stacks it documents itself as leaving alone
-    delta_cover: set[int] = set()
-    for f in m.files:
-        per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-        if f.kind == "delta":
-            s = f.spec_n or m.n_buckets
-            if s == m.n_buckets:
-                delta_cover.add(f.bucket)
-            else:
-                delta_cover.update(
-                    b for b in range(m.n_buckets) if b % s == f.bucket
-                )
-    frag = [
+    per_bucket = Counter(f.bucket for f in m.files)
+    # delta coverage in CURRENT-spec space: raw-id matching would let
+    # this layout-only pass rewrite (= semantically FOLD) delta stacks
+    # it documents itself as leaving alone
+    delta = m.delta_cover(m.files)
+    # the closure rule migrates legacy files whole: block every bucket
+    # a legacy file spans when it spans a delta-covered one.
+    # grow_buckets only multiplies the count, so legacy covers nest and
+    # this one level is the whole closure
+    blocked = delta | {
         b
-        for b, n in per_bucket.items()
-        if n >= min_files and b not in delta_cover
-        # the closure rule migrates legacy files whole: skip any bucket
-        # whose rewrite would drag a delta-covered bucket along
-        and not (set(table.rewrite_closure([b])) & delta_cover)
+        for f in m.files
+        if m.entry_covers(f, delta)
+        for b in range(f.bucket, m.n_buckets, f.spec_n or m.n_buckets)
+    }
+    frag = [
+        b for b, n in per_bucket.items() if n >= min_files and b not in blocked
     ]
     if not frag:
         return m.snapshot_id
-    touched = table.rewrite_closure(frag)
-    batch_id = f"binpack:{min_files}:{m.snapshot_id}"
-    sid = snapshot_id_for(m.snapshot_id, batch_id, m.schema_version)
-    if table._is_committed_child(sid, m):
-        return sid
-    rows = table.read(spark, buckets=touched).withColumn(
-        "_bucket", bucket_expr(table.key_col, m.n_buckets)
-    )
-    return table.commit_rewrite(
-        spark, rows, touched, batch_id=batch_id,
-        expected_parent_id=m.snapshot_id,
+    return _rewrite_buckets(
+        spark, table, m, frag, f"binpack:{min_files}:{m.snapshot_id}"
     )
 
 
@@ -229,8 +268,6 @@ def purge_tombstones(
     snapshot id (current id if nothing to purge). Idempotent by
     deterministic snapshot id.
     """
-    from pyspark.sql import functions as F
-
     m = table.manifest()
     is_old_tomb = (
         F.coalesce(F.col("_deleted"), F.lit(False))
@@ -253,17 +290,10 @@ def purge_tombstones(
     )
     if not touched:
         return m.snapshot_id
-    # spec evolution: rewrite whole legacy files (identity pre-grow)
-    touched = table.rewrite_closure(touched)
-    batch_id = f"purge_tombstones:{older_than}:{m.snapshot_id}"
-    kept = (
-        table.read(spark, buckets=touched)
-        .filter(~is_old_tomb)
-        .withColumn("_bucket", bucket_expr(table.key_col, m.n_buckets))
-    )
-    return table.commit_rewrite(
-        spark, kept, touched, batch_id=batch_id,
-        expected_parent_id=m.snapshot_id,
+    return _rewrite_buckets(
+        spark, table, m, touched,
+        f"purge_tombstones:{older_than}:{m.snapshot_id}",
+        keep=~is_old_tomb,
     )
 
 
@@ -572,7 +602,6 @@ def auto_maintain(
     spark: SparkSession,
     table: LakeletTable,
     policy: MaintenancePolicy | None = None,
-    engine=None,
 ) -> dict:
     """One policy-driven maintenance pass; returns what ran.
 
@@ -586,10 +615,6 @@ def auto_maintain(
     threshold is not met are skipped — an empty dict means the table
     needed nothing.
 
-    ``engine``: pass the owning :class:`CdcEngine` to use its
-    conflict-retrying ``compact()``; otherwise delta folding is
-    skipped (the fold needs the engine's merge kernels).
-
     At 10^10 rows the decision inputs are manifest METADATA only
     (file counts per bucket, delta flags, snapshot stamps) — deciding
     costs no data I/O; only the chosen actions touch data, each
@@ -600,10 +625,9 @@ def auto_maintain(
 
     if (
         pol.compact_delta_buckets is not None
-        and engine is not None
         and len(table.delta_buckets()) >= pol.compact_delta_buckets
     ):
-        sid = engine.compact()
+        sid = compact(spark, table)
         if sid:
             did["compact"] = sid
 

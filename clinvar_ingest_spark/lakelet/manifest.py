@@ -341,6 +341,19 @@ class Manifest:
                 )
         return out
 
+    def delta_cover(self, files) -> set[int]:
+        """CURRENT-spec buckets the delta files among ``files`` cover. A
+        delta written before a ``grow_buckets`` carries a legacy spec_n
+        and covers every current bucket ≡ its bucket (mod spec_n); raw
+        bucket ids would compare across two bucket spaces."""
+        out: set[int] = set()
+        for f in files:
+            if f.kind == "delta":
+                out.update(
+                    range(f.bucket, self.n_buckets, f.spec_n or self.n_buckets)
+                )
+        return out
+
     def delta_bucket_set(self) -> set[int]:
         """Buckets with unresolved MOR delta files — from per-segment
         stats alone (no hydration) when segmented."""

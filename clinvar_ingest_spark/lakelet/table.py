@@ -822,42 +822,19 @@ class LakeletTable:
         # table size (full scans hydrate everything, which they read
         # anyway)
         in_buckets = m.files if bset is None else m.files_for_buckets(bset)
-        # delta-bearing buckets in CURRENT-spec space: a delta written
-        # before a grow_buckets carries a legacy spec_n and covers every
-        # current bucket ≡ its bucket (mod spec_n); base files are then
-        # matched via the same spec projection (entry_covers) — raw
+        # delta-bearing buckets in CURRENT-spec space; base files are
+        # then matched via the same spec projection (entry_covers) — raw
         # f.bucket equality would compare across two different bucket
         # spaces, letting the ts-window prune below drop a legacy base
         # file whose current bucket DOES carry deltas (the LWW winner
         # could live there: silent stale rows / resurrected deletes)
-        delta_buckets: set[int] = set()
-        for f in in_buckets:
-            if f.kind == "delta":
-                s = f.spec_n or m.n_buckets
-                if s == m.n_buckets:
-                    delta_buckets.add(f.bucket)
-                else:
-                    delta_buckets.update(
-                        b for b in range(m.n_buckets) if b % s == f.bucket
-                    )
-        if delta_buckets:
-            covered = [
-                f for f in in_buckets if m.entry_covers(f, delta_buckets)
-            ]
-            clean = select_files(
-                [
-                    f
-                    for f in in_buckets
-                    if not m.entry_covers(f, delta_buckets)
-                ],
-                None, ts_not_before, ts_not_after, where_between,
-            )
-            files = covered + clean
-        else:
-            covered, clean = [], select_files(
-                in_buckets, None, ts_not_before, ts_not_after, where_between
-            )
-            files = clean
+        delta_buckets = m.delta_cover(in_buckets)
+        covered = [f for f in in_buckets if m.entry_covers(f, delta_buckets)]
+        clean = select_files(
+            [f for f in in_buckets if not m.entry_covers(f, delta_buckets)],
+            None, ts_not_before, ts_not_after, where_between,
+        )
+        files = covered + clean
         if not files:
             return spark.createDataFrame([], schema=target_schema)
         # LWW resolution runs over the delta-covered FILES only — keys
@@ -991,7 +968,8 @@ class LakeletTable:
         return sorted(m.delta_bucket_set())
 
     def touched_buckets(self, batch_keys: DataFrame, key_col: str | None = None) -> list[int]:
-        """Distinct buckets of a batch's keys (small: ≤ n_buckets ints)."""
+        """Distinct buckets of a batch's keys (small: ≤ n_buckets ints;
+        one tiny job). A NULL key has no bucket and is left out."""
         m = self.manifest()
         kc = key_col or self.key_col
         rows = (
@@ -999,15 +977,9 @@ class LakeletTable:
             .distinct()
             .collect()
         )
-        return sorted(r["b"] for r in rows)
+        return sorted(r["b"] for r in rows if r["b"] is not None)
 
     # ----------------------------------------------------------------- commit
-
-    def next_snapshot_id(self, batch_id: str, schema_version: int | None = None) -> str:
-        m = self.manifest()
-        return snapshot_id_for(
-            m.snapshot_id, batch_id, schema_version or m.schema_version
-        )
 
     # ---------------------------------------------------- file-list segments
     #
@@ -1350,18 +1322,6 @@ class LakeletTable:
             # removing leftovers can never touch another writer's data
             _rmtree(staging)
 
-        if stats_out is not None:
-            stats_out["skipped"] = False
-            per_bucket: dict[int, int] = {}
-            for fe in new_entries:
-                per_bucket[fe.bucket] = per_bucket.get(fe.bucket, 0) + fe.rows
-            stats_out["bucket_rows"] = per_bucket
-            # phase decomposition for the scaling evidence: the Spark
-            # write (parallel) vs the driver-side promote+manifest
-            # (the plan's only serial section)
-            stats_out["write_secs"] = round(t_write_done - t0, 4)
-            stats_out["commit_secs"] = round(_time.time() - t_write_done, 4)
-
         if replace is None:
             segments, seg_width = self._segment_all(new_entries, n_buckets)
         else:
@@ -1398,6 +1358,18 @@ class LakeletTable:
         # losing the CAS deletes this writer's freshly-promoted data
         # files (uniquely named by sid+token — no clash with the winner's)
         self._commit_manifest(nm, m, cleanup_paths=[f.path for f in new_entries])
+        if stats_out is not None:
+            stats_out["skipped"] = False
+            per_bucket: dict[int, int] = {}
+            for fe in new_entries:
+                per_bucket[fe.bucket] = per_bucket.get(fe.bucket, 0) + fe.rows
+            stats_out["bucket_rows"] = per_bucket
+            # phase decomposition for the scaling evidence: the Spark
+            # write (parallel) vs the driver-side promote, segment and
+            # manifest writes and head CAS (the plan's only serial
+            # section)
+            stats_out["write_secs"] = round(t_write_done - t0, 4)
+            stats_out["commit_secs"] = round(_time.time() - t_write_done, 4)
         return sid
 
     def commit_rewrite(

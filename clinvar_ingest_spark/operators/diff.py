@@ -28,6 +28,7 @@ shuffled once, not three times.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -52,26 +53,17 @@ def deleted_rows(new: DataFrame, old: DataFrame, keys: Sequence[str]) -> DataFra
     return old.join(new.select(*keys), on=list(keys), how="left_anti")
 
 
-def _any_col_differs(new: DataFrame, old: DataFrame, cols: Sequence[str], null_safe: bool):
-    preds = []
-    for c in cols:
-        a = _comparable_side(new, c)
-        b = _comparable_side(old, c)
-        if null_safe:
-            preds.append(~a.eqNullSafe(b))
-        else:
-            preds.append(a != b)  # reference parity: NULLs never "differ"
-    pred = preds[0]
-    for p in preds[1:]:
-        pred = pred | p
-    return pred
+def _differs(a, b, dtype, null_safe: bool):
+    """Does value ``a`` differ from ``b`` (both of ``dtype``)? Nested
+    types compare as JSON; ``null_safe=False`` keeps the reference's
+    ``!=``, under which NULLs never "differ"."""
+    if isinstance(dtype, (ArrayType, MapType, StructType)):
+        a, b = F.to_json(a), F.to_json(b)
+    return ~a.eqNullSafe(b) if null_safe else (a != b)
 
 
-def _comparable_side(df: DataFrame, col: str):
-    dt = df.schema[col].dataType
-    if isinstance(dt, (ArrayType, MapType, StructType)):
-        return F.to_json(df[col])
-    return df[col]
+def _any(preds):
+    return reduce(lambda x, y: x | y, preds) if preds else F.lit(False)
 
 
 def updated_rows(
@@ -87,8 +79,38 @@ def updated_rows(
     cols = _non_key_columns(new, keys, exclude)
     cond = [new[k] == old[k] for k in keys]
     joined = new.join(old, on=cond, how="inner")
-    pred = _any_col_differs(new, old, cols, null_safe)
+    pred = _any(
+        [_differs(new[c], old[c], new.schema[c].dataType, null_safe) for c in cols]
+    )
     return joined.filter(pred).select(*[new[k] for k in keys], *[new[c] for c in cols])
+
+
+def _outer(new, old, keys, exclude, null_safe):
+    """The one full-outer join :func:`diff_all` and :func:`diff_changelog`
+    classify from: returns (joined frame with ``_n_<col>``/``_o_<col>``
+    sides and ``_in_new``/``_in_old`` flags, non-key columns, the
+    "any value differs" predicate, the coalesced key columns)."""
+    keys = list(keys)
+    cols = _non_key_columns(new, keys, exclude)
+    n = new.select(
+        *[F.col(k).alias(f"_nk_{k}") for k in keys],
+        *[F.col(c).alias(f"_n_{c}") for c in cols],
+        F.lit(True).alias("_in_new"),
+    )
+    o = old.select(
+        *[F.col(k).alias(f"_ok_{k}") for k in keys],
+        *[F.col(c).alias(f"_o_{c}") for c in cols],
+        F.lit(True).alias("_in_old"),
+    )
+    cond = [n[f"_nk_{k}"] == o[f"_ok_{k}"] for k in keys]
+    differs = _any([
+        _differs(F.col(f"_n_{c}"), F.col(f"_o_{c}"), new.schema[c].dataType, null_safe)
+        for c in cols
+    ])
+    out_keys = [
+        F.coalesce(F.col(f"_nk_{k}"), F.col(f"_ok_{k}")).alias(k) for k in keys
+    ]
+    return n.join(o, on=cond, how="full_outer"), cols, differs, out_keys
 
 
 def diff_all(
@@ -105,44 +127,12 @@ def diff_all(
     This is the plan the MERGE apply uses: both states shuffle once on
     the key instead of once per slice.
     """
-    keys = list(keys)
-    cols = _non_key_columns(new, keys, exclude)
-    n = new.select(
-        *[F.col(k).alias(f"_nk_{k}") for k in keys],
-        *[F.col(c).alias(f"_n_{c}") for c in cols],
-        F.lit(True).alias("_in_new"),
-    )
-    o = old.select(
-        *[F.col(k).alias(f"_ok_{k}") for k in keys],
-        *[F.col(c).alias(f"_o_{c}") for c in cols],
-        F.lit(True).alias("_in_old"),
-    )
-    cond = [n[f"_nk_{k}"] == o[f"_ok_{k}"] for k in keys]
-    j = n.join(o, on=cond, how="full_outer")
-
-    def cmp_col(c):
-        dt = new.schema[c].dataType
-        a = F.col(f"_n_{c}")
-        b = F.col(f"_o_{c}")
-        if isinstance(dt, (ArrayType, MapType, StructType)):
-            a, b = F.to_json(a), F.to_json(b)
-        return ~a.eqNullSafe(b) if null_safe else (a != b)
-
-    differs = None
-    for c in cols:
-        d = cmp_col(c)
-        differs = d if differs is None else (differs | d)
-    if differs is None:
-        differs = F.lit(False)
-
+    j, cols, differs, out_keys = _outer(new, old, keys, exclude, null_safe)
     change = (
         F.when(F.col("_in_old").isNull(), F.lit("created"))
         .when(F.col("_in_new").isNull(), F.lit("deleted"))
         .when(differs, F.lit("updated"))
     )
-    out_keys = [
-        F.coalesce(F.col(f"_nk_{k}"), F.col(f"_ok_{k}")).alias(k) for k in keys
-    ]
     out_cols = [
         F.when(F.col("_in_new").isNotNull(), F.col(f"_n_{c}"))
         .otherwise(F.col(f"_o_{c}"))
@@ -182,31 +172,7 @@ def diff_changelog(
     Column contract: ``_change_type`` plus the shared key/value columns
     (old side aligned by the caller, as in ``CdcEngine.changelog_view``).
     """
-    keys = list(keys)
-    cols = _non_key_columns(new, keys, exclude)
-    n = new.select(
-        *[F.col(k).alias(f"_nk_{k}") for k in keys],
-        *[F.col(c).alias(f"_n_{c}") for c in cols],
-        F.lit(True).alias("_in_new"),
-    )
-    o = old.select(
-        *[F.col(k).alias(f"_ok_{k}") for k in keys],
-        *[F.col(c).alias(f"_o_{c}") for c in cols],
-        F.lit(True).alias("_in_old"),
-    )
-    cond = [n[f"_nk_{k}"] == o[f"_ok_{k}"] for k in keys]
-    j = n.join(o, on=cond, how="full_outer")
-
-    def cmp_col(c):
-        dt = new.schema[c].dataType
-        a, b = F.col(f"_n_{c}"), F.col(f"_o_{c}")
-        if isinstance(dt, (ArrayType, MapType, StructType)):
-            a, b = F.to_json(a), F.to_json(b)
-        return ~a.eqNullSafe(b) if null_safe else (a != b)
-
-    differs = F.lit(False)
-    for c in cols:
-        differs = differs | cmp_col(c)
+    j, cols, differs, out_keys = _outer(new, old, keys, exclude, null_safe)
 
     def image(kind: str, side: str):
         return F.struct(
@@ -224,9 +190,6 @@ def diff_changelog(
             F.array(image("update_before", "o"), image("update_after", "n")),
         )
     )
-    out_keys = [
-        F.coalesce(F.col(f"_nk_{k}"), F.col(f"_ok_{k}")).alias(k) for k in keys
-    ]
     ex = j.select(*out_keys, F.explode(rows).alias("_img"))
     return ex.select(
         F.col("_img._change_type").alias("_change_type"),

@@ -38,7 +38,7 @@ class MergeStats:
     watermark: str | None = None  # max warc_ts seen in the batch (ISO)
     bucket_rows: dict = field(default_factory=dict)  # per-bucket lineage
     write_secs: float = 0.0   # Spark write job (parallel phase)
-    commit_secs: float = 0.0  # driver-side promote+manifest (serial phase)
+    commit_secs: float = 0.0  # driver-side promote+segments+manifest+CAS (serial phase)
     #: "cow" (classified rewrite; insert/update split is exact) or "mor"
     #: (delta append; insert-vs-update is unknowable without reading the
     #: table, so upserts are reported under n_upserts and the split is 0)

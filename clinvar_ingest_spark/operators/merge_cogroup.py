@@ -345,10 +345,7 @@ def _touched(
     reach the commit, which refuses them."""
     if assume_all_buckets:
         return list(range(m.n_buckets))
-    rows = batch.select(bucket_expr("url", m.n_buckets).alias("_b")).distinct()
-    return table.rewrite_closure(
-        [r["_b"] for r in rows.collect() if r["_b"] is not None]
-    )
+    return table.rewrite_closure(table.touched_buckets(batch, "url"))
 
 
 def _observed(batch_obs: Observation, merge_obs: Observation) -> tuple[int, str | None, dict]:

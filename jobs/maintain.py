@@ -94,7 +94,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         if args.expire_keep is not None:
             pol.expire_keep_last = args.expire_keep
-        out["auto"] = auto_maintain(spark, eng.table, pol, engine=eng)
+        out["auto"] = auto_maintain(spark, eng.table, pol)
         # consumed by the policy: each action runs once per invocation
         args.purge_tombstones_before = None
         args.expire_keep = None

@@ -236,3 +236,35 @@ def test_rewrite_small_files_binpacks(spark, tmp_path):
     assert eng.state_hash(include_tombstones=True) == ht
     # idempotent: nothing fragmented now
     assert rewrite_small_files(spark, t) == sid
+
+
+def test_touched_buckets_skips_null_keys(spark, table):
+    """A NULL key has no bucket: touched_buckets returns exactly the
+    non-NULL keys' buckets instead of failing to sort None among ints."""
+    urls = [None, "u1", "u2", "u3", "u4", "u5"]
+    keys = spark.createDataFrame([(u,) for u in urls], "url string")
+    buckets = keys.select(bucket_expr("url", 4).alias("b")).collect()
+    want = sorted({r["b"] for r in buckets if r["b"] is not None})
+    assert len(want) > 1
+    assert table.touched_buckets(keys) == want
+
+
+def test_commit_secs_covers_manifest_commit(spark, table, monkeypatch):
+    """``commit_secs`` is the serial section after the Spark write:
+    promote, segment and manifest writes and the head CAS."""
+    import time
+
+    real = LakeletTable._commit_manifest
+
+    def slow(self, *a, **kw):
+        time.sleep(0.3)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(LakeletTable, "_commit_manifest", slow)
+    df = _pages_df(spark, [("u1", TS, b"x", "x", "en", 0)]).withColumn(
+        "_bucket", bucket_expr("url", 4)
+    )
+    b = df.select("_bucket").collect()[0]["_bucket"]
+    stats: dict = {}
+    table.commit_rewrite(spark, df, [b], "b1", stats_out=stats)
+    assert stats["commit_secs"] >= 0.3

@@ -323,7 +323,7 @@ def test_auto_maintain_cow_binpack_and_expire(spark, tmp_path):
         expire_older_than_secs=None,
         in_flight_grace_secs=0.0,
     )
-    did = auto_maintain(spark, eng.table, pol, engine=eng)
+    did = auto_maintain(spark, eng.table, pol)
     assert "binpack" in did and "expire" in did
     assert did["expire"]["expired"] >= 1
     m = eng.table.manifest()
@@ -335,7 +335,7 @@ def test_auto_maintain_cow_binpack_and_expire(spark, tmp_path):
     assert len(eng.table.history()) < n_snaps_before
 
     # a maintained table needs nothing: the pass reports empty
-    assert auto_maintain(spark, eng.table, pol, engine=eng) == {}
+    assert auto_maintain(spark, eng.table, pol) == {}
 
 
 def test_auto_maintain_folds_mor_deltas_first(spark, tmp_path):
@@ -348,28 +348,31 @@ def test_auto_maintain_folds_mor_deltas_first(spark, tmp_path):
     assert eng.table.delta_buckets()
     h = eng.state_hash(include_tombstones=True)
     did = auto_maintain(
-        spark,
-        eng.table,
-        MaintenancePolicy(expire_keep_last=None),
-        engine=eng,
+        spark, eng.table, MaintenancePolicy(expire_keep_last=None)
     )
     assert "compact" in did
     assert eng.table.delta_buckets() == []
     assert eng.state_hash(include_tombstones=True) == h
 
 
-def test_auto_maintain_without_engine_skips_compact(spark, tmp_path):
+def test_auto_maintain_folds_deltas_of_a_loaded_table(spark, tmp_path):
+    """Folding needs only the table: a table loaded from its root, with
+    no engine in sight (the jobs/maintain.py shape), gets its MOR deltas
+    compacted and keeps its tombstone-inclusive state."""
     from clinvar_ingest_spark.lakelet.maintenance import (
         MaintenancePolicy,
         auto_maintain,
     )
+    from clinvar_ingest_spark.lakelet.table import LakeletTable
 
     eng = _replayed_engine(spark, tmp_path, write_mode="mor")
-    did = auto_maintain(
-        spark, eng.table, MaintenancePolicy(expire_keep_last=None)
-    )
-    assert "compact" not in did
-    assert eng.table.delta_buckets()  # untouched without the engine
+    h = eng.state_hash(include_tombstones=True)
+    t = LakeletTable.load(eng.table.root)
+    assert t.delta_buckets()
+    did = auto_maintain(spark, t, MaintenancePolicy(expire_keep_last=None))
+    assert "compact" in did
+    assert t.delta_buckets() == []
+    assert eng.state_hash(include_tombstones=True) == h
 
 
 def test_maintain_cli_auto_with_expire_keep_expires_once(

@@ -190,6 +190,33 @@ def test_mor_and_compact_across_grow(spark, changelog_path, tmp_path):
     assert compacted_buckets, "compaction wrote no new-spec files"
 
 
+def test_delta_cover_maps_legacy_deltas_to_current_buckets(
+    spark, changelog_path, tmp_path
+):
+    """After a 16→32 grow, a pre-grow delta at bucket b covers current
+    buckets b and b+16; a post-grow delta covers only its own bucket."""
+    cl = spark.read.parquet(changelog_path)
+    root = str(tmp_path / "t")
+    eng = CdcEngine(spark, root, n_buckets=16, write_mode="mor")
+    eng.replay(cl.filter("seq < 1000"), batch_size=1000)
+    eng.table.grow_buckets(32)
+    CdcEngine(spark, root, write_mode="mor").replay(
+        cl.filter("seq < 2000"), batch_size=1000
+    )
+    m = eng.table.manifest()
+    deltas = [f for f in m.files if f.kind == "delta"]
+    old = [f for f in deltas if f.spec_n == 16]
+    new = [f for f in deltas if f.spec_n == 32]
+    assert old and new
+    for f in old:
+        assert m.delta_cover([f]) == {f.bucket, f.bucket + 16}
+    for f in new:
+        assert m.delta_cover([f]) == {f.bucket}
+    assert m.delta_cover(m.files) == set().union(
+        *(m.delta_cover([f]) for f in deltas)
+    )
+
+
 def test_purge_tombstones_after_grow(spark, changelog_path, tmp_path):
     cl = spark.read.parquet(changelog_path)
     root = str(tmp_path / "t")
