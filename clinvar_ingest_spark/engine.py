@@ -29,7 +29,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clinvar_ingest_spark.lakelet import maintenance
+from clinvar_ingest_spark.lakelet import maintenance, manifest
 from clinvar_ingest_spark.lakelet.table import LakeletTable, PAGES_COLUMNS
 from clinvar_ingest_spark.operators import diff as diff_ops
 from clinvar_ingest_spark.operators.merge import MergeStats
@@ -585,43 +585,9 @@ class CdcEngine:
         pruning — for an incremental hop this is |touched|/n_buckets of
         the table). Returns ``None`` (= full scan) across a rebucket
         boundary, where bucket ids are not comparable."""
-        new_m = self.table.manifest(new_snapshot)
-        old_m = self.table.manifest(old_snapshot)
-        if old_m.n_buckets != new_m.n_buckets:
-            return None
-
-        def by_bucket(files) -> dict[int, set]:
-            d: dict[int, set] = {}
-            for f in files:
-                d.setdefault(f.bucket, set()).add(f.path)
-            return d
-
-        if old_m.segments is not None and new_m.segments is not None:
-            # segmented manifests: a segment ref present in BOTH
-            # snapshots contributes identical entries to both sides and
-            # cannot create a difference (each file entry lives in
-            # exactly one segment per manifest), so only the segments
-            # EXCLUSIVE to one side need loading. For an incremental
-            # MOR hop that's the one appended delta segment — CDC
-            # planning cost ∝ the hop, not the table.
-            from clinvar_ingest_spark.lakelet.manifest import load_segment
-
-            seg_dir = self.table._seg_dir()
-            old_refs = {s.ref for s in old_m.segments}
-            new_refs = {s.ref for s in new_m.segments}
-
-            def exclusive(m, other_refs):
-                ents = []
-                for s in m.segments:
-                    if s.ref not in other_refs:
-                        ents.extend(load_segment(seg_dir, s.ref))
-                return ents
-
-            ob = by_bucket(exclusive(old_m, new_refs))
-            nb = by_bucket(exclusive(new_m, old_refs))
-        else:
-            ob, nb = by_bucket(old_m.files), by_bucket(new_m.files)
-        return sorted(b for b in set(ob) | set(nb) if ob.get(b) != nb.get(b))
+        return manifest.changed_buckets(
+            self.table.manifest(old_snapshot), self.table.manifest(new_snapshot)
+        )
 
     def diff_snapshots(
         self, old_snapshot: str | None, new_snapshot: str, null_safe: bool = True

@@ -370,7 +370,7 @@ def expire_snapshots(
     expired = []
     for p in glob.glob(os.path.join(table.manifest_dir, "*.json")):
         name = os.path.basename(p)
-        # skip _current/_expired markers and the head-chain CAS pointers
+        # skip the _expired marker and the head-chain CAS pointers
         if name.startswith("_") or name.startswith("head-"):
             continue
         sid = name[:-5]
@@ -432,8 +432,7 @@ def expire_snapshots(
         if name.startswith("_") or name.startswith("head-"):
             continue
         man = Manifest.from_json(read_json(p), seg_dir=table._seg_dir())
-        if man.segments is not None:
-            live_segs.update(s.ref for s in man.segments)
+        live_segs.update(s.ref for s in man.segments)
         live_files.update(f.path for f in man.files)
 
     deleted = 0
@@ -486,7 +485,7 @@ def clone_table(
     manifest references the source snapshot's data files in place
     (absolute paths; reads resolve them because ``os.path.join(root,
     abs)`` is ``abs``). O(metadata) regardless of table size: cloning
-    a 100 TB table writes one manifest.
+    a 100 TB table writes one manifest and its file-list segments.
 
     Divergence is copy-on-write: the first commit on the clone rewrites
     only its touched buckets into the clone's own ``data/`` (relative
@@ -517,7 +516,7 @@ def clone_table(
     )
     m = src.manifest(src_sid)
     dest = LakeletTable(dest_root)
-    if os.path.exists(dest._current_path()):
+    if dest._latest_head() is not None:
         raise FileExistsError(f"lakelet table already exists at {dest_root}")
     os.makedirs(dest.manifest_dir, exist_ok=True)
     os.makedirs(dest.data_dir, exist_ok=True)
@@ -544,35 +543,35 @@ def clone_table(
             new_files.append(dataclasses.replace(f, path=src_path))
 
     batch_id = f"clone-{src_sid}"
-    sid = snapshot_id_for(None, batch_id, m.schema_version)
     # lineage-bound summary keys point at SOURCE snapshot ids — they
-    # must not survive into a table whose history starts here
-    drop_keys = {"commit_seq", "committed_at"}
+    # must not survive into a table whose history starts here (the
+    # commit stamps its own commit_seq and committed_at)
     summary = {
         k: v
         for k, v in m.summary.items()
-        if k not in drop_keys and not k.startswith("indexed_")
+        if k not in ("commit_seq", "committed_at")
+        and not k.startswith("indexed_")
     }
-    summary["commit_seq"] = 0
     summary["cloned_from"] = os.path.abspath(src.root)
     summary["source_snapshot"] = src_sid
     summary["clone_mode"] = "deep" if deep else "shallow"
-    nm = Manifest(
-        snapshot_id=sid,
-        parent_id=None,
-        batch_id=batch_id,
-        schema_version=m.schema_version,
-        n_buckets=m.n_buckets,
-        schemas=m.schemas,
-        files=new_files,  # inline (v1) manifest; segments on next commit
-        summary=summary,
+    segments, width = dest._segment_all(new_files, m.n_buckets)
+    # a concurrent clone to the same root computes the same genesis id:
+    # its losing link is a benign same-id slot
+    dest._commit_manifest(
+        Manifest(
+            snapshot_id=snapshot_id_for(None, batch_id, m.schema_version),
+            parent_id=None,
+            batch_id=batch_id,
+            schema_version=m.schema_version,
+            n_buckets=m.n_buckets,
+            schemas=m.schemas,
+            summary=summary,
+            segments=segments,
+            segment_width=width,
+        ),
+        None,
     )
-    dest._write_manifest(nm)
-    try:
-        dest._link_head(0, sid)
-    except FileExistsError:
-        pass  # concurrent clone to the same root: identical genesis
-    dest._set_current(sid)
     return dest
 
 

@@ -5,9 +5,11 @@ Reference analogues: the TDR dataset's snapshot cut by ``release_date``
 schema/src/main/jade-assets/clinvar_release.asset.json) and the
 date-partitioned physical layout every table declares (reference:
 schema/src/main/jade-tables/gene.table.json:33-36). Here a snapshot is a
-JSON manifest pinning {schema version, file list with per-file stats,
-parent pointer, batch id}; the *current* table state is a one-line
-pointer file swapped by atomic rename.
+JSON manifest pinning {schema version, file-list segments with per-file
+stats, parent pointer, batch id}; the *current* table state is the
+highest slot of a head chain of immutable pointer files, each linked
+create-if-absent by :func:`advance_head` — the one snapshot-pointer
+protocol every table, branch, clone and release commit goes through.
 
 Exactly-once (SURVEY.md §7 hard part (a)): ``snapshot_id`` is a
 deterministic hash of (parent_id, batch_id, schema_version) — the same
@@ -19,6 +21,7 @@ process-and-reingest-release.yaml:37-51).
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -241,15 +244,12 @@ def default_segment_width(n_buckets: int) -> int:
 
 
 class Manifest:
-    """One snapshot's metadata. ``files`` is LAZY when the manifest is
-    segmented (format v2): accessing it hydrates every segment, which
-    full scans and GC need anyway — but the planning paths (bucket-
-    pruned reads, point lookups, CDC changed-bucket diffs, metadata
-    tables) go through :meth:`files_for_buckets` / the per-segment
-    stats and never pay O(table-files) for an O(batch) question.
-
-    Format v1 (inline ``files``) stays readable and writable: a table
-    created before segmentation upgrades on its next commit."""
+    """One snapshot's metadata. The file list is segmented: ``files``
+    is LAZY — accessing it hydrates every segment, which full scans and
+    GC need anyway — but the planning paths (bucket-pruned reads, point
+    lookups, CDC changed-bucket diffs, metadata tables) go through
+    :meth:`files_for_buckets` / the per-segment stats and never pay
+    O(table-files) for an O(batch) question."""
 
     def __init__(
         self,
@@ -259,7 +259,6 @@ class Manifest:
         schema_version: int,
         n_buckets: int,
         schemas: dict[int, list[ColumnSpec]] | None = None,
-        files: list[FileEntry] | None = None,
         summary: dict | None = None,
         segments: list[SegmentRef] | None = None,
         segment_width: int | None = None,
@@ -272,12 +271,10 @@ class Manifest:
         self.n_buckets = n_buckets
         self.schemas = schemas if schemas is not None else {}
         self.summary = summary if summary is not None else {}
-        self.segments = segments
-        self.segment_width = segment_width
+        self.segments = list(segments or [])
+        self.segment_width = segment_width or default_segment_width(n_buckets)
         self.seg_dir = seg_dir
-        self._files: list[FileEntry] | None = (
-            list(files) if files is not None else None
-        )
+        self._files: list[FileEntry] | None = None
 
     @property
     def columns(self) -> list[ColumnSpec]:
@@ -285,27 +282,18 @@ class Manifest:
 
     # ------------------------------------------------------------- file lists
 
+    def _load(self, s: SegmentRef) -> list[FileEntry]:
+        if self.seg_dir is None:
+            raise RuntimeError(
+                "manifest has no seg_dir — load it via LakeletTable.manifest()"
+            )
+        return load_segment(self.seg_dir, s.ref)
+
     @property
     def files(self) -> list[FileEntry]:
         if self._files is None:
-            if self.segments is None:
-                self._files = []
-            else:
-                if self.seg_dir is None:
-                    raise RuntimeError(
-                        "segmented manifest has no seg_dir — load it via "
-                        "LakeletTable.manifest()"
-                    )
-                ents: list[FileEntry] = []
-                for s in self.segments:
-                    ents.extend(load_segment(self.seg_dir, s.ref))
-                self._files = ents
+            self._files = [f for s in self.segments for f in self._load(s)]
         return self._files
-
-    @files.setter
-    def files(self, v: list[FileEntry]) -> None:
-        self._files = list(v)
-        self.segments = None  # refs no longer describe the list
 
     def entry_covers(self, f: FileEntry, buckets: set[int]) -> bool:
         """May file ``f`` hold rows of any CURRENT-spec bucket in
@@ -323,8 +311,6 @@ class Manifest:
         ONLY segments whose bucket range (or legacy-spec projection)
         intersects them — the point-lookup / pruned-read planning path
         (O(segments hit), not O(table files))."""
-        if self.segments is None or self._files is not None:
-            return [f for f in self.files if self.entry_covers(f, buckets)]
         out: list[FileEntry] = []
         for s in self.segments:
             hit = any(s.lo <= b <= s.hi for b in buckets) or any(
@@ -334,11 +320,7 @@ class Manifest:
                 for b in buckets
             )
             if hit:
-                out.extend(
-                    f
-                    for f in load_segment(self.seg_dir, s.ref)
-                    if self.entry_covers(f, buckets)
-                )
+                out.extend(f for f in self._load(s) if self.entry_covers(f, buckets))
         return out
 
     def delta_cover(self, files) -> set[int]:
@@ -356,13 +338,8 @@ class Manifest:
 
     def delta_bucket_set(self) -> set[int]:
         """Buckets with unresolved MOR delta files — from per-segment
-        stats alone (no hydration) when segmented."""
-        if self.segments is not None and self._files is None:
-            out: set[int] = set()
-            for s in self.segments:
-                out.update(s.delta_buckets)
-            return out
-        return {f.bucket for f in self.files if f.kind == "delta"}
+        stats alone (no hydration)."""
+        return {b for s in self.segments for b in s.delta_buckets}
 
     def live_rows(self) -> int | None:
         """LIVE row count from metadata alone (total rows minus
@@ -371,38 +348,23 @@ class Manifest:
         with an unknown tombstone count (legacy). The Iceberg
         snapshot-summary / count(*)-pushdown analogue — on a compacted
         snapshot a COUNT costs zero data reads at any table size."""
-        if self.segments is not None and self._files is None:
-            if any(s.n_delta_files for s in self.segments):
-                return None
-            tombs = 0
-            for s in self.segments:
-                if s.n_tombstones is None:
-                    return None
-                tombs += s.n_tombstones
-            return sum(s.rows for s in self.segments) - tombs
-        files = self.files
-        if any(f.kind == "delta" for f in files):
+        if any(s.n_delta_files for s in self.segments):
             return None
-        if any(f.n_tombstones is None for f in files):
+        if any(s.n_tombstones is None for s in self.segments):
             return None
-        return sum(f.rows - f.n_tombstones for f in files)
+        return sum(s.rows - s.n_tombstones for s in self.segments)
 
     def file_counts(self) -> tuple[int, int]:
-        """(n_files, n_delta_files) without hydration when segmented."""
-        if self.segments is not None and self._files is None:
-            return (
-                sum(s.n_files for s in self.segments),
-                sum(s.n_delta_files for s in self.segments),
-            )
+        """(n_files, n_delta_files) without hydration."""
         return (
-            len(self.files),
-            sum(1 for f in self.files if f.kind == "delta"),
+            sum(s.n_files for s in self.segments),
+            sum(s.n_delta_files for s in self.segments),
         )
 
     # ------------------------------------------------------------------- json
 
     def to_json(self) -> dict:
-        base = {
+        return {
             "snapshot_id": self.snapshot_id,
             "parent_id": self.parent_id,
             "batch_id": self.batch_id,
@@ -413,15 +375,10 @@ class Manifest:
                 for v, cols in self.schemas.items()
             },
             "summary": self.summary,
+            "format_version": 2,
+            "segment_width": self.segment_width,
+            "segments": [s.to_json() for s in self.segments],
         }
-        if self.segments is not None:
-            base["format_version"] = 2
-            base["segment_width"] = self.segment_width
-            base["segments"] = [s.to_json() for s in self.segments]
-        else:
-            base["format_version"] = 1
-            base["files"] = [f.to_json() for f in self.files]
-        return base
 
     @staticmethod
     def from_json(d: dict, seg_dir: str | None = None) -> "Manifest":
@@ -435,16 +392,37 @@ class Manifest:
                 int(v): [ColumnSpec.from_json(c) for c in cols]
                 for v, cols in d["schemas"].items()
             },
-            files=[FileEntry.from_json(f) for f in d["files"]]
-            if "segments" not in d
-            else None,
             summary=d.get("summary", {}),
-            segments=[SegmentRef.from_json(s) for s in d["segments"]]
-            if "segments" in d
-            else None,
-            segment_width=d.get("segment_width"),
+            segments=[SegmentRef.from_json(s) for s in d["segments"]],
+            segment_width=d["segment_width"],
             seg_dir=seg_dir,
         )
+
+
+def changed_buckets(old: Manifest, new: Manifest) -> list[int] | None:
+    """Buckets whose file sets differ between two snapshots, or None
+    across a bucket-count change, where bucket ids are not comparable.
+
+    A segment ref present in BOTH manifests contributes identical
+    entries to both sides and cannot create a difference (each file
+    entry lives in exactly one segment per manifest), so only the
+    segments EXCLUSIVE to one side are loaded. For an incremental MOR
+    hop that is the one appended delta segment — CDC planning cost ∝
+    the hop, not the table."""
+    if old.n_buckets != new.n_buckets:
+        return None
+
+    def exclusive(m: Manifest, other: Manifest) -> dict[int, set[str]]:
+        refs = {s.ref for s in other.segments}
+        by_bucket: dict[int, set[str]] = {}
+        for s in m.segments:
+            if s.ref not in refs:
+                for f in m._load(s):
+                    by_bucket.setdefault(f.bucket, set()).add(f.path)
+        return by_bucket
+
+    ob, nb = exclusive(old, new), exclusive(new, old)
+    return sorted(b for b in set(ob) | set(nb) if ob.get(b) != nb.get(b))
 
 
 def snapshot_id_for(parent_id: str | None, batch_id: str, schema_version: int) -> str:
@@ -453,13 +431,18 @@ def snapshot_id_for(parent_id: str | None, batch_id: str, schema_version: int) -
     return hashlib.sha256(payload.encode("utf-8")).hexdigest()[:20]
 
 
-def link_pointer(directory: str, name: str, payload: dict) -> None:
-    """Atomically create an immutable pointer file via os.link — the
-    filesystem CAS both the table head chain and the release head
-    chain commit through. Raises FileExistsError if another writer
-    already took the slot (the loser's signal to re-plan)."""
-    import tempfile
+class CommitConflictError(RuntimeError):
+    """Another writer committed first (optimistic concurrency). The
+    caller must re-read the table state, re-plan its merge against the
+    new current snapshot, and retry — the engine's ``apply_batch`` does
+    exactly that."""
 
+
+def link_pointer(directory: str, name: str, payload: dict) -> None:
+    """Atomically create an immutable JSON file via os.link — create-
+    if-absent, the filesystem CAS under :func:`advance_head`, content-
+    addressed segments and tags. Raises FileExistsError if the name is
+    already taken."""
     os.makedirs(directory, exist_ok=True)
     fd, tmp = tempfile.mkstemp(dir=directory, suffix=".tmp")
     try:
@@ -470,6 +453,62 @@ def link_pointer(directory: str, name: str, payload: dict) -> None:
         os.link(tmp, os.path.join(directory, name))
     finally:
         os.unlink(tmp)
+
+
+def head_path(head_dir: str, seq: int) -> str:
+    return os.path.join(head_dir, f"head-{seq:012d}.json")
+
+
+def advance_head(
+    head_dir: str,
+    seq: int,
+    record_id: str,
+    record_dir: str,
+    record: dict | None,
+    key: str = "snapshot_id",
+) -> bool:
+    """THE snapshot-pointer advance: every table, branch, clone and
+    release commit moves its chain through here, so the protocol exists
+    once.
+
+    1. Write the content-addressed record ``record_dir/{record_id}.json``
+       create-if-absent: the first writer of an id wins the file, and a
+       same-id racer never clobbers it. ``record=None`` when the record
+       is already committed (a branch seed names a main snapshot).
+    2. Link the head slot ``head-{seq:012d}.json`` ({key: record_id,
+       "commit_seq": seq}) — os.link's create-if-absent is the CAS.
+    3. A slot already naming ``record_id`` is success (two writers of
+       one idempotent commit). Any other occupant means this writer
+       lost: the record it wrote is removed and CommitConflictError
+       raised, for the caller to re-plan against the new head.
+
+    Returns True iff this call created the record. The chain's highest
+    slot is its current pointer (:func:`latest_pointer`); there is no
+    other pointer file."""
+    wrote = False
+    if record is not None:
+        try:
+            link_pointer(record_dir, f"{record_id}.json", record)
+            wrote = True
+        except FileExistsError:
+            pass
+    slot = head_path(head_dir, seq)
+    try:
+        link_pointer(
+            head_dir, os.path.basename(slot), {key: record_id, "commit_seq": seq}
+        )
+    except FileExistsError:
+        winner = read_json(slot)[key]
+        if winner == record_id:
+            return wrote
+        if wrote:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(os.path.join(record_dir, f"{record_id}.json"))
+        raise CommitConflictError(
+            f"head seq {seq} of {head_dir} was taken by {winner} "
+            f"(ours: {record_id})"
+        )
+    return wrote
 
 
 def _extreme_pointer(

@@ -12,15 +12,16 @@ snapshot id of every member table at one named version:
     root/
       <table>/...                 member lakelet tables
       _releases/<release_id>.json release manifest {tables: {name: sid}}
-      _releases/head-{seq}.json   CAS chain (same protocol as table commits)
-      _releases/_current.json     read cache
+      _releases/head-{seq}.json   head chain; the highest slot is the
+                                  current release (manifest.advance_head,
+                                  the protocol every table commit uses)
 
 Commit protocol (two-phase, crash-consistent):
 
 1. every member table commits independently with a DETERMINISTIC
    batch-derived snapshot id (idempotent re-point on re-run);
 2. only after ALL members are committed is the release manifest
-   written and head-linked (atomic os.link CAS).
+   written create-if-absent and head-linked (atomic os.link CAS).
 
 A crash mid-fan-out therefore leaves some tables at a newer version but
 the release pointer still names the last COMPLETE cut — release-scoped
@@ -36,8 +37,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from clinvar_ingest_spark.lakelet.manifest import atomic_write_json, read_json
-from clinvar_ingest_spark.lakelet.table import CommitConflictError, LakeletTable
+from clinvar_ingest_spark.lakelet.manifest import (
+    advance_head,
+    latest_pointer,
+    read_json,
+)
+from clinvar_ingest_spark.lakelet.table import LakeletTable
 
 
 def release_id_for(parent_id: str | None, batch_id: str, tables: dict[str, str]) -> str:
@@ -58,15 +63,7 @@ class ReleaseSet:
     def _release_path(self, rid: str) -> str:
         return os.path.join(self.release_dir, f"{rid}.json")
 
-    def _head_path(self, seq: int) -> str:
-        return os.path.join(self.release_dir, f"head-{seq:012d}.json")
-
-    def _current_path(self) -> str:
-        return os.path.join(self.release_dir, "_current.json")
-
     def _latest_head(self) -> tuple[int, str] | None:
-        from clinvar_ingest_spark.lakelet.manifest import latest_pointer
-
         h = latest_pointer(self.release_dir)
         return None if h is None else (h[0], h[1]["release_id"])
 
@@ -105,35 +102,15 @@ class ReleaseSet:
             if cur.get("batch_id") == batch_id and cur.get("tables") == tables:
                 return parent_id  # re-run of an already-released batch
         rid = release_id_for(parent_id, batch_id, tables)
-        atomic_write_json(
-            self._release_path(rid),
-            {
-                "release_id": rid,
-                "parent_id": parent_id,
-                "batch_id": batch_id,
-                "tables": dict(sorted(tables.items())),
-            },
+        record = {
+            "release_id": rid,
+            "parent_id": parent_id,
+            "batch_id": batch_id,
+            "tables": tables,
+        }
+        advance_head(
+            self.release_dir, seq, rid, self.release_dir, record, key="release_id"
         )
-        from clinvar_ingest_spark.lakelet.manifest import link_pointer
-
-        try:
-            link_pointer(
-                self.release_dir,
-                f"head-{seq:012d}.json",
-                {"release_id": rid, "commit_seq": seq},
-            )
-        except FileExistsError:
-            winner = read_json(self._head_path(seq))["release_id"]
-            if winner == rid:
-                return rid
-            try:
-                os.unlink(self._release_path(rid))
-            except FileNotFoundError:
-                pass
-            raise CommitConflictError(
-                f"release seq {seq} taken by {winner} (ours: {rid})"
-            )
-        atomic_write_json(self._current_path(), {"release_id": rid})
         return rid
 
     # ---------------------------------------------------------------- reads
@@ -197,7 +174,7 @@ def expire_releases(
             t = LakeletTable.load(os.path.join(rs.root, name))
         except FileNotFoundError:
             # half-created table (a concurrent `create` between its
-            # manifests/ dir and the _current.json write, or a create
+            # manifests/ dir and its genesis head link, or a create
             # that crashed in that window): skip — never let one
             # stray dir abort the whole retention sweep
             stats[name] = {"skipped": "table not fully created"}

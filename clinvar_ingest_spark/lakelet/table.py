@@ -4,7 +4,9 @@ Layout under ``root/``::
 
     data/b{bucket:05d}-{snapshot_id}-{n}.parquet   immutable data files
     manifests/{snapshot_id}.json                   immutable snapshots
-    manifests/_current.json                        atomic pointer
+    manifests/segs/seg-{sha16}.json                file-list segments
+    manifests/head-{seq:012d}.json                 head chain (highest = current)
+    manifests/branches/{name}/head-*.json          branch head chains
     ledger/{batch_id}.json                         offsets/lineage ledger
 
 Copy-on-write at **bucket granularity**: a MERGE rewrites only the data
@@ -31,6 +33,7 @@ as an optional ``props`` column *and* add real evolution.
 
 from __future__ import annotations
 
+import dataclasses
 import glob
 import json
 import os
@@ -42,13 +45,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from clinvar_ingest_spark.functions.xhash import xxhash64
-from clinvar_ingest_spark.lakelet.manifest import (
+# atomic_write_json is unused here but stays a module attribute:
+# tracing harnesses wrap the manifest I/O names on this module too
+from clinvar_ingest_spark.lakelet.manifest import (  # noqa: F401
     ColumnSpec,
+    CommitConflictError,
     FileEntry,
     Manifest,
     SegmentRef,
+    advance_head,
     atomic_write_json,
     default_segment_width,
+    head_path,
     latest_pointer,
     load_segment,
     read_json,
@@ -95,13 +103,6 @@ _SPARK_TYPES = {
 
 # legal widenings (Iceberg-compatible): int→long, float→double
 _WIDEN_OK = {("int", "long"), ("float", "double"), ("int", "double")}
-
-
-class CommitConflictError(RuntimeError):
-    """Another writer committed first (optimistic concurrency). The
-    caller must re-read the table state, re-plan its merge against the
-    new current snapshot, and retry — the engine's ``apply_batch`` does
-    exactly that."""
 
 
 def spark_type(c: ColumnSpec) -> T.DataType:
@@ -250,7 +251,7 @@ class LakeletTable:
         #: buckets natively (tokened ...-{i} names).
         self.max_records_per_file: int | None = None
         if branch is None:
-            # main chain: heads + current cache live next to the manifests
+            # main chain: the head pointers live next to the manifests
             self.head_dir = self.manifest_dir
             self.ledger_dir = os.path.join(root, "ledger")
         else:
@@ -273,113 +274,69 @@ class LakeletTable:
         stats_cols: Sequence[str] | None = None,
     ) -> "LakeletTable":
         t = cls(root)
-        if os.path.exists(t._current_path()):
+        if t._latest_head() is not None:
             return t  # idempotent create
         columns = list(columns or PAGES_COLUMNS)
-        sid = snapshot_id_for(None, "genesis", 1)
-        import time as _time
-
-        # genesis carries committed_at like every other commit —
-        # without it snapshot_as_of() would claim the window between
-        # table creation and the first data commit is "expired"
-        summary = {
-            "total_rows": 0,
-            "key_col": key_col,
-            "commit_seq": 0,
-            "committed_at": round(_time.time(), 6),
-        }
+        summary = {"total_rows": 0, "key_col": key_col}
         if stats_cols:
             # columns whose per-file [min,max] footer bounds land in the
             # manifest (Iceberg column-stats file skipping); change
             # later with set_stats_cols
             summary["stats_cols"] = list(stats_cols)
-        m = Manifest(
-            snapshot_id=sid,
-            parent_id=None,
-            batch_id="genesis",
-            schema_version=1,
-            n_buckets=n_buckets,
-            schemas={1: columns},
-            segments=[],
-            segment_width=default_segment_width(n_buckets),
-            summary=summary,
+        # the commit stamps genesis with commit_seq 0 and committed_at
+        # like every other commit — without the stamp snapshot_as_of()
+        # would claim the window between table creation and the first
+        # data commit is "expired". A concurrent create computes the
+        # same deterministic genesis id: its losing link is a benign
+        # same-id slot
+        t._commit_manifest(
+            Manifest(
+                snapshot_id=snapshot_id_for(None, "genesis", 1),
+                parent_id=None,
+                batch_id="genesis",
+                schema_version=1,
+                n_buckets=n_buckets,
+                schemas={1: columns},
+                summary=summary,
+            ),
+            None,
         )
-        t._write_manifest(m)
-        try:
-            t._link_head(0, sid)
-        except FileExistsError:
-            pass  # concurrent create: same deterministic genesis — benign
-        t._set_current(sid)
         return t
 
     @classmethod
     def load(cls, root: str) -> "LakeletTable":
         t = cls(root)
-        if not os.path.exists(t._current_path()):
+        if t._latest_head() is None:
             raise FileNotFoundError(f"no lakelet table at {root}")
         return t
 
     # -------------------------------------------------------------- manifests
 
-    def _current_path(self) -> str:
-        return os.path.join(self.head_dir, "_current.json")
-
     def _manifest_path(self, sid: str) -> str:
         return os.path.join(self.manifest_dir, f"{sid}.json")
-
-    def _write_manifest(self, m: Manifest) -> bool:
-        """Create-if-absent: manifests are content-addressed by
-        snapshot id, so the FIRST writer of a sid wins the file and a
-        same-batch racer must not clobber it (its file list would name
-        the racer's data files, which the racer then GCs on losing the
-        head CAS). Any existing manifest for a sid is complete —
-        manifests are only written after promotion finishes.
-        Returns True if THIS call created the file."""
-        from clinvar_ingest_spark.lakelet.manifest import link_pointer
-
-        try:
-            link_pointer(
-                self.manifest_dir, f"{m.snapshot_id}.json", m.to_json()
-            )
-            return True
-        except FileExistsError:
-            return False
-
-    def _set_current(self, sid: str) -> None:
-        atomic_write_json(self._current_path(), {"snapshot_id": sid})
 
     # ------------------------------------------------- optimistic concurrency
     #
     # The commit chain is a sequence of immutable head pointer files
-    # `head-{seq:012d}.json` ({"snapshot_id": sid}), each created with
-    # os.link — an atomic create-if-absent, the filesystem CAS. Writer
-    # protocol: plan against the current manifest (commit_seq = n),
-    # write the new manifest file, then try to link head-{n+1}; if the
-    # link already exists another writer won seq n+1 and this commit
-    # raises CommitConflictError (caller re-plans + retries). This is
+    # `head-{seq:012d}.json` ({"snapshot_id": sid}); the highest slot
+    # is the current snapshot and there is no other pointer. Writer
+    # protocol (manifest.advance_head): plan against the current
+    # manifest (commit_seq = n), write the new manifest create-if-
+    # absent, then link head-{n+1} with os.link — an atomic create-if-
+    # absent, the filesystem CAS. If another writer already took seq
+    # n+1 with a different snapshot this commit raises
+    # CommitConflictError (caller re-plans + retries). This is
     # Iceberg's optimistic-concurrency commit re-expressed for a plain
-    # POSIX filesystem; `_current.json` is demoted to a self-healing
-    # read cache (a crash between link and cache update loses nothing).
+    # POSIX filesystem; a crash between manifest write and link leaves
+    # an orphan manifest that is off the chain and never counts as
+    # committed.
 
     def _head_path(self, seq: int) -> str:
-        return os.path.join(self.head_dir, f"head-{seq:012d}.json")
-
-    def _link_head(self, seq: int, sid: str) -> None:
-        """Atomically create the head pointer for ``seq`` (the CAS).
-        Raises FileExistsError if another writer already took it."""
-        from clinvar_ingest_spark.lakelet.manifest import link_pointer
-
-        link_pointer(
-            self.head_dir,
-            f"head-{seq:012d}.json",
-            {"snapshot_id": sid, "commit_seq": seq},
-        )
+        return head_path(self.head_dir, seq)
 
     def _latest_head(self) -> tuple[int, str] | None:
-        """(seq, sid) of the highest committed head, or None (legacy
-        table without a head chain)."""
-        from clinvar_ingest_spark.lakelet.manifest import latest_pointer
-
+        """(seq, sid) of the highest committed head, or None when the
+        chain does not exist (no table, or no such branch)."""
         h = latest_pointer(self.head_dir)
         return None if h is None else (h[0], h[1]["snapshot_id"])
 
@@ -411,16 +368,9 @@ class LakeletTable:
 
     def current_snapshot_id(self) -> str:
         h = self._latest_head()
-        if h is None:  # legacy layout: pointer file is authoritative
-            return read_json(self._current_path())["snapshot_id"]
-        seq, sid = h
-        try:
-            cached = read_json(self._current_path()).get("snapshot_id")
-        except FileNotFoundError:
-            cached = None
-        if cached != sid:  # crash between CAS link and cache update
-            self._set_current(sid)
-        return sid
+        if h is None:
+            raise FileNotFoundError(f"no head chain under {self.head_dir}")
+        return h[1]
 
     def manifest(self, snapshot_id: str | None = None) -> Manifest:
         sid = snapshot_id or self.current_snapshot_id()
@@ -451,10 +401,10 @@ class LakeletTable:
 
     # ------------------------------------------------------- branches & tags
     #
-    # A branch is a named head chain (head-*.json + _current cache) in
+    # A branch is a named head chain (head-*.json) in
     # manifests/branches/<name>/ over the SAME content-addressed
-    # manifest store and data directory — creating one is two tiny
-    # metadata files, and every commit path (COW rewrite, MOR delta,
+    # manifest store and data directory — creating one links one tiny
+    # seed pointer, and every commit path (COW rewrite, MOR delta,
     # schema evolution) works on a branch unchanged because commits
     # only ever touch the instance's head chain. This is Iceberg's
     # branch ref re-expressed for the POSIX manifest layout, and the
@@ -501,23 +451,14 @@ class LakeletTable:
             raise FileExistsError(
                 f"branch {name!r} exists at {existing[1]['snapshot_id']}"
             )
-        from clinvar_ingest_spark.lakelet.manifest import link_pointer
-
+        # the seed names a committed manifest, so no record is written;
+        # a concurrent create at the same snapshot is a benign same-id slot
         try:
-            link_pointer(
-                bdir,
-                f"head-{seq:012d}.json",
-                {"snapshot_id": src.snapshot_id, "commit_seq": seq},
-            )
-        except FileExistsError:
-            # concurrent create at the same snapshot: benign
-            now = latest_pointer(bdir)
-            if now is None or now[1]["snapshot_id"] != src.snapshot_id:
-                raise
-        atomic_write_json(
-            os.path.join(bdir, "_current.json"),
-            {"snapshot_id": src.snapshot_id},
-        )
+            advance_head(bdir, seq, src.snapshot_id, self.manifest_dir, None)
+        except CommitConflictError as e:
+            raise FileExistsError(
+                f"branch {name!r} was created concurrently at another snapshot"
+            ) from e
         return src.snapshot_id
 
     def fork_snapshot_id(self) -> str | None:
@@ -580,9 +521,6 @@ class LakeletTable:
             # this exact branch state is already the chain head —
             # idempotent re-publish after a success
             return m.snapshot_id
-        sid = snapshot_id_for(m.snapshot_id, batch_id, bm.schema_version)
-        if self._is_committed_child(sid, m):
-            return sid
         # fast-forward check: walk the branch's parent chain back to the
         # target head (bounded by the branch's commit count)
         anc = bm.snapshot_id
@@ -594,20 +532,7 @@ class LakeletTable:
                 f"{m.snapshot_id} — this chain moved since the fork; "
                 "re-branch from current and re-apply"
             )
-        nm = Manifest(
-            snapshot_id=sid,
-            parent_id=m.snapshot_id,
-            batch_id=batch_id,
-            schema_version=bm.schema_version,
-            n_buckets=bm.n_buckets,
-            schemas=bm.schemas,
-            **self._carry_file_kwargs(bm),
-            summary=dict(bm.summary),
-        )
-        # no cleanup_paths: the data files belong to the branch's
-        # committed snapshots — losing the CAS must never delete them
-        self._commit_manifest(nm, m)
-        return sid
+        return self._commit_child(m, batch_id, src=bm)
 
     def create_tag(self, name: str, snapshot_id: str | None = None) -> str:
         """Immutably name a snapshot (audit labels, release aliases).
@@ -1000,23 +925,11 @@ class LakeletTable:
             w = w.option("maxRecordsPerFile", int(self.max_records_per_file))
         return w
 
-    def _carry_file_kwargs(self, m: Manifest) -> dict:
-        """Manifest-constructor kwargs that carry ``m``'s file list into
-        a metadata-only child commit without hydrating it: segment refs
-        verbatim when segmented, the inline list otherwise (legacy)."""
-        if m.segments is not None:
-            return dict(
-                segments=list(m.segments),
-                segment_width=m.segment_width,
-                seg_dir=self._seg_dir(),
-            )
-        return dict(files=m.files)
-
     def _segment_all(
         self, entries: Sequence[FileEntry], n_buckets: int
     ) -> tuple[list[SegmentRef], int]:
-        """Segment a full file list from scratch (genesis, the one-time
-        v1→v2 upgrade commit, rebucket)."""
+        """Segment a full file list from scratch (clone, rebucket,
+        grow_buckets)."""
         width = default_segment_width(n_buckets)
         by_slot: dict[int, list[FileEntry]] = {}
         for fe in entries:
@@ -1059,11 +972,7 @@ class LakeletTable:
         zero parent loads, metadata cost ∝ batch.
         """
         seg_dir = self._seg_dir()
-        if m.segments is None:
-            base_segs, width = self._segment_all(m.files, m.n_buckets)
-        else:
-            base_segs = m.segments
-            width = m.segment_width or default_segment_width(m.n_buckets)
+        base_segs, width = m.segments, m.segment_width
 
         if mode == "delta":
             sr = write_segment(seg_dir, new_entries)
@@ -1190,25 +1099,18 @@ class LakeletTable:
     def _commit_manifest(
         self,
         nm: Manifest,
-        parent: Manifest,
+        parent: Manifest | None,
         cleanup_paths: Sequence[str] | None = None,
     ) -> None:
-        """Commit ``nm`` whose parent is ``parent`` via the head-chain
-        CAS. On losing the race: if the winner committed the SAME
-        snapshot id (two writers applying one idempotent batch) the
-        commit counts as success; otherwise the orphan manifest and any
-        ``cleanup_paths`` data files are removed and
-        CommitConflictError is raised for the caller to re-plan."""
+        """Commit ``nm`` whose parent is ``parent`` (None: a new chain's
+        seq 0) via :func:`advance_head`. On losing the race: if the
+        winner committed the SAME snapshot id (two writers applying one
+        idempotent batch) the commit counts as success; otherwise the
+        orphan manifest and any ``cleanup_paths`` data files are removed
+        and CommitConflictError is raised for the caller to re-plan."""
         import time as _time
 
-        seq = int(parent.summary.get("commit_seq", 0)) + 1
-        if nm.segments is None:
-            # caller built an inline file list (a metadata commit over a
-            # legacy v1 parent, tests) — segment it here so every
-            # committed manifest is format v2
-            segs, width = self._segment_all(nm.files, nm.n_buckets)
-            nm.segment_width = width
-            nm.segments = segs
+        seq = 0 if parent is None else int(parent.summary.get("commit_seq", 0)) + 1
         nm.summary = dict(nm.summary)
         nm.summary["commit_seq"] = seq
         # wall-clock commit time: AS-OF-timestamp travel + metadata
@@ -1217,41 +1119,75 @@ class LakeletTable:
         # different times — whichever writer wins the create-if-absent
         # manifest file defines the recorded time)
         nm.summary["committed_at"] = round(_time.time(), 6)
-        wrote_manifest = self._write_manifest(nm)
         try:
-            self._link_head(seq, nm.snapshot_id)
-        except FileExistsError:
-            winner = read_json(self._head_path(seq))["snapshot_id"]
-            if winner == nm.snapshot_id:
-                # idempotent race on the SAME batch: the committed
-                # manifest is whichever writer created the (create-if-
-                # absent) manifest file; delete only this writer's
-                # staged files that the committed manifest does NOT
-                # reference — they're unreachable orphans
-                self._prune_unreferenced(nm.snapshot_id, cleanup_paths)
-                self._set_current(nm.snapshot_id)
-                return
-            try:
-                os.unlink(self._manifest_path(nm.snapshot_id))
-            except FileNotFoundError:
-                pass
+            wrote_manifest = advance_head(
+                self.head_dir, seq, nm.snapshot_id, self.manifest_dir,
+                nm.to_json(),
+            )
+        except CommitConflictError:
             for p in cleanup_paths or ():
                 try:
                     os.unlink(os.path.join(self.root, p))
                 except FileNotFoundError:
                     pass
-            raise CommitConflictError(
-                f"commit_seq {seq} was taken by snapshot {winner} "
-                f"(ours: {nm.snapshot_id}, batch {nm.batch_id})"
-            )
-        # head CAS won — but if a same-batch racer won the (create-if-
+            raise
+        # committed — but if a same-batch racer won the (create-if-
         # absent) MANIFEST file with its own file list, this writer's
-        # unreferenced staged files are orphans: prune them on the
-        # success path too (skipped in the common case where we wrote
-        # the manifest ourselves — everything staged is referenced)
+        # staged files that list does not reference are unreachable
+        # orphans: prune them (skipped in the common case where we
+        # wrote the manifest ourselves — everything staged is referenced)
         if not wrote_manifest:
             self._prune_unreferenced(nm.snapshot_id, cleanup_paths)
-        self._set_current(nm.snapshot_id)
+
+    def _commit_child(
+        self,
+        parent: Manifest,
+        batch_id: str,
+        src: Manifest | None = None,
+        schemas: dict[int, list[ColumnSpec]] | None = None,
+        summary: dict | None = None,
+        n_buckets: int | None = None,
+    ) -> str:
+        """THE metadata-only commit (publish, stats declaration, spec
+        growth, schema evolution): a child of ``parent`` holding
+        ``src``'s files (default: the parent's), carried by segment ref
+        — the file list is never loaded, let alone rewritten. ``schemas``
+        replaces the schema history (the child's version is its newest),
+        ``summary`` the summary. ``n_buckets`` re-segments the file list
+        under a grown bucket count, stamping each file with the spec it
+        was written under. Deterministic snapshot id: a committed child
+        returns at once. Returns the child's snapshot id."""
+        src = src or parent
+        ver = src.schema_version if schemas is None else max(schemas)
+        sid = snapshot_id_for(parent.snapshot_id, batch_id, ver)
+        if self._is_committed_child(sid, parent):
+            return sid
+        n_buckets = n_buckets or src.n_buckets
+        segments, width = src.segments, src.segment_width
+        if n_buckets != src.n_buckets:
+            segments, width = self._segment_all(
+                [
+                    dataclasses.replace(f, spec_n=f.spec_n or src.n_buckets)
+                    for f in src.files
+                ],
+                n_buckets,
+            )
+        nm = Manifest(
+            snapshot_id=sid,
+            parent_id=parent.snapshot_id,
+            batch_id=batch_id,
+            schema_version=ver,
+            n_buckets=n_buckets,
+            schemas=src.schemas if schemas is None else schemas,
+            summary=src.summary if summary is None else summary,
+            segments=segments,
+            segment_width=width,
+            seg_dir=self._seg_dir(),
+        )
+        # no cleanup_paths: a metadata commit's files belong to committed
+        # snapshots — losing the CAS must never delete them
+        self._commit_manifest(nm, parent)
+        return sid
 
     def _commit_files(
         self,
@@ -1460,24 +1396,11 @@ class LakeletTable:
         m = self.manifest()
         if list(m.summary.get("stats_cols") or []) == list(cols):
             return m.snapshot_id
-        batch_id = batch_id or f"stats_cols:{','.join(cols)}:{m.snapshot_id}"
-        sid = snapshot_id_for(m.snapshot_id, batch_id, m.schema_version)
-        if self._is_committed_child(sid, m):
-            return sid
-        summary = dict(m.summary)
-        summary["stats_cols"] = list(cols)
-        nm = Manifest(
-            snapshot_id=sid,
-            parent_id=m.snapshot_id,
-            batch_id=batch_id,
-            schema_version=m.schema_version,
-            n_buckets=m.n_buckets,
-            schemas=m.schemas,
-            **self._carry_file_kwargs(m),
-            summary=summary,
+        return self._commit_child(
+            m,
+            batch_id or f"stats_cols:{','.join(cols)}:{m.snapshot_id}",
+            summary={**m.summary, "stats_cols": list(cols)},
         )
-        self._commit_manifest(nm, m)
-        return sid
 
     # --------------------------------------------------- partition-spec grow
 
@@ -1514,30 +1437,10 @@ class LakeletTable:
                 f"maintenance.rebucket for arbitrary resizing "
                 f"(full rewrite)"
             )
-        batch_id = batch_id or f"grow_buckets:{new_n}:{m.snapshot_id}"
-        sid = snapshot_id_for(m.snapshot_id, batch_id, m.schema_version)
-        if self._is_committed_child(sid, m):
-            return sid
-        entries = []
-        for f in m.files:
-            fe = FileEntry.from_json(f.to_json())
-            fe.spec_n = f.spec_n or m.n_buckets
-            entries.append(fe)
-        segs, width = self._segment_all(entries, new_n)
-        nm = Manifest(
-            snapshot_id=sid,
-            parent_id=m.snapshot_id,
-            batch_id=batch_id,
-            schema_version=m.schema_version,
+        return self._commit_child(
+            m, batch_id or f"grow_buckets:{new_n}:{m.snapshot_id}",
             n_buckets=new_n,
-            schemas=m.schemas,
-            segments=segs,
-            segment_width=width,
-            seg_dir=self._seg_dir(),
-            summary=dict(m.summary),
         )
-        self._commit_manifest(nm, m)
-        return sid
 
     def rewrite_closure(self, buckets: Sequence[int]) -> list[int]:
         """Expand a touched-bucket set so a COW rewrite may replace
@@ -1549,9 +1452,7 @@ class LakeletTable:
         nested legacy levels otherwise."""
         m = self.manifest()
         bset = {int(b) for b in buckets}
-        if m.segments is not None and not any(
-            sp != m.n_buckets for s in m.segments for sp in s.specs
-        ):
+        if not any(sp != m.n_buckets for s in m.segments for sp in s.specs):
             return sorted(bset)
         while True:
             grew = False
@@ -1571,28 +1472,12 @@ class LakeletTable:
     def _evolve(self, batch_id: str, mutate) -> str:
         """Metadata-only commit with a bumped schema_version (no rewrite)."""
         m = self.manifest()
-        new_ver = m.schema_version + 1
         new_cols = mutate([c.clone() for c in m.columns])
-        sid = snapshot_id_for(m.snapshot_id, batch_id, new_ver)
-        if self._is_committed_child(sid, m):
-            return sid
-        schemas = dict(m.schemas)
-        schemas[new_ver] = new_cols
-        nm = Manifest(
-            snapshot_id=sid,
-            parent_id=m.snapshot_id,
-            batch_id=batch_id,
-            schema_version=new_ver,
-            n_buckets=m.n_buckets,
-            schemas=schemas,
-            # untouched files: segment refs carry verbatim (old files
-            # stay readable via name-mapping) — a schema commit never
-            # loads, let alone rewrites, the file-list metadata
-            **self._carry_file_kwargs(m),
-            summary=m.summary,
+        # old files stay readable via name-mapping, so their segment
+        # refs carry verbatim
+        return self._commit_child(
+            m, batch_id, schemas={**m.schemas, m.schema_version + 1: new_cols}
         )
-        self._commit_manifest(nm, m)
-        return sid
 
     def add_column(
         self,

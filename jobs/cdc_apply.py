@@ -119,82 +119,90 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     if args.changelog:
+        raw = None
         if args.format == "debezium":
-            from clinvar_ingest_spark.sources.debezium import parse_debezium
-
+            # read the input once: the reject count, the reject write,
+            # the emptiness check and the replay all scan this cache
             raw = (
                 spark.read.parquet(args.changelog)
                 if _is_parquet(args.changelog)
                 else spark.read.text(args.changelog)
+            ).persist()
+        try:
+            if args.format == "debezium":
+                from clinvar_ingest_spark.sources.debezium import parse_debezium
+
+                changelog, rejects = parse_debezium(raw, with_rejects=True)
+                n_rejects = rejects.count()
+                if n_rejects:
+                    # quarantine, never guess: raw value + reason land next
+                    # to the table for operator triage. The output dir is
+                    # keyed by the input path, written with overwrite — a
+                    # redelivered/re-run job rewrites ITS OWN slice instead
+                    # of appending duplicates (the same idempotence rule the
+                    # engine's ledger gives the apply side)
+                    import hashlib
+
+                    src_key = hashlib.sha256(
+                        args.changelog.encode()
+                    ).hexdigest()[:12]
+                    rejects.write.mode("overwrite").parquet(
+                        f"{args.table}_rejects/src={src_key}"
+                    )
+                print(json.dumps({"format": "debezium", "rejects": n_rejects}))
+                if n_rejects and changelog.isEmpty():
+                    # every record rejected: a wrong input encoding or a
+                    # broken producer, never a successful no-op apply
+                    print(
+                        f"cdc_apply: all {n_rejects} records of "
+                        f"{args.changelog} were rejected; nothing applied",
+                        file=sys.stderr,
+                    )
+                    return 1
+            else:
+                changelog = spark.read.parquet(args.changelog)
+            if args.bench_json:
+                import shutil
+                import time
+
+                warm_root = args.table + "_warmup"
+                warm = CdcEngine(spark, warm_root, n_buckets=args.buckets)
+                warm.replay(changelog.limit(2000), batch_size=2000)
+                shutil.rmtree(warm_root, ignore_errors=True)
+
+                t0 = time.time()
+                stats = engine.replay(changelog, batch_size=args.batch_size)
+                wall = time.time() - t0
+                events = sum(s.n_events for s in stats)
+                print(json.dumps({
+                    "bench": True,
+                    "events": events,
+                    "sec": round(wall, 3),
+                    "events_per_sec": round(events / wall, 1) if wall else 0.0,
+                    "commit_secs": round(sum(s.commit_secs for s in stats), 3),
+                    "state_hash": engine.state_hash(),
+                }))
+                return 0
+            stats = engine.replay(
+                changelog, batch_size=args.batch_size,
+                compact_every=args.compact_every,
             )
-            changelog, rejects = parse_debezium(raw, with_rejects=True)
-            n_rejects = rejects.count()
-            if n_rejects:
-                # quarantine, never guess: raw value + reason land next
-                # to the table for operator triage. The output dir is
-                # keyed by the input path, written with overwrite — a
-                # redelivered/re-run job rewrites ITS OWN slice instead
-                # of appending duplicates (the same idempotence rule the
-                # engine's ledger gives the apply side)
-                import hashlib
-
-                src_key = hashlib.sha256(
-                    args.changelog.encode()
-                ).hexdigest()[:12]
-                rejects.write.mode("overwrite").parquet(
-                    f"{args.table}_rejects/src={src_key}"
-                )
-            print(json.dumps({"format": "debezium", "rejects": n_rejects}))
-            if n_rejects and changelog.isEmpty():
-                # every record rejected: a wrong input encoding or a
-                # broken producer, never a successful no-op apply
-                print(
-                    f"cdc_apply: all {n_rejects} records of "
-                    f"{args.changelog} were rejected; nothing applied",
-                    file=sys.stderr,
-                )
-                return 1
-        else:
-            changelog = spark.read.parquet(args.changelog)
-        if args.bench_json:
-            import shutil
-            import time
-
-            warm_root = args.table + "_warmup"
-            warm = CdcEngine(spark, warm_root, n_buckets=args.buckets)
-            warm.replay(changelog.limit(2000), batch_size=2000)
-            shutil.rmtree(warm_root, ignore_errors=True)
-
-            t0 = time.time()
-            stats = engine.replay(changelog, batch_size=args.batch_size)
-            wall = time.time() - t0
-            events = sum(s.n_events for s in stats)
+            for s in stats:
+                print(json.dumps(asdict(s)))
+            published = None
+            if args.publish:
+                published = engine.publish()
             print(json.dumps({
-                "bench": True,
-                "events": events,
-                "sec": round(wall, 3),
-                "events_per_sec": round(events / wall, 1) if wall else 0.0,
-                "commit_secs": round(sum(s.commit_secs for s in stats), 3),
-                "state_hash": engine.state_hash(),
+                "table": args.table,
+                "branch": args.branch,
+                "snapshot": engine.table.current_snapshot_id(),
+                "published": published,
+                "rows": engine.pages().count(),
+                "batches_applied": len(stats),
             }))
-            return 0
-        stats = engine.replay(
-            changelog, batch_size=args.batch_size,
-            compact_every=args.compact_every,
-        )
-        for s in stats:
-            print(json.dumps(asdict(s)))
-        published = None
-        if args.publish:
-            published = engine.publish()
-        print(json.dumps({
-            "table": args.table,
-            "branch": args.branch,
-            "snapshot": engine.table.current_snapshot_id(),
-            "published": published,
-            "rows": engine.pages().count(),
-            "batches_applied": len(stats),
-        }))
+        finally:
+            if raw is not None:
+                raw.unpersist()
     else:
         from clinvar_ingest_spark.streaming.tail import (
             tail_changelog,

@@ -18,7 +18,7 @@ import pytest
 
 from clinvar_ingest_spark.engine import CdcEngine
 from clinvar_ingest_spark.lakelet.maintenance import expire_snapshots
-from clinvar_ingest_spark.lakelet.table import CommitConflictError, LakeletTable
+from clinvar_ingest_spark.lakelet.table import CommitConflictError
 from clinvar_ingest_spark.sources.changelog import (
     ChangelogSpec,
     changelog_arrow_schema,
@@ -216,7 +216,9 @@ def test_wap_mor_branch_publish(spark, changelog_df, tmp_path):
     assert main.table.delta_buckets() == []
 
 
-def test_publish_crash_between_manifest_and_head(spark, changelog_df, tmp_path):
+def test_publish_crash_between_manifest_and_head(
+    spark, changelog_df, tmp_path, monkeypatch
+):
     """A publisher that wrote its manifest but died before the head CAS
     leaves main unmoved; re-running publish self-heals to the same
     final state (orphan manifests never satisfy idempotency)."""
@@ -229,15 +231,19 @@ def test_publish_crash_between_manifest_and_head(spark, changelog_df, tmp_path):
     t = main.table
     m_before = t.current_snapshot_id()
     # simulate the crash window: run publish with the head link disabled
-    orig = LakeletTable._link_head
-    try:
-        def boom(self, seq, sid):
+    import clinvar_ingest_spark.lakelet.manifest as mf
+
+    orig = mf.link_pointer
+
+    def boom(directory, name, payload):
+        if name.startswith("head-"):
             raise RuntimeError("crash before CAS")
-        LakeletTable._link_head = boom
-        with pytest.raises(RuntimeError):
-            t.publish_branch("b")
-    finally:
-        LakeletTable._link_head = orig
+        return orig(directory, name, payload)
+
+    monkeypatch.setattr(mf, "link_pointer", boom)
+    with pytest.raises(RuntimeError):
+        t.publish_branch("b")
+    monkeypatch.undo()
     assert t.current_snapshot_id() == m_before  # main unmoved
 
     sid = t.publish_branch("b")  # self-heals

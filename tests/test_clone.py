@@ -148,3 +148,39 @@ def test_clone_pinned_snapshot(spark, src_engine, tmp_path):
     assert ceng.state_hash(include_tombstones=True) == eng.state_hash(
         snapshot_id=earlier, include_tombstones=True
     )
+
+
+@pytest.mark.parametrize("deep", [False, True])
+def test_clone_writes_segmented_manifest(spark, src_engine, tmp_path, deep):
+    """A clone's genesis manifest is segmented like every other
+    manifest (no inline file list), reads the source's state, and its
+    first commit carries the buckets it did not touch by segment ref."""
+    from clinvar_ingest_spark.lakelet.manifest import read_json
+
+    eng, _ = src_engine
+    dest_root = str(tmp_path / ("deep" if deep else "shallow"))
+    clone_table(eng.table, dest_root, deep=deep)
+    ceng = CdcEngine(spark, dest_root, n_buckets=8)
+    t = ceng.table
+    m0 = t.manifest()
+    raw = read_json(t._manifest_path(m0.snapshot_id))
+    assert raw["format_version"] == 2 and "files" not in raw
+    assert m0.segments and all(
+        os.path.exists(os.path.join(t._seg_dir(), f"seg-{s.ref}.json"))
+        for s in m0.segments
+    )
+    assert ceng.state_hash(include_tombstones=True) == eng.state_hash(
+        include_tombstones=True
+    )
+
+    # a 3-event batch touches at most 3 of the 8 one-bucket segments
+    extra = generate_changelog(ChangelogSpec(n_events=3, seed=11))
+    extra_path = str(tmp_path / "extra.parquet")
+    write_changelog_parquet(extra, extra_path)
+    ceng.replay(spark.read.parquet(extra_path), batch_size=3)
+    m1 = t.manifest()
+    assert m1.parent_id == m0.snapshot_id
+    touched = set(ceng.changed_buckets(m0.snapshot_id, m1.snapshot_id))
+    assert 0 < len(touched) <= 3
+    carried = {s.ref for s in m0.segments if s.lo not in touched}
+    assert carried and carried <= {s.ref for s in m1.segments}

@@ -73,8 +73,9 @@ def test_cas_losing_head_link_cleans_up(spark, tmp_path):
     m = t.manifest()
 
     # a competing writer takes the next head slot with a real manifest
-    from clinvar_ingest_spark.lakelet.manifest import Manifest
+    from clinvar_ingest_spark.lakelet.manifest import Manifest, advance_head
 
+    seq = m.summary["commit_seq"] + 1
     win = Manifest(
         snapshot_id="f" * 20,
         parent_id=m.snapshot_id,
@@ -82,11 +83,11 @@ def test_cas_losing_head_link_cleans_up(spark, tmp_path):
         schema_version=m.schema_version,
         n_buckets=m.n_buckets,
         schemas=m.schemas,
-        files=m.files,
-        summary={**m.summary, "commit_seq": m.summary["commit_seq"] + 1},
+        segments=m.segments,
+        segment_width=m.segment_width,
+        summary={**m.summary, "commit_seq": seq},
     )
-    t._write_manifest(win)
-    t._link_head(m.summary["commit_seq"] + 1, win.snapshot_id)
+    advance_head(t.head_dir, seq, win.snapshot_id, t.manifest_dir, win.to_json())
 
     rows = eng.read(m.snapshot_id).withColumn("_bucket", bucket_expr("url", 8))
     with pytest.raises(CommitConflictError):
@@ -211,10 +212,6 @@ def test_orphan_manifest_does_not_satisfy_idempotency(spark, tmp_path):
     # manifest + data files still on disk
     os.unlink(t._head_path(1))
     os.unlink(os.path.join(t.ledger_dir, f"{batch_id_for(0, 299)}.json"))
-    try:
-        os.unlink(t._current_path())  # stale cache also plausible
-    except FileNotFoundError:
-        pass
     assert t.current_snapshot_id() == genesis
     assert t.has_snapshot(sid) and not t._is_committed(sid)
 
@@ -230,8 +227,9 @@ def test_orphan_manifest_does_not_satisfy_idempotency(spark, tmp_path):
 
 
 def test_current_cache_self_heals(spark, tmp_path):
-    """_current.json is a cache: deleting or staling it never changes
-    what current_snapshot_id() answers (the head chain is authority)."""
+    """The head chain is the authority: current_snapshot_id() is the
+    highest head slot, and no pointer file beside it is read or
+    written."""
     import os
 
     a = _changelog_df(spark, tmp_path, "a", 300, 32, "hostaaaa")
@@ -239,14 +237,9 @@ def test_current_cache_self_heals(spark, tmp_path):
     eng.apply_batch(a, 0, 299)
     t = eng.table
     cur = t.current_snapshot_id()
-
-    os.unlink(t._current_path())
-    assert t.current_snapshot_id() == cur  # re-derived from heads
-    assert os.path.exists(t._current_path())  # and repaired
-
-    # stale cache (crash between link and cache write) also heals
-    t._set_current("deadbeef" * 2 + "dead")
-    assert t.current_snapshot_id() == cur
+    seq, head_sid = t._latest_head()
+    assert head_sid == cur and seq == t.manifest().summary["commit_seq"]
+    assert not os.path.exists(os.path.join(t.manifest_dir, "_current.json"))
 
 
 def test_manifest_create_if_absent_and_tokened_file_names(spark, tmp_path):
@@ -257,7 +250,7 @@ def test_manifest_create_if_absent_and_tokened_file_names(spark, tmp_path):
     import os
     import re
 
-    from clinvar_ingest_spark.lakelet.manifest import Manifest
+    from clinvar_ingest_spark.lakelet.manifest import Manifest, advance_head
 
     a = _changelog_df(spark, tmp_path, "a", 300, 41, "hostaaaa")
     eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=4)
@@ -267,14 +260,18 @@ def test_manifest_create_if_absent_and_tokened_file_names(spark, tmp_path):
     pat = re.compile(r"^data/b\d{5}-[0-9a-f]{20}-[0-9a-f]{8}-\d+\.parquet$")
     assert m.files and all(pat.match(f.path) for f in m.files)
 
-    # attempting to rewrite the committed manifest is a no-op
+    # a same-id racer re-committing the slot with another file list is
+    # a no-op: the committed manifest is never rewritten
     bogus = Manifest(
         snapshot_id=m.snapshot_id, parent_id=m.parent_id,
         batch_id="clobber", schema_version=m.schema_version,
-        n_buckets=m.n_buckets, schemas=m.schemas, files=[],
+        n_buckets=m.n_buckets, schemas=m.schemas, segments=[],
         summary=dict(m.summary),
     )
-    t._write_manifest(bogus)
+    seq = m.summary["commit_seq"]
+    assert not advance_head(
+        t.head_dir, seq, bogus.snapshot_id, t.manifest_dir, bogus.to_json()
+    )
     assert [f.path for f in t.manifest().files] == [f.path for f in m.files]
     # ...and every referenced file is still on disk
     for f in t.manifest().files:

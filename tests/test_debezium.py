@@ -310,6 +310,42 @@ def test_cdc_apply_reads_parquet_directory_of_envelopes(
     )
 
 
+def test_cdc_apply_reads_debezium_input_once(spark, tmp_path, monkeypatch, capsys):
+    """The Debezium input is read once and cached: the changelog handed
+    to the replay scans the cache (an InMemoryRelation), not the input
+    files a fourth time after the reject count, the reject write and
+    the emptiness check. The cache is dropped after the replay."""
+    from clinvar_ingest_spark.engine import CdcEngine
+
+    native = _native_changelog(spark, tmp_path, 300, 60, name="cl6")
+    env = to_debezium(native.select(*_COLS)).select("value")
+    src = tmp_path / "envelopes.jsonl"
+    src.write_text(
+        "\n".join([r.value for r in env.collect()] + ['{"payload": not json'])
+    )
+
+    plans = []
+    orig = CdcEngine.replay
+
+    def spy(self, changelog, *a, **kw):
+        plans.append(changelog._jdf.queryExecution().optimizedPlan().toString())
+        return orig(self, changelog, *a, **kw)
+
+    monkeypatch.setattr(CdcEngine, "replay", spy)
+    n_cached = len(spark.sparkContext._jsc.getPersistentRDDs())
+    table = str(tmp_path / "t")
+    rc, out = _cdc_apply(spark, monkeypatch, capsys, [
+        "--table", table, "--changelog", str(src), "--format", "debezium",
+    ])
+    assert rc == 0 and out[0] == {"format": "debezium", "rejects": 1}
+    assert len(plans) == 1 and "InMemoryRelation" in plans[0]
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == n_cached
+    monkeypatch.undo()
+    assert CdcEngine(spark, table, n_buckets=4).state_hash() == _native_state(
+        spark, tmp_path, native
+    )
+
+
 def test_cdc_apply_fails_when_every_record_is_rejected(
     spark, tmp_path, monkeypatch, capsys
 ):

@@ -33,6 +33,35 @@ def test_create_idempotent(tmp_table_root):
     assert t2.current_snapshot_id() == sid
 
 
+def test_load_trusts_the_head_chain(spark, tmp_table_root):
+    """``load`` and ``create`` decide existence from the head chain
+    alone: a table whose only pointer is its head chain (a create that
+    crashed right after linking head 0, or a removed ``_current.json``
+    pointer file) loads at its current snapshot, and re-creating it is
+    a no-op."""
+    import contextlib
+
+    t = LakeletTable.create(tmp_table_root, n_buckets=4)
+    genesis = t.current_snapshot_id()
+    pointer = os.path.join(t.manifest_dir, "_current.json")
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(pointer)
+    assert LakeletTable.load(tmp_table_root).current_snapshot_id() == genesis
+
+    df = _pages_df(spark, [("u1", TS, b"<p>a</p>", "a", "en", 0)]).withColumn(
+        "_bucket", bucket_expr("url", 4)
+    )
+    b = [r["_bucket"] for r in df.select("_bucket").distinct().collect()]
+    s1 = t.commit_rewrite(spark, df, b, batch_id="b1")
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(pointer)
+    assert LakeletTable.load(tmp_table_root).current_snapshot_id() == s1
+    assert LakeletTable.create(tmp_table_root, n_buckets=4).current_snapshot_id() == s1
+    assert not os.path.exists(pointer)
+    with pytest.raises(FileNotFoundError):
+        LakeletTable.load(os.path.join(tmp_table_root, "absent"))
+
+
 def test_commit_read_timetravel(spark, table):
     genesis = table.current_snapshot_id()
     df1 = _pages_df(
@@ -152,16 +181,6 @@ def test_commit_idempotent_by_snapshot_id(spark, table):
     m = table.manifest(s1)
     assert snapshot_id_for(m.parent_id, "b1", m.schema_version) == s1
     assert len(table.manifest(s1).files) == n_files
-
-
-def test_atomic_current_pointer(table):
-    p = table._current_path()
-    assert os.path.exists(p)
-    # pointer is valid JSON at all times (atomic replace)
-    import json
-
-    with open(p) as f:
-        assert "snapshot_id" in json.load(f)
 
 
 def test_max_records_per_file_splits_buckets(spark, tmp_path):

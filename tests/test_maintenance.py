@@ -140,9 +140,8 @@ def test_rebucket_crash_retry_reconverges(spark, tmp_path):
 
     sid = rebucket(spark, t, 8)
     seq = t.manifest(sid).summary["commit_seq"]
-    # simulate the crash: drop the head link (+ stale cache)
+    # simulate the crash: drop the head link
     os.unlink(t._head_path(seq))
-    os.unlink(t._current_path())
     assert t.current_snapshot_id() != sid
 
     sid2 = rebucket(spark, t, 8)

@@ -24,7 +24,6 @@ import clinvar_ingest_spark.lakelet.manifest as mf
 from clinvar_ingest_spark.engine import CdcEngine
 from clinvar_ingest_spark.lakelet.maintenance import expire_snapshots
 from clinvar_ingest_spark.lakelet.manifest import Manifest, read_json
-from clinvar_ingest_spark.lakelet.table import LakeletTable
 from clinvar_ingest_spark.sources.changelog import (
     ChangelogSpec,
     generate_changelog,
@@ -156,37 +155,6 @@ def test_changed_buckets_matches_bruteforce(spark, changelog_path, tmp_path):
         assert got == want, f"hop {old[:8]}->{new[:8]}"
 
 
-def test_legacy_v1_manifest_upgrades_on_next_commit(spark, changelog_path, tmp_path):
-    cl = spark.read.parquet(changelog_path)
-    root = str(tmp_path / "t")
-    eng = CdcEngine(spark, root, n_buckets=16)
-    eng.replay(cl.filter("seq < 1500"), batch_size=1500)
-    t = eng.table
-    h = eng.state_hash()
-    # rewrite the current manifest as format v1 (inline files) — a
-    # table written before segmentation
-    m = t.manifest()
-    sid = m.snapshot_id
-    raw = {
-        k: v
-        for k, v in m.to_json().items()
-        if k not in ("segments", "segment_width", "format_version")
-    }
-    raw["format_version"] = 1
-    raw["files"] = [f.to_json() for f in m.files]
-    mf.atomic_write_json(t._manifest_path(sid), raw)
-    t2 = LakeletTable.load(root)
-    m1 = t2.manifest()
-    assert m1.segments is None  # reads v1 fine
-    assert CdcEngine(spark, root, n_buckets=16).state_hash() == h
-    # next commit upgrades: segments appear, state unchanged
-    eng2 = CdcEngine(spark, root, n_buckets=16)
-    eng2.replay(cl, batch_size=1500)
-    m2 = t2.manifest()
-    assert m2.segments is not None
-    assert eng2.state_hash() == CdcEngine(spark, root, n_buckets=16).state_hash()
-
-
 def test_expire_sweeps_orphan_segments(spark, changelog_path, tmp_path):
     cl = spark.read.parquet(changelog_path)
     root = str(tmp_path / "t")
@@ -221,14 +189,16 @@ def test_manifest_json_stays_small(spark, changelog_path, tmp_path):
     the segment COUNT (≤ ~32 + deltas), not the file count."""
     cl = spark.read.parquet(changelog_path)
     eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=256)
-    eng.replay(cl, batch_size=500)
+    # one apply: the bound is per manifest, and a single 3000-event
+    # batch over 400 urls already spreads files over most buckets
+    eng.replay(cl, batch_size=3000)
     t = eng.table
     m = t.manifest()
     n_files, _ = m.file_counts()
     raw_bytes = os.path.getsize(t._manifest_path(m.snapshot_id))
     per_seg = raw_bytes / max(len(m.segments), 1)
-    # inline v1 would be ~200+ bytes per FILE; segmented stays bounded
-    # by segments (schema block dominates for small tables)
+    # an inline file list would be ~200+ bytes per FILE; segmented
+    # stays bounded by segments (schema block dominates for small tables)
     assert n_files > len(m.segments)
     assert per_seg < 4000
     body = read_json(t._manifest_path(m.snapshot_id))

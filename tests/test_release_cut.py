@@ -167,3 +167,75 @@ def test_release_aware_expiry_keeps_pinned_cuts(spark, tmp_path, changelog_df):
         rs.release(rids[0])
     gc_stats = out["tables"]["page"]
     assert isinstance(gc_stats["expired"], list)
+
+
+def _race_commit_release(monkeypatch, root, cuts):
+    """Run ``commit_release`` for each (batch_id, tables) cut in its own
+    thread, every thread reading the release head before any of them
+    links one — so all of them plan the same seq. Returns one
+    (release id | raised exception) per cut."""
+    import threading
+
+    barrier = threading.Barrier(len(cuts))
+    orig = ReleaseSet._latest_head
+
+    def planned_together(self):
+        h = orig(self)
+        barrier.wait(timeout=30)
+        return h
+
+    monkeypatch.setattr(ReleaseSet, "_latest_head", planned_together)
+    out = [None] * len(cuts)
+
+    def run(i):
+        try:
+            out[i] = ReleaseSet(root).commit_release(*cuts[i])
+        except Exception as e:  # the losing thread's conflict
+            out[i] = e
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(len(cuts))]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    monkeypatch.undo()
+    return out
+
+
+def _release_records(root):
+    import os
+
+    d = os.path.join(root, "_releases")
+    return sorted(n for n in os.listdir(d) if not n.startswith("head-"))
+
+
+def test_release_cas_race_one_winner(tmp_path, monkeypatch):
+    """Two different cuts racing for one release seq: exactly one wins;
+    the loser raises CommitConflictError and leaves no record behind."""
+    import os
+
+    from clinvar_ingest_spark.lakelet.release import release_id_for
+    from clinvar_ingest_spark.lakelet.table import CommitConflictError
+
+    root = str(tmp_path / "rel")
+    cuts = [("b1", {"page": "s" * 20}), ("b2", {"page": "t" * 20})]
+    out = _race_commit_release(monkeypatch, root, cuts)
+    won = [r for r in out if isinstance(r, str)]
+    lost = [i for i, r in enumerate(out) if isinstance(r, CommitConflictError)]
+    assert len(won) == 1 and len(lost) == 1
+    rs = ReleaseSet(root)
+    assert rs.current_release_id() == won[0] and rs.history() == won
+    loser_rid = release_id_for(None, *cuts[lost[0]])
+    assert not os.path.exists(os.path.join(root, "_releases", f"{loser_rid}.json"))
+    assert _release_records(root) == [f"{won[0]}.json"]
+
+
+def test_release_cas_race_same_cut(tmp_path, monkeypatch):
+    """The same cut committed twice at once: both calls return the one
+    deterministic release id, and one record exists."""
+    root = str(tmp_path / "rel")
+    cut = ("b1", {"page": "s" * 20, "host": "h" * 20})
+    out = _race_commit_release(monkeypatch, root, [cut, cut])
+    assert isinstance(out[0], str) and out == [out[0], out[0]]
+    assert ReleaseSet(root).history() == [out[0]]
+    assert _release_records(root) == [f"{out[0]}.json"]
