@@ -38,10 +38,7 @@ from clinvar_ingest_spark.lakelet.manifest import (
     read_json,
     snapshot_id_for,
 )
-from clinvar_ingest_spark.lakelet.table import (
-    LakeletTable,
-    bucket_expr,
-)
+from clinvar_ingest_spark.lakelet.table import LakeletTable
 
 
 def _rewrite_buckets(
@@ -55,27 +52,29 @@ def _rewrite_buckets(
     summary: dict | None = None,
 ) -> str:
     """The one plan under every rewrite pass: COW-rewrite ``buckets``
-    of the planned snapshot ``m`` from their resolved rows, one task per
-    bucket, pinned to ``m``. ``keep`` filters the rows; ``order(df)``
-    returns sort columns, computed on the read before the shuffle (a
-    Z-order bounds job scans the read, not a shuffled copy); the commit
-    asserts the ``summary`` keys. Idempotent by ``batch_id``; returns
-    the new snapshot id."""
+    of the planned snapshot ``m``, pinned to ``m``, from the table's
+    bucketed read (``LakeletTable._read_bucketed``): one shuffle into
+    one task per bucket, so partitionBy emits one file per bucket, with
+    any MOR deltas resolved inside it. ``keep`` filters the resolved
+    rows; ``order(df)`` returns sort columns, computed on the raw
+    (unresolved) read, so a Z-order bounds job scans the files without
+    a shuffle — bounds over that superset of the live rows still hold
+    them all. The commit asserts the ``summary`` keys. Idempotent by
+    ``batch_id``; returns the new snapshot id."""
     # partition-spec evolution: a touched legacy-spec file is rewritten
     # whole (identity pre-grow), so every pass doubles as lazy spec
     # migration
     touched = table.rewrite_closure(buckets)
-    rows = table.read(spark, buckets=touched)
+    sort_cols = None
+    if order is not None:
+        sort_cols = order(
+            table.read(spark, m.snapshot_id, buckets=touched, resolve=False)
+        )
+    rows = table._read_bucketed(
+        spark, m, touched, m.n_buckets, max(len(touched), 1)
+    )
     if keep is not None:
         rows = rows.filter(keep)
-    rows = rows.withColumn(
-        "_bucket", bucket_expr(m.summary.get("key_col", "url"), m.n_buckets)
-    )
-    sort_cols = order(rows) if order is not None else None
-    # the MOR resolution window (key-hashed) runs at the session's
-    # shuffle setting; this repartition gives the write one task per
-    # bucket, so partitionBy emits one file per bucket
-    rows = rows.repartition(max(len(touched), 1), "_bucket")
     if sort_cols is not None:
         rows = rows.sortWithinPartitions(F.col("_bucket"), *sort_cols)
     return table.commit_rewrite(
@@ -89,12 +88,15 @@ def compact(
     table: LakeletTable,
     buckets: list[int] | None = None,
 ) -> str | None:
-    """Fold merge-on-read delta files back into base files: read the
-    RESOLVED state of every delta-bearing bucket (optionally
-    restricted to ``buckets``) and COW-rewrite exactly those
-    buckets. Logical state is unchanged (state-hash invariant,
-    tests/test_mor.py); subsequent reads of the compacted buckets
-    plan with zero resolution overhead again.
+    """Fold merge-on-read delta files back into base files: COW-rewrite
+    every delta-bearing bucket (optionally restricted to ``buckets``)
+    from its RESOLVED state — the reference's ``dedupByDate`` fold
+    (ArchiveBranches.scala:140-156) as one bucket-partitioned stage:
+    the rows shuffle once on ``_bucket`` and the LWW resolve runs
+    inside that shuffle (:func:`_rewrite_buckets`). Logical state is
+    unchanged (state-hash invariant, tests/test_mor.py); subsequent
+    reads of the compacted buckets plan with zero resolution overhead
+    again.
 
     Idempotent (deterministic batch id per source snapshot) and
     OCC-safe (pinned to the snapshot it planned against — a
@@ -131,11 +133,8 @@ def rebucket(
     m = table.manifest()
     if new_n_buckets == m.n_buckets:
         return m.snapshot_id
-    rows = (
-        table.read(spark)
-        .withColumn("_bucket", bucket_expr(table.key_col, new_n_buckets))
-        .repartition(new_n_buckets, "_bucket")
-    )
+    # one shuffle into the new buckets; MOR deltas resolve inside it
+    rows = table._read_bucketed(spark, m, None, new_n_buckets, new_n_buckets)
     # the table's one data commit (staging, promotion, CAS) with the
     # file list re-segmented under the new bucket count
     return table._commit_files(

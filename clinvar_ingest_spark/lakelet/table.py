@@ -197,6 +197,50 @@ def bucket_expr(key_col: str, n_buckets: int):
     )
 
 
+#: The merge-on-read resolution order: a key's winning row version is
+#: its greatest ``(warc_ts, _seq)``, a NULL ``warc_ts`` ranking lowest —
+#: the order of the apply kernel's LWW and of ``operators.lww``.
+MOR_ORDER = ("warc_ts", "_seq")
+
+
+def _resolve_lww(df: DataFrame, key_col: str, within: Sequence[str] = ()) -> DataFrame:
+    """Collapse a base+delta row stack to the LWW winner per key by
+    :data:`MOR_ORDER`. The window is partitioned by ``within`` + key:
+    a read already hash-partitioned on ``within`` (``_bucket``, in
+    :meth:`LakeletTable._read_bucketed`) satisfies it with no Exchange
+    of its own, while a bare key partitioning costs one on the key.
+    Ties are impossible in engine use because ``_seq`` is the
+    changelog's globally-unique event sequence (redeliveries are
+    absorbed by the exactly-once ledger before a second delta could
+    exist)."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(*within, key_col).orderBy(
+        *[F.col(c).desc() for c in MOR_ORDER]
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _exact_buckets(
+    df: DataFrame, m: Manifest, files: Sequence[FileEntry], bset: set[int] | None
+) -> DataFrame:
+    """``df``, read from ``files``, cut to the CURRENT-spec buckets
+    ``bset``. Under partition-spec evolution a legacy-spec file spans
+    several current buckets, so a row-level hash filter keeps the
+    bucket-read contract exact (one codegen'd expression; a no-op for
+    closure-expanded rewrite reads, load-bearing for any caller that
+    asked for precise bucket slices). Identity when no subset was asked
+    for or every file is current-spec."""
+    if bset is None or all(f.spec_n in (None, m.n_buckets) for f in files):
+        return df
+    key_col = m.summary.get("key_col", "url")
+    return df.filter(bucket_expr(key_col, m.n_buckets).isin(*bset))
+
+
 def key_bucket(key: str, n_buckets: int) -> int:
     """Driver-side :func:`bucket_expr` for one string key: the same
     ``pmod(xxhash64(key), n_buckets)``, computed without a Spark job."""
@@ -726,13 +770,15 @@ class LakeletTable:
         Merge-on-read: if the selected buckets carry ``delta`` files
         (see :meth:`commit_delta`), the read LWW-resolves base + delta
         rows to one row per key (``resolve=False`` returns the raw
-        physical stack — compaction internals / tests). Resolution
-        costs one Exchange on the key over ONLY the delta-bearing
-        buckets' rows; a fully compacted snapshot plans exactly like a
-        pure-COW one. The ts-window prune is disabled for delta-bearing
-        buckets — skipping a file there could drop the LWW winner and
-        resurrect a superseded row version, which is worse than the
-        advisory extra-rows contract.
+        physical stack). This reader's resolution is a window on the
+        key, so it costs one key-hashed Exchange over ONLY the
+        delta-bearing buckets' rows; a fully compacted snapshot plans
+        exactly like a pure-COW one. Writers read through
+        :meth:`_read_bucketed` instead, which resolves inside the
+        bucket shuffle they need anyway. The ts-window prune is
+        disabled for delta-bearing buckets — skipping a file there
+        could drop the LWW winner and resurrect a superseded row
+        version, which is worse than the advisory extra-rows contract.
 
         Planning launches no Spark job: file pruning uses the manifest,
         and the scan's schema and file stats come from the driver
@@ -772,24 +818,49 @@ class LakeletTable:
         if covered:
             cov = self._read_entries(spark, m, covered)
             if resolve:
-                cov = self._resolve_lww(cov, m)
+                cov = _resolve_lww(cov, m.summary.get("key_col", "url"))
             parts.append(cov)
         if clean:
             parts.append(self._read_entries(spark, m, clean))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if bset is not None and any(
-            f.spec_n not in (None, m.n_buckets) for f in files
-        ):
-            # partition-spec evolution: a legacy-spec file spans several
-            # current buckets — keep the bucket-read contract EXACT with
-            # a row-level hash filter (one codegen'd expression; no-op
-            # for closure-expanded merge reads, load-bearing for any
-            # caller that asked for precise bucket slices)
-            key_col = m.summary.get("key_col", "url")
-            out = out.filter(bucket_expr(key_col, m.n_buckets).isin(*bset))
-        return out
+        return _exact_buckets(out, m, files, bset)
+
+    def _read_bucketed(
+        self,
+        spark: SparkSession,
+        m: Manifest,
+        buckets: Sequence[int] | None,
+        n_buckets: int,
+        n_partitions: int,
+    ) -> DataFrame:
+        """The table rows every bucket-parallel writer starts from: the
+        COW and cells applies' current side, every maintenance rewrite
+        and ``maintenance.rebucket``. Snapshot ``m``'s rows of
+        ``buckets`` (None = all; empty = none, the merge-on-read
+        apply's current side) with ``_bucket`` = the key's bucket under
+        ``n_buckets``, hash-partitioned on it into ``n_partitions`` by
+        one ``REPARTITION_BY_NUM`` Exchange, which AQE never coalesces.
+
+        Delta files among them are LWW-resolved AFTER that Exchange, by
+        a window on (``_bucket``, key): keys never span buckets, so the
+        ``_bucket`` partitioning already satisfies the window and the
+        resolve costs a per-partition sort, not a second shuffle. A
+        delta-free read plans no window."""
+        bset = None if buckets is None else {int(b) for b in buckets}
+        files = m.files if bset is None else m.files_for_buckets(bset)
+        key_col = m.summary.get("key_col", "url")
+        if files:
+            rows = _exact_buckets(self._read_entries(spark, m, files), m, files, bset)
+        else:
+            rows = spark.createDataFrame([], schema=spark_schema(m.columns))
+        rows = rows.withColumn("_bucket", bucket_expr(key_col, n_buckets)).repartition(
+            n_partitions, "_bucket"
+        )
+        if any(f.kind == "delta" for f in files):
+            rows = _resolve_lww(rows, key_col, within=("_bucket",))
+        return rows
 
     def _read_entries(
         self, spark: SparkSession, m: Manifest, files: Sequence[FileEntry]
@@ -865,26 +936,8 @@ class LakeletTable:
             return spark.createDataFrame([], schema=spark_schema(m.columns))
         out = self._read_entries(spark, m, files).filter(F.col(key_col) == key)
         if any(f.kind == "delta" for f in files):
-            out = self._resolve_lww(out, m)
+            out = _resolve_lww(out, key_col)
         return out
-
-    def _resolve_lww(self, df: DataFrame, m: Manifest) -> DataFrame:
-        """Collapse a base+delta row stack to the LWW winner per key.
-        Order columns come from the manifest summary (``mor_order``,
-        written by :meth:`commit_delta`); ties are impossible in engine
-        use because ``_seq`` is the changelog's globally-unique event
-        sequence (redeliveries are absorbed by the exactly-once ledger
-        before a second delta could exist)."""
-        from pyspark.sql.window import Window
-
-        key = m.summary.get("key_col", "url")
-        order = m.summary.get("mor_order", ["warc_ts", "_seq"])
-        w = Window.partitionBy(key).orderBy(*[F.col(c).desc() for c in order])
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
 
     def delta_buckets(self, snapshot_id: str | None = None) -> list[int]:
         """Buckets of a snapshot carrying unresolved delta files
@@ -1271,10 +1324,6 @@ class LakeletTable:
         # the caller re-asserts it (sort_rewrite does; merges don't)
         if "sort_order" not in (summary or {}):
             new_summary.pop("sort_order", None)
-        if kind == "delta":
-            # the resolution order must be pinned for every future
-            # reader of this snapshot chain
-            new_summary["mor_order"] = ["warc_ts", "_seq"]
         # physical row count: for MOR, base + unresolved delta versions
         # (the logical count needs resolution, which a metadata commit
         # cannot afford; compaction snaps it back to logical)
@@ -1364,9 +1413,8 @@ class LakeletTable:
         schema's columns, already partitioned by bucket — the merge
         kernel's output) as ``kind='delta'`` files — every existing
         file carries forward untouched. Reads LWW-resolve the stack
-        (:meth:`read`) by ``(warc_ts, _seq)``, the order pinned in the
-        summary's ``mor_order``; :func:`compact` / any COW rewrite of
-        the bucket folds it back to base.
+        (:meth:`read`) by :data:`MOR_ORDER`; ``maintenance.compact`` /
+        any COW rewrite of the bucket folds it back to base.
 
         This is the write path that keeps apply cost ∝ batch size
         instead of ∝ touched-bucket size: a 10^4-event micro-batch over
@@ -1659,12 +1707,6 @@ def _resolve_path(cols: Sequence[ColumnSpec], path: str) -> ColumnSpec:
                     return f
             raise ValueError(f"no field {rest} in column {head}")
     raise ValueError(f"no column {head}")
-
-
-def _parquet_rows(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
 
 
 def _footer_min_max(md, name: str):

@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clinvar_ingest_spark.lakelet.table import LakeletTable, spark_schema, spark_type
+from clinvar_ingest_spark.lakelet.table import LakeletTable, spark_type
 
 
 @dataclass
@@ -171,9 +171,10 @@ def merge_apply_mor(
     if missing:
         raise MorCarryoverRequired(missing)
 
-    # typed by Spark like the batch side, so both reach the kernel with
-    # the session's timestamp zone
-    empty = spark.createDataFrame([], spark_schema(m.columns))
+    # the current side reads no bucket: an empty frame, typed by Spark
+    # like the batch side (so both reach the kernel with the session's
+    # timestamp zone) and partitioned like it
+    empty = table._read_bucketed(spark, m, (), m.n_buckets, m.n_buckets)
     rows, merge_obs = _merge_plan(m, b, empty)
 
     commit_stats: dict = {}

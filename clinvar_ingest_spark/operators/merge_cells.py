@@ -33,8 +33,10 @@ case: zero overhead). ``text`` rides with ``html`` (derived by
 extraction); ``props`` rides with ``extra`` (canonicalized residue).
 
 Plan shape: identical to the cogrouped COW apply — batch and state
-each shuffle once into ``n_buckets`` partitions on the bucket
-(``merge_cogroup._cogroup_buckets``: one task per bucket), one
+each shuffle once into ``n_buckets`` partitions on the bucket (the
+state side through the table's one bucketed read,
+``LakeletTable._read_bucketed``; the batch side through
+``merge_cogroup._cogroup_buckets``: one task per bucket), one
 applyInPandas fold per bucket, output is bucket-pure so the write needs
 no further shuffle. The per-cell bookkeeping is vectorized (sorted
 masks + groupby-tail per cell), never a per-event Python loop.
@@ -410,9 +412,7 @@ def merge_apply_cells(
     b = observed.withColumn(
         "warc_ts", F.col("warc_ts").cast("timestamp")
     ).withColumn("_bucket", bucket_expr("url", m.n_buckets))
-    current = table.read(spark, buckets=touched).withColumn(
-        "_bucket", bucket_expr("url", m.n_buckets)
-    )
+    current = table._read_bucketed(spark, m, touched, m.n_buckets, m.n_buckets)
     from clinvar_ingest_spark.operators.merge import batch_alias_map
 
     alias = batch_alias_map(m, list(b.columns))

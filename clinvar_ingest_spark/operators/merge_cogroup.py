@@ -4,15 +4,15 @@ applyInPandas", vectorized over Arrow.
 
 Plan shape, copy-on-write (:func:`merge_apply_cogrouped`)::
 
-    batch --project(table schema)--shuffle(bucket)--\
-    state --------------------------shuffle(bucket)---cogroup.applyInArrow--rewrite
+    batch --project(table schema)--shuffle(bucket)-----------\
+    state --------------------------shuffle(bucket)--[resolve]--cogroup.applyInArrow--rewrite
 
 and merge-on-read (:func:`~clinvar_ingest_spark.operators.merge.merge_apply_mor`),
 the same plan against an empty current side, so every batch winner
 comes out as an insert or a tombstone::
 
     batch --project(table schema)--shuffle(bucket)--\
-    (empty) --------------------------------------------cogroup.applyInArrow--append delta
+    (empty) -----------------------shuffle(bucket)---cogroup.applyInArrow--append delta
 
 Semantics (reference parity):
 
@@ -40,14 +40,18 @@ further shuffle. Schema drift (renamed, widened and nested-remapped
 columns) is resolved in Spark before the shuffle, so the kernel only
 ever sees batch columns under the table's current names and types.
 
-Scale notes: both cogroup sides are repartitioned to exactly
-``n_buckets`` partitions on ``_bucket`` (:func:`_cogroup_buckets`, also
-used by the cells apply), so the kernel stage runs one task per bucket
-whatever the session's ``spark.sql.shuffle.partitions``. The count
-holds under AQE because an exchange with an explicit partition count is
-a ``REPARTITION_BY_NUM`` shuffle, which AQE's partition coalescing
-never shrinks; and the cogroup takes the two identically
-hash-partitioned sides without a further exchange. Buckets, not bytes,
+Scale notes: both cogroup sides arrive in exactly ``n_buckets``
+partitions on ``_bucket`` — the state side from the table's one
+bucketed read (``LakeletTable._read_bucketed``; empty for merge-on-read),
+the batch side from :func:`_cogroup_buckets` (also used by the cells
+apply) — so the kernel stage runs one task per bucket whatever the
+session's ``spark.sql.shuffle.partitions``. The count holds under AQE
+because an exchange with an explicit partition count is a
+``REPARTITION_BY_NUM`` shuffle, which AQE's partition coalescing never
+shrinks; and the cogroup takes the two identically hash-partitioned
+sides without a further exchange. State rows cross that one shuffle
+only: MOR deltas in a touched bucket are resolved after it, by a window
+the ``_bucket`` partitioning already satisfies. Buckets, not bytes,
 are the unit of balance: the partitions are byte-small but
 compute-dense (decompress + extract), so size n_buckets ≫ max executor
 cores and stragglers average out. A hot URL concentrates in one bucket,
@@ -115,8 +119,8 @@ def _merge_bucket_arrow_fn(
             ix = pc.sort_indices(
                 b,
                 sort_keys=[("url", "ascending"), ("warc_ts", "ascending"), ("seq", "ascending")],
-                # NULL warc_ts must rank LOWEST (parity with the
-                # readers' delta resolution, desc nulls last, and
+                # NULL warc_ts must rank LOWEST (table.MOR_ORDER, the
+                # delta resolution's desc-nulls-last window, and
                 # merge_cells' _ts_us(_NEG)): the default at_end
                 # placement would crown an unparseable-timestamp event
                 # the per-url winner and silently drop the real latest
@@ -284,13 +288,15 @@ def _project_batch(m, batch: DataFrame) -> tuple[DataFrame, Observation]:
 
 
 def _cogroup_buckets(n_buckets: int, b: DataFrame, current: DataFrame):
-    """Cogroup ``b`` and ``current`` on ``_bucket``, each side
-    repartitioned into exactly ``n_buckets`` partitions — the one place
-    that makes an apply run one task per bucket (module scale notes)."""
+    """Cogroup the batch ``b``, repartitioned into exactly ``n_buckets``
+    partitions on ``_bucket``, with ``current``: a
+    ``LakeletTable._read_bucketed`` of the same ``n_buckets``, already
+    partitioned alike — so an apply runs one task per bucket (module
+    scale notes)."""
     return (
         b.repartition(n_buckets, "_bucket")
         .groupBy("_bucket")
-        .cogroup(current.repartition(n_buckets, "_bucket").groupBy("_bucket"))
+        .cogroup(current.groupBy("_bucket"))
     )
 
 
@@ -306,11 +312,10 @@ def _out_schema(m) -> T.StructType:
 
 
 def _merge_plan(m, b: DataFrame, current: DataFrame) -> tuple[DataFrame, Observation]:
-    """Shuffle the projected batch ``b`` and ``current`` (table rows)
-    on ``_bucket`` and run the kernel per bucket. Returns the
-    bucket-pure rows to write (tombstones included) and the observation
-    counting each ``_action``."""
-    current = current.withColumn("_bucket", bucket_expr("url", m.n_buckets))
+    """Shuffle the projected batch ``b`` on ``_bucket``, cogroup it with
+    ``current`` (the bucketed read of the table rows) and run the kernel
+    per bucket. Returns the bucket-pure rows to write (tombstones
+    included) and the observation counting each ``_action``."""
     out_schema = _out_schema(m)
     fn = _merge_bucket_arrow_fn(
         [cs.name for cs in m.columns], b.columns, to_arrow_schema(out_schema)
@@ -389,7 +394,7 @@ def merge_apply_cogrouped(
     touched = _touched(table, m, batch, assume_all_buckets)
     b, batch_obs = _project_batch(m, batch)
     survivors, merge_obs = _merge_plan(
-        m, b, table.read(spark, buckets=touched)
+        m, b, table._read_bucketed(spark, m, touched, m.n_buckets, m.n_buckets)
     )
     return _commit_cow(
         spark, table, m, survivors, touched, batch_id, partial_to,

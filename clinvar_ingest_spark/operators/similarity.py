@@ -42,14 +42,6 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def with_unit_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Pre-normalize: cosine becomes a plain dot product downstream."""
-    n = _norm(F.col(vec_col))
-    return df.withColumn(
-        "_unit", F.transform(F.col(vec_col), lambda x: x / n)
-    )
-
-
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,

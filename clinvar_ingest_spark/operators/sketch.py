@@ -29,10 +29,9 @@ n_salts) and keeps each salt-shard's k smallest distinct hashes
 (``collect_set`` partially aggregates map-side; the ``slice`` caps what
 the final aggregation emits). Stage 2 merges the ≤ n_salts·k survivors
 per group. The largest in-memory set is bounded by the distinct count
-of one salt shard (~D/n_salts) — size n_salts to the expected D, the
-same discipline as the salted LWW (operators/lww.py). For the common
-"one sketch per small group" case the shards also spread a hot group
-over n_salts tasks.
+of one salt shard (~D/n_salts) — size n_salts to the expected D. For
+the common "one sketch per small group" case the shards also spread a
+hot group over n_salts tasks.
 """
 
 from __future__ import annotations

@@ -400,8 +400,3 @@ def write_changelog_parquet(df: pd.DataFrame, path: str) -> None:
     # pre-shuffle Spark stage collapses to ONE task no matter how many
     # executors exist (scan parallelism = splittability, not cores).
     pq.write_table(table, path, compression="zstd", row_group_size=8192)
-
-
-def read_changelog(spark, path: str):
-    """Read a changelog parquet with Spark (schema carried by the file)."""
-    return spark.read.parquet(path)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_NEG = -(2**62)
+from clinvar_ingest_spark.operators.merge_cells import _NEG, _ts_us
 
 #: state: tombstone pos, life pos, then (v, ts, seq) per cell
 CELLS_STATE_SCHEMA = T.StructType(
@@ -99,8 +99,6 @@ def _cells_update(
     before = obs()
     dirty = False
     for pdf in pdfs:
-        from clinvar_ingest_spark.operators.merge_cells import _ts_us
-
         # NaT → _NEG (bottom) BEFORE the sort, exactly like the batch
         # kernel: raw NaT sorts LAST but its position is the minimum
         pdf = pdf.assign(__ts=_ts_us(pdf["warc_ts"]))

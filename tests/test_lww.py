@@ -1,16 +1,14 @@
 """LWW dedup: reference semantics (ArchiveBranchesSpec.scala:50-228 —
-latest-dated survivor per key) plus our deterministic seq tie-break."""
+latest-dated survivor per key) plus our deterministic seq tie-break,
+and one order everywhere the rule runs: ``lww_latest``, a merge-on-read
+table's resolving reads and its compaction."""
 
 import datetime as dt
 
-import pandas as pd
 import pytest
 
-from clinvar_ingest_spark.operators.lww import (
-    lww_apply_in_pandas,
-    lww_latest,
-    lww_latest_window,
-)
+from clinvar_ingest_spark.engine import CdcEngine
+from clinvar_ingest_spark.operators.lww import lww_latest
 
 
 def _ts(s):
@@ -46,35 +44,75 @@ def test_lww_latest(events_df):
     assert out.count() == 3
 
 
-def test_lww_window_parity(events_df):
-    out = lww_latest_window(events_df, keys=("url",), order_by=("warc_ts", "seq"))
-    assert _as_map(out) == EXPECT
-
-
-def test_lww_apply_in_pandas_parity(events_df):
-    out = lww_apply_in_pandas(
-        events_df, keys=("url",), order_by=("warc_ts", "seq"), n_salts=4
+def test_lww_order_parity_with_null_timestamps(spark, tmp_path):
+    """``lww_latest``, a MOR table's ``read()`` and ``read_key()``, and
+    the same table after ``compact()`` crown the same winner per key:
+    a NULL ``warc_ts`` ranks lowest, a ``warc_ts`` tie falls to the
+    higher seq, and a delete wins as a tombstone. Each key has one
+    event per batch, so every winner is chosen by a resolve across
+    delta files, never by the apply kernel's in-batch fold."""
+    t = _ts
+    html = b"<p>x</p>"
+    # (seq, op, url, warc_ts): seqs 0-9 are batch 1, 10-19 batch 2
+    events = [
+        (0, "insert", "real-then-null", t("2024-01-05T00:00:00")),
+        (10, "update", "real-then-null", None),
+        (1, "insert", "all-null", None),
+        (11, "update", "all-null", None),
+        (2, "insert", "ts-tie", t("2024-01-01T00:00:00")),
+        (12, "update", "ts-tie", t("2024-01-01T00:00:00")),
+        (3, "insert", "late", t("2024-01-09T00:00:00")),
+        (13, "update", "late", t("2024-01-02T00:00:00")),
+        (4, "insert", "deleted", t("2024-01-01T00:00:00")),
+        (14, "delete", "deleted", t("2024-01-03T00:00:00")),
+    ]
+    cl = spark.createDataFrame(
+        [
+            (s, op, u, ts, None if op == "delete" else html, "en", None)
+            for s, op, u, ts in events
+        ],
+        schema="seq long, op string, url string, warc_ts timestamp, "
+        "html binary, lang string, extra string",
     )
-    assert _as_map(out) == EXPECT
+    expect = {
+        "real-then-null": (0, False),
+        "all-null": (11, False),
+        "ts-tie": (12, False),
+        "late": (3, False),
+        "deleted": (14, True),
+    }
 
+    lww = lww_latest(cl, keys=("url",), order_by=("warc_ts", "seq"))
+    assert {r["url"]: (r["seq"], r["op"] == "delete") for r in lww.collect()} == expect
 
-def test_lww_apply_in_pandas_finalize_runs_once_per_key(events_df):
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.copy()
-        pdf["payload"] = pdf["payload"] + "!"
-        return pdf
+    eng = CdcEngine(spark, str(tmp_path / "mor"), n_buckets=2, write_mode="mor")
+    eng.replay(cl, batch_size=10)
+    assert {r["mode"] for r in eng.ledger.all_records()} == {"mor"}
+    assert eng.table.delta_buckets()
 
-    out = lww_apply_in_pandas(events_df, n_salts=2, finalize=finalize)
-    assert _as_map(out) == {k: v + "!" for k, v in EXPECT.items()}
+    def winners(rows):
+        return {r["url"]: (r["_seq"], r["_deleted"]) for r in rows}
+
+    assert winners(eng.table.read(spark).collect()) == expect
+    by_key = [r for u in expect for r in eng.table.read_key(spark, u).collect()]
+    assert len(by_key) == len(expect)
+    assert winners(by_key) == expect
+
+    assert eng.compact() is not None
+    assert eng.table.delta_buckets() == []
+    assert winners(eng.table.read(spark).collect()) == expect
 
 
 def test_hot_key_skew(spark):
-    # one key with 10k events, many singleton keys — salted path must agree
-    hot = [(i, "hot", _ts("2024-01-01") + dt.timedelta(seconds=i % 977), f"p{i}") for i in range(10_000)]
+    # one key with 2k events, many singleton keys — the max_by partial
+    # aggregation must agree with a plain Python fold
+    hot = [(i, "hot", _ts("2024-01-01") + dt.timedelta(seconds=i % 977), f"p{i}") for i in range(2_000)]
     cold = [(100_000 + i, f"cold{i}", _ts("2024-01-01"), f"c{i}") for i in range(50)]
     df = spark.createDataFrame(hot + cold, ["seq", "url", "warc_ts", "payload"])
-    fast = _as_map(lww_latest(df))
-    salted = _as_map(lww_apply_in_pandas(df, n_salts=8))
-    assert fast == salted
+    fold: dict = {}
+    for seq, url, ts, payload in hot + cold:
+        if url not in fold or (ts, seq) > fold[url][0]:
+            fold[url] = ((ts, seq), payload)
+    assert _as_map(lww_latest(df)) == {u: p for u, (_, p) in fold.items()}
     # winner for hot: max (warc_ts, seq) → warc_ts=976s, max seq ≡ 976 mod 977
-    assert fast["hot"] == salted["hot"]
+    assert fold["hot"][1] == "p1953"
