@@ -2093,9 +2093,9 @@ def _ensure_patch_fixture() -> str:
 def q_cdc_patch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cell-level LWW engine path (patch_ops=True): a changelog where
     35 % of updates are PARTIAL images (op='patch'; NULL = field
-    untouched) replays through the cells kernel — per-cell writer
-    positions, row tombstones killing only older cells, associative
-    fold (batch-boundary invariance is pytest-pinned). The oracle
+    untouched) replays through the merge kernel's cell-level fold —
+    per-cell writer positions, row tombstones killing only older cells,
+    associative fold (batch-boundary invariance is pytest-pinned). The oracle
     recomputes the same semantics in SQL: per column, the latest
     carrier after the last delete (`arg_max … FILTER`)."""
     import tempfile

@@ -262,7 +262,8 @@ def bench_fanout_feed(spark, workdir: str) -> dict:
 def bench_patch_apply(spark, sf: float, workdir: str) -> dict:
     """Cell-level LWW apply throughput: a changelog where 35 % of
     updates are PARTIAL images (op='patch') replayed through
-    CdcEngine(patch_ops=True) — the merge_cells kernel end to end.
+    CdcEngine(patch_ops=True) — the merge kernel's cell-level fold end
+    to end.
     Sized at half the headline stream (one run; the headline replay
     owns the best-of-2 noise treatment)."""
     from clinvar_ingest_spark.engine import CdcEngine

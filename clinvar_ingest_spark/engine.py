@@ -97,13 +97,14 @@ class CdcEngine:
         #: the per-batch lineage; each is also logged at WARNING)
         self.retries_total = 0
         self.write_mode = write_mode
-        self.patch_ops = patch_ops
         cols = PAGES_COLUMNS
         if patch_ops:
             from clinvar_ingest_spark.lakelet.table import ColumnSpec
 
             # cell-level LWW lineage: per-cell positions that differ
-            # from the row position (operators/merge_cells.py)
+            # from the row position; with it the apply kernel
+            # (operators/merge_cogroup.py) folds op='patch' as a
+            # partial write
             cols = PAGES_COLUMNS + [ColumnSpec(9, "_cells", "string")]
         self.table = LakeletTable.create(root, cols, n_buckets=n_buckets)
         actual_buckets = self.table.manifest().n_buckets
@@ -314,17 +315,7 @@ class CdcEngine:
             batch = tagged.filter(F.col(TAG_COL).isNull()).drop(TAG_COL)
         t0 = time.time()
         stats = None
-        if self.patch_ops:
-            from clinvar_ingest_spark.operators.merge_cells import (
-                merge_apply_cells,
-            )
-
-            stats = merge_apply_cells(
-                self.spark, self.table, batch, batch_id,
-                assume_all_buckets=assume_all_buckets,
-                partial_to=partial_to,
-            )
-        elif self.write_mode == "mor":
+        if self.write_mode == "mor":
             from clinvar_ingest_spark.operators.merge import (
                 MorCarryoverRequired,
                 merge_apply_mor,

@@ -75,14 +75,15 @@ def updated_rows(
 ) -> DataFrame:
     """New-side rows whose key exists in both states but any non-key
     column differs (reference diff.py:142-152). Returns new-side values.
+    Built on :func:`_outer`'s aliased sides, so two states derived from
+    one DataFrame join unambiguously; requiring both sides makes the
+    outer join an inner one.
     """
-    cols = _non_key_columns(new, keys, exclude)
-    cond = [new[k] == old[k] for k in keys]
-    joined = new.join(old, on=cond, how="inner")
-    pred = _any(
-        [_differs(new[c], old[c], new.schema[c].dataType, null_safe) for c in cols]
+    j, cols, differs, _ = _outer(new, old, keys, exclude, null_safe)
+    return j.filter(F.col("_in_new") & F.col("_in_old") & differs).select(
+        *[F.col(f"_nk_{k}").alias(k) for k in keys],
+        *[F.col(f"_n_{c}").alias(c) for c in cols],
     )
-    return joined.filter(pred).select(*[new[k] for k in keys], *[new[c] for c in cols])
 
 
 def _outer(new, old, keys, exclude, null_safe):

@@ -8,7 +8,8 @@ merge-on-read apply (:func:`merge_apply_mor`), which runs the same
 kernel against an empty current side and appends its rows as delta
 files without reading current state.
 
-Semantics of the kernel (north rule + reference parity):
+Semantics of the kernel on the tables merge-on-read serves (no patch
+tables; those need COW), the row-LWW case of its cell fold:
 one surviving event per ``url`` by ``(warc_ts, seq)`` — reference
 ``dedupByDate`` (ArchiveBranches.scala:140-156) with the deterministic
 ``seq`` tie-break (SURVEY.md §7(b)); delete winners become tombstones,

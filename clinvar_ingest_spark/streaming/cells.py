@@ -1,13 +1,17 @@
 """Streaming cell-level LWW feed — the continuous form of the patch
-engine (operators/merge_cells.py), via ``applyInPandasWithState``.
+engine (``CdcEngine(patch_ops=True)``, whose apply is the cell fold of
+``operators/merge_cogroup.py``), via ``applyInPandasWithState``.
 
 Each url group's state holds the row tombstone position, the life
-position, and one (value, position) pair per tracked cell — exactly the
-associative fold the batch kernel applies, so the feed's final emission
-per key equals the batch engine's resolved row no matter how the stream
-is chopped into micro-batches. ``html`` is tracked as its sha256 (the
-feed is a metadata push — subscribers pull bytes from the table), and
-``props`` is the canonicalized ``extra`` residue.
+position, and one (value, position) pair per tracked cell — the same
+associative fold the batch kernel applies, with the same position order
+(NULL ``warc_ts`` at the kernel's bottom sentinel ``_NEG``), so the
+feed's final emission per key equals the batch engine's resolved row no
+matter how the stream is chopped into micro-batches. It keeps its own
+per-key fold because its state is not a table row: ``html`` is tracked
+as its sha256 (the feed is a metadata push — subscribers pull bytes from
+the table), ``props`` is the canonicalized ``extra`` residue, and
+existing checkpoints depend on that state schema.
 
 Emission contract (update mode, SQL-mirrorable): a key emits in a
 micro-batch iff its OBSERVABLE tuple (warc_ts, seq, lang, props,
@@ -20,12 +24,13 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from clinvar_ingest_spark.operators.merge_cells import _NEG, _ts_us
+from clinvar_ingest_spark.operators.merge_cogroup import _NEG
 
 #: state: tombstone pos, life pos, then (v, ts, seq) per cell
 CELLS_STATE_SCHEMA = T.StructType(
@@ -61,6 +66,16 @@ CELLS_OUTPUT_SCHEMA = T.StructType(
 _CELLS = ("lang", "props", "html")
 
 
+def _ts_us(s: pd.Series) -> np.ndarray:
+    """Timestamp series → int64 microseconds (NaT → _NEG)."""
+    v = s.to_numpy()
+    out = np.full(len(v), _NEG, dtype=np.int64)
+    mask = ~pd.isna(v)
+    if mask.any():
+        out[mask] = v[mask].astype("datetime64[us]").astype("int64")
+    return out
+
+
 def _canon_props(raw: str | None) -> str | None:
     if raw is None:
         return None
@@ -87,7 +102,7 @@ def _cells_update(
 
     def obs():
         # strict >: a position tie loses to the tombstone — same
-        # resolution as the batch kernel (merge_cells.py `alive`)
+        # resolution as the batch kernel (merge_cogroup's `alive`)
         alive = (l_ts, l_seq) > (t_ts, t_seq)
         row = (l_ts, l_seq) if alive else (t_ts, t_seq)
         if alive:
@@ -155,7 +170,7 @@ def _cells_update(
         )
         # row_ts == _NEG means the observable position came from a
         # NULL-warc_ts event (seq-only ordering) — the batch kernel
-        # masks this to NULL (merge_cells.py safe_ts); converting the
+        # writes a NULL warc_ts there too; converting the
         # sentinel would overflow pd.Timestamp and kill the query.
         yield pd.DataFrame(
             {

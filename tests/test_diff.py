@@ -52,6 +52,18 @@ def test_updated_reference_parity_drops_null_flips(states):
     assert got == {3}
 
 
+def test_updated_rows_of_one_dataframe(spark):
+    """Two states derived from one DataFrame share column lineage; the
+    join must still tell the sides apart (diff_all does, by aliasing)."""
+    from pyspark.sql import functions as F
+
+    base = spark.createDataFrame([(1, 1), (2, 2), (3, 3)], ["k", "v"])
+    new = base.withColumn("v", F.col("v") * 10)
+    got = {(r["k"], r["v"]) for r in updated_rows(new, base, ["k"]).collect()}
+    assert got == {(1, 10), (2, 20), (3, 30)}
+    assert {(r["k"], r["v"]) for r in diff_all(new, base, ["k"]).collect()} == got
+
+
 def test_diff_all_single_join(states):
     old, new = states
     out = {(r["id"], r["_change"]) for r in diff_all(new, old, ["id"]).collect()}

@@ -1,7 +1,7 @@
 """LWW dedup: reference semantics (ArchiveBranchesSpec.scala:50-228 —
 latest-dated survivor per key) plus our deterministic seq tie-break,
 and one order everywhere the rule runs: ``lww_latest``, a merge-on-read
-table's resolving reads and its compaction."""
+table's resolving reads and its compaction, and a copy-on-write apply."""
 
 import datetime as dt
 
@@ -45,12 +45,14 @@ def test_lww_latest(events_df):
 
 
 def test_lww_order_parity_with_null_timestamps(spark, tmp_path):
-    """``lww_latest``, a MOR table's ``read()`` and ``read_key()``, and
-    the same table after ``compact()`` crown the same winner per key:
-    a NULL ``warc_ts`` ranks lowest, a ``warc_ts`` tie falls to the
-    higher seq, and a delete wins as a tombstone. Each key has one
-    event per batch, so every winner is chosen by a resolve across
-    delta files, never by the apply kernel's in-batch fold."""
+    """``lww_latest``, a MOR table's ``read()`` and ``read_key()``, the
+    same table after ``compact()``, and a COW table crown the same
+    winner per key: a NULL ``warc_ts`` ranks lowest, a ``warc_ts`` tie
+    falls to the higher seq, and a delete wins as a tombstone. Each key
+    has one event per batch, so every MOR winner is chosen by a resolve
+    across delta files and every COW winner by the apply kernel's
+    batch-vs-current compare, never by its in-batch fold. A row first
+    written with a NULL ``warc_ts`` stays replaceable in both modes."""
     t = _ts
     html = b"<p>x</p>"
     # (seq, op, url, warc_ts): seqs 0-9 are batch 1, 10-19 batch 2
@@ -65,6 +67,10 @@ def test_lww_order_parity_with_null_timestamps(spark, tmp_path):
         (13, "update", "late", t("2024-01-02T00:00:00")),
         (4, "insert", "deleted", t("2024-01-01T00:00:00")),
         (14, "delete", "deleted", t("2024-01-03T00:00:00")),
+        (5, "insert", "null-then-real", None),
+        (15, "update", "null-then-real", t("2024-01-04T00:00:00")),
+        (6, "insert", "null-then-delete", None),
+        (16, "delete", "null-then-delete", t("2024-01-04T00:00:00")),
     ]
     cl = spark.createDataFrame(
         [
@@ -80,6 +86,8 @@ def test_lww_order_parity_with_null_timestamps(spark, tmp_path):
         "ts-tie": (12, False),
         "late": (3, False),
         "deleted": (14, True),
+        "null-then-real": (15, False),
+        "null-then-delete": (16, True),
     }
 
     lww = lww_latest(cl, keys=("url",), order_by=("warc_ts", "seq"))
@@ -101,6 +109,10 @@ def test_lww_order_parity_with_null_timestamps(spark, tmp_path):
     assert eng.compact() is not None
     assert eng.table.delta_buckets() == []
     assert winners(eng.table.read(spark).collect()) == expect
+
+    cow = CdcEngine(spark, str(tmp_path / "cow"), n_buckets=2)
+    cow.replay(cl, batch_size=10)
+    assert winners(cow.table.read(spark).collect()) == expect
 
 
 def test_hot_key_skew(spark):

@@ -263,9 +263,9 @@ def test_hot_url_skew_replay(spark, tmp_path):
 def test_null_warc_ts_event_never_beats_a_real_timestamp(spark, tmp_path):
     """The COW and MOR applies must rank a NULL warc_ts LOWEST in the
     within-batch LWW reduce (parity with max_by's struct order and the
-    cells kernel's _ts_us(_NEG)). The Arrow kernel's default nulls-last
-    sort would crown an unparseable-timestamp event the per-url winner
-    and silently drop the real latest event."""
+    kernel's _NEG sentinel). A nulls-last sort would crown an
+    unparseable-timestamp event the per-url winner and silently drop
+    the real latest event."""
     from datetime import datetime
 
     schema = (

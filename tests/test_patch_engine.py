@@ -2,6 +2,7 @@
 per-cell positions, associative fold — final state independent of
 micro-batch boundaries."""
 
+import json
 from datetime import datetime
 
 import pandas as pd
@@ -236,3 +237,30 @@ def test_null_warc_ts_event_does_not_mask_valid_ones(spark, tmp_path):
     assert st["http://a/"]["lang"] == "en"
     assert st["http://a/"]["html"] == H1
     assert st["http://a/"]["_seq"] == 1
+
+
+def test_columns_named_d_and_l(spark, tmp_path):
+    """Any column name is a cell: ``d`` and ``l`` added by schema
+    evolution take patches and persist their positions."""
+    from pyspark.sql import functions as F
+
+    eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=4, patch_ops=True)
+    eng.table.add_column("d", "string")
+    eng.table.add_column("l", "string")
+    ids = {c.name: c.col_id for c in eng.table.manifest().columns}
+
+    def batch(rows):
+        return _df(spark, [r[:7] for r in rows]).withColumns({
+            "d": F.col("seq").cast("string"), "l": F.col("seq").cast("string"),
+        }).withColumn("d", F.when(F.col("op") == "insert", F.col("d")))
+
+    eng.apply_batch(batch([(1, "insert", "http://a/", T1, H1, "en", None)]), 1, 1)
+    eng.apply_batch(batch([(2, "patch", "http://a/", T2, None, None, None)]), 2, 2)
+    row = eng.read().filter("url='http://a/'").collect()[0]
+    assert (row["d"], row["l"], row["_seq"]) == ("1", "2", 2)
+    cells = json.loads(row["_cells"])
+    # d kept the insert's position (html's, which the patch skipped too);
+    # l moved with the row
+    assert cells[str(ids["d"])] == cells[str(ids["html"])]
+    assert cells[str(ids["d"])][1] == 1
+    assert str(ids["l"]) not in cells

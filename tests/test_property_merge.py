@@ -13,7 +13,8 @@ Invariant: for every url, the kernel's output row equals the fold
         if state is None or (w.ts, w.seq) > (state.ts, state.seq):
             state = tombstone(w) if w.op == 'delete' else live(w)
 over the current row as the initial state — i.e. sequential CDC apply
-equals global LWW with soft deletes.
+equals global LWW with soft deletes. A NULL ``warc_ts`` ranks below
+every real one, on the batch side and the current side alike.
 """
 
 import datetime as dt
@@ -48,14 +49,16 @@ ENT_PAYLOAD = [("tags", pa.list_(pa.string())), ("xrefs", pa.list_(XREF))]
 ENT_TABLE = pa.schema(KEYS + ENT_PAYLOAD + LINEAGE)
 ENT_BATCH = pa.schema(EVENT + ENT_PAYLOAD + TAIL)
 
+# ts offset (collisions likely) or None for a NULL warc_ts
+ts_off = st.one_of(st.none(), st.integers(min_value=0, max_value=6))
 event = st.tuples(
     st.sampled_from(URLS),
-    st.integers(min_value=0, max_value=6),  # ts offset (collisions likely)
+    ts_off,
     st.sampled_from(["insert", "update", "delete"]),
 )
 cur_row = st.tuples(
     st.sampled_from(URLS),
-    st.integers(min_value=0, max_value=6),
+    ts_off,
     st.booleans(),  # _deleted tombstone?
 )
 tags = st.one_of(st.none(), st.lists(st.sampled_from(["a", "b", "c"]), max_size=3))
@@ -71,8 +74,13 @@ xrefs = st.one_of(
 entity_event = st.tuples(event, tags, xrefs)
 
 
-def _ts(off: int) -> dt.datetime:
-    return T0 + dt.timedelta(hours=off)
+def _ts(off: int | None) -> dt.datetime | None:
+    return None if off is None else T0 + dt.timedelta(hours=off)
+
+
+def _pos(ts: dt.datetime | None, seq: int) -> tuple:
+    """LWW position; a NULL warc_ts ranks lowest."""
+    return (ts is not None, ts or T0, seq)
 
 
 def _out_schema(table_schema: pa.Schema) -> pa.Schema:
@@ -151,11 +159,11 @@ def _fold(batch: pa.Table, current: pa.Table, seq_col: str = "seq") -> dict:
     winners: dict = {}
     for r in batch.to_pylist():  # per-url batch LWW: max (warc_ts, seq)
         w = winners.get(r["url"])
-        if w is None or (r["warc_ts"], r[seq_col]) > (w["warc_ts"], w[seq_col]):
+        if w is None or _pos(r["warc_ts"], r[seq_col]) > _pos(w["warc_ts"], w[seq_col]):
             winners[r["url"]] = r
     for url, w in winners.items():
         cur = state.get(url)
-        if cur is None or (w["warc_ts"], w[seq_col]) > (cur["warc_ts"], cur["_seq"]):
+        if cur is None or _pos(w["warc_ts"], w[seq_col]) > _pos(cur["warc_ts"], cur["_seq"]):
             state[url] = dict(w, _seq=int(w[seq_col]), _deleted=w["op"] == "delete")
     return state
 
@@ -270,3 +278,29 @@ def test_nested_payload_kernel_equals_global_lww_fold(events, current_rows):
             assert r["tags"] is None and r["xrefs"] is None
         else:
             assert (r["tags"], r["xrefs"]) == (want[url]["tags"], want[url]["xrefs"])
+
+
+def test_carried_column_dies_with_an_in_batch_delete():
+    """A table column the batch lacks carries over from the current row
+    on update — unless a delete between the two killed it, in one batch
+    exactly as in two."""
+    table = pa.schema(KEYS + [("lang", pa.string()), ("x", pa.string())] + LINEAGE)
+    batch_schema = pa.schema(EVENT + [("lang", pa.string())] + TAIL)
+    current = pa.Table.from_pylist(
+        [{"url": "u0", "warc_ts": _ts(1), "lang": "en", "x": "old",
+          "_seq": 1, "_deleted": False, "_bucket": 0}],
+        schema=pa.schema(list(table) + TAIL),
+    )
+    events = [
+        {"seq": 2, "op": "update", "url": "u0", "warc_ts": _ts(2), "lang": "de", "_bucket": 0},
+        {"seq": 3, "op": "delete", "url": "u0", "warc_ts": _ts(3), "lang": None, "_bucket": 0},
+        {"seq": 4, "op": "update", "url": "u0", "warc_ts": _ts(4), "lang": "fr", "_bucket": 0},
+    ]
+    fn = _kernel(table, batch_schema)
+    one = fn(pa.Table.from_pylist(events, schema=batch_schema), current)
+    state = current
+    for e in events:
+        state = _as_current(fn(pa.Table.from_pylist([e], schema=batch_schema), state), table)
+    assert _rows(one.drop(["_action", "_bucket"])) == _rows(state.drop(["_bucket"]))
+    assert _rows(one)["u0"]["x"] is None
+    assert (_rows(one)["u0"]["lang"], _rows(one)["u0"]["_seq"]) == ("fr", 4)
