@@ -13,7 +13,10 @@ overflow (a, x < 2^31 ⇒ a·x < 2^62 < 2^63).
 
 ``xxhash64`` remains the right choice when no SQL oracle is needed
 (pure speed, one JVM intrinsic); :func:`xxhash64` below is its
-driver-side twin, so a key's bucket is known without a Spark job. The
+driver-side twin, so a key's bucket is known without a Spark job, and
+:func:`murmur3_ints` twins Spark's ``hash`` (the Murmur3 behind
+``hashpartitioning``), so the driver knows which task a shuffle sends
+a row to. The
 md5 helpers exist so the *same*
 operator output is exactly verifiable against DuckDB. Cost note: one
 md5 per token/shingle plus k affine transforms is cheaper than k
@@ -96,6 +99,33 @@ def xxhash64(data: bytes, seed: int = 42) -> int:
     h = ((h ^ (h >> 29)) * _P3) & _M64
     h ^= h >> 32
     return h - (1 << 64) if h >> 63 else h
+
+
+_C1, _C2 = 0xCC9E2D51, 0x1B873593
+_M32 = 0xFFFFFFFF
+
+
+def murmur3_ints(values, seed: int = 42) -> int:
+    """Spark's ``hash(v1, v2, ...)`` over int columns as a signed 32-bit
+    int: Murmur3_x86_32 ``hashInt`` of each value, seeded with the hash
+    so far (a ``None`` leaves it unchanged, as a NULL column does).
+    ``hashpartitioning(cols, k)`` sends a row to ``pmod(hash, k)``."""
+    h = seed & _M32
+    for v in values:
+        if v is None:
+            continue
+        k1 = (v & _M32) * _C1 & _M32
+        k1 = ((k1 << 15) | (k1 >> 17)) & _M32
+        h ^= k1 * _C2 & _M32
+        h = ((h << 13) | (h >> 19)) & _M32
+        h = (h * 5 + 0xE6546B64) & _M32
+        h ^= 4
+        h ^= h >> 16
+        h = h * 0x85EBCA6B & _M32
+        h ^= h >> 13
+        h = h * 0xC2B2AE35 & _M32
+        h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
 
 
 def affine_params(k: int, seed: int = 42) -> list[tuple[int, int]]:

@@ -53,9 +53,10 @@ def _rewrite_buckets(
 ) -> str:
     """The one plan under every rewrite pass: COW-rewrite ``buckets``
     of the planned snapshot ``m``, pinned to ``m``, from the table's
-    bucketed read (``LakeletTable._read_bucketed``): one shuffle into
-    one task per bucket, so partitionBy emits one file per bucket, with
-    any MOR deltas resolved inside it. ``keep`` filters the resolved
+    bucketed read (``LakeletTable._read_bucketed``): one shuffle that
+    packs whole buckets evenly into ``min(len(buckets),
+    defaultParallelism)`` tasks, so partitionBy emits one file per
+    bucket, with any MOR deltas resolved inside it. ``keep`` filters the resolved
     rows; ``order(df)`` returns sort columns, computed on the raw
     (unresolved) read, so a Z-order bounds job scans the files without
     a shuffle — bounds over that superset of the live rows still hold
@@ -70,9 +71,7 @@ def _rewrite_buckets(
         sort_cols = order(
             table.read(spark, m.snapshot_id, buckets=touched, resolve=False)
         )
-    rows = table._read_bucketed(
-        spark, m, touched, m.n_buckets, max(len(touched), 1)
-    )
+    rows = table._read_bucketed(spark, m, touched, m.n_buckets)
     if keep is not None:
         rows = rows.filter(keep)
     if sort_cols is not None:
@@ -133,8 +132,9 @@ def rebucket(
     m = table.manifest()
     if new_n_buckets == m.n_buckets:
         return m.snapshot_id
-    # one shuffle into the new buckets; MOR deltas resolve inside it
-    rows = table._read_bucketed(spark, m, None, new_n_buckets, new_n_buckets)
+    # one shuffle, placed over all the new buckets; MOR deltas resolve
+    # inside it
+    rows = table._read_bucketed(spark, m, None, new_n_buckets)
     # the table's one data commit (staging, promotion, CAS) with the
     # file list re-segmented under the new bucket count
     return table._commit_files(

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from clinvar_ingest_spark.functions.xhash import xxhash64
+from clinvar_ingest_spark.functions.xhash import murmur3_ints, xxhash64
 # atomic_write_json is unused here but stays a module attribute:
 # tracing harnesses wrap the manifest I/O names on this module too
 from clinvar_ingest_spark.lakelet.manifest import (  # noqa: F401
@@ -197,6 +197,43 @@ def bucket_expr(key_col: str, n_buckets: int):
     )
 
 
+#: the column carrying a row's placement salt (:func:`place_buckets`)
+SALT = "_salt"
+
+
+def bucket_salts(buckets: Sequence[int], k: int) -> dict[int, int]:
+    """Per bucket, the smallest salt ``v >= 0`` that sends
+    ``hashpartitioning(v, bucket)`` at ``k`` partitions to task ``i % k``,
+    ``i`` the bucket's index in the sorted list: every task gets
+    ``len(buckets) / k`` buckets, ±1 (a plain ``_bucket`` hash leaves
+    some tasks several buckets over their share)."""
+    salts = {}
+    for i, b in enumerate(sorted(buckets)):
+        v = 0
+        while murmur3_ints((v, b)) % k != i % k:
+            v += 1
+        salts[b] = v
+    return salts
+
+
+def place_buckets(spark: SparkSession, df: DataFrame, buckets: Sequence[int]) -> DataFrame:
+    """``df`` shuffled so a task holds whole buckets and the tasks hold
+    ``buckets`` evenly: ``k = min(len(buckets), defaultParallelism)``
+    tasks, one ``REPARTITION_BY_NUM`` Exchange on (:data:`SALT`,
+    ``_bucket``), which AQE never coalesces. Buckets stay the unit of
+    files and of LWW groups; tasks become the unit of CPU, so each
+    Python task pays its fixed start cost once per core, not once per
+    bucket. Group or window on (:data:`SALT`, ``_bucket``, ...) after it
+    and Spark adds no Exchange; a bucket missing from ``buckets`` still
+    lands whole in one task. ``_bucket`` is an int column, as
+    :func:`bucket_expr` makes it: the salts assume ``hash`` of an int."""
+    k = max(1, min(len(buckets), spark.sparkContext.defaultParallelism))
+    salts = bucket_salts(buckets, k)
+    by_bucket = [salts.get(b, 0) for b in range(max(salts, default=0) + 1)]
+    salt = F.get(F.array(*map(F.lit, by_bucket)), F.col("_bucket"))
+    return df.withColumn(SALT, salt).repartition(k, SALT, "_bucket")
+
+
 #: The merge-on-read resolution order: a key's winning row version is
 #: its greatest ``(warc_ts, _seq)``, a NULL ``warc_ts`` ranking lowest —
 #: the order of the apply kernel's LWW and of ``operators.lww``.
@@ -206,9 +243,10 @@ MOR_ORDER = ("warc_ts", "_seq")
 def _resolve_lww(df: DataFrame, key_col: str, within: Sequence[str] = ()) -> DataFrame:
     """Collapse a base+delta row stack to the LWW winner per key by
     :data:`MOR_ORDER`. The window is partitioned by ``within`` + key:
-    a read already hash-partitioned on ``within`` (``_bucket``, in
-    :meth:`LakeletTable._read_bucketed`) satisfies it with no Exchange
-    of its own, while a bare key partitioning costs one on the key.
+    a read already hash-partitioned on ``within`` (:data:`SALT` and
+    ``_bucket``, in :meth:`LakeletTable._read_bucketed`) satisfies it
+    with no Exchange of its own, while a bare key partitioning costs
+    one on the key.
     Ties are impossible in engine use because ``_seq`` is the
     changelog's globally-unique event sequence (redeliveries are
     absorbed by the exactly-once ledger before a second delta could
@@ -833,20 +871,21 @@ class LakeletTable:
         m: Manifest,
         buckets: Sequence[int] | None,
         n_buckets: int,
-        n_partitions: int,
     ) -> DataFrame:
         """The table rows every bucket-parallel writer starts from: the
         COW and cells applies' current side, every maintenance rewrite
         and ``maintenance.rebucket``. Snapshot ``m``'s rows of
-        ``buckets`` (None = all; empty = none, the merge-on-read
-        apply's current side) with ``_bucket`` = the key's bucket under
-        ``n_buckets``, hash-partitioned on it into ``n_partitions`` by
-        one ``REPARTITION_BY_NUM`` Exchange, which AQE never coalesces.
+        ``buckets`` (None = all) with ``_bucket`` = the key's bucket
+        under ``n_buckets``, placed by :func:`place_buckets` over
+        ``buckets`` (all ``n_buckets`` when None): one
+        ``REPARTITION_BY_NUM`` Exchange on (:data:`SALT`, ``_bucket``)
+        into ``min(len(buckets), defaultParallelism)`` tasks, each
+        holding whole buckets.
 
         Delta files among them are LWW-resolved AFTER that Exchange, by
-        a window on (``_bucket``, key): keys never span buckets, so the
-        ``_bucket`` partitioning already satisfies the window and the
-        resolve costs a per-partition sort, not a second shuffle. A
+        a window on (:data:`SALT`, ``_bucket``, key): keys never span
+        buckets, so the partitioning already satisfies the window and
+        the resolve costs a per-partition sort, not a second shuffle. A
         delta-free read plans no window."""
         bset = None if buckets is None else {int(b) for b in buckets}
         files = m.files if bset is None else m.files_for_buckets(bset)
@@ -855,11 +894,13 @@ class LakeletTable:
             rows = _exact_buckets(self._read_entries(spark, m, files), m, files, bset)
         else:
             rows = spark.createDataFrame([], schema=spark_schema(m.columns))
-        rows = rows.withColumn("_bucket", bucket_expr(key_col, n_buckets)).repartition(
-            n_partitions, "_bucket"
+        rows = place_buckets(
+            spark,
+            rows.withColumn("_bucket", bucket_expr(key_col, n_buckets)),
+            range(n_buckets) if bset is None else bset,
         )
         if any(f.kind == "delta" for f in files):
-            rows = _resolve_lww(rows, key_col, within=("_bucket",))
+            rows = _resolve_lww(rows, key_col, within=(SALT, "_bucket"))
         return rows
 
     def _read_entries(
@@ -1390,9 +1431,7 @@ class LakeletTable:
             # co-locate each bucket into one task so partitionBy emits
             # one file per bucket; cogrouped callers are already
             # bucket-grouped and skip this shuffle entirely
-            new_bucket_data = new_bucket_data.repartition(
-                max(len(touched_buckets), 1), "_bucket"
-            )
+            new_bucket_data = place_buckets(spark, new_bucket_data, touched_buckets)
         return self._commit_files(
             spark, new_bucket_data, batch_id, "base", touched_buckets,
             summary=summary, stats_out=stats_out,

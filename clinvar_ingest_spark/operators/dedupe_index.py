@@ -23,7 +23,7 @@ deterministic snapshot ids, the indexed-snapshot watermark on the
 manifest summary, and time travel over the INDEX itself.
 
 Query side (:meth:`MinhashIndex.probe`): band-tokenize the probe docs
-(≤ ``bands`` rows per doc), bucket-prune the index read to the buckets
+once (≤ ``bands`` rows per doc), bucket-prune the index read to the buckets
 those tokens hash to, equi-join token→posting, explode membership.
 Cost ∝ |probe| × bucket occupancy — the corpus appears only through
 the postings actually hit. Hot band-buckets (a near-constant signature
@@ -141,11 +141,10 @@ class MinhashIndex(InvertedIndex):
         probing a stale index silently misses the newest pages, so by
         default staleness raises instead.
 
-        The probe's band tokens are computed twice (once for the
-        bucket-pruning metadata collect, once in the returned join) —
-        both passes are DELTA-sized, never corpus-sized; callers
-        probing a large batch can ``.persist()`` ``docs`` upstream to
-        collapse them.
+        The probe's band tokens are computed once: they are
+        checkpointed locally (one job, delta-sized), and both the
+        bucket-pruning collect and the returned join read that
+        checkpoint.
         """
         if require_fresh:
             cur = self.engine.table.current_snapshot_id()
@@ -163,7 +162,7 @@ class MinhashIndex(InvertedIndex):
             self.num_hashes,
             self.bands,
             self.seed,
-        )
+        ).localCheckpoint()
         touched = self.table.touched_buckets(tok.select("token"), key_col="token")
         if not touched:
             return tok.select(

@@ -147,9 +147,9 @@ def merge_apply_mor(
     (post-evolution drift) — those need COW carry-over;
     ``CdcEngine.apply_batch`` falls back.
 
-    Same plan as COW minus the touched-bucket job and the state scan:
-    one bucket shuffle, the kernel and the delta write, with the
-    lineage metrics observed in flight.
+    Same plan as COW minus the touched-bucket job and the state side:
+    one bucket shuffle, the kernel and the delta write in one stage,
+    with the lineage metrics observed in flight.
     """
     from clinvar_ingest_spark.operators.merge_cogroup import (
         _LINEAGE,
@@ -172,11 +172,10 @@ def merge_apply_mor(
     if missing:
         raise MorCarryoverRequired(missing)
 
-    # the current side reads no bucket: an empty frame, typed by Spark
-    # like the batch side (so both reach the kernel with the session's
-    # timestamp zone) and partitioned like it
-    empty = table._read_bucketed(spark, m, (), m.n_buckets, m.n_buckets)
-    rows, merge_obs = _merge_plan(m, b, empty)
+    # no current side: the batch is placed over every bucket (which
+    # ones it touches is unknown without a job) and each kernel call
+    # folds one bucket against an empty current table
+    rows, merge_obs = _merge_plan(spark, m, b, range(m.n_buckets), None)
 
     commit_stats: dict = {}
     sid = table.commit_delta(

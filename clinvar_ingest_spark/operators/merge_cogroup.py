@@ -6,15 +6,15 @@ Plan shape, copy-on-write (:func:`merge_apply_cogrouped`; a patch table,
 one with a ``_cells`` column, takes the same plan and its lineage reads
 ``mode="cells"``)::
 
-    batch --project(table schema)--shuffle(bucket)-----------\
-    state --------------------------shuffle(bucket)--[resolve]--cogroup.applyInArrow--rewrite
+    batch --project(table schema)--place(buckets)------------\
+    state --------------------------place(buckets)--[resolve]--cogroup.applyInArrow--rewrite
 
 and merge-on-read (:func:`~clinvar_ingest_spark.operators.merge.merge_apply_mor`),
-the same plan against an empty current side, so every batch winner
-comes out as an insert or a tombstone::
+the same kernel with no current side — each call folds its bucket
+against an empty table, so every batch winner comes out as an insert
+or a tombstone::
 
-    batch --project(table schema)--shuffle(bucket)--\
-    (empty) -----------------------shuffle(bucket)---cogroup.applyInArrow--append delta
+    batch --project(table schema)--place(all buckets)--groupBy.applyInArrow--append delta
 
 Semantics, per key; a position is ``(warc_ts, seq)`` with a NULL
 ``warc_ts`` at the bottom sentinel :data:`_NEG` (``table.MOR_ORDER``'s
@@ -60,25 +60,27 @@ further shuffle. Schema drift (renamed, widened and nested-remapped
 columns) is resolved in Spark before the shuffle, so the kernel only
 ever sees batch columns under the table's current names and types.
 
-Scale notes: both cogroup sides arrive in exactly ``n_buckets``
-partitions on ``_bucket`` — the state side from the table's one
-bucketed read (``LakeletTable._read_bucketed``; empty for merge-on-read),
-the batch side from :func:`_cogroup_buckets` — so the kernel stage
-runs one task per bucket whatever the session's
-``spark.sql.shuffle.partitions``. The count holds under AQE
-because an exchange with an explicit partition count is a
-``REPARTITION_BY_NUM`` shuffle, which AQE's partition coalescing never
-shrinks; and the cogroup takes the two identically hash-partitioned
-sides without a further exchange. State rows cross that one shuffle
-only: MOR deltas in a touched bucket are resolved after it, by a window
-the ``_bucket`` partitioning already satisfies. Buckets, not bytes,
-are the unit of balance: the partitions are byte-small but
-compute-dense (decompress + extract), so size n_buckets ≫ max executor
-cores and stragglers average out. A hot URL concentrates in one bucket,
-but LWW collapses it to one row inside Arrow (sort + last per key, no
-quadratic work); a hot HOST spreads across buckets by url hash.
-Per-group memory = one bucket of state — bound it by choosing
-n_buckets ≥ |table| / target_partition_rows.
+Scale notes: buckets are the unit of files and of LWW groups; tasks are
+the unit of CPU. ``place`` (``lakelet.table.place_buckets``) packs the
+stage's buckets into ``k = min(len(buckets), defaultParallelism)``
+tasks, the i-th bucket of the sorted list in task ``i % k``, by one
+``REPARTITION_BY_NUM`` Exchange on (``_salt``, ``_bucket``) per side:
+the state side is the table's one bucketed read
+(``LakeletTable._read_bucketed``), the batch side is placed over the
+same bucket list, and the kernel groups both on (``_salt``,
+``_bucket``), which the two identical partitionings satisfy without a
+further exchange. Each kernel call still sees one bucket, but a Python
+task's fixed start cost is paid once per core instead of once per
+bucket. The count holds under any ``spark.sql.shuffle.partitions``
+and under AQE, which never coalesces an exchange with an explicit
+partition count. State rows cross that one shuffle only: MOR deltas in
+a touched bucket are resolved after it, by a window on (``_salt``,
+``_bucket``, url) the partitioning already satisfies. Every task folds
+``len(buckets)/k`` buckets, ±1, so the stage is balanced in buckets; a
+hot URL concentrates in one bucket, but LWW collapses it to one row
+inside Arrow (sort + last per key, no quadratic work); a hot HOST
+spreads across buckets by url hash. Per-group memory = one bucket of
+state — bound it by choosing n_buckets ≥ |table| / target_partition_rows.
 """
 
 from __future__ import annotations
@@ -96,8 +98,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from clinvar_ingest_spark.functions.canonical_json import canonical_json_series
 from clinvar_ingest_spark.functions.extract import extract_text_series
 from clinvar_ingest_spark.lakelet.table import (
+    SALT,
     LakeletTable,
     bucket_expr,
+    place_buckets,
     spark_schema,
 )
 from clinvar_ingest_spark.operators.merge import (
@@ -408,28 +412,25 @@ def _project_batch(m, batch: DataFrame) -> tuple[DataFrame, Observation]:
     return b, batch_obs
 
 
-def _cogroup_buckets(n_buckets: int, b: DataFrame, current: DataFrame):
-    """Cogroup the batch ``b``, repartitioned into exactly ``n_buckets``
-    partitions on ``_bucket``, with ``current``: a
-    ``LakeletTable._read_bucketed`` of the same ``n_buckets``, already
-    partitioned alike — so an apply runs one task per bucket (module
-    scale notes)."""
-    return (
-        b.repartition(n_buckets, "_bucket")
-        .groupBy("_bucket")
-        .cogroup(current.groupBy("_bucket"))
-    )
-
-
-def _merge_plan(m, b: DataFrame, current: DataFrame) -> tuple[DataFrame, Observation]:
-    """Shuffle the projected batch ``b`` on ``_bucket``, cogroup it with
-    ``current`` (the bucketed read of the table rows) and run the kernel
-    per bucket. Returns the bucket-pure rows to write and the
-    observation counting each ``_action`` in flight. Tombstones
-    (delete/noop_delete) are WRITTEN, not dropped — soft delete keeps
-    the LWW frontier queryable for late events."""
+def _merge_plan(
+    spark: SparkSession,
+    m,
+    b: DataFrame,
+    buckets,
+    current: DataFrame | None,
+) -> tuple[DataFrame, Observation]:
+    """Place the projected batch ``b`` over ``buckets``
+    (:func:`~clinvar_ingest_spark.lakelet.table.place_buckets`), group it
+    by bucket with ``current`` — the bucketed read of the same
+    ``buckets``, placed alike, or None for merge-on-read, whose kernel
+    calls get an empty current side — and run the kernel per bucket.
+    Returns the bucket-pure rows to write and the observation counting
+    each ``_action`` in flight. Tombstones (delete/noop_delete) are
+    WRITTEN, not dropped — soft delete keeps the LWW frontier queryable
+    for late events."""
+    state_schema = spark_schema(m.columns)
     out_schema = T.StructType(
-        spark_schema(m.columns).fields
+        state_schema.fields
         + [
             T.StructField("_bucket", T.LongType()),
             T.StructField("_action", T.StringType()),
@@ -439,9 +440,23 @@ def _merge_plan(m, b: DataFrame, current: DataFrame) -> tuple[DataFrame, Observa
         [cs.name for cs in m.columns], b.columns, to_arrow_schema(out_schema),
         col_ids={cs.name: cs.col_id for cs in m.columns},
     )
-    merged = _cogroup_buckets(m.n_buckets, b, current).applyInArrow(
-        lambda left, right: fn(left, right), schema=out_schema
-    )
+    grouped = place_buckets(spark, b, buckets).groupBy(SALT, "_bucket")
+    if current is None:
+        state = to_arrow_schema(state_schema).append(pa.field("_bucket", pa.int32()))
+
+        def merge_alone(left: pa.Table) -> pa.Table:
+            # an empty current side typed like the batch where they
+            # share a column (its timestamps carry the session zone)
+            names = left.schema.names
+            return fn(left, pa.schema([
+                left.schema.field(f.name) if f.name in names else f for f in state
+            ]).empty_table())
+
+        merged = grouped.applyInArrow(merge_alone, schema=out_schema)
+    else:
+        merged = grouped.cogroup(current.groupBy(SALT, "_bucket")).applyInArrow(
+            fn, schema=out_schema
+        )
     merge_obs = Observation()
     merged = merged.observe(merge_obs, *[
         F.sum(F.when(F.col("_action") == a, 1).otherwise(0)).alias(a)
@@ -500,7 +515,7 @@ def merge_apply_cogrouped(
         touched = table.rewrite_closure(table.touched_buckets(batch, "url"))
     b, batch_obs = _project_batch(m, batch)
     rows, merge_obs = _merge_plan(
-        m, b, table._read_bucketed(spark, m, touched, m.n_buckets, m.n_buckets)
+        spark, m, b, touched, table._read_bucketed(spark, m, touched, m.n_buckets)
     )
     # a table with per-cell positions folds patches as partial writes
     mode = "cells" if any(cs.name == "_cells" for cs in m.columns) else "cow"

@@ -1,8 +1,9 @@
 """Every writer that starts from table rows reads them through one
 bucketed read (``LakeletTable._read_bucketed``): the rows cross ONE
-Exchange, a ``REPARTITION_BY_NUM`` hash partitioning on ``_bucket``,
-and merge-on-read deltas are LWW-resolved after it by a window on
-(``_bucket``, key) that this partitioning already satisfies.
+Exchange, a ``REPARTITION_BY_NUM`` hash partitioning on (``_salt``,
+``_bucket``) into ``min(len(buckets), defaultParallelism)`` tasks, and
+merge-on-read deltas are LWW-resolved after it by a window on
+(``_salt``, ``_bucket``, key) that this partitioning already satisfies.
 
 Checked on an uncompacted MOR table for the rows ``compact()`` and
 ``rebucket()`` commit and for the current side of a COW apply over
@@ -38,11 +39,13 @@ def _exchanges(df) -> int:
     return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
 
 
-def _assert_one_bucket_exchange(df, n_partitions: int) -> None:
+def _assert_one_bucket_exchange(df, n_buckets: int) -> None:
+    """One placed Exchange over ``n_buckets`` buckets, deltas resolved."""
+    k = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert _exchanges(df) == 1, plan
     assert "REPARTITION_BY_NUM" in plan, plan
-    assert re.search(rf"hashpartitioning\(_bucket#\d+, {n_partitions}\)", plan), plan
+    assert re.search(rf"hashpartitioning\(_salt#\d+, _bucket#\d+, {k}\)", plan), plan
     # the deltas are resolved, inside the shuffle
     assert "Window" in plan, plan
 
@@ -91,28 +94,29 @@ def test_writers_read_table_rows_through_one_exchange(spark, mor, monkeypatch):
     _assert_one_bucket_exchange(seen["rebucket"], 8)
     monkeypatch.setattr(LakeletTable, "_commit_files", commit_files)
 
-    cogroup = merge_cogroup._cogroup_buckets
+    read_bucketed = LakeletTable._read_bucketed
 
-    def probe(n_buckets, b, current):
+    def probe(self, spark, m, buckets, n_buckets):
         # the state side exactly as the cogroup receives it
-        capture("cow_current", cogroup(n_buckets, b, current)._gd2._df)
+        seen["cow_buckets"] = buckets
+        capture("cow_current", read_bucketed(self, spark, m, buckets, n_buckets))
 
-    monkeypatch.setattr(merge_cogroup, "_cogroup_buckets", probe)
+    monkeypatch.setattr(LakeletTable, "_read_bucketed", probe)
     with pytest.raises(_Captured):
         merge_cogroup.merge_apply_cogrouped(
             spark, eng.table, cl.filter("seq >= 200"), "cow"
         )
-    _assert_one_bucket_exchange(seen["cow_current"], 4)
+    _assert_one_bucket_exchange(seen["cow_current"], len(seen["cow_buckets"]))
 
     # nothing committed; the real rebucket keeps the resolved state
     assert eng.table.delta_buckets() == [0, 1, 2, 3]
-    monkeypatch.setattr(merge_cogroup, "_cogroup_buckets", cogroup)
+    monkeypatch.setattr(LakeletTable, "_read_bucketed", read_bucketed)
     maintenance.rebucket(spark, eng.table, 8)
     m = eng.table.manifest()
     assert m.n_buckets == 8 and eng.table.delta_buckets() == []
     assert eng.state_hash(include_tombstones=True) == before
 
     # a delta-free read plans the one Exchange and no window
-    rows = eng.table._read_bucketed(spark, m, [0, 1], m.n_buckets, 2)
+    rows = eng.table._read_bucketed(spark, m, [0, 1], m.n_buckets)
     plan = rows._jdf.queryExecution().executedPlan().toString()
     assert _exchanges(rows) == 1 and "Window" not in plan, plan

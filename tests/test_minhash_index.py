@@ -103,6 +103,28 @@ def test_probe_subset_is_restriction(spark, changelog, tmp_path):
     assert got == {(a, b) for (a, b) in full if a in probe_ids}
 
 
+def test_probe_tokenizes_docs_once(spark, changelog, tmp_path):
+    """Probing and collecting the candidates band-tokenizes each probe
+    doc once: the bucket-pruning collect and the returned join share
+    one tokenization."""
+    eng = CdcEngine(spark, str(tmp_path / "pages"), n_buckets=8)
+    eng.replay(changelog, batch_size=800)
+    idx = MinhashIndex(eng, str(tmp_path / "index"), n_buckets=8, **PARAMS)
+    idx.refresh()
+    docs = _live(eng).select("url", "text").localCheckpoint()
+    n_docs = docs.count()
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_text(t):
+        seen.add(1)
+        return t
+
+    counted = docs.withColumn("text", F.udf(count_text, "string")("text"))
+    candidates = idx.probe(counted).collect()
+    assert candidates
+    assert seen.value == n_docs
+
+
 def test_probe_stale_raises(spark, changelog, tmp_path):
     eng = CdcEngine(spark, str(tmp_path / "pages"), n_buckets=8)
     eng.replay(changelog.filter("seq < 400"), batch_size=400)

@@ -1,14 +1,16 @@
 """The apply's bucket partitioning lives in the plan, not the session.
 
-Both cogroup sides are repartitioned to exactly ``n_buckets``
-partitions on ``_bucket`` (``merge_cogroup._cogroup_buckets``), so the
-kernel stage runs one task per bucket under any
-``spark.sql.shuffle.partitions`` and with AQE partition coalescing on,
-and an apply never changes the session conf — also when several
-engines apply on one session at once.
+Both cogroup sides are placed into exactly ``min(n_buckets,
+defaultParallelism)`` partitions on (``_salt``, ``_bucket``)
+(``lakelet.table.place_buckets``), so the kernel stage runs that many
+tasks under any ``spark.sql.shuffle.partitions`` and with AQE partition
+coalescing on, and an apply never changes the session conf — also when
+several engines apply on one session at once.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pyspark.sql.functions as F
 import pytest
@@ -90,13 +92,15 @@ def test_concurrent_engine_applies_restore_conf(spark, tmp_path, changelog_df):
     )
 
 
-def test_apply_runs_one_task_per_bucket_at_session_conf(
+def test_apply_runs_one_task_per_core_at_session_conf(
     spark, tmp_path, changelog_df, monkeypatch
 ):
     """With the session at 2 shuffle partitions and AQE coalescing on,
-    the kernel stage still runs ``n_buckets`` tasks (AQE never coalesces
-    an exchange with an explicit partition count), and the commit runs
-    under the session's own shuffle setting."""
+    the kernel stage still runs ``min(n_buckets, defaultParallelism)``
+    tasks (AQE never coalesces an exchange with an explicit partition
+    count), each touched bucket still comes out as exactly one data
+    file, and the commit runs under the session's own shuffle
+    setting."""
     conf = spark.conf
     sc = spark.sparkContext
     keys = (
@@ -115,7 +119,7 @@ def test_apply_runs_one_task_per_bucket_at_session_conf(
         group = f"apply-tasks-{tmp_path.name}"
         sc.setJobGroup(group, "apply kernel stage")
         try:
-            merge_apply_cogrouped(spark, table, changelog_df, "b0")
+            stats = merge_apply_cogrouped(spark, table, changelog_df, "b0")
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         tracker = sc.statusTracker()
@@ -123,7 +127,10 @@ def test_apply_runs_one_task_per_bucket_at_session_conf(
         # kernel (the write is fused into it, pre-partitioned)
         write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
         kernel_stage = tracker.getStageInfo(max(write_job.stageIds))
-        assert kernel_stage.numTasks == n_buckets
+        assert kernel_stage.numTasks == min(n_buckets, sc.defaultParallelism) < n_buckets
+        files_per_bucket = Counter(f.bucket for f in table.manifest().files)
+        assert len(files_per_bucket) == stats.touched_buckets > 1
+        assert set(files_per_bucket.values()) == {1}
 
         seen = []
         commit_rewrite = LakeletTable.commit_rewrite
