@@ -1680,7 +1680,7 @@ def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bits`` is pinned (6) ONLY because the DuckDB oracle embeds the
     same hyperplanes as a static literal; the production default is
     ``bits=None`` → :func:`auto_srp_bits` (∝log₂ n), which the decade
-    bench measures at α≈1 (BENCH_SFSCALE `embedding_dup_auto`)."""
+    bench measured at α≈0.7 (`embedding_dup_auto`, BENCH_HISTORY.jsonl)."""
     from clinvar_ingest_spark.operators.similarity import cosine_dup_pairs
 
     emb = _t(spark, sf_dir, "embeddings").withColumn(

@@ -10,8 +10,8 @@ Env:
   SPARK_GRAFT_CPUS     local[N] parallelism (default *)
   BENCH_QUERIES        comma list to restrict (default: headline set)
 
-Run at two parallelism levels for the north-rule scaling evidence:
-  SPARK_GRAFT_CPUS=8 python bench.py ; SPARK_GRAFT_CPUS=32 python bench.py
+N-vs-4N scaling evidence is perfbench under ``taskset -c`` (BASELINE.md,
+"Measurement protocol"), not this harness.
 """
 
 from __future__ import annotations
@@ -114,7 +114,7 @@ def bench_cdc_replay(spark, sf: float, workdir: str) -> dict:
     cl = spark.read.parquet(clp)
     # best-of-2: this sandbox's microVM substrate shows multi-x
     # throughput swings between identical runs minutes apart (memcpy
-    # probe, BASELINE.md); the headline metric takes the better of two
+    # probes, BENCH_HISTORY.jsonl); the headline takes the better of two
     # full replays (fresh table each) and records both so noise is
     # visible instead of silently charged to the engine
     runs = []
@@ -152,7 +152,7 @@ def bench_mor_apply(spark, workdir: str) -> dict:
 
     Best-of-2 per mode with INTERLEAVED attempts (cow, mor, cow, mor):
     this sandbox's substrate shows multi-x wall swings between identical
-    runs minutes apart (BASELINE.md "Substrate variance"), and a
+    runs minutes apart (BENCH_HISTORY.jsonl's memcpy probes), and a
     single-run ratio inverted the MOR advantage in the round-4 driver
     window (mor_apply_speedup 0.958 vs 1.74x on a quiet same-day run of
     the identical regime). Interleaving puts both modes inside any

@@ -536,17 +536,6 @@ class CdcEngine:
         tombstones filtered)."""
         return self.live(snapshot_id).select("url", "warc_ts", "html", "text", "lang")
 
-    def count_live(self, snapshot_id: str | None = None) -> int:
-        """LIVE row count — metadata-only when the manifest can prove it
-        (pure-COW snapshot, per-file footer tombstone counts:
-        Manifest.live_rows; Iceberg's snapshot-summary / count(*)
-        pushdown), else one scan. On a compacted 100 TB table the fast
-        path reads zero data files."""
-        n = self.table.manifest(snapshot_id).live_rows()
-        if n is not None:
-            return n
-        return self.live(snapshot_id).count()
-
     def lookup(
         self,
         url: str,

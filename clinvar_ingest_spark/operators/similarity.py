@@ -115,7 +115,7 @@ def auto_srp_bits(
 
     The bucket self-join in :func:`cosine_dup_pairs` compares
     O(n²/2^bits) pairs — at FIXED bits that is superlinear in n (the one
-    measured α=1.43 plan in BENCH_SFSCALE round 3). Holding the expected
+    measured α=1.43 plan in round 3's decade bench). Holding the expected
     bucket size B constant (bits = log2(n/B)) makes total comparisons
     ≈ n·B — linear in n, the 100 TB contract. Clamped to [lo, hi]:
     below 2^lo buckets LSH stops paying for itself; above ``hi`` bits

@@ -76,6 +76,12 @@ def _ts_us(s: pd.Series) -> np.ndarray:
     return out
 
 
+def _us_ts(us: int):
+    """int64 microseconds → Timestamp; the ``_NEG`` sentinel (a NULL
+    ``warc_ts``) → NaT, since converting it would overflow."""
+    return pd.NaT if us == _NEG else pd.Timestamp(us * 1000)
+
+
 def _canon_props(raw: str | None) -> str | None:
     if raw is None:
         return None
@@ -170,14 +176,11 @@ def _cells_update(
         )
         # row_ts == _NEG means the observable position came from a
         # NULL-warc_ts event (seq-only ordering) — the batch kernel
-        # writes a NULL warc_ts there too; converting the
-        # sentinel would overflow pd.Timestamp and kill the query.
+        # writes a NULL warc_ts there too
         yield pd.DataFrame(
             {
                 "url": [url],
-                "warc_ts": [
-                    pd.Timestamp(row_ts * 1000) if row_ts > _NEG else pd.NaT
-                ],
+                "warc_ts": [_us_ts(row_ts)],
                 "seq": [row_seq],
                 "lang": [lang],
                 "props": [props],

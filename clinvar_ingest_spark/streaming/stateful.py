@@ -16,10 +16,14 @@ from __future__ import annotations
 
 from typing import Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from clinvar_ingest_spark.operators.merge_cogroup import _NEG
+from clinvar_ingest_spark.streaming.cells import _ts_us, _us_ts
 
 STATE_SCHEMA = T.StructType(
     [
@@ -41,32 +45,33 @@ OUTPUT_SCHEMA = T.StructType(
 )
 
 
+def _fold(pdfs: Iterator[pd.DataFrame], st: tuple) -> tuple | None:
+    """Fold a key's micro-batch events into its (warc_ts_us, seq, op,
+    lang) state by the batch kernel's position: ``warc_ts`` in µs with
+    NULL at ``_NEG`` (lowest), then ``seq``. None when nothing wins."""
+    new = st
+    for pdf in pdfs:
+        ts = _ts_us(pdf["warc_ts"])
+        i = np.lexsort((pdf["seq"].to_numpy(), ts))[-1]
+        row = pdf.iloc[i]
+        pos = (int(ts[i]), int(row["seq"]))
+        if pos > new[:2]:
+            new = (*pos, row["op"], row["lang"])
+    return None if new is st else new
+
+
 def _lww_update(
     key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     (url,) = key
-    if state.exists:
-        ts_us, seq, op, lang = state.get
-    else:
-        ts_us, seq, op, lang = -1, -1, None, None
-
-    changed = False
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["warc_ts", "seq"], kind="stable")
-        last = pdf.iloc[-1]
-        l_us = int(last["warc_ts"].value // 1000)  # ns → µs
-        if (l_us, int(last["seq"])) > (ts_us, seq):
-            ts_us, seq = l_us, int(last["seq"])
-            op = last["op"]
-            lang = last["lang"] if last["lang"] is not None else None
-            changed = True
-
-    if changed:
-        state.update((ts_us, seq, op, lang))
+    new = _fold(pdfs, tuple(state.get) if state.exists else (_NEG, _NEG, None, None))
+    if new is not None:
+        state.update(new)
+        ts_us, seq, op, lang = new
         yield pd.DataFrame(
             {
                 "url": [url],
-                "warc_ts": [pd.Timestamp(ts_us * 1000)],
+                "warc_ts": [_us_ts(ts_us)],
                 "seq": [seq],
                 "lang": [lang],
                 "live": [op != "delete"],
@@ -135,35 +140,24 @@ def _retract_update(
     micro-batches reproduces the live-state delta of that window."""
     (url,) = key
     prev = tuple(state.get) if state.exists else None
-    ts_us, seq, op, lang = prev if prev is not None else (-1, -1, None, None)
-
-    changed = False
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["warc_ts", "seq"], kind="stable")
-        last = pdf.iloc[-1]
-        l_us = int(last["warc_ts"].value // 1000)  # ns → µs
-        if (l_us, int(last["seq"])) > (ts_us, seq):
-            ts_us, seq = l_us, int(last["seq"])
-            op = last["op"]
-            lang = last["lang"] if last["lang"] is not None else None
-            changed = True
-
-    if not changed:
+    new = _fold(pdfs, prev or (_NEG, _NEG, None, None))
+    if new is None:
         return
-    state.update((ts_us, seq, op, lang))
+    state.update(new)
+    ts_us, seq, op, lang = new
     prev_live = prev is not None and prev[2] != "delete"
     new_live = op != "delete"
     rows: list[tuple] = []
     if prev_live and new_live:
         rows = [
-            ("update_before", pd.Timestamp(prev[0] * 1000), prev[1], prev[3]),
-            ("update_after", pd.Timestamp(ts_us * 1000), seq, lang),
+            ("update_before", _us_ts(prev[0]), prev[1], prev[3]),
+            ("update_after", _us_ts(ts_us), seq, lang),
         ]
     elif prev_live and not new_live:
         # the delete carries the DELETED row's image (Flink DELETE)
-        rows = [("delete", pd.Timestamp(prev[0] * 1000), prev[1], prev[3])]
+        rows = [("delete", _us_ts(prev[0]), prev[1], prev[3])]
     elif not prev_live and new_live:
-        rows = [("insert", pd.Timestamp(ts_us * 1000), seq, lang)]
+        rows = [("insert", _us_ts(ts_us), seq, lang)]
     else:
         return  # dead → dead: state advanced, nothing to retract
     yield pd.DataFrame(

@@ -51,16 +51,16 @@ def _split(df, cut):
 
 def test_wap_publish_equals_serial(spark, changelog_df, tmp_path):
     ref = CdcEngine(spark, str(tmp_path / "ref"), n_buckets=8)
-    ref.replay(changelog_df, batch_size=1000)
+    ref.replay(changelog_df, batch_size=1500)
     h_ref = ref.state_hash()
 
     base, tail = _split(changelog_df, 1500)
     main = CdcEngine(spark, str(tmp_path / "pages"), n_buckets=8)
-    main.replay(base, batch_size=1000)
+    main.replay(base, batch_size=1500)
     h_before = main.state_hash()
 
     br = CdcEngine(spark, str(tmp_path / "pages"), n_buckets=8, branch="audit")
-    br.replay(tail, batch_size=1000, from_seq=1500)
+    br.replay(tail, batch_size=1500, from_seq=1500)
 
     # audit window: branch sees the full state, main is untouched
     assert br.state_hash() == h_ref

@@ -1,4 +1,4 @@
-"""Metadata-only live counts: Manifest.live_rows / CdcEngine.count_live.
+"""Metadata-only live counts: Manifest.live_rows.
 
 Per-file tombstone counts land in the manifest at promote time
 (footer-first: a boolean column read only for mixed row groups), roll
@@ -45,7 +45,6 @@ def test_cow_count_is_metadata_only_and_exact(spark, changelog_path, tmp_path):
     # tombstones exist in this fixture, so live < physical
     m = t.manifest()
     assert m.live_rows() < int(m.summary["total_rows"])
-    assert eng.count_live() == eng.live().count()
 
 
 def test_mor_falls_back_then_compaction_restores(spark, changelog_path, tmp_path):
@@ -55,7 +54,6 @@ def test_mor_falls_back_then_compaction_restores(spark, changelog_path, tmp_path
     t = eng.table
     assert t.manifest().live_rows() is None  # deltas need resolution
     truth = eng.live().count()
-    assert eng.count_live() == truth  # scan fallback still correct
     eng.compact()
     assert t.manifest().live_rows() == truth  # metadata again
 
@@ -65,7 +63,7 @@ def test_purge_makes_live_equal_total(spark, changelog_path, tmp_path):
     eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=16)
     eng.replay(cl, batch_size=1500)
     t = eng.table
-    n = eng.count_live()
+    n = eng.live().count()
     purge_tombstones(spark, t, "2031-01-01T00:00:00")
     m = t.manifest()
     assert m.live_rows() == n == int(m.summary["total_rows"])
@@ -75,6 +73,6 @@ def test_spec_grow_keeps_metadata_counts(spark, changelog_path, tmp_path):
     cl = spark.read.parquet(changelog_path)
     eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=16)
     eng.replay(cl, batch_size=1500)
-    n = eng.count_live()
+    n = eng.live().count()
     eng.table.grow_buckets(64)
     assert eng.table.manifest().live_rows() == n  # restamp keeps counts

@@ -105,7 +105,7 @@ def test_batch_size_invariance(spark, tmp_path):
     """The fold is associative: chopping the same stream differently
     converges to the identical state (cells included)."""
     pdf = generate_changelog(
-        ChangelogSpec(n_events=1200, n_urls=150, seed=11, p_patch=0.35)
+        ChangelogSpec(n_events=600, n_urls=75, seed=11, p_patch=0.35)
     )
     clp = str(tmp_path / "cl.parquet")
     write_changelog_parquet(pdf, clp)
@@ -114,7 +114,7 @@ def test_batch_size_invariance(spark, tmp_path):
     e1 = CdcEngine(spark, str(tmp_path / "t1"), n_buckets=4, patch_ops=True)
     e1.replay(cl, batch_size=100)
     e2 = CdcEngine(spark, str(tmp_path / "t2"), n_buckets=4, patch_ops=True)
-    e2.replay(cl, batch_size=600)
+    e2.replay(cl, batch_size=300)
 
     assert e1.state_hash(include_tombstones=True) == e2.state_hash(
         include_tombstones=True

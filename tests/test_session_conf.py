@@ -1,7 +1,7 @@
 """SPARK_GRAFT_EXTRA_CONF env override (round 5).
 
-The scaling bench's fresh-JVM subprocess levels (tools/scaling_bench.py
-``run_level``) and real deployments both need to override arbitrary
+Fresh-JVM subprocesses (a spark-submit job, a benchmark level run in
+its own process) and real deployments both need to override arbitrary
 Spark confs without code changes; ``get_spark(extra_conf=...)`` cannot
 reach a subprocess. The env var carries a JSON dict; explicit
 ``extra_conf`` still wins over it.

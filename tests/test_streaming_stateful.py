@@ -142,3 +142,45 @@ def test_retract_feed_per_segment_kinds(spark, tmp_path):
         ("update_after", "de", 1),
         ("delete", "de", 1),
     ]
+
+
+@pytest.mark.parametrize("feed", ["lww", "retract"])
+def test_null_warc_ts_ranks_lowest(spark, tmp_path, feed):
+    """A NULL warc_ts ranks below every real one (the batch kernel's
+    ``_NEG``): in one micro-batch a real event beats a later-seq NULL-ts
+    event of the same url, and a url whose only event has a NULL ts is
+    still emitted, with warc_ts NULL."""
+    from clinvar_ingest_spark.streaming.stateful import run_retract_feed
+
+    real = pd.Timestamp("2024-01-01T00:00:00")
+    pdf = pd.DataFrame(
+        {
+            "seq": pd.array([1, 2, 3], dtype="int64"),
+            "op": ["insert", "update", "insert"],
+            "url": ["http://mixed.example/a", "http://mixed.example/a",
+                    "http://null-ts.example/only"],
+            "warc_ts": [real, pd.NaT, pd.NaT],
+            "html": [b"<p>a</p>", b"<p>b</p>", b"<p>c</p>"],
+            "lang": ["en", "de", "fr"],
+            "schema_ver": pd.array([1, 1, 1], dtype="int32"),
+            "extra": [None, None, None],
+        }
+    )
+    d = tmp_path / "segs_null"
+    d.mkdir()
+    write_changelog_parquet(pdf, str(d / "seg-00.parquet"))
+    run = run_lww_feed if feed == "lww" else run_retract_feed
+    q = run(spark, str(d), str(tmp_path / "ckpt"), query_name=f"t_null_{feed}")
+    q.awaitTermination(300)
+    if q.isActive:
+        q.stop()
+    out = spark.sql(f"SELECT * FROM t_null_{feed}").toPandas().set_index("url")
+    assert len(out) == 2
+    if feed == "retract":
+        assert set(out["change_type"]) == {"insert"}
+    else:
+        assert out["live"].all()
+    a = out.loc["http://mixed.example/a"]
+    assert (a["seq"], a["lang"], a["warc_ts"]) == (1, "en", real)
+    b = out.loc["http://null-ts.example/only"]
+    assert (b["seq"], b["lang"]) == (3, "fr") and pd.isna(b["warc_ts"])
